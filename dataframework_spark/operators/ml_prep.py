@@ -1033,9 +1033,7 @@ def ml_nearest_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame
     FROM r
     """,
 )
-def ml_auc_rank(
-    spark: SparkSession, sf_dir: str, cache_scores: bool = False
-) -> DataFrame:
+def ml_auc_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROC-AUC by the Mann-Whitney rank-sum identity for a deterministic
     scorer (dot product against the positive-class centroid, positives =
     label 0): AUC = (Σ ranks of positives − n_pos(n_pos+1)/2) / (n_pos·
@@ -1071,11 +1069,7 @@ def ml_auc_rank(
     # tried (the helper's repartitionByRange samples its input, a second
     # evaluation of the scoring pass) and REVERTED — paired in-JVM A/B
     # lost 6/7 reps; locally the sampling pass is cheaper than the cache's
-    # materialization barrier.  r13 (VERDICT r12 #5): the 100 TB hatch is
-    # now the wired ``cache_scores`` knob (duplicate scoring passes cost
-    # real resources at scale); default = the locally measured winner.
-    if cache_scores:
-        s = s.cache()
+    # materialization barrier.
     s = s.withColumn("_score_r", F.round("score", 6))
     r = global_order_stats(
         s, [F.col("_score_r"), F.col("vec_id")], rn="rnk"

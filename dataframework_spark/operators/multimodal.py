@@ -16,10 +16,13 @@ Decode tiers:
 * **PNG decodes for real too** — `mm_png_decode` / `mm_png_resize`
   inflate with stdlib ``zlib`` and defilter (None/Sub/Up/Average/Paeth)
   in numpy; PNG needs no external codec library.
-* **Baseline JPEG decodes for real as well** — `mm_jpeg_decode` runs
-  genuine huffman entropy decoding + dequantization + 8x8 IDCT in pure
-  numpy (ITU-T T.81 baseline is huffman + math, not a library
-  dependency).
+* **JPEG decodes for real as well** — one codec core (`_jpeg_decode` /
+  `_encode_jpeg`) runs genuine huffman entropy decoding + dequantization
+  + 8x8 IDCT in pure numpy for baseline and progressive scans,
+  greyscale and 4:2:0 color, with restart intervals in baseline scans
+  (ITU-T T.81's huffman processes are math, not a library dependency).
+  The five `mm_jpeg_*` queries and the router are thin mode checks
+  over it.
 * **GIF decodes for real (r9)** — `mm_gif_decode` runs genuine
   variable-width LZW dictionary decoding + interlace reordering in pure
   Python/numpy, covering the dictionary-codec family (vs zlib's
@@ -1507,31 +1510,46 @@ def mm_png_palette_adam7_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# M10 — REAL transform-codec decode: baseline JPEG (huffman + IDCT in numpy)
+# M10 — REAL transform-codec decode: JPEG (one codec core, huffman + IDCT)
 # ---------------------------------------------------------------------------
 #
 # The r7/r8 stub history: r7's stub claimed jpeg/png/mp3 all need external
 # libraries; r8 showed PNG needs only stdlib zlib.  JPEG needs no library
-# either — only MATH: the baseline process (ITU-T T.81) is huffman
-# entropy-decoding + dequantization + an 8x8 inverse DCT, all expressible
-# in numpy.  What external libs buy is speed and format breadth (subsampled
-# color, progressive scans, EXIF); a baseline greyscale decoder is ~150
-# lines.  This closes the overclaim the same way PNG did: synthesize real
-# JPEG bytes (real quant tables, real Annex-K huffman codes, real
-# byte-stuffing), genuinely entropy-decode + IDCT them back, and grade
-# against a closed form.
+# either — only MATH: the huffman processes of ITU-T T.81 are entropy
+# decoding + dequantization + an 8x8 inverse DCT, all expressible in
+# numpy.  What external libs buy is speed and format breadth (EXIF,
+# arithmetic coding, odd samplings).  This closes the overclaim the same
+# way PNG did: synthesize real JPEG bytes (real quant tables, real Annex-K
+# huffman codes, real byte-stuffing), genuinely entropy-decode + IDCT them
+# back, and grade against a closed form.
 #
-# Verification design: the synthesized image is BLOCK-CONSTANT — block
-# (bx, by) has value v = (doc_id + 11*bx + 23*by) % 256.  A constant 8x8
-# block has one nonzero DCT coefficient (DC = 8*(v-128)), so the decoded
-# block is the closed form
+# One codec core serves every JPEG query and the router:
+#
+# * ``_jpeg_decode`` — one marker walk (DQT with any number of tables per
+#   segment, DHT, SOF0/SOF2 with 1 component or 4:2:0 YCbCr, DRI, one or
+#   many SOS) that accumulates quantized coefficients per component.  A
+#   sequential (SOF0) scan runs the same per-block DC-first / AC-first
+#   routines as a progressive scan, with Ss=0..63 and Ah=Al=0, over the
+#   same MCU order; then one dequantize + IDCT loop per plane, one chroma
+#   upsample and one YCbCr→RGB step.
+# * ``_encode_jpeg`` — the synthesis side: one FDCT + quantize step, one
+#   header writer, and the scan scripts as data.
+# * ``jpeg_pixels`` / ``jpeg_color_pixels`` / ``jpeg_progressive_pixels``
+#   / ``jpeg_color_progressive_pixels`` — one-line mode checks over the
+#   core: each query accepts exactly one frame type and REJECTS the rest
+#   rather than mis-decoding them.
+#
+# Verification design: the synthesized images are BLOCK-CONSTANT (MCU-
+# constant for color).  A constant 8x8 block has one nonzero DCT
+# coefficient (DC = 8*(v-128)), so the decoded block is the closed form
 #     clip(rnd(rnd(8*(v-128)/Q00) * Q00 / 8) + 128, 0, 255)
 # (rnd = half away from zero; Q00 = 16 from the Annex-K luminance table),
 # which DuckDB can compute per block — while the DECODER still runs the
-# full general path (huffman trees, DC differences across blocks, EOB,
+# full general path (huffman tables, DC differences across blocks, EOB,
 # byte-stuffing, dequant, full 2D IDCT).  Unit tests exercise the general
 # path on random images: decode(encode(img)) must equal an independent
-# dequant+IDCT reference applied to the same quantized coefficients.
+# dequant+IDCT reference applied to the same quantized coefficients, and
+# progressive decodes must equal baseline decodes of the same image.
 
 _JPEG_QTABLE = [  # ITU-T T.81 Annex K.1 luminance, quality 50 (unscaled)
     16, 11, 10, 16, 24, 40, 51, 61,
@@ -1565,6 +1583,62 @@ _JPEG_AC_VALS = [
     0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF1, 0xF2, 0xF3, 0xF4,
     0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
 ]
+
+# Chroma tables: the OTHER half of ITU-T T.81 Annex K (K.2 / K.3.2), the
+# same public spec source as the luminance tables above.
+_JPEG_QTABLE_C = [  # ITU-T T.81 Annex K.2 chrominance, quality 50 (unscaled)
+    17, 18, 24, 47, 99, 99, 99, 99,
+    18, 21, 26, 66, 99, 99, 99, 99,
+    24, 26, 56, 99, 99, 99, 99, 99,
+    47, 66, 99, 99, 99, 99, 99, 99,
+    99, 99, 99, 99, 99, 99, 99, 99,
+    99, 99, 99, 99, 99, 99, 99, 99,
+    99, 99, 99, 99, 99, 99, 99, 99,
+    99, 99, 99, 99, 99, 99, 99, 99,
+]
+
+_JPEG_DC_BITS_C = [0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0]
+_JPEG_DC_VALS_C = list(range(12))
+_JPEG_AC_BITS_C = [0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77]
+_JPEG_AC_VALS_C = [
+    0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21, 0x31, 0x06, 0x12, 0x41,
+    0x51, 0x07, 0x61, 0x71, 0x13, 0x22, 0x32, 0x81, 0x08, 0x14, 0x42, 0x91,
+    0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0, 0x15, 0x62, 0x72, 0xD1,
+    0x0A, 0x16, 0x24, 0x34, 0xE1, 0x25, 0xF1, 0x17, 0x18, 0x19, 0x1A, 0x26,
+    0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37, 0x38, 0x39, 0x3A, 0x43, 0x44,
+    0x45, 0x46, 0x47, 0x48, 0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58,
+    0x59, 0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69, 0x6A, 0x73, 0x74,
+    0x75, 0x76, 0x77, 0x78, 0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87,
+    0x88, 0x89, 0x8A, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A,
+    0xA2, 0xA3, 0xA4, 0xA5, 0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4,
+    0xB5, 0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7,
+    0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA,
+    0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF2, 0xF3, 0xF4,
+    0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
+]
+
+# JFIF / ITU-T T.871 color transform, DERIVED from Kr = 0.299, Kb = 0.114
+# (no tabulated constants).  The identical expressions appear verbatim in
+# the DuckDB oracles so both engines build bit-identical doubles.
+_JPEG_KR = 0.299
+_JPEG_KB = 0.114
+_JPEG_CR_R = 2 * (1 - _JPEG_KR)                                   # 1.402
+_JPEG_CB_G = 2 * _JPEG_KB * (1 - _JPEG_KB) / (1 - _JPEG_KR - _JPEG_KB)
+_JPEG_CR_G = 2 * _JPEG_KR * (1 - _JPEG_KR) / (1 - _JPEG_KR - _JPEG_KB)
+_JPEG_CB_B = 2 * (1 - _JPEG_KB)                                   # 1.772
+
+# AC huffman table for the progressive scans: canonical, every symbol 8
+# bits (176 of 256 codes used, Kraft-feasible, all-ones code unassigned —
+# T.81 Annex C requirements).  Covers EOBn (r<<4, r=0..14), ZRL (0xF0),
+# and (run, size) for run 0..15 / size 1..10.  The DECODER learns tables
+# only from the DHT segment, so this choice is a synthesis detail, not a
+# decoder assumption.
+_JPEG_PROG_AC_VALS = (
+    [r << 4 for r in range(15)] + [0xF0]
+    + [(r << 4) | s for r in range(16) for s in range(1, 11)]
+)
+_JPEG_PROG_AC_BITS = [0] * 16
+_JPEG_PROG_AC_BITS[7] = len(_JPEG_PROG_AC_VALS)  # all codes 8 bits long
 
 
 def _huff_codes(bits, vals):
@@ -1695,90 +1769,640 @@ class _BitReader:
         self.pos += 2
 
 
-def _encode_gray_jpeg(img, qtable=None, restart_interval: int = 0) -> bytes:
-    """Baseline greyscale JPEG encoder (the synthesis side): real FDCT,
-    real quantization, real Annex-K huffman coding, real byte stuffing.
-    Dimensions must be multiples of 8 (no padding logic — the synthesis
-    controls them)."""
+def _jpeg_amp(v: int) -> tuple[int, int]:
+    """(size, amplitude) encoding of a signed value (T.81 F.1.2.1/F.1.4):
+    negative amplitudes are sent as v + 2^size - 1."""
+    t = int(v).bit_length() if v > 0 else int(-v).bit_length()
+    return (t, v if v >= 0 else v + (1 << t) - 1)
+
+
+def _flush_eobrun(bw: "_BitWriter", state: dict, ac_codes: dict) -> None:
+    """Emit the pending EOBn code (n = accumulated end-of-band blocks)
+    followed by the correction bits buffered across that run."""
+    n = state["eobrun"]
+    if n == 0:
+        return
+    r = n.bit_length() - 1
+    code, ln = ac_codes[r << 4]
+    bw.write(code, ln)
+    if r:
+        bw.write(n - (1 << r), r)
+    for b in state["bits"]:
+        bw.write(b, 1)
+    state["eobrun"] = 0
+    state["bits"] = []
+
+
+def _enc_ac_first(bw, zz, ss, se, al, state, ac_codes) -> None:
+    """AC first scan for one block (T.81 G.1.2.2): point-transformed
+    magnitudes, run/size coding, all-zero bands folded into EOBRUN."""
+    vals = []
+    for k in range(ss, se + 1):
+        v = int(zz[k])
+        m = abs(v) >> al
+        vals.append(m if v >= 0 else -m)
+    nz = [i for i, v in enumerate(vals) if v]
+    if not nz:
+        state["eobrun"] += 1
+        if state["eobrun"] == 0x7FFF:  # EOBn ceiling (n < 2^15)
+            _flush_eobrun(bw, state, ac_codes)
+        return
+    _flush_eobrun(bw, state, ac_codes)
+    run = 0
+    for i in range(nz[-1] + 1):
+        v = vals[i]
+        if v == 0:
+            run += 1
+            continue
+        while run > 15:
+            code, ln = ac_codes[0xF0]
+            bw.write(code, ln)
+            run -= 16
+        t, amp = _jpeg_amp(v)
+        code, ln = ac_codes[(run << 4) | t]
+        bw.write(code, ln)
+        bw.write(amp, t)
+        run = 0
+    if nz[-1] < len(vals) - 1:
+        state["eobrun"] += 1
+        if state["eobrun"] == 0x7FFF:
+            _flush_eobrun(bw, state, ac_codes)
+
+
+def _enc_ac_refine(bw, zz, ss, se, al, state, ac_codes) -> None:
+    """AC refinement scan for one block (T.81 G.1.2.3): newly-nonzero
+    coefficients (magnitude bit Al is the first transmitted bit) get a
+    huffman (run, 1) code + sign bit; coefficients made nonzero by
+    EARLIER scans contribute one raw correction bit each, buffered and
+    emitted after the next huffman code whose run-skip walks past them
+    (the decoder reads them positionally during that walk).  The ZRL
+    check runs at EVERY nonzero — a history coefficient preceded by >15
+    still-zero positions must flush the ZRL before buffering its own
+    bit, or the decoder's 16-zero walk would consume bits that belong
+    to the next code."""
+    t = [abs(int(zz[k])) >> al for k in range(ss, se + 1)]
+    eob_idx = -1  # last newly-nonzero position; trailing ZRLs fold into EOB
+    for i, tv in enumerate(t):
+        if tv == 1:
+            eob_idx = i
+    run = 0
+    pend: list[int] = []
+    for i, tv in enumerate(t):
+        if tv == 0:
+            run += 1
+            continue
+        while run > 15 and i <= eob_idx:
+            _flush_eobrun(bw, state, ac_codes)
+            code, ln = ac_codes[0xF0]
+            bw.write(code, ln)
+            run -= 16
+            for b in pend:
+                bw.write(b, 1)
+            pend = []
+        if tv > 1:  # history nonzero: one correction bit
+            pend.append(tv & 1)
+            continue
+        # newly nonzero at this bit plane
+        _flush_eobrun(bw, state, ac_codes)
+        code, ln = ac_codes[(run << 4) | 1]
+        bw.write(code, ln)
+        bw.write(1 if int(zz[ss + i]) > 0 else 0, 1)
+        for b in pend:
+            bw.write(b, 1)
+        pend = []
+        run = 0
+    if run > 0 or pend:
+        state["eobrun"] += 1
+        state["bits"].extend(pend)
+        if state["eobrun"] == 0x7FFF:
+            _flush_eobrun(bw, state, ac_codes)
+
+
+# Scan scripts as data: (components, Ss, Se, Ah, Al) per SOS, components
+# indexed in SOF order.  Baseline is one interleaved full scan.  The
+# progressive scripts split every block's coefficients by spectral band
+# (Ss..Se) and by bit plane (successive approximation, Ah/Al), so the
+# decoder's EOBRUN, ZRL-in-refinement and buffered-correction-bit paths
+# all execute on real streams:
+#   DC first   (Ss=0, Se=0,  Ah=0, Al=1)   huffman DC diffs, >>1
+#   AC first   (Ss≥1,        Ah=0, Al=1)   huffman + EOBRUN batching
+#   DC refine  (Ss=0, Se=0,  Ah=1, Al=0)   one raw bit per block
+#   AC refine  (Ss≥1,        Ah=1, Al=0)   correction-bit algorithm
+# DC point transform is an ARITHMETIC shift of the signed value; AC point
+# transform shifts the MAGNITUDE (T.81 G.1.2.1/G.1.2.2 — the asymmetry is
+# load-bearing for negatives).  DC scans may interleave components (MCU
+# order, per-component predictors); progressive AC scans are always
+# single-component (T.81 G.1.1.1.1).
+_JPEG_PROG_SCRIPT = (  # greyscale: six scans, AC split at zigzag 5/6
+    ((0,), 0, 0, 0, 1),
+    ((0,), 1, 5, 0, 1),
+    ((0,), 6, 63, 0, 1),
+    ((0,), 0, 0, 1, 0),
+    ((0,), 1, 5, 1, 0),
+    ((0,), 6, 63, 1, 0),
+)
+_JPEG_PROG_SCRIPT_420 = (  # 4:2:0 color: eight scans
+    ((0, 1, 2), 0, 0, 0, 1),
+    ((0,), 1, 63, 0, 1),
+    ((1,), 1, 63, 0, 1),
+    ((2,), 1, 63, 0, 1),
+    ((0, 1, 2), 0, 0, 1, 0),
+    ((0,), 1, 63, 1, 0),
+    ((1,), 1, 63, 1, 0),
+    ((2,), 1, 63, 1, 0),
+)
+
+
+def _quant_plane_blocks(plane, q):
+    """FDCT + quantize one plane into zigzag-order int64 block arrays
+    (raster block order)."""
+    import numpy as np
+
+    basis, s2 = _dct_basis()
+    h, w = plane.shape
+    shifted = plane.astype(np.float64) - 128.0
+    out = []
+    for by in range(h // 8):
+        for bx in range(w // 8):
+            blk = shifted[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
+            # 2D DCT-II: F = S2 ∘ (B blk B^T)
+            coef = s2 * (basis @ blk @ basis.T)
+            out.append(_rnd_away(coef / q).astype(np.int64).reshape(-1)[_ZIGZAG])
+    return out
+
+
+def _jpeg_mcus(samp, geoms, scan):
+    """MCU order of one scan as lists of (component, block index), shared
+    by the encoder and the decoder (T.81 A.2): a single-component scan
+    walks that component's blocks in raster order, one block per MCU; an
+    interleaved scan walks MCUs, each carrying hs×vs blocks of every
+    scan component (4 Y + Cb + Cr for 4:2:0).  ``samp``/``geoms`` give
+    each frame component's (hs, vs) and (block rows, block columns)."""
+    if len(scan) == 1:
+        nby, nbx = geoms[scan[0]]
+        return [[(scan[0], b)] for b in range(nby * nbx)]
+    hs0, vs0 = samp[scan[0]]
+    nby0, nbx0 = geoms[scan[0]]
+    return [
+        [
+            (c, (my * vs + v) * geoms[c][1] + mx * hs + u)
+            for c in scan
+            for hs, vs in [samp[c]]
+            for v in range(vs)
+            for u in range(hs)
+        ]
+        for my in range(nby0 // vs0)
+        for mx in range(nbx0 // hs0)
+    ]
+
+
+def _encode_jpeg(planes, progressive=False, restart_interval=0) -> bytes:
+    """The JPEG encoder (synthesis side): real FDCT, real quantization,
+    real Annex-K huffman coding, real byte stuffing.  ``planes`` is
+    ``(img,)`` for greyscale (dimensions multiples of 8) or
+    ``(Y, Cb, Cr)`` for 4:2:0 color (Y multiples of 16, chroma half
+    size; luma tables id 0, chroma tables id 1).  Baseline (SOF0) codes
+    one interleaved full scan, optionally with DRI/RSTn restart
+    intervals; progressive (SOF2) codes the same quantized coefficients
+    through ``_JPEG_PROG_SCRIPT`` / ``_JPEG_PROG_SCRIPT_420`` with the
+    all-8-bit progressive AC table."""
     import struct
 
     import numpy as np
 
-    q = np.array(qtable or _JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-    h, w = img.shape
-    if h % 8 or w % 8:
-        raise ValueError("encoder expects multiple-of-8 dimensions")
-    basis, s2 = _dct_basis()
-    dc_codes = _huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-    bw = _BitWriter()
-    prev_dc = 0
-    mcu = 0
-    nrst = 0
-    shifted = img.astype(np.float64) - 128.0
-    for by in range(h // 8):
-        for bx in range(w // 8):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                # RSTn between intervals: byte-align, marker, predictor reset
-                bw.marker(0xD0 + (nrst % 8))
-                nrst += 1
-                prev_dc = 0
-            mcu += 1
-            blk = shifted[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
-            # 2D DCT-II: F = S2 ∘ (B blk B^T)
-            coef = s2 * (basis @ blk @ basis.T)
-            qc = _rnd_away(coef / q).astype(np.int64)
-            zz = qc.reshape(-1)[_ZIGZAG]
-            diff = int(zz[0]) - prev_dc
-            prev_dc = int(zz[0])
-
-            def _amp(v: int) -> tuple[int, int]:
-                t = int(v).bit_length() if v > 0 else int(-v).bit_length()
-                return (t, (v if v >= 0 else v + (1 << t) - 1))
-
-            t, amp = _amp(diff) if diff else (0, 0)
-            code, ln = dc_codes[t]
-            bw.write(code, ln)
-            if t:
-                bw.write(amp, t)
-            run = 0
-            last_nz = max((i for i in range(1, 64) if zz[i]), default=0)
-            for i in range(1, last_nz + 1):
-                if zz[i] == 0:
-                    run += 1
-                    if run == 16:
-                        code, ln = ac_codes[0xF0]  # ZRL
-                        bw.write(code, ln)
-                        run = 0
-                    continue
-                t, amp = _amp(int(zz[i]))
-                code, ln = ac_codes[(run << 4) | t]
-                bw.write(code, ln)
-                bw.write(amp, t)
-                run = 0
-            if last_nz < 63:
-                code, ln = ac_codes[0x00]  # EOB
-                bw.write(code, ln)
-    scan = bw.flush()
+    color = len(planes) == 3
+    h, w = planes[0].shape
+    mcu = 16 if color else 8
+    if h % mcu or w % mcu:
+        raise ValueError(f"encoder expects multiple-of-{mcu} dimensions")
+    if color and any(p.shape != (h // 2, w // 2) for p in planes[1:]):
+        raise ValueError("chroma planes must be half-size (4:2:0)")
+    if progressive and restart_interval:
+        raise ValueError("restart intervals unsupported in progressive mode")
+    tab = [0, 1, 1][: len(planes)]  # table id per component
+    samp = [(2, 2), (1, 1), (1, 1)] if color else [(1, 1)]
+    geoms = [(p.shape[0] // 8, p.shape[1] // 8) for p in planes]
+    qts = (_JPEG_QTABLE, _JPEG_QTABLE_C)
+    blocks = [
+        _quant_plane_blocks(p, np.array(qts[t], dtype=np.float64).reshape(8, 8))
+        for p, t in zip(planes, tab)
+    ]
+    dc = [(_JPEG_DC_BITS, _JPEG_DC_VALS), (_JPEG_DC_BITS_C, _JPEG_DC_VALS_C)]
+    ntab = 2 if color else 1
+    if progressive:
+        ac = [(_JPEG_PROG_AC_BITS, _JPEG_PROG_AC_VALS)]
+        ac_tab = [0] * len(planes)
+        dht = [(t, dc[t]) for t in range(ntab)] + [(0x10, ac[0])]
+        script = _JPEG_PROG_SCRIPT_420 if color else _JPEG_PROG_SCRIPT
+    else:
+        ac = [(_JPEG_AC_BITS, _JPEG_AC_VALS), (_JPEG_AC_BITS_C, _JPEG_AC_VALS_C)]
+        ac_tab = tab
+        dht = [(0x00, dc[0]), (0x10, ac[0]), (0x01, dc[1]), (0x11, ac[1])]
+        dht = dht[: 2 * ntab]
+        script = ((tuple(range(len(planes))), 0, 63, 0, 0),)
+    dc_codes = [_huff_codes(*t) for t in dc]
+    ac_codes = [_huff_codes(*t) for t in ac]
 
     def seg(marker: int, payload: bytes) -> bytes:
         return struct.pack(">HH", marker, len(payload) + 2) + payload
 
-    qz = np.array(qtable or _JPEG_QTABLE, dtype=np.int64)
-    dqt = seg(0xFFDB, bytes([0]) + bytes(int(qz[z]) for z in _ZIGZAG))
-    sof = seg(0xFFC0, struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0]))
-    dht = seg(
-        0xFFC4,
-        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS),
+    out = bytearray(b"\xff\xd8")
+    out += seg(0xFFDB, b"".join(
+        bytes([t]) + bytes(qts[t][z] for z in _ZIGZAG) for t in range(ntab)
+    ))
+    if restart_interval:
+        out += seg(0xFFDD, struct.pack(">H", restart_interval))
+    out += seg(
+        0xFFC2 if progressive else 0xFFC0,
+        struct.pack(">BHHB", 8, h, w, len(planes))
+        + b"".join(
+            bytes([c + 1, (hs << 4) | vs, tab[c]]) for c, (hs, vs) in enumerate(samp)
+        ),
     )
-    sos = seg(0xFFDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    dri = (
-        seg(0xFFDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
+    out += seg(0xFFC4, b"".join(
+        bytes([tcth]) + bytes(bits) + bytes(vals) for tcth, (bits, vals) in dht
+    ))
+    for comps, ss, se, ah, al in script:
+        bw = _BitWriter()
+        state = {"eobrun": 0, "bits": []}
+        pdc = [0] * len(planes)
+        for m, unit in enumerate(_jpeg_mcus(samp, geoms, comps)):
+            if restart_interval and m and m % restart_interval == 0:
+                # RSTn between intervals: byte-align, marker, predictor reset
+                bw.marker(0xD0 + (m // restart_interval - 1) % 8)
+                pdc = [0] * len(planes)
+            for c, b in unit:
+                zz = blocks[c][b]
+                if ss == 0 and ah == 0:  # DC first (baseline: the whole DC)
+                    v = int(zz[0]) >> al  # ARITHMETIC shift (signed)
+                    diff = v - pdc[c]
+                    pdc[c] = v
+                    t, amp = _jpeg_amp(diff) if diff else (0, 0)
+                    code, ln = dc_codes[tab[c]][t]
+                    bw.write(code, ln)
+                    if t:
+                        bw.write(amp, t)
+                elif ss == 0:  # DC refine
+                    bw.write((int(zz[0]) >> al) & 1, 1)
+                if se:
+                    enc = _enc_ac_first if ah == 0 else _enc_ac_refine
+                    enc(bw, zz, max(ss, 1), se, al, state, ac_codes[ac_tab[c]])
+                    if not progressive:  # baseline: EOB closes each block
+                        _flush_eobrun(bw, state, ac_codes[ac_tab[c]])
+        _flush_eobrun(bw, state, ac_codes[0])
+        sel = b"".join(  # progressive AC scans leave the unused Td at 0
+            bytes([c + 1, ((tab[c] if ss == 0 else 0) << 4) | ac_tab[c]])
+            for c in comps
+        )
+        out += seg(0xFFDA, bytes([len(comps)]) + sel + bytes([ss, se, (ah << 4) | al]))
+        out += bw.flush()
+    out += b"\xff\xd9"
+    return bytes(out)
+
+
+def _entropy_end(data: bytes, start: int) -> int:
+    """Index of the marker that terminates an entropy-coded segment:
+    skips stuffed FF00 pairs; restart markers are rejected (the decoder
+    calls this after a scan's last MCU, where no RSTn may follow)."""
+    i = start
+    while i + 1 < len(data):
+        if data[i] == 0xFF:
+            nxt = data[i + 1]
+            if nxt == 0x00:
+                i += 2
+                continue
+            if 0xD0 <= nxt <= 0xD7:
+                raise ValueError("restart markers unsupported")
+            return i
+        i += 1
+    return len(data)
+
+
+def _huffdec(br: "_BitReader", table: dict) -> int:
+    """Read one huffman symbol; ``table`` maps (length, code) → symbol."""
+    code = 0
+    for ln in range(1, 17):
+        code = (code << 1) | br.bit()
+        sym = table.get((ln, code))
+        if sym is not None:
+            return sym
+    raise ValueError("invalid huffman code")
+
+
+def _extend_amp(amp: int, t: int) -> int:
+    return amp if amp >= (1 << (t - 1)) else amp - (1 << t) + 1
+
+
+def _dec_ac_first_block(br, zz, ss, se, al, atab, eobrun: int) -> int:
+    """One block of an AC first scan (T.81 G.2); returns the remaining
+    EOBRUN so multi-block runs span the caller's block loop."""
+    if eobrun:
+        return eobrun - 1
+    k = ss
+    while k <= se:
+        sym = _huffdec(br, atab)
+        r, s = sym >> 4, sym & 0x0F
+        if s == 0:
+            if r == 15:  # ZRL
+                k += 16
+                continue
+            eobrun = (1 << r) - 1
+            if r:
+                eobrun += br.bits(r)
+            break
+        k += r
+        if k > se:
+            raise ValueError("AC run overflows band")
+        zz[k] = _extend_amp(br.bits(s), s) << al
+        k += 1
+    return eobrun
+
+
+def _dec_ac_refine_block(br, zz, ss, se, al, atab, eobrun: int) -> int:
+    """One block of an AC refinement scan (T.81 G.2): positional
+    correction-bit walk; returns the remaining EOBRUN."""
+    p1 = 1 << al
+    k = ss
+    if eobrun == 0:
+        while k <= se:
+            sym = _huffdec(br, atab)
+            r, s = sym >> 4, sym & 0x0F
+            if s == 0:
+                if r < 15:  # EOBn: current block finishes below
+                    eobrun = 1 << r
+                    if r:
+                        eobrun += br.bits(r)
+                    break
+                val = 0  # ZRL: skip 16 still-zero positions
+            elif s == 1:
+                val = p1 if br.bit() else -p1
+            else:
+                raise ValueError("refinement amplitude must be ±1")
+            while k <= se:
+                if zz[k] != 0:
+                    # positional correction bit for a history coefficient
+                    if br.bit() and (abs(int(zz[k])) & p1) == 0:
+                        zz[k] += p1 if zz[k] > 0 else -p1
+                else:
+                    if r == 0:
+                        break
+                    r -= 1
+                k += 1
+            if val:
+                if k > se:
+                    raise ValueError("refinement placement overflows band")
+                zz[k] = val
+            k += 1
+    if eobrun > 0:
+        while k <= se:  # correction bits through the rest of the band
+            if zz[k] != 0:
+                if br.bit() and (abs(int(zz[k])) & p1) == 0:
+                    zz[k] += p1 if zz[k] > 0 else -p1
+            k += 1
+        eobrun -= 1
+    return eobrun
+
+
+def _jpeg_scan(br, coefs, mcus, tables, ss, se, ah, al, ri, sequential) -> None:
+    """Decode one scan into the per-component coefficient lists (zigzag
+    order; Python ints, so the DC bit-OR refinement is exact for negative
+    values, e.g. -6 | 1 == -5).  A sequential scan is DC first + AC first
+    over Ss=0..63 with Ah=Al=0: its EOB is EOB0 and ZRL means the same as
+    in a progressive scan, while an EOBn run (n>0) is an error.  Restart
+    intervals byte-align, verify the RSTn sequence and reset the DC
+    predictors and the EOB run."""
+    pdc = [0] * len(coefs)
+    eobrun = 0
+    for m, unit in enumerate(mcus):
+        if ri and m and m % ri == 0:
+            br.restart(m // ri - 1)
+            pdc = [0] * len(coefs)
+            eobrun = 0
+        for c, b in unit:
+            zz = coefs[c][b]
+            dtab, atab = tables[c]
+            if ss == 0 and ah == 0:  # DC first
+                t = _huffdec(br, dtab)
+                pdc[c] += _extend_amp(br.bits(t), t) if t else 0
+                zz[0] = pdc[c] << al
+            elif ss == 0:  # DC refine
+                zz[0] |= br.bit() << al
+            if se and ah == 0:
+                eobrun = _dec_ac_first_block(br, zz, max(ss, 1), se, al, atab, eobrun)
+                if sequential and eobrun:
+                    raise ValueError("EOB run in a sequential scan")
+            elif se:
+                eobrun = _dec_ac_refine_block(br, zz, ss, se, al, atab, eobrun)
+
+
+_JPEG_SEGMENTS = {
+    0xFFDB: "DQT", 0xFFC4: "DHT", 0xFFDD: "DRI", 0xFFDA: "SOS",
+    0xFFC0: "SOF", 0xFFC2: "SOF",
+}
+
+
+def _jpeg_decode(payload: bytes, mode):
+    """The JPEG decoder (ITU-T T.81 huffman processes, sequential and
+    progressive): one marker walk, coefficients accumulated per component
+    across every SOS scan, then one dequantize + IDCT per plane, and for
+    4:2:0 color one 2× box chroma upsample + derived YCbCr→RGB.
+
+    ``mode`` is ``(progressive, n_components)`` for a query that accepts
+    exactly one frame type, or None (the router: any supported frame).
+    Returns ``(pixels, n_scans, restart_interval)`` — (h, w) uint8 for
+    greyscale, (h, w, 3) uint8 RGB for color; the interval is what the
+    DRI segment declares (0 if absent).  Lossless/extended/arithmetic
+    frames, samplings other than 1×1 and 4:2:0, 16-bit tables, edge
+    padding and restart intervals in progressive frames are REJECTED,
+    not mis-decoded."""
+    import struct
+
+    import numpy as np
+
+    if payload[0:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG (missing SOI)")
+    qtables: dict[int, object] = {}
+    huff: dict[tuple[int, int], dict] = {}  # (class, id) → (len, code) → sym
+    comps = None  # [(id, hs, vs, tq)] in SOF order
+    coefs = None  # per component, per block: 64 zigzag coefficients
+    progressive = False
+    ri = 0  # restart interval in MCUs (DRI); 0 = none
+    n_scans = 0
+    dc_seen = set()
+    pos = 2
+    while pos + 4 <= len(payload):
+        if payload[pos] != 0xFF:
+            raise ValueError(f"expected marker at {pos}")
+        marker, size = struct.unpack(">HH", payload[pos : pos + 4])
+        if marker == 0xFFD9:
+            break
+        if pos + 2 + size > len(payload):
+            # a declared segment length past EOF is a truncated container —
+            # reject rather than hand a short table to the parsers below
+            name = _JPEG_SEGMENTS.get(marker, f"{marker:#x}")
+            raise ValueError(f"truncated {name} segment")
+        body = payload[pos + 4 : pos + 2 + size]
+        if marker == 0xFFDB:
+            for off in range(0, len(body), 65):
+                if body[off] >> 4:
+                    raise ValueError("16-bit quant tables unsupported")
+                if off + 65 > len(body):
+                    raise ValueError("truncated DQT segment")
+                tq = np.zeros(64, dtype=np.int64)
+                tq[_ZIGZAG] = list(body[off + 1 : off + 65])
+                qtables[body[off] & 0x0F] = tq.reshape(8, 8)
+        elif 0xFFC0 <= marker <= 0xFFC3:
+            progressive = marker == 0xFFC2
+            if mode and mode[0] and not progressive:
+                raise ValueError("not a progressive (SOF2) JPEG")
+            if marker not in (0xFFC0, 0xFFC2) or (mode and not mode[0] and progressive):
+                raise ValueError("only baseline (SOF0) JPEG is supported")
+            if len(body) < 6:
+                raise ValueError("truncated SOF segment")
+            prec, h, w, nf = struct.unpack(">BHHB", body[:6])
+            if prec != 8 or nf not in (1, 3) or (mode and nf != mode[1]):
+                raise ValueError(
+                    f"unsupported SOF{marker & 0xF}: precision={prec} components={nf}"
+                )
+            if len(body) < 6 + 3 * nf:
+                raise ValueError("truncated SOF segment")
+            comps = [
+                (body[i], body[i + 1] >> 4, body[i + 1] & 0x0F, body[i + 2])
+                for i in range(6, 6 + 3 * nf, 3)
+            ]
+            samp = [(hs, vs) for _, hs, vs, _ in comps]
+            if nf == 1 and samp != [(1, 1)]:
+                raise ValueError("subsampling unsupported for greyscale")
+            if nf == 3 and samp != [(2, 2), (1, 1), (1, 1)]:
+                raise ValueError("only 4:2:0 subsampling supported")
+            mcu = 8 * samp[0][0]
+            if h % mcu or w % mcu:
+                raise ValueError(f"non-multiple-of-{mcu} dims unsupported (no edge pad)")
+            geoms = [(h * vs // mcu, w * hs // mcu) for hs, vs in samp]
+            coefs = [[[0] * 64 for _ in range(nby * nbx)] for nby, nbx in geoms]
+        elif marker == 0xFFC4:
+            off = 0
+            while off < len(body):
+                bits = list(body[off + 1 : off + 17])
+                nv = sum(bits)
+                if off + 17 + nv > len(body):
+                    raise ValueError("truncated DHT segment")
+                codes = _huff_codes(bits, body[off + 17 : off + 17 + nv])
+                huff[(body[off] >> 4, body[off] & 0x0F)] = {
+                    (ln, code): sym for sym, (code, ln) in codes.items()
+                }
+                off += 17 + nv
+        elif marker == 0xFFDD:
+            if len(body) < 2:
+                raise ValueError("truncated DRI segment")
+            (ri,) = struct.unpack(">H", body[:2])
+        elif marker == 0xFFDA:
+            if coefs is None:
+                raise ValueError("SOS before SOF")
+            ns = body[0] if body else 0
+            if not 1 <= ns <= len(comps) or len(body) != 4 + 2 * ns:
+                raise ValueError(f"unsupported SOS: {ns} scan components")
+            ss, se, ahal = body[-3:]
+            ah, al = ahal >> 4, ahal & 0x0F
+            if not progressive:
+                if (ss, se, ahal) != (0, 63, 0):
+                    raise ValueError("sequential scan must be Ss=0, Se=63, Ah=Al=0")
+            elif ri:
+                raise ValueError("restart intervals unsupported")
+            elif ss == 0 and se != 0:
+                raise ValueError("DC scan requires Se=0")
+            elif ss and (se < ss or se > 63):
+                raise ValueError("bad spectral band")
+            elif ss and ns != 1:
+                raise ValueError("progressive AC scans are single-component")
+            cidx = {c[0]: i for i, c in enumerate(comps)}
+            scan, tables = [], {}
+            for cid, tdta in zip(body[1:-3:2], body[2:-3:2]):
+                if cid not in cidx:
+                    raise ValueError(f"SOS selects unknown component {cid}")
+                td, ta = tdta >> 4, tdta & 0x0F
+                if (ss == 0 and ah == 0 and (0, td) not in huff) or (
+                    se and (1, ta) not in huff
+                ):
+                    raise ValueError(
+                        f"SOS selects absent huffman tables (Td={td}, Ta={ta})"
+                    )
+                scan.append(cidx[cid])
+                tables[cidx[cid]] = (huff.get((0, td)), huff.get((1, ta)))
+            if ss == 0 and ah == 0:
+                dc_seen.update(scan)
+            start = pos + 2 + size
+            br = _BitReader(payload[start:])
+            _jpeg_scan(br, coefs, _jpeg_mcus(samp, geoms, scan), tables,
+                       ss, se, ah, al, ri, not progressive)
+            n_scans += 1
+            pos = _entropy_end(payload, start + br.pos)
+            continue
+        pos += 2 + size
+    if coefs is None or n_scans == 0:
+        raise ValueError("missing SOF/SOS")
+    basis, s2 = _dct_basis()
+    planes = []
+    for ci, ((cid, _, _, tq), (nby, nbx)) in enumerate(zip(comps, geoms)):
+        if ci not in dc_seen:
+            raise ValueError(f"SOS missing component {cid}")
+        q = qtables.get(tq)
+        if q is None:
+            raise ValueError(f"component {cid} selects absent quant table {tq}")
+        plane = np.zeros((nby * 8, nbx * 8), dtype=np.float64)
+        for b, zz in enumerate(coefs[ci]):
+            coef = np.zeros(64, dtype=np.float64)
+            coef[_ZIGZAG] = zz
+            deq = coef.reshape(8, 8) * q
+            # inverse of F = S2 ∘ (B f B^T)  =>  f = B^T (S2 ∘ F) B
+            blk = basis.T @ (s2 * deq) @ basis
+            by, bx = divmod(b, nbx)
+            plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = np.clip(
+                _rnd_away(blk + 128.0), 0, 255
+            )
+        planes.append(plane)
+    if len(planes) == 1:
+        return planes[0].astype(np.uint8), n_scans, ri
+    # box upsample (JFIF mandates no filter; replicate is the closed-form
+    # choice the oracle mirrors), then the derived matrix
+    hmax, vmax = samp[0]
+    Y, cb, cr = (
+        np.repeat(np.repeat(p, vmax // vs, axis=0), hmax // hs, axis=1)
+        for p, (hs, vs) in zip(planes, samp)
     )
-    return b"\xff\xd8" + dqt + dri + sof + dht + sos + scan + b"\xff\xd9"
+    cb, cr = cb - 128.0, cr - 128.0
+    r = Y + _JPEG_CR_R * cr
+    g = Y - _JPEG_CB_G * cb - _JPEG_CR_G * cr
+    b = Y + _JPEG_CB_B * cb
+    rgb = np.stack(
+        [np.clip(_rnd_away(c), 0, 255).astype(np.uint8) for c in (r, g, b)],
+        axis=-1,
+    )
+    return rgb, n_scans, ri
+
+
+def jpeg_pixels(payload: bytes):
+    """Baseline (SOF0) greyscale decode, restart intervals included →
+    (h, w) uint8 pixels; every other frame type is REJECTED."""
+    return _jpeg_decode(payload, (False, 1))[0]
+
+
+def jpeg_color_pixels(payload: bytes):
+    """Baseline (SOF0) 4:2:0 color decode → (h, w, 3) uint8 RGB; every
+    other frame type is REJECTED."""
+    return _jpeg_decode(payload, (False, 3))[0]
+
+
+def jpeg_progressive_pixels(payload: bytes):
+    """Progressive (SOF2) greyscale decode → ((h, w) uint8 pixels,
+    n_scans); every other frame type is REJECTED."""
+    return _jpeg_decode(payload, (True, 1))[:2]
+
+
+def jpeg_color_progressive_pixels(payload: bytes):
+    """Progressive (SOF2) 4:2:0 color decode → ((h, w, 3) uint8 RGB,
+    n_scans); every other frame type is REJECTED."""
+    return _jpeg_decode(payload, (True, 3))[:2]
 
 
 def synth_jpeg(doc_id: int):
@@ -1791,160 +2415,7 @@ def synth_jpeg(doc_id: int):
     bys, bxs = np.meshgrid(np.arange(hb), np.arange(wb), indexing="ij")
     vals = ((doc_id + 11 * bxs + 23 * bys) % 256).astype(np.float64)
     img = np.kron(vals, np.ones((8, 8)))
-    return _encode_gray_jpeg(img), wb * 8, hb * 8
-
-
-def jpeg_pixels(payload: bytes):
-    """REAL baseline JPEG decode (greyscale, T.81 baseline process):
-    marker walk, DQT/DHT/SOF0/SOS parse, huffman entropy decode with
-    byte-destuffing, DC-difference accumulation, dequantize, inverse
-    zigzag, 8x8 IDCT, level shift, clip.  Restart intervals (DRI/RSTn —
-    r11: byte-aligned markers, modulo-8 sequence verification, DC
-    predictor reset per interval) are decoded.  Returns (h, w) uint8
-    pixels.  Progressive scans, multi-component images, and 16-bit
-    tables are REJECTED, not mis-decoded."""
-    import struct
-
-    import numpy as np
-
-    if payload[0:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    pos = 2
-    qtables: dict[int, object] = {}
-    dc_tree: dict[int, dict] = {}
-    ac_tree: dict[int, dict] = {}
-    dims = None
-    qsel = 0
-    td = ta = 0
-    scan = None
-    ri = 0  # restart interval in MCUs (DRI); 0 = none
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError(f"expected marker at {pos}")
-        marker = struct.unpack(">H", payload[pos : pos + 2])[0]
-        if marker == 0xFFD9:
-            break
-        (size,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
-        if pos + 2 + size > len(payload):
-            # a declared segment length past EOF is a truncated container —
-            # reject rather than hand a short table to the huffman builder
-            raise ValueError(f"segment {marker:#x} overruns payload")
-        body = payload[pos + 4 : pos + 2 + size]
-        if marker == 0xFFDB:
-            if body[0] >> 4:
-                raise ValueError("16-bit quant tables unsupported")
-            tid = body[0] & 0x0F
-            tq = np.zeros(64, dtype=np.int64)
-            for i, z in enumerate(_ZIGZAG):
-                tq[z] = body[1 + i]
-            qtables[tid] = tq.reshape(8, 8)
-        elif marker in (0xFFC1, 0xFFC2, 0xFFC3):
-            raise ValueError("only baseline (SOF0) JPEG is supported")
-        elif marker == 0xFFDD:
-            if len(body) < 2:
-                raise ValueError("truncated DRI segment")
-            (ri,) = struct.unpack(">H", body[:2])
-        elif marker == 0xFFC0:
-            prec, h, w, ncomp = struct.unpack(">BHHB", body[:6])
-            if prec != 8 or ncomp != 1:
-                raise ValueError(
-                    f"unsupported SOF0: precision={prec} components={ncomp}"
-                )
-            if body[7] != 0x11:
-                raise ValueError("subsampling unsupported for greyscale")
-            qsel = body[8]
-            dims = (h, w)
-        elif marker == 0xFFC4:
-            off = 0
-            while off < len(body):
-                tc, th = body[off] >> 4, body[off] & 0x0F
-                bits = list(body[off + 1 : off + 17])
-                nv = sum(bits)
-                vals = list(body[off + 17 : off + 17 + nv])
-                tree: dict = {}
-                for sym, (code, ln) in _huff_codes(bits, vals).items():
-                    node = tree
-                    for b in format(code, f"0{ln}b"):
-                        node = node.setdefault(b, {})
-                    node["leaf"] = sym
-                (dc_tree if tc == 0 else ac_tree)[th] = tree
-                off += 17 + nv
-        elif marker == 0xFFDA:
-            if body[0] != 1:
-                raise ValueError(f"unsupported SOS: {body[0]} scan components")
-            td, ta = body[2] >> 4, body[2] & 0x0F
-            scan = payload[pos + 2 + size :]
-            break
-        pos += 2 + size
-    if dims is None or scan is None or qsel not in qtables:
-        raise ValueError("missing SOF0/SOS/DQT")
-    if td not in dc_tree or ta not in ac_tree:
-        raise ValueError(f"SOS selects absent huffman tables (Td={td}, Ta={ta})")
-    h, w = dims
-    if h % 8 or w % 8:
-        raise ValueError("non-multiple-of-8 dims unsupported (no edge pad)")
-    # byte stuffing guarantees FF D9 cannot occur inside valid entropy
-    # data, so the FIRST occurrence is the true EOI — rfind would let
-    # trailing garbage containing FF D9 silently extend the stream
-    end = scan.find(b"\xff\xd9")
-    br = _BitReader(scan[: end if end >= 0 else len(scan)])
-    q = qtables[qsel]
-    basis, s2 = _dct_basis()
-
-    def _huffdec(tree: dict) -> int:
-        node = tree
-        for _ in range(16):
-            node = node.get(str(br.bit()))
-            if node is None:
-                raise ValueError("invalid huffman code")
-            if "leaf" in node:
-                return node["leaf"]
-        raise ValueError("huffman code longer than 16 bits")
-
-    def _extend(amp: int, t: int) -> int:
-        return amp if amp >= (1 << (t - 1)) else amp - (1 << t) + 1
-
-    out = np.zeros((h, w), dtype=np.uint8)
-    prev_dc = 0
-    mcu = 0
-    nrst = 0
-    dtree, atree = dc_tree[td], ac_tree[ta]
-    for by in range(h // 8):
-        for bx in range(w // 8):
-            if ri and mcu and mcu % ri == 0:
-                br.restart(nrst)  # byte-align + verify RSTn sequence
-                nrst += 1
-                prev_dc = 0
-            mcu += 1
-            zz = np.zeros(64, dtype=np.int64)
-            t = _huffdec(dtree)
-            diff = _extend(br.bits(t), t) if t else 0
-            prev_dc += diff
-            zz[0] = prev_dc
-            i = 1
-            while i < 64:
-                sym = _huffdec(atree)
-                if sym == 0x00:  # EOB
-                    break
-                run, t = sym >> 4, sym & 0x0F
-                if t == 0:
-                    if run != 15:
-                        raise ValueError(f"invalid AC symbol {sym:#x}")
-                    i += 16  # ZRL
-                    continue
-                i += run
-                if i >= 64:
-                    raise ValueError("AC run overflows block")
-                zz[i] = _extend(br.bits(t), t)
-                i += 1
-            coef = np.zeros(64, dtype=np.float64)
-            coef[_ZIGZAG] = zz
-            deq = coef.reshape(8, 8) * q
-            # inverse of F = S2 ∘ (B f B^T)  =>  f = B^T (S2 ∘ F) B
-            blk = basis.T @ (s2 * deq) @ basis
-            px = np.clip(_rnd_away(blk + 128.0), 0, 255).astype(np.uint8)
-            out[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = px
-    return out
+    return _encode_jpeg((img,)), wb * 8, hb * 8
 
 
 _JPEG_Q00 = _JPEG_QTABLE[0]  # 16 — the only coefficient a constant block uses
@@ -2013,7 +2484,7 @@ def mm_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     The synthesized image is BLOCK-CONSTANT, so each decoded block has
     the closed form ``clip(rnd(rnd(8(v-128)/Q00)·Q00/8)+128, 0, 255)``
     the DuckDB oracle computes per block — while the decoder still runs
-    the full general machinery (huffman trees parsed from the DHT
+    the full general machinery (huffman tables parsed from the DHT
     segment, DC-difference accumulation across blocks, EOB handling,
     FF00 destuffing, full 2D IDCT).  ``corner_tl``/``corner_br`` pin
     block order; the mean covers every block's quantization roundtrip.
@@ -2048,28 +2519,6 @@ def mm_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.mapInPandas(run, schema=schema)
 
 
-def _jpeg_dri(payload: bytes) -> int:
-    """Re-sniff the restart interval from the DRI segment (0 if absent) —
-    the feature row reports what the PAYLOAD declares, not what the
-    synthesis intended."""
-    import struct
-
-    pos = 2
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            return 0
-        marker = struct.unpack(">H", payload[pos : pos + 2])[0]
-        if marker in (0xFFD9, 0xFFDA):
-            return 0
-        (size,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
-        if marker == 0xFFDD:
-            if pos + 6 > len(payload):
-                raise ValueError("truncated DRI segment")
-            return struct.unpack(">H", payload[pos + 4 : pos + 6])[0]
-        pos += 2 + size
-    return 0
-
-
 def synth_jpeg_restart(doc_id: int):
     """Block-constant greyscale image with a restart interval of one
     block ROW (DRI = wb): block (bx, by) has value
@@ -2081,17 +2530,17 @@ def synth_jpeg_restart(doc_id: int):
     bys, bxs = np.meshgrid(np.arange(hb), np.arange(wb), indexing="ij")
     vals = ((doc_id * 7 + 13 * bxs + 19 * bys) % 256).astype(np.float64)
     img = np.kron(vals, np.ones((8, 8)))
-    return _encode_gray_jpeg(img, restart_interval=wb), wb * 8, hb * 8
+    return _encode_jpeg((img,), restart_interval=wb), wb * 8, hb * 8
 
 
 def decode_jpeg_restart(payload: bytes) -> tuple[int, ...]:
     """Decode a restart-interval greyscale JPEG and extract
     (width, height, mean_px_e4, corner_tl, corner_br, n_blocks,
-    restart_interval) — the interval is re-sniffed from the DRI
-    segment, and the decode itself verifies every RSTn's byte alignment
+    restart_interval) — the interval is what the DRI segment
+    declares, and the decode itself verifies every RSTn's byte alignment
     and modulo-8 sequence (a mishandled marker is a hard error, a missed
     DC-predictor reset breaks the value hash)."""
-    px = jpeg_pixels(payload)
+    px, _, ri = _jpeg_decode(payload, (False, 1))
     h, w = px.shape
     return (
         w,
@@ -2100,7 +2549,7 @@ def decode_jpeg_restart(payload: bytes) -> tuple[int, ...]:
         int(px[0, 0]),
         int(px[h - 1, w - 1]),
         (h // 8) * (w // 8),
-        _jpeg_dri(payload),
+        ri,
     )
 
 
@@ -2181,339 +2630,10 @@ def mm_jpeg_restart_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # M14 — color JPEG breadth: 4:2:0-subsampled 3-component baseline (r10)
 # ---------------------------------------------------------------------------
 #
-# VERDICT r9 next-round #6: chroma upsample + YCbCr→RGB on top of the r8
-# baseline machinery.  The chroma quantization/huffman tables below are
-# the OTHER half of ITU-T T.81 Annex K (K.2 / K.3.2), the same public
-# spec source as the luminance tables the r8 decoder already ships; the
-# color matrix is the closed-form JFIF/T.871 transform DERIVED from
-# Kr = 0.299, Kb = 0.114 (no tabulated constants — every coefficient is
-# computed from those two numbers with the identical expression on both
-# engines, so the oracle is bit-exact).
-
-_JPEG_QTABLE_C = [  # ITU-T T.81 Annex K.2 chrominance, quality 50 (unscaled)
-    17, 18, 24, 47, 99, 99, 99, 99,
-    18, 21, 26, 66, 99, 99, 99, 99,
-    24, 26, 56, 99, 99, 99, 99, 99,
-    47, 66, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-]
-
-_JPEG_DC_BITS_C = [0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0]
-_JPEG_DC_VALS_C = list(range(12))
-_JPEG_AC_BITS_C = [0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77]
-_JPEG_AC_VALS_C = [
-    0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21, 0x31, 0x06, 0x12, 0x41,
-    0x51, 0x07, 0x61, 0x71, 0x13, 0x22, 0x32, 0x81, 0x08, 0x14, 0x42, 0x91,
-    0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0, 0x15, 0x62, 0x72, 0xD1,
-    0x0A, 0x16, 0x24, 0x34, 0xE1, 0x25, 0xF1, 0x17, 0x18, 0x19, 0x1A, 0x26,
-    0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37, 0x38, 0x39, 0x3A, 0x43, 0x44,
-    0x45, 0x46, 0x47, 0x48, 0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58,
-    0x59, 0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69, 0x6A, 0x73, 0x74,
-    0x75, 0x76, 0x77, 0x78, 0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87,
-    0x88, 0x89, 0x8A, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A,
-    0xA2, 0xA3, 0xA4, 0xA5, 0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4,
-    0xB5, 0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7,
-    0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA,
-    0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF2, 0xF3, 0xF4,
-    0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
-]
-
-# JFIF / ITU-T T.871 color transform, DERIVED from Kr/Kb.  The identical
-# expressions appear verbatim in the DuckDB oracles so both engines
-# build bit-identical doubles.
-_JPEG_KR = 0.299
-_JPEG_KB = 0.114
-_JPEG_CR_R = 2 * (1 - _JPEG_KR)                                   # 1.402
-_JPEG_CB_G = 2 * _JPEG_KB * (1 - _JPEG_KB) / (1 - _JPEG_KR - _JPEG_KB)
-_JPEG_CR_G = 2 * _JPEG_KR * (1 - _JPEG_KR) / (1 - _JPEG_KR - _JPEG_KB)
-_JPEG_CB_B = 2 * (1 - _JPEG_KB)                                   # 1.772
-
-
-def _enc_block(bw, blk, q, dc_codes, ac_codes, prev_dc: int) -> int:
-    """FDCT + quantize + huffman-encode ONE level-shifted 8×8 block;
-    returns the new DC predictor.  Shared by the greyscale (r8) and
-    4:2:0 color (r10) encoders — extracted verbatim from
-    ``_encode_gray_jpeg``'s loop body."""
-    basis, s2 = _dct_basis()
-    coef = s2 * (basis @ blk @ basis.T)
-    qc = _rnd_away(coef / q).astype("int64")
-    zz = qc.reshape(-1)[_ZIGZAG]
-    diff = int(zz[0]) - prev_dc
-
-    def _amp(v: int) -> tuple[int, int]:
-        t = int(v).bit_length() if v > 0 else int(-v).bit_length()
-        return (t, (v if v >= 0 else v + (1 << t) - 1))
-
-    t, amp = _amp(diff) if diff else (0, 0)
-    code, ln = dc_codes[t]
-    bw.write(code, ln)
-    if t:
-        bw.write(amp, t)
-    run = 0
-    last_nz = max((i for i in range(1, 64) if zz[i]), default=0)
-    for i in range(1, last_nz + 1):
-        if zz[i] == 0:
-            run += 1
-            if run == 16:
-                code, ln = ac_codes[0xF0]  # ZRL
-                bw.write(code, ln)
-                run = 0
-            continue
-        t, amp = _amp(int(zz[i]))
-        code, ln = ac_codes[(run << 4) | t]
-        bw.write(code, ln)
-        bw.write(amp, t)
-        run = 0
-    if last_nz < 63:
-        code, ln = ac_codes[0x00]  # EOB
-        bw.write(code, ln)
-    return int(zz[0])
-
-
-def _encode_ycc420_jpeg(Y, Cb, Cr) -> bytes:
-    """Baseline 4:2:0 YCbCr JPEG encoder (the synthesis side): Y is
-    (h, w) with h, w multiples of 16; Cb/Cr are the (h/2, w/2)
-    subsampled planes.  Interleaved MCU scan — 4 Y blocks then Cb then
-    Cr per MCU — with per-component DC predictors, luma tables id 0,
-    chroma tables id 1."""
-    import struct
-
-    import numpy as np
-
-    h, w = Y.shape
-    if h % 16 or w % 16:
-        raise ValueError("encoder expects multiple-of-16 dimensions")
-    if Cb.shape != (h // 2, w // 2) or Cr.shape != (h // 2, w // 2):
-        raise ValueError("chroma planes must be half-size (4:2:0)")
-    ql = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-    qc = np.array(_JPEG_QTABLE_C, dtype=np.float64).reshape(8, 8)
-    dc_l = _huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_l = _huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-    dc_c = _huff_codes(_JPEG_DC_BITS_C, _JPEG_DC_VALS_C)
-    ac_c = _huff_codes(_JPEG_AC_BITS_C, _JPEG_AC_VALS_C)
-    bw = _BitWriter()
-    ys = Y.astype(np.float64) - 128.0
-    cbs = Cb.astype(np.float64) - 128.0
-    crs = Cr.astype(np.float64) - 128.0
-    pdc = [0, 0, 0]
-    for my in range(h // 16):
-        for mx in range(w // 16):
-            for j in range(2):  # Y blocks: left-to-right, top-to-bottom
-                for i in range(2):
-                    by, bx = my * 2 + j, mx * 2 + i
-                    blk = ys[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
-                    pdc[0] = _enc_block(bw, blk, ql, dc_l, ac_l, pdc[0])
-            blk = cbs[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8]
-            pdc[1] = _enc_block(bw, blk, qc, dc_c, ac_c, pdc[1])
-            blk = crs[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8]
-            pdc[2] = _enc_block(bw, blk, qc, dc_c, ac_c, pdc[2])
-    scan = bw.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    qzl = np.array(_JPEG_QTABLE, dtype=np.int64)
-    qzc = np.array(_JPEG_QTABLE_C, dtype=np.int64)
-    dqt = seg(
-        0xFFDB,
-        bytes([0x00]) + bytes(int(qzl[z]) for z in _ZIGZAG)
-        + bytes([0x01]) + bytes(int(qzc[z]) for z in _ZIGZAG),
-    )
-    sof = seg(
-        0xFFC0,
-        struct.pack(">BHHB", 8, h, w, 3)
-        + bytes([1, 0x22, 0]) + bytes([2, 0x11, 1]) + bytes([3, 0x11, 1]),
-    )
-    dht = seg(
-        0xFFC4,
-        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS)
-        + bytes([0x01]) + bytes(_JPEG_DC_BITS_C) + bytes(_JPEG_DC_VALS_C)
-        + bytes([0x11]) + bytes(_JPEG_AC_BITS_C) + bytes(_JPEG_AC_VALS_C),
-    )
-    sos = seg(0xFFDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]))
-    return b"\xff\xd8" + dqt + sof + dht + sos + scan + b"\xff\xd9"
-
-
-def jpeg_color_pixels(payload: bytes):
-    """REAL 4:2:0 color baseline JPEG decode: marker walk, two quant +
-    four huffman tables, interleaved-MCU entropy decode (4 Y + Cb + Cr
-    per MCU, per-component DC predictors), dequantize + IDCT per block,
-    2× box chroma upsample, JFIF YCbCr→RGB with half-away rounding —
-    returns (h, w, 3) uint8 RGB.  Progressive scans, non-4:2:0
-    samplings, 16-bit tables, and dimension padding are REJECTED, not
-    mis-decoded.  (Greyscale baselines stay with :func:`jpeg_pixels`.)"""
-    import struct
-
-    import numpy as np
-
-    if payload[0:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    pos = 2
-    qtables: dict[int, object] = {}
-    dc_tree: dict[int, dict] = {}
-    ac_tree: dict[int, dict] = {}
-    dims = None
-    comps = None  # [(id, hs, vs, tq), ...]
-    sel = None    # {comp_id: (td, ta)}
-    scan = None
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError(f"expected marker at {pos}")
-        marker = struct.unpack(">H", payload[pos : pos + 2])[0]
-        if marker == 0xFFD9:
-            break
-        (size,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
-        if pos + 2 + size > len(payload):
-            raise ValueError(f"segment {marker:#x} overruns payload")
-        body = payload[pos + 4 : pos + 2 + size]
-        if marker == 0xFFDB:
-            off = 0
-            while off < len(body):
-                if body[off] >> 4:
-                    raise ValueError("16-bit quant tables unsupported")
-                tid = body[off] & 0x0F
-                tq = np.zeros(64, dtype=np.int64)
-                for i, z in enumerate(_ZIGZAG):
-                    tq[z] = body[off + 1 + i]
-                qtables[tid] = tq.reshape(8, 8)
-                off += 65
-        elif marker in (0xFFC1, 0xFFC2, 0xFFC3):
-            raise ValueError("only baseline (SOF0) JPEG is supported")
-        elif marker == 0xFFC0:
-            prec, h, w, ncomp = struct.unpack(">BHHB", body[:6])
-            if prec != 8 or ncomp != 3:
-                raise ValueError(
-                    f"unsupported SOF0: precision={prec} components={ncomp} "
-                    "(greyscale goes through jpeg_pixels)"
-                )
-            comps = []
-            for c in range(3):
-                cid, samp, tq = body[6 + 3 * c : 9 + 3 * c]
-                comps.append((cid, samp >> 4, samp & 0x0F, tq))
-            if [(c[1], c[2]) for c in comps] != [(2, 2), (1, 1), (1, 1)]:
-                raise ValueError("only 4:2:0 subsampling supported")
-            dims = (h, w)
-        elif marker == 0xFFC4:
-            off = 0
-            while off < len(body):
-                tc, th = body[off] >> 4, body[off] & 0x0F
-                bits = list(body[off + 1 : off + 17])
-                nv = sum(bits)
-                vals = list(body[off + 17 : off + 17 + nv])
-                tree: dict = {}
-                for sym, (code, ln) in _huff_codes(bits, vals).items():
-                    node = tree
-                    for b in format(code, f"0{ln}b"):
-                        node = node.setdefault(b, {})
-                    node["leaf"] = sym
-                (dc_tree if tc == 0 else ac_tree)[th] = tree
-                off += 17 + nv
-        elif marker == 0xFFDA:
-            if body[0] != 3:
-                raise ValueError(f"unsupported SOS: {body[0]} scan components")
-            sel = {}
-            for c in range(3):
-                cid, tdta = body[1 + 2 * c : 3 + 2 * c]
-                sel[cid] = (tdta >> 4, tdta & 0x0F)
-            scan = payload[pos + 2 + size :]
-            break
-        pos += 2 + size
-    if dims is None or comps is None or scan is None:
-        raise ValueError("missing SOF0/SOS/DQT")
-    h, w = dims
-    if h % 16 or w % 16:
-        raise ValueError("non-multiple-of-16 dims unsupported (no edge pad)")
-    for cid, _, _, tq in comps:
-        if tq not in qtables:
-            raise ValueError(f"component {cid} selects absent quant table {tq}")
-        if cid not in sel:
-            raise ValueError(f"SOS missing component {cid}")
-        td, ta = sel[cid]
-        if td not in dc_tree or ta not in ac_tree:
-            raise ValueError(
-                f"SOS selects absent huffman tables (Td={td}, Ta={ta})"
-            )
-    end = scan.find(b"\xff\xd9")
-    br = _BitReader(scan[: end if end >= 0 else len(scan)])
-    basis, s2 = _dct_basis()
-
-    def _huffdec(tree: dict) -> int:
-        node = tree
-        for _ in range(16):
-            node = node.get(str(br.bit()))
-            if node is None:
-                raise ValueError("invalid huffman code")
-            if "leaf" in node:
-                return node["leaf"]
-        raise ValueError("huffman code longer than 16 bits")
-
-    def _extend(amp: int, t: int) -> int:
-        return amp if amp >= (1 << (t - 1)) else amp - (1 << t) + 1
-
-    def _decode_block(comp_idx: int, prev_dc: int):
-        cid, _, _, tq = comps[comp_idx]
-        td, ta = sel[cid]
-        dtree, atree = dc_tree[td], ac_tree[ta]
-        zz = np.zeros(64, dtype=np.int64)
-        t = _huffdec(dtree)
-        diff = _extend(br.bits(t), t) if t else 0
-        dc = prev_dc + diff
-        zz[0] = dc
-        i = 1
-        while i < 64:
-            sym = _huffdec(atree)
-            if sym == 0x00:
-                break
-            run, t = sym >> 4, sym & 0x0F
-            if t == 0:
-                if run != 15:
-                    raise ValueError(f"invalid AC symbol {sym:#x}")
-                i += 16
-                continue
-            i += run
-            if i >= 64:
-                raise ValueError("AC run overflows block")
-            zz[i] = _extend(br.bits(t), t)
-            i += 1
-        coef = np.zeros(64, dtype=np.float64)
-        coef[_ZIGZAG] = zz
-        deq = coef.reshape(8, 8) * qtables[tq]
-        blk = basis.T @ (s2 * deq) @ basis
-        px = np.clip(_rnd_away(blk + 128.0), 0, 255)
-        return px, dc
-
-    Y = np.zeros((h, w), dtype=np.float64)
-    Cb = np.zeros((h // 2, w // 2), dtype=np.float64)
-    Cr = np.zeros((h // 2, w // 2), dtype=np.float64)
-    pdc = [0, 0, 0]
-    for my in range(h // 16):
-        for mx in range(w // 16):
-            for j in range(2):
-                for i in range(2):
-                    px, pdc[0] = _decode_block(0, pdc[0])
-                    by, bx = my * 2 + j, mx * 2 + i
-                    Y[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = px
-            px, pdc[1] = _decode_block(1, pdc[1])
-            Cb[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = px
-            px, pdc[2] = _decode_block(2, pdc[2])
-            Cr[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = px
-    # 2x box upsample (JFIF mandates no filter; replicate is the
-    # closed-form choice the oracle mirrors), then the derived matrix
-    cb = np.repeat(np.repeat(Cb, 2, axis=0), 2, axis=1) - 128.0
-    cr = np.repeat(np.repeat(Cr, 2, axis=0), 2, axis=1) - 128.0
-    r = Y + _JPEG_CR_R * cr
-    g = Y - _JPEG_CB_G * cb - _JPEG_CR_G * cr
-    b = Y + _JPEG_CB_B * cb
-    rgb = np.stack(
-        [np.clip(_rnd_away(c), 0, 255).astype(np.uint8) for c in (r, g, b)],
-        axis=-1,
-    )
-    return rgb
-
+# VERDICT r9 next-round #6: real mixed corpora are color-JPEG heavy.  The
+# synthesis is MCU-constant 4:2:0 YCbCr through the codec core above, so
+# the oracle stays closed-form while the decoder runs the interleaved
+# 4Y+Cb+Cr MCU machinery, the chroma upsample and the derived matrix.
 
 def synth_jpeg_color(doc_id: int):
     """MCU-constant 4:2:0 color image: MCU (mx, my) has
@@ -2530,7 +2650,7 @@ def synth_jpeg_color(doc_id: int):
     Y = np.kron(yv, np.ones((16, 16)))
     Cb = np.kron(cbv, np.ones((8, 8)))
     Cr = np.kron(crv, np.ones((8, 8)))
-    return _encode_ycc420_jpeg(Y, Cb, Cr), wm * 16, hm * 16
+    return _encode_jpeg((Y, Cb, Cr)), wm * 16, hm * 16
 
 
 _JPEG_QC00 = _JPEG_QTABLE_C[0]  # 17 — the chroma DC quantizer
@@ -2692,473 +2812,11 @@ def mm_jpeg_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # M15 — progressive JPEG (SOF2): spectral selection + successive approximation
 # ---------------------------------------------------------------------------
 #
-# VERDICT r10 next-round #2: most real web JPEGs are progressive, and the
-# router's JPEG path covered baseline (SOF0) only — the biggest honest-limit
-# line in the multimodal tier.  The progressive process is the SAME public
-# ITU-T T.81 spec the baseline decoder was derived from (Annex G): the
-# quantized coefficients are identical, they just arrive re-ordered across
-# multiple SOS scans — by spectral band (Ss..Se) and by bit plane
-# (successive approximation, Ah/Al).  A complete decode therefore
-# reconstructs EXACTLY the baseline pixels, which is the differential test:
-# decode_progressive(encode_progressive(img)) must equal
-# decode_baseline(encode_baseline(img)) byte-for-byte on random images.
-#
-# The encoder (synthesis side) emits the conventional six-scan script —
-#   1. DC first        (Ss=0,  Se=0,  Ah=0, Al=1)   huffman DC diffs, >>1
-#   2. AC first low    (Ss=1,  Se=5,  Ah=0, Al=1)   huffman + EOBRUN batching
-#   3. AC first high   (Ss=6,  Se=63, Ah=0, Al=1)
-#   4. DC refine       (Ss=0,  Se=0,  Ah=1, Al=0)   one raw bit per block
-#   5. AC refine low   (Ss=1,  Se=5,  Ah=1, Al=0)   correction-bit algorithm
-#   6. AC refine high  (Ss=6,  Se=63, Ah=1, Al=0)
-# — so the decoder's EOBRUN, ZRL-in-refinement, and buffered-correction-bit
-# paths all execute on real streams.  DC point transform is an ARITHMETIC
-# shift of the signed value; AC point transform shifts the MAGNITUDE
-# (T.81 G.1.2.1/G.1.2.2 — the asymmetry is load-bearing for negatives).
-
-# AC huffman table for the progressive scans: canonical, every symbol 8
-# bits (176 of 256 codes used, Kraft-feasible, all-ones code unassigned —
-# T.81 Annex C requirements).  Covers EOBn (r<<4, r=0..14), ZRL (0xF0),
-# and (run, size) for run 0..15 / size 1..10.  The DECODER learns tables
-# only from the DHT segment, so this choice is a synthesis detail, not a
-# decoder assumption.
-_JPEG_PROG_AC_VALS = (
-    [r << 4 for r in range(15)] + [0xF0]
-    + [(r << 4) | s for r in range(16) for s in range(1, 11)]
-)
-_JPEG_PROG_AC_BITS = [0] * 16
-_JPEG_PROG_AC_BITS[7] = len(_JPEG_PROG_AC_VALS)  # all codes 8 bits long
-
-
-def _jpeg_amp(v: int) -> tuple[int, int]:
-    """(size, amplitude) encoding of a signed value (T.81 F.1.2.1/F.1.4):
-    negative amplitudes are sent as v + 2^size - 1."""
-    t = int(v).bit_length() if v > 0 else int(-v).bit_length()
-    return (t, v if v >= 0 else v + (1 << t) - 1)
-
-
-def _flush_eobrun(bw: "_BitWriter", state: dict, ac_codes: dict) -> None:
-    """Emit the pending EOBn code (n = accumulated end-of-band blocks)
-    followed by the correction bits buffered across that run."""
-    n = state["eobrun"]
-    if n == 0:
-        return
-    r = n.bit_length() - 1
-    code, ln = ac_codes[r << 4]
-    bw.write(code, ln)
-    if r:
-        bw.write(n - (1 << r), r)
-    for b in state["bits"]:
-        bw.write(b, 1)
-    state["eobrun"] = 0
-    state["bits"] = []
-
-
-def _enc_ac_first(bw, zz, ss, se, al, state, ac_codes) -> None:
-    """AC first scan for one block (T.81 G.1.2.2): point-transformed
-    magnitudes, run/size coding, all-zero bands folded into EOBRUN."""
-    vals = []
-    for k in range(ss, se + 1):
-        v = int(zz[k])
-        m = abs(v) >> al
-        vals.append(m if v >= 0 else -m)
-    nz = [i for i, v in enumerate(vals) if v]
-    if not nz:
-        state["eobrun"] += 1
-        if state["eobrun"] == 0x7FFF:  # EOBn ceiling (n < 2^15)
-            _flush_eobrun(bw, state, ac_codes)
-        return
-    _flush_eobrun(bw, state, ac_codes)
-    run = 0
-    for i in range(nz[-1] + 1):
-        v = vals[i]
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            code, ln = ac_codes[0xF0]
-            bw.write(code, ln)
-            run -= 16
-        t, amp = _jpeg_amp(v)
-        code, ln = ac_codes[(run << 4) | t]
-        bw.write(code, ln)
-        bw.write(amp, t)
-        run = 0
-    if nz[-1] < len(vals) - 1:
-        state["eobrun"] += 1
-        if state["eobrun"] == 0x7FFF:
-            _flush_eobrun(bw, state, ac_codes)
-
-
-def _enc_ac_refine(bw, zz, ss, se, al, state, ac_codes) -> None:
-    """AC refinement scan for one block (T.81 G.1.2.3): newly-nonzero
-    coefficients (magnitude bit Al is the first transmitted bit) get a
-    huffman (run, 1) code + sign bit; coefficients made nonzero by
-    EARLIER scans contribute one raw correction bit each, buffered and
-    emitted after the next huffman code whose run-skip walks past them
-    (the decoder reads them positionally during that walk).  The ZRL
-    check runs at EVERY nonzero — a history coefficient preceded by >15
-    still-zero positions must flush the ZRL before buffering its own
-    bit, or the decoder's 16-zero walk would consume bits that belong
-    to the next code."""
-    t = [abs(int(zz[k])) >> al for k in range(ss, se + 1)]
-    eob_idx = -1  # last newly-nonzero position; trailing ZRLs fold into EOB
-    for i, tv in enumerate(t):
-        if tv == 1:
-            eob_idx = i
-    run = 0
-    pend: list[int] = []
-    for i, tv in enumerate(t):
-        if tv == 0:
-            run += 1
-            continue
-        while run > 15 and i <= eob_idx:
-            _flush_eobrun(bw, state, ac_codes)
-            code, ln = ac_codes[0xF0]
-            bw.write(code, ln)
-            run -= 16
-            for b in pend:
-                bw.write(b, 1)
-            pend = []
-        if tv > 1:  # history nonzero: one correction bit
-            pend.append(tv & 1)
-            continue
-        # newly nonzero at this bit plane
-        _flush_eobrun(bw, state, ac_codes)
-        code, ln = ac_codes[(run << 4) | 1]
-        bw.write(code, ln)
-        bw.write(1 if int(zz[ss + i]) > 0 else 0, 1)
-        for b in pend:
-            bw.write(b, 1)
-        pend = []
-        run = 0
-    if run > 0 or pend:
-        state["eobrun"] += 1
-        state["bits"].extend(pend)
-        if state["eobrun"] == 0x7FFF:
-            _flush_eobrun(bw, state, ac_codes)
-
-
-_JPEG_PROG_SCRIPT = (
-    (0, 0, 0, 1),
-    (1, 5, 0, 1),
-    (6, 63, 0, 1),
-    (0, 0, 1, 0),
-    (1, 5, 1, 0),
-    (6, 63, 1, 0),
-)
-
-
-def _encode_gray_jpeg_progressive(img, qtable=None) -> bytes:
-    """Progressive greyscale JPEG encoder (synthesis side): real FDCT +
-    quantization (identical coefficients to the baseline encoder), then
-    the six-scan spectral-selection / successive-approximation script
-    above.  Dimensions must be multiples of 8 (the synthesis controls
-    them)."""
-    import struct
-
-    import numpy as np
-
-    q = np.array(qtable or _JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-    h, w = img.shape
-    if h % 8 or w % 8:
-        raise ValueError("encoder expects multiple-of-8 dimensions")
-    basis, s2 = _dct_basis()
-    shifted = img.astype(np.float64) - 128.0
-    blocks = []
-    for by in range(h // 8):
-        for bx in range(w // 8):
-            blk = shifted[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
-            coef = s2 * (basis @ blk @ basis.T)
-            qc = _rnd_away(coef / q).astype(np.int64)
-            blocks.append(qc.reshape(-1)[_ZIGZAG])
-    dc_codes = _huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _huff_codes(_JPEG_PROG_AC_BITS, _JPEG_PROG_AC_VALS)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    qz = np.array(qtable or _JPEG_QTABLE, dtype=np.int64)
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xFFDB, bytes([0]) + bytes(int(qz[z]) for z in _ZIGZAG))
-    out += seg(0xFFC2, struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0]))
-    out += seg(
-        0xFFC4,
-        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + bytes([0x10]) + bytes(_JPEG_PROG_AC_BITS) + bytes(_JPEG_PROG_AC_VALS),
-    )
-    for ss, se, ah, al in _JPEG_PROG_SCRIPT:
-        bw = _BitWriter()
-        if ss == 0:  # DC scan
-            if ah == 0:
-                prev = 0
-                for zz in blocks:
-                    v = int(zz[0]) >> al  # ARITHMETIC shift (signed)
-                    diff = v - prev
-                    prev = v
-                    t, amp = _jpeg_amp(diff) if diff else (0, 0)
-                    code, ln = dc_codes[t]
-                    bw.write(code, ln)
-                    if t:
-                        bw.write(amp, t)
-            else:
-                for zz in blocks:
-                    bw.write((int(zz[0]) >> al) & 1, 1)
-        else:
-            state = {"eobrun": 0, "bits": []}
-            enc = _enc_ac_first if ah == 0 else _enc_ac_refine
-            for zz in blocks:
-                enc(bw, zz, ss, se, al, state, ac_codes)
-            _flush_eobrun(bw, state, ac_codes)
-        out += seg(0xFFDA, bytes([1, 1, 0x00, ss, se, (ah << 4) | al]))
-        out += bw.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _entropy_end(data: bytes, start: int) -> int:
-    """Index of the marker that terminates an entropy-coded segment:
-    skips stuffed FF00 pairs; restart markers are rejected (the decoder
-    never emits a DRI, so an RSTn here is a malformed stream)."""
-    i = start
-    while i + 1 < len(data):
-        if data[i] == 0xFF:
-            nxt = data[i + 1]
-            if nxt == 0x00:
-                i += 2
-                continue
-            if 0xD0 <= nxt <= 0xD7:
-                raise ValueError("restart markers unsupported")
-            return i
-        i += 1
-    return len(data)
-
-
-def jpeg_progressive_pixels(payload: bytes):
-    """REAL progressive JPEG decode (greyscale, T.81 Annex G): marker
-    walk across MULTIPLE SOS scans, accumulating quantized coefficients
-    per block — DC first/refinement (arithmetic point transform, raw
-    refinement bits), AC first with EOBRUN, AC refinement with the
-    positional correction-bit walk — then one dequantize + IDCT at EOI.
-    Returns ((h, w) uint8 pixels, n_scans).  Baseline SOF0, multi-
-    component, 16-bit tables, and restart intervals are REJECTED, not
-    mis-decoded."""
-    import struct
-
-    import numpy as np
-
-    if payload[0:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    pos = 2
-    qtables: dict[int, object] = {}
-    dc_tree: dict[int, dict] = {}
-    ac_tree: dict[int, dict] = {}
-    dims = None
-    qsel = 0
-    coefs = None  # per-block zigzag-order coefficient accumulators
-    n_scans = 0
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError(f"expected marker at {pos}")
-        marker = struct.unpack(">H", payload[pos : pos + 2])[0]
-        if marker == 0xFFD9:
-            break
-        (size,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
-        if pos + 2 + size > len(payload):
-            raise ValueError(f"segment {marker:#x} overruns payload")
-        body = payload[pos + 4 : pos + 2 + size]
-        if marker == 0xFFDB:
-            if body[0] >> 4:
-                raise ValueError("16-bit quant tables unsupported")
-            tid = body[0] & 0x0F
-            tq = np.zeros(64, dtype=np.int64)
-            for i, z in enumerate(_ZIGZAG):
-                tq[z] = body[1 + i]
-            qtables[tid] = tq.reshape(8, 8)
-        elif marker in (0xFFC0, 0xFFC1, 0xFFC3):
-            raise ValueError("not a progressive (SOF2) JPEG")
-        elif marker == 0xFFDD:
-            raise ValueError("restart intervals unsupported")
-        elif marker == 0xFFC2:
-            prec, h, w, ncomp = struct.unpack(">BHHB", body[:6])
-            if prec != 8 or ncomp != 1:
-                raise ValueError(
-                    f"unsupported SOF2: precision={prec} components={ncomp}"
-                )
-            if body[7] != 0x11:
-                raise ValueError("subsampling unsupported for greyscale")
-            if h % 8 or w % 8:
-                raise ValueError("non-multiple-of-8 dims unsupported (no edge pad)")
-            qsel = body[8]
-            dims = (h, w)
-            coefs = np.zeros(((h // 8) * (w // 8), 64), dtype=np.int64)
-        elif marker == 0xFFC4:
-            off = 0
-            while off < len(body):
-                tc, th = body[off] >> 4, body[off] & 0x0F
-                bits = list(body[off + 1 : off + 17])
-                nv = sum(bits)
-                vals = list(body[off + 17 : off + 17 + nv])
-                tree: dict = {}
-                for sym, (code, ln) in _huff_codes(bits, vals).items():
-                    node = tree
-                    for b in format(code, f"0{ln}b"):
-                        node = node.setdefault(b, {})
-                    node["leaf"] = sym
-                (dc_tree if tc == 0 else ac_tree)[th] = tree
-                off += 17 + nv
-        elif marker == 0xFFDA:
-            if coefs is None:
-                raise ValueError("SOS before SOF2")
-            if body[0] != 1:
-                raise ValueError(f"unsupported SOS: {body[0]} scan components")
-            td, ta = body[2] >> 4, body[2] & 0x0F
-            ss, se, ahal = body[3], body[4], body[5]
-            ah, al = ahal >> 4, ahal & 0x0F
-            end = _entropy_end(payload, pos + 2 + size)
-            br = _BitReader(payload[pos + 2 + size : end])
-            _dec_prog_scan(br, coefs, ss, se, ah, al,
-                           dc_tree.get(td), ac_tree.get(ta))
-            n_scans += 1
-            pos = end
-            continue
-        pos += 2 + size
-    if dims is None or n_scans == 0 or qsel not in qtables:
-        raise ValueError("missing SOF2/SOS/DQT")
-    h, w = dims
-    q = qtables[qsel]
-    basis, s2 = _dct_basis()
-    out = np.zeros((h, w), dtype=np.uint8)
-    nbx = w // 8
-    for b in range((h // 8) * nbx):
-        coef = np.zeros(64, dtype=np.float64)
-        coef[_ZIGZAG] = coefs[b]
-        deq = coef.reshape(8, 8) * q
-        blk = basis.T @ (s2 * deq) @ basis
-        px = np.clip(_rnd_away(blk + 128.0), 0, 255).astype(np.uint8)
-        by, bx = divmod(b, nbx)
-        out[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = px
-    return out, n_scans
-
-
-def _huffdec_tree(br: "_BitReader", tree: dict | None) -> int:
-    if tree is None:
-        raise ValueError("scan selects absent huffman table")
-    node = tree
-    for _ in range(16):
-        node = node.get(str(br.bit()))
-        if node is None:
-            raise ValueError("invalid huffman code")
-        if "leaf" in node:
-            return node["leaf"]
-    raise ValueError("huffman code longer than 16 bits")
-
-
-def _extend_amp(amp: int, t: int) -> int:
-    return amp if amp >= (1 << (t - 1)) else amp - (1 << t) + 1
-
-
-def _dec_prog_scan(br, coefs, ss, se, ah, al, dtree, atree) -> None:
-    """One progressive scan over every block (T.81 G.2).  Coefficients
-    live in zigzag order in ``coefs``; Python's arbitrary-precision
-    two's complement makes the DC bit-OR refinement exact for negative
-    values (e.g. -6 | 1 == -5)."""
-    nblocks = len(coefs)
-    if ss == 0:  # DC scan (Se must be 0 per spec)
-        if se != 0:
-            raise ValueError("DC scan requires Se=0")
-        if ah == 0:
-            prev = 0
-            for b in range(nblocks):
-                t = _huffdec_tree(br, dtree)
-                diff = _extend_amp(br.bits(t), t) if t else 0
-                prev += diff
-                coefs[b][0] = prev << al
-        else:
-            for b in range(nblocks):
-                if br.bit():
-                    coefs[b][0] = int(coefs[b][0]) | (1 << al)
-        return
-    if se < ss or se > 63:
-        raise ValueError("bad spectral band")
-    if ah == 0:  # AC first scan
-        eobrun = 0
-        for b in range(nblocks):
-            eobrun = _dec_ac_first_block(br, coefs[b], ss, se, al, atree, eobrun)
-        return
-    eobrun = 0  # AC refinement scan
-    for b in range(nblocks):
-        eobrun = _dec_ac_refine_block(br, coefs[b], ss, se, al, atree, eobrun)
-
-
-def _dec_ac_first_block(br, zz, ss, se, al, atree, eobrun: int) -> int:
-    """One block of an AC first scan (T.81 G.2); returns the remaining
-    EOBRUN so multi-block runs span the caller's block loop."""
-    if eobrun:
-        return eobrun - 1
-    k = ss
-    while k <= se:
-        sym = _huffdec_tree(br, atree)
-        r, s = sym >> 4, sym & 0x0F
-        if s == 0:
-            if r == 15:  # ZRL
-                k += 16
-                continue
-            eobrun = (1 << r) - 1
-            if r:
-                eobrun += br.bits(r)
-            break
-        k += r
-        if k > se:
-            raise ValueError("AC run overflows band")
-        zz[k] = _extend_amp(br.bits(s), s) << al
-        k += 1
-    return eobrun
-
-
-def _dec_ac_refine_block(br, zz, ss, se, al, atree, eobrun: int) -> int:
-    """One block of an AC refinement scan (T.81 G.2): positional
-    correction-bit walk; returns the remaining EOBRUN."""
-    p1 = 1 << al
-    k = ss
-    if eobrun == 0:
-        while k <= se:
-            sym = _huffdec_tree(br, atree)
-            r, s = sym >> 4, sym & 0x0F
-            if s == 0:
-                if r < 15:  # EOBn: current block finishes below
-                    eobrun = 1 << r
-                    if r:
-                        eobrun += br.bits(r)
-                    break
-                val = 0  # ZRL: skip 16 still-zero positions
-            elif s == 1:
-                val = p1 if br.bit() else -p1
-            else:
-                raise ValueError("refinement amplitude must be ±1")
-            while k <= se:
-                if zz[k] != 0:
-                    # positional correction bit for a history coefficient
-                    if br.bit() and (abs(int(zz[k])) & p1) == 0:
-                        zz[k] += p1 if zz[k] > 0 else -p1
-                else:
-                    if r == 0:
-                        break
-                    r -= 1
-                k += 1
-            if val:
-                if k > se:
-                    raise ValueError("refinement placement overflows band")
-                zz[k] = val
-            k += 1
-    if eobrun > 0:
-        while k <= se:  # correction bits through the rest of the band
-            if zz[k] != 0:
-                if br.bit() and (abs(int(zz[k])) & p1) == 0:
-                    zz[k] += p1 if zz[k] > 0 else -p1
-            k += 1
-        eobrun -= 1
-    return eobrun
-
+# VERDICT r10 next-round #2: most real web JPEGs are progressive.  The
+# progressive process (T.81 Annex G) transmits the SAME quantized
+# coefficients as baseline, re-ordered across several SOS scans (the
+# scripts above), so a complete decode reconstructs EXACTLY the baseline
+# pixels — the differential test on random images.
 
 def synth_jpeg_progressive(doc_id: int):
     """Block-constant greyscale image, progressive container: block
@@ -3170,7 +2828,7 @@ def synth_jpeg_progressive(doc_id: int):
     bys, bxs = np.meshgrid(np.arange(hb), np.arange(wb), indexing="ij")
     vals = ((doc_id * 3 + 17 * bxs + 29 * bys) % 256).astype(np.float64)
     img = np.kron(vals, np.ones((8, 8)))
-    return _encode_gray_jpeg_progressive(img), wb * 8, hb * 8
+    return _encode_jpeg((img,), progressive=True), wb * 8, hb * 8
 
 
 def decode_jpeg_progressive(payload: bytes) -> tuple[int, int, int, int, int, int, int]:
@@ -3274,323 +2932,9 @@ def mm_jpeg_progressive_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # M16 — progressive COLOR JPEG: SOF2 over 4:2:0 YCbCr (r11)
 # ---------------------------------------------------------------------------
 #
-# The most common real-web JPEG is progressive AND color.  Composition of
-# the two tiers already in tree: the 4:2:0 MCU geometry / chroma tables /
-# YCbCr matrix of M14 and the Annex-G scan machinery of M15.  Per T.81,
-# DC scans may be interleaved (MCU order, per-component predictors) but
-# progressive AC scans are ALWAYS single-component, walking that
-# component's data units in raster order — the encoder emits the
-# conventional eight-scan script (interleaved DC first, per-component AC
-# firsts, interleaved DC refine, per-component AC refines).
-
-
-def _quant_plane_blocks(plane, q):
-    """FDCT + quantize one plane into zigzag-order int64 block arrays
-    (raster block order); returns (blocks, nbx)."""
-    import numpy as np
-
-    basis, s2 = _dct_basis()
-    h, w = plane.shape
-    shifted = plane.astype(np.float64) - 128.0
-    out = []
-    for by in range(h // 8):
-        for bx in range(w // 8):
-            blk = shifted[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
-            coef = s2 * (basis @ blk @ basis.T)
-            out.append(_rnd_away(coef / q).astype(np.int64).reshape(-1)[_ZIGZAG])
-    return out, w // 8
-
-
-def _encode_ycc420_jpeg_progressive(Y, Cb, Cr) -> bytes:
-    """Progressive 4:2:0 YCbCr JPEG encoder (synthesis side): identical
-    quantized coefficients to the baseline color encoder, transmitted as
-    the eight-scan spectral-selection / successive-approximation script
-    (DC interleaved, AC per component — T.81 G.1)."""
-    import struct
-
-    import numpy as np
-
-    h, w = Y.shape
-    if h % 16 or w % 16:
-        raise ValueError("encoder expects multiple-of-16 dimensions")
-    if Cb.shape != (h // 2, w // 2) or Cr.shape != (h // 2, w // 2):
-        raise ValueError("chroma planes must be half-size (4:2:0)")
-    ql = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-    qc = np.array(_JPEG_QTABLE_C, dtype=np.float64).reshape(8, 8)
-    yb, nbxy = _quant_plane_blocks(Y, ql)
-    cbb, nbxc = _quant_plane_blocks(Cb, qc)
-    crb, _ = _quant_plane_blocks(Cr, qc)
-    comp_blocks = [yb, cbb, crb]
-    # MCU traversal order of (comp, block-index) for the interleaved DC scans
-    mcu_units: list[tuple[int, int]] = []
-    for my in range(h // 16):
-        for mx in range(w // 16):
-            for j in range(2):
-                for i in range(2):
-                    mcu_units.append((0, (2 * my + j) * nbxy + 2 * mx + i))
-            mcu_units.append((1, my * nbxc + mx))
-            mcu_units.append((2, my * nbxc + mx))
-    dc_codes = [
-        _huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS),
-        _huff_codes(_JPEG_DC_BITS_C, _JPEG_DC_VALS_C),
-    ]
-    ac_codes = _huff_codes(_JPEG_PROG_AC_BITS, _JPEG_PROG_AC_VALS)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    qzl = np.array(_JPEG_QTABLE, dtype=np.int64)
-    qzc = np.array(_JPEG_QTABLE_C, dtype=np.int64)
-    out = bytearray(b"\xff\xd8")
-    out += seg(
-        0xFFDB,
-        bytes([0x00]) + bytes(int(qzl[z]) for z in _ZIGZAG)
-        + bytes([0x01]) + bytes(int(qzc[z]) for z in _ZIGZAG),
-    )
-    out += seg(
-        0xFFC2,
-        struct.pack(">BHHB", 8, h, w, 3)
-        + bytes([1, 0x22, 0]) + bytes([2, 0x11, 1]) + bytes([3, 0x11, 1]),
-    )
-    out += seg(
-        0xFFC4,
-        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + bytes([0x01]) + bytes(_JPEG_DC_BITS_C) + bytes(_JPEG_DC_VALS_C)
-        + bytes([0x10]) + bytes(_JPEG_PROG_AC_BITS) + bytes(_JPEG_PROG_AC_VALS),
-    )
-    dc_sel = bytes([1, 0x00, 2, 0x10, 3, 0x10])  # Td: luma 0, chroma 1
-
-    # scan 1: interleaved DC first, Al=1 (arithmetic point transform)
-    bw = _BitWriter()
-    pdc = [0, 0, 0]
-    for c, bi in mcu_units:
-        v = int(comp_blocks[c][bi][0]) >> 1
-        diff = v - pdc[c]
-        pdc[c] = v
-        t, amp = _jpeg_amp(diff) if diff else (0, 0)
-        code, ln = dc_codes[min(c, 1)][t]
-        bw.write(code, ln)
-        if t:
-            bw.write(amp, t)
-    out += seg(0xFFDA, bytes([3]) + dc_sel + bytes([0, 0, 0x01]))
-    out += bw.flush()
-
-    # scans 2-4: AC first per component, Al=1
-    for c, cid in ((0, 1), (1, 2), (2, 3)):
-        bw = _BitWriter()
-        state = {"eobrun": 0, "bits": []}
-        for zz in comp_blocks[c]:
-            _enc_ac_first(bw, zz, 1, 63, 1, state, ac_codes)
-        _flush_eobrun(bw, state, ac_codes)
-        out += seg(0xFFDA, bytes([1, cid, 0x00, 1, 63, 0x01]))
-        out += bw.flush()
-
-    # scan 5: interleaved DC refine, Ah=1 Al=0 (one raw bit per unit)
-    bw = _BitWriter()
-    for c, bi in mcu_units:
-        bw.write(int(comp_blocks[c][bi][0]) & 1, 1)
-    out += seg(0xFFDA, bytes([3]) + dc_sel + bytes([0, 0, 0x10]))
-    out += bw.flush()
-
-    # scans 6-8: AC refine per component, Ah=1 Al=0
-    for c, cid in ((0, 1), (1, 2), (2, 3)):
-        bw = _BitWriter()
-        state = {"eobrun": 0, "bits": []}
-        for zz in comp_blocks[c]:
-            _enc_ac_refine(bw, zz, 1, 63, 0, state, ac_codes)
-        _flush_eobrun(bw, state, ac_codes)
-        out += seg(0xFFDA, bytes([1, cid, 0x00, 1, 63, 0x10]))
-        out += bw.flush()
-
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def jpeg_color_progressive_pixels(payload: bytes):
-    """REAL progressive 4:2:0 color JPEG decode (T.81 Annex G over three
-    components): multi-scan marker walk, interleaved DC scans in MCU
-    order with per-component predictors, single-component AC scans in
-    raster data-unit order, one dequantize + IDCT + chroma upsample +
-    YCbCr→RGB at EOI.  Returns ((h, w, 3) uint8 RGB, n_scans).
-    Baseline SOF0, non-4:2:0 samplings, restart intervals, and 16-bit
-    tables are REJECTED, not mis-decoded."""
-    import struct
-
-    import numpy as np
-
-    if payload[0:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    pos = 2
-    qtables: dict[int, object] = {}
-    dc_tree: dict[int, dict] = {}
-    ac_tree: dict[int, dict] = {}
-    dims = None
-    comps = None        # [(cid, hs, vs, tq)] in SOF order
-    coefs = None        # per component: np (nblocks, 64)
-    geoms = None        # per component: (nby, nbx)
-    n_scans = 0
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError(f"expected marker at {pos}")
-        marker = struct.unpack(">H", payload[pos : pos + 2])[0]
-        if marker == 0xFFD9:
-            break
-        (size,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
-        if pos + 2 + size > len(payload):
-            raise ValueError(f"segment {marker:#x} overruns payload")
-        body = payload[pos + 4 : pos + 2 + size]
-        if marker == 0xFFDB:
-            off = 0
-            while off < len(body):
-                if body[off] >> 4:
-                    raise ValueError("16-bit quant tables unsupported")
-                tid = body[off] & 0x0F
-                tq = np.zeros(64, dtype=np.int64)
-                for i, z in enumerate(_ZIGZAG):
-                    tq[z] = body[off + 1 + i]
-                qtables[tid] = tq.reshape(8, 8)
-                off += 65
-        elif marker in (0xFFC0, 0xFFC1, 0xFFC3):
-            raise ValueError("not a progressive (SOF2) JPEG")
-        elif marker == 0xFFDD:
-            raise ValueError("restart intervals unsupported")
-        elif marker == 0xFFC2:
-            prec, h, w, ncomp = struct.unpack(">BHHB", body[:6])
-            if prec != 8 or ncomp != 3:
-                raise ValueError(
-                    f"unsupported SOF2: precision={prec} components={ncomp} "
-                    "(greyscale goes through jpeg_progressive_pixels)"
-                )
-            comps = []
-            for c in range(3):
-                cid, samp, tq = body[6 + 3 * c : 9 + 3 * c]
-                comps.append((cid, samp >> 4, samp & 0x0F, tq))
-            if [(c[1], c[2]) for c in comps] != [(2, 2), (1, 1), (1, 1)]:
-                raise ValueError("only 4:2:0 subsampling supported")
-            if h % 16 or w % 16:
-                raise ValueError("non-multiple-of-16 dims unsupported (no edge pad)")
-            dims = (h, w)
-            geoms = [(h // 8, w // 8), (h // 16, w // 16), (h // 16, w // 16)]
-            coefs = [
-                np.zeros((nby * nbx, 64), dtype=np.int64) for nby, nbx in geoms
-            ]
-        elif marker == 0xFFC4:
-            off = 0
-            while off < len(body):
-                tc, th = body[off] >> 4, body[off] & 0x0F
-                bits = list(body[off + 1 : off + 17])
-                nv = sum(bits)
-                vals = list(body[off + 17 : off + 17 + nv])
-                tree: dict = {}
-                for sym, (code, ln) in _huff_codes(bits, vals).items():
-                    node = tree
-                    for b in format(code, f"0{ln}b"):
-                        node = node.setdefault(b, {})
-                    node["leaf"] = sym
-                (dc_tree if tc == 0 else ac_tree)[th] = tree
-                off += 17 + nv
-        elif marker == 0xFFDA:
-            if coefs is None:
-                raise ValueError("SOS before SOF2")
-            ns = body[0]
-            sel = {}
-            for c in range(ns):
-                cid, tdta = body[1 + 2 * c : 3 + 2 * c]
-                sel[cid] = (tdta >> 4, tdta & 0x0F)
-            ss, se, ahal = body[1 + 2 * ns : 4 + 2 * ns]
-            ah, al = ahal >> 4, ahal & 0x0F
-            end = _entropy_end(payload, pos + 2 + size)
-            br = _BitReader(payload[pos + 2 + size : end])
-            cidx = {comps[i][0]: i for i in range(3)}
-            if ss == 0:  # DC scan
-                if se != 0:
-                    raise ValueError("DC scan requires Se=0")
-                order: list[tuple[int, int]] = []
-                if ns == 3:  # interleaved: MCU traversal order
-                    h, w = dims
-                    nbxy = w // 8
-                    nbxc = w // 16
-                    for my in range(h // 16):
-                        for mx in range(w // 16):
-                            for j in range(2):
-                                for i in range(2):
-                                    order.append(
-                                        (0, (2 * my + j) * nbxy + 2 * mx + i)
-                                    )
-                            order.append((1, my * nbxc + mx))
-                            order.append((2, my * nbxc + mx))
-                elif ns == 1:  # non-interleaved DC: raster order
-                    ci = cidx[next(iter(sel))]
-                    order = [(ci, b) for b in range(len(coefs[ci]))]
-                else:
-                    raise ValueError(f"unsupported DC scan: {ns} components")
-                if ah == 0:
-                    prev = [0, 0, 0]
-                    for ci, bi in order:
-                        cid = comps[ci][0]
-                        dtree = dc_tree.get(sel[cid][0])
-                        t = _huffdec_tree(br, dtree)
-                        diff = _extend_amp(br.bits(t), t) if t else 0
-                        prev[ci] += diff
-                        coefs[ci][bi][0] = prev[ci] << al
-                else:
-                    for ci, bi in order:
-                        if br.bit():
-                            coefs[ci][bi][0] = int(coefs[ci][bi][0]) | (1 << al)
-            else:  # AC scan: single-component per spec (G.1.1.1.1)
-                if ns != 1:
-                    raise ValueError("progressive AC scans are single-component")
-                cid = next(iter(sel))
-                ci = cidx[cid]
-                atree = ac_tree.get(sel[cid][1])
-                blocks = coefs[ci]
-                eobrun = 0
-                if ah == 0:
-                    for b in range(len(blocks)):
-                        eobrun = _dec_ac_first_block(
-                            br, blocks[b], ss, se, al, atree, eobrun
-                        )
-                else:
-                    for b in range(len(blocks)):
-                        eobrun = _dec_ac_refine_block(
-                            br, blocks[b], ss, se, al, atree, eobrun
-                        )
-            n_scans += 1
-            pos = end
-            continue
-        pos += 2 + size
-    if dims is None or n_scans == 0:
-        raise ValueError("missing SOF2/SOS/DQT")
-    h, w = dims
-    basis, s2 = _dct_basis()
-    planes = []
-    for ci in range(3):
-        nby, nbx = geoms[ci]
-        q = qtables.get(comps[ci][3])
-        if q is None:
-            raise ValueError(f"component {comps[ci][0]} selects absent quant table")
-        plane = np.zeros((nby * 8, nbx * 8), dtype=np.float64)
-        for b in range(nby * nbx):
-            coef = np.zeros(64, dtype=np.float64)
-            coef[_ZIGZAG] = coefs[ci][b]
-            deq = coef.reshape(8, 8) * q
-            blk = basis.T @ (s2 * deq) @ basis
-            px = np.clip(_rnd_away(blk + 128.0), 0, 255)
-            by, bx = divmod(b, nbx)
-            plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = px
-        planes.append(plane)
-    Y, Cb, Cr = planes
-    cb = np.repeat(np.repeat(Cb, 2, axis=0), 2, axis=1) - 128.0
-    cr = np.repeat(np.repeat(Cr, 2, axis=0), 2, axis=1) - 128.0
-    r = Y + _JPEG_CR_R * cr
-    g = Y - _JPEG_CB_G * cb - _JPEG_CR_G * cr
-    b = Y + _JPEG_CB_B * cb
-    rgb = np.stack(
-        [np.clip(_rnd_away(c), 0, 255).astype(np.uint8) for c in (r, g, b)],
-        axis=-1,
-    )
-    return rgb, n_scans
-
+# The most common real-web JPEG is progressive AND color: the 4:2:0
+# geometry of M14 through the eight-scan script (interleaved DC scans,
+# single-component AC scans).
 
 def synth_jpeg_color_progressive(doc_id: int):
     """MCU-constant 4:2:0 color image in a PROGRESSIVE container: MCU
@@ -3607,7 +2951,7 @@ def synth_jpeg_color_progressive(doc_id: int):
     Y = np.kron(yv, np.ones((16, 16)))
     Cb = np.kron(cbv, np.ones((8, 8)))
     Cr = np.kron(crv, np.ones((8, 8)))
-    return _encode_ycc420_jpeg_progressive(Y, Cb, Cr), wm * 16, hm * 16
+    return _encode_jpeg((Y, Cb, Cr), progressive=True), wm * 16, hm * 16
 
 
 def decode_jpeg_color_progressive(payload: bytes) -> tuple[int, ...]:
@@ -5129,28 +4473,6 @@ def synth_media(doc_id: int) -> bytes:
     return synth_jpeg_color_progressive(doc_id)[0]
 
 
-def _jpeg_sof(payload: bytes) -> tuple[int, int]:
-    """Sniff a JPEG's SOF marker and component count for router dispatch
-    (progressive vs baseline, color vs greyscale decode path); returns
-    (0xC0, 1) on any malformed walk so the baseline greyscale decoder
-    produces the rejection."""
-    import struct
-
-    pos = 2
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            return (0xC0, 1)
-        marker = struct.unpack(">H", payload[pos : pos + 2])[0]
-        if marker in (0xFFD9, 0xFFDA):
-            return (0xC0, 1)
-        (size,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
-        if marker in (0xFFC0, 0xFFC2):
-            ncomp = payload[pos + 9] if pos + 9 < len(payload) else 1
-            return (marker & 0xFF, ncomp)
-        pos += 2 + size
-    return (0xC0, 1)
-
-
 def route_media(payload: bytes):
     """Magic-byte dispatch to the real parsers — the production shape of
     decode-time format routing (the reference picks a loader by file
@@ -5192,30 +4514,10 @@ def route_media(payload: bytes):
         return ("png", "decoded", w, h, n,
                 _mean_e4(int(px.astype(np.int64).sum()), n))
     if payload[:2] == b"\xff\xd8":
-        sof, ncomp = _jpeg_sof(payload)
-        if sof == 0xC2:
-            if ncomp == 3:
-                rgb, _ = jpeg_color_progressive_pixels(payload)
-                h, w = rgb.shape[:2]
-                n = h * w * 3
-                return ("jpeg", "decoded", w, h, n,
-                        _mean_e4(int(rgb.astype(np.int64).sum()), n))
-            px, _ = jpeg_progressive_pixels(payload)
-            h, w = px.shape
-            n = h * w
-            return ("jpeg", "decoded", w, h, n,
-                    _mean_e4(int(px.astype(np.int64).sum()), n))
-        if ncomp == 3:
-            rgb = jpeg_color_pixels(payload)
-            h, w = rgb.shape[:2]
-            n = h * w * 3
-            return ("jpeg", "decoded", w, h, n,
-                    _mean_e4(int(rgb.astype(np.int64).sum()), n))
-        px = jpeg_pixels(payload)
-        h, w = px.shape
-        n = h * w
-        return ("jpeg", "decoded", w, h, n,
-                _mean_e4(int(px.astype(np.int64).sum()), n))
+        px = _jpeg_decode(payload, None)[0]  # grey or RGB, SOF0 or SOF2
+        h, w = px.shape[:2]
+        return ("jpeg", "decoded", w, h, px.size,
+                _mean_e4(int(px.astype(np.int64).sum()), px.size))
     if payload[:4] == b"GIF8":
         idx, palette, _ = gif_pixels(payload)
         h, w = idx.shape
@@ -5435,10 +4737,10 @@ def mm_decode_router(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pure structure from the public spec (ISO/IEC 14496-12): length-prefixed
 # boxes, versioned full boxes, fixed-layout sample entries.  Writer
 # (synthesis) and reader are independent implementations; the probe
-# re-sniffs every feature from the payload bytes (the _jpeg_dri
-# discipline), and malformed containers — truncated boxes, children that
-# overrun or under-tile their parent, a size-0 box anywhere but the last
-# top-level slot — are REJECTED, never mis-probed.
+# re-sniffs every feature from the payload bytes (as the JPEG core reports
+# the DRI the payload declares), and malformed containers — truncated
+# boxes, children that overrun or under-tile their parent, a size-0 box
+# anywhere but the last top-level slot — are REJECTED, never mis-probed.
 
 
 def _u32(v: int) -> bytes:

@@ -1010,9 +1010,7 @@ def text_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s GROUP BY doc_id
     """.format(DUCK_TOKENS=DUCK_TOKENS_SQL),
 )
-def text_backoff_lm_score(
-    spark: SparkSession, sf_dir: str, cache_unigrams: bool = False
-) -> DataFrame:
+def text_backoff_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document bigram language-model score with Stupid Backoff
     (Brants et al. 2007): the LM trains on the EVEN half of the corpus
     (a genuine held-out split — unlike a same-corpus LM, unseen bigrams
@@ -1040,11 +1038,7 @@ def text_backoff_lm_score(
         # r12 note (guide §1.3): a ucnt.cache() (three consumers) was tried
         # and reverted — the explode+agg re-runs read the already-cached t,
         # and the paired A/B showed the cache as a slight loss locally.
-        # r13 (VERDICT r12 #5): the 100 TB hatch is the wired
-        # ``cache_unigrams`` knob; default = the locally measured winner.
     )
-    if cache_unigrams:
-        ucnt = ucnt.cache()
     utot = ucnt.agg(F.sum("c").cast("double").alias("n"))
     bigrams = F.expr(
         "transform(sequence(1, size(toks) - 1), "

@@ -20,7 +20,7 @@ from dataframework_spark.operators.multimodal import (
     _JPEG_QTABLE,
     _JPEG_QTABLE_C,
     _dct_basis,
-    _encode_ycc420_jpeg,
+    _encode_jpeg,
     _rnd_away,
     decode_jpeg_color,
     jpeg_color_pixels,
@@ -73,7 +73,7 @@ def test_general_path_matches_reference(shape):
     Y = rng.integers(0, 256, size=(h, w)).astype(np.float64)
     Cb = rng.integers(0, 256, size=(h // 2, w // 2)).astype(np.float64)
     Cr = rng.integers(0, 256, size=(h // 2, w // 2)).astype(np.float64)
-    got = jpeg_color_pixels(_encode_ycc420_jpeg(Y, Cb, Cr))
+    got = jpeg_color_pixels(_encode_jpeg((Y, Cb, Cr)))
     exp = _reference_rgb(Y, Cb, Cr)
     assert (got == exp).all()
 

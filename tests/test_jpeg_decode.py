@@ -17,9 +17,10 @@ import pytest
 from dataframework_spark.operators.multimodal import (
     _JPEG_QTABLE,
     _dct_basis,
-    _encode_gray_jpeg,
+    _encode_jpeg,
     _rnd_away,
     decode_jpeg,
+    jpeg_color_pixels,
     jpeg_pixels,
     synth_jpeg,
 )
@@ -66,7 +67,7 @@ def test_general_path_matches_reference(shape):
     equal the reference EXACTLY."""
     rng = np.random.default_rng(sum(shape))
     img = rng.integers(0, 256, size=shape).astype(np.float64)
-    got = jpeg_pixels(_encode_gray_jpeg(img))
+    got = jpeg_pixels(_encode_jpeg((img,)))
     assert (got == _reference_roundtrip(img)).all()
 
 
@@ -76,7 +77,7 @@ def test_byte_stuffing_is_exercised_and_lossless():
     rng = np.random.default_rng(7)
     for _ in range(300):
         img = rng.integers(0, 256, size=(16, 16)).astype(np.float64)
-        payload = _encode_gray_jpeg(img)
+        payload = _encode_jpeg((img,))
         if b"\xff\x00" in payload[20:-2]:
             assert (jpeg_pixels(payload) == _reference_roundtrip(img)).all()
             return
@@ -106,7 +107,7 @@ def test_rejects_progressive_sof2():
 
 def test_rejects_multi_component():
     img = np.full((8, 8), 99.0)
-    payload = bytearray(_encode_gray_jpeg(img))
+    payload = bytearray(_encode_jpeg((img,)))
     i = payload.find(b"\xff\xc0")
     payload[i + 9] = 3  # ncomp byte inside SOF0
     with pytest.raises(ValueError, match="components"):
@@ -114,7 +115,7 @@ def test_rejects_multi_component():
 
 
 def test_rejects_16bit_quant_table():
-    payload = bytearray(_encode_gray_jpeg(np.full((8, 8), 99.0)))
+    payload = bytearray(_encode_jpeg((np.full((8, 8), 99.0),)))
     i = payload.find(b"\xff\xdb")
     payload[i + 4] = 0x10  # Pq=1 (16-bit)
     with pytest.raises(ValueError, match="16-bit"):
@@ -145,20 +146,32 @@ def test_decode_jpeg_features():
 
 def test_restart_decode_equals_plain_decode():
     """Restart markers are error-resilience plumbing, not data: the same
-    image encoded with and without DRI must decode identically."""
+    image encoded with and without DRI must decode identically — for
+    greyscale and for 4:2:0 color (interleaved MCUs, one predictor per
+    component)."""
     rng = np.random.RandomState(23)
+    inputs = []
     for _ in range(10):
         h, w = 8 * rng.randint(1, 6), 8 * rng.randint(1, 6)
         img = rng.randint(0, 256, size=(h, w)).astype(np.float64)
-        plain = jpeg_pixels(_encode_gray_jpeg(img))
+        inputs.append((img,))
+    for _ in range(4):
+        h, w = 16 * rng.randint(1, 4), 16 * rng.randint(1, 4)
+        inputs.append(tuple(
+            rng.randint(0, 256, size=s).astype(np.float64)
+            for s in ((h, w), (h // 2, w // 2), (h // 2, w // 2))
+        ))
+    for planes in inputs:
+        decode = jpeg_pixels if len(planes) == 1 else jpeg_color_pixels
+        plain = decode(_encode_jpeg(planes))
         for ri in (1, 3, 7):
-            rst = jpeg_pixels(_encode_gray_jpeg(img, restart_interval=ri))
+            rst = decode(_encode_jpeg(planes, restart_interval=ri))
             assert np.array_equal(plain, rst)
 
 
 def test_restart_marker_out_of_sequence_rejected():
     img = np.random.RandomState(1).randint(0, 256, (16, 32)).astype(float)
-    payload = bytearray(_encode_gray_jpeg(img, restart_interval=1))
+    payload = bytearray(_encode_jpeg((img,), restart_interval=1))
     # find the first RST0 (FFD0) in the entropy stream and bump it to RST5
     sos = payload.find(b"\xff\xda")
     i = payload.find(b"\xff\xd0", sos)
@@ -174,7 +187,7 @@ def test_missing_restart_marker_rejected():
     import struct
 
     img = np.random.RandomState(2).randint(0, 256, (16, 32)).astype(float)
-    plain = _encode_gray_jpeg(img)  # no RSTs in the stream
+    plain = _encode_jpeg((img,))  # no RSTs in the stream
     # splice a DRI=1 segment before SOF0 (after DQT) without re-encoding
     sof = plain.find(b"\xff\xc0")
     dri = b"\xff\xdd\x00\x04\x00\x01"

@@ -17,10 +17,8 @@ import pytest
 
 from dataframework_spark.operators.multimodal import (
     _dct_basis,
-    _encode_gray_jpeg,
-    _encode_gray_jpeg_progressive,
+    _encode_jpeg,
     _entropy_end,
-    _jpeg_sof,
     decode_jpeg_progressive,
     jpeg_pixels,
     jpeg_progressive_pixels,
@@ -30,8 +28,8 @@ from dataframework_spark.operators.multimodal import (
 
 
 def _roundtrip_equal(img) -> bool:
-    base = jpeg_pixels(_encode_gray_jpeg(img))
-    prog, n_scans = jpeg_progressive_pixels(_encode_gray_jpeg_progressive(img))
+    base = jpeg_pixels(_encode_jpeg((img,)))
+    prog, n_scans = jpeg_progressive_pixels(_encode_jpeg((img,), progressive=True))
     assert n_scans == 6
     return np.array_equal(base, prog)
 
@@ -111,19 +109,19 @@ def test_synth_features_closed_form():
 def test_progressive_rejects_baseline_and_vice_versa():
     img = np.full((16, 16), 90.0)
     with pytest.raises(ValueError, match="progressive"):
-        jpeg_progressive_pixels(_encode_gray_jpeg(img))
+        jpeg_progressive_pixels(_encode_jpeg((img,)))
     with pytest.raises(ValueError, match="baseline"):
-        jpeg_pixels(_encode_gray_jpeg_progressive(img))
+        jpeg_pixels(_encode_jpeg((img,), progressive=True))
 
 
 def test_progressive_rejects_truncated_scan():
-    payload = _encode_gray_jpeg_progressive(np.full((16, 16), 90.0))
+    payload = _encode_jpeg((np.full((16, 16), 90.0),), progressive=True)
     with pytest.raises(ValueError):
         jpeg_progressive_pixels(payload[: len(payload) // 2])
 
 
 def test_progressive_rejects_restart_interval():
-    payload = bytearray(_encode_gray_jpeg_progressive(np.full((16, 16), 90.0)))
+    payload = bytearray(_encode_jpeg((np.full((16, 16), 90.0),), progressive=True))
     # splice a DRI segment right after SOI
     dri = b"\xff\xdd\x00\x04\x00\x08"
     payload = bytes(payload[:2]) + dri + bytes(payload[2:])
@@ -135,7 +133,7 @@ def test_progressive_rejects_bad_refinement_amplitude():
     """A refinement scan whose huffman stream yields s >= 2 is corrupt."""
     rng = np.random.RandomState(5)
     img = rng.randint(0, 256, size=(16, 16)).astype(np.float64)
-    payload = bytearray(_encode_gray_jpeg_progressive(img))
+    payload = bytearray(_encode_jpeg((img,), progressive=True))
     # find the LAST SOS (an AC refinement scan) and corrupt its stream by
     # replacing it with an AC-first style (run, size=3) code; all codes in
     # the progressive AC table are 8 bits, symbol index = code value
@@ -159,7 +157,7 @@ def test_entropy_end_skips_stuffing():
 
 def test_router_dispatches_progressive():
     payload, w, h = synth_jpeg_progressive(19)
-    assert _jpeg_sof(payload) == (0xC2, 1)
+    assert jpeg_progressive_pixels(payload)[0].ndim == 2  # SOF2, one component
     fmt, verdict, rw, rh, n, feat = route_media(payload)
     assert (fmt, verdict, rw, rh, n) == ("jpeg", "decoded", w, h, w * h)
     assert feat == decode_jpeg_progressive(payload)[2]
@@ -172,8 +170,6 @@ def test_router_dispatches_progressive():
 
 def test_color_progressive_equals_color_baseline():
     from dataframework_spark.operators.multimodal import (
-        _encode_ycc420_jpeg,
-        _encode_ycc420_jpeg_progressive,
         jpeg_color_pixels,
         jpeg_color_progressive_pixels,
     )
@@ -185,9 +181,9 @@ def test_color_progressive_equals_color_baseline():
         Y = rng.randint(0, 256, (h, w)).astype(float)
         Cb = rng.randint(0, 256, (h // 2, w // 2)).astype(float)
         Cr = rng.randint(0, 256, (h // 2, w // 2)).astype(float)
-        base = jpeg_color_pixels(_encode_ycc420_jpeg(Y, Cb, Cr))
+        base = jpeg_color_pixels(_encode_jpeg((Y, Cb, Cr)))
         prog, ns = jpeg_color_progressive_pixels(
-            _encode_ycc420_jpeg_progressive(Y, Cb, Cr)
+            _encode_jpeg((Y, Cb, Cr), progressive=True)
         )
         assert ns == 8
         assert np.array_equal(base, prog)
@@ -195,7 +191,6 @@ def test_color_progressive_equals_color_baseline():
 
 def test_color_progressive_rejections():
     from dataframework_spark.operators.multimodal import (
-        _encode_ycc420_jpeg,
         jpeg_color_pixels,
         jpeg_color_progressive_pixels,
         synth_jpeg_color_progressive,
@@ -209,7 +204,7 @@ def test_color_progressive_rejections():
     Y = np.full((16, 16), 80.0)
     C = np.full((8, 8), 120.0)
     with pytest.raises(ValueError, match="progressive"):
-        jpeg_color_progressive_pixels(_encode_ycc420_jpeg(Y, C, C))
+        jpeg_color_progressive_pixels(_encode_jpeg((Y, C, C)))
     # and truncation dies, never mis-decodes
     with pytest.raises(ValueError):
         jpeg_color_progressive_pixels(payload[: len(payload) // 2])
@@ -218,11 +213,12 @@ def test_color_progressive_rejections():
 def test_router_dispatches_progressive_color():
     from dataframework_spark.operators.multimodal import (
         decode_jpeg_color_progressive,
+        jpeg_color_progressive_pixels,
         synth_jpeg_color_progressive,
     )
 
     payload, w, h = synth_jpeg_color_progressive(21)  # 21 % 11 == 10 in the mix
-    assert _jpeg_sof(payload) == (0xC2, 3)
+    assert jpeg_color_progressive_pixels(payload)[0].ndim == 3  # SOF2, 3 components
     fmt, verdict, rw, rh, n, feat = route_media(payload)
     assert (fmt, verdict, rw, rh, n) == ("jpeg", "decoded", w, h, w * h * 3)
     assert feat == decode_jpeg_color_progressive(payload)[2]

@@ -2,7 +2,8 @@
 
 1. multimodal: a DRI segment with a body shorter than 2 bytes raised
    struct.error, not the ValueError the decoders' REJECTED-not-mis-decoded
-   contract promises (both jpeg_pixels' 0xFFDD branch and _jpeg_dri).
+   contract promises (the JPEG core's one marker walk, reached through
+   jpeg_pixels and the router alike).
 2. registry: ``for line in open(req)`` leaked the file handle, and an
    unknown name in REGRADE_REQUEST was silently ignored — a typo'd name
    silently dropped an intended regrade.  It now warns.
@@ -29,7 +30,11 @@ from pathlib import Path
 import duckdb
 import pytest
 
-from dataframework_spark.operators.multimodal import _jpeg_dri, jpeg_pixels
+from dataframework_spark.operators.multimodal import (
+    _jpeg_decode,
+    jpeg_pixels,
+    synth_jpeg,
+)
 from dataframework_spark.registry import _driver_history
 
 REPO = Path(__file__).resolve().parent.parent
@@ -52,14 +57,15 @@ def test_jpeg_dri_sniffer_truncated_dri_is_rejected_not_struct_error():
     # marker + size fit (pos+4 <= len) but the 2-byte interval does not
     payload = b"\xff\xd8" + b"\xff\xdd" + struct.pack(">H", 4)
     with pytest.raises(ValueError, match="truncated DRI"):
-        _jpeg_dri(payload)
+        _jpeg_decode(payload, None)
 
 
 def test_jpeg_dri_sniffer_still_reads_a_wellformed_interval():
     payload = (
         b"\xff\xd8" + b"\xff\xdd" + struct.pack(">H", 4) + struct.pack(">H", 7)
     )
-    assert _jpeg_dri(payload) == 7
+    # the core reports the interval after decoding the image that follows
+    assert _jpeg_decode(payload + synth_jpeg(0)[0][2:], None)[2] == 7
 
 
 # ---------------------------------------------------------------------------

@@ -1,54 +1,16 @@
-"""r13 optimization-round pins: wired scale hatches + restructured shapes.
+"""r13 optimization-round pins: the broadcast hatch + restructured shapes.
 
-VERDICT r12 #5 asked for the locally-reverted caches to become selectable
-knobs (duplicate passes are free on an idle local box but real resources
-at 100 TB): each knob must (a) default to the locally-measured winner,
-(b) change the plan's duplicate-pass count when flipped, and (c) never
-change the result.
+The exact-substring dedup keeps a ``broadcast_dups`` hatch (a broadcast
+size guard): flipping it must never change the result.
 """
 
 from __future__ import annotations
 
-import pytest
-
-from dataframework_spark.plans.explain import plan_string
 from tests.conftest import ORACLE_SF_DIR
 
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
-
-
-@pytest.mark.parametrize(
-    "fn_name,module,knob",
-    [
-        ("corpus_mixture_sample_bpe", "corpus", "cache_doc_totals"),
-        ("ml_auc_rank", "ml_prep", "cache_scores"),
-        ("text_backoff_lm_score", "text", "cache_unigrams"),
-    ],
-)
-def test_cache_hatch_knobs(spark, fn_name, module, knob):
-    import importlib
-
-    mod = importlib.import_module(f"dataframework_spark.operators.{module}")
-    fn = getattr(mod, fn_name)
-    # plan + rows of the DEFAULT mode first, then drop the cache registry —
-    # CacheManager substitutes any registered cached subtree into later
-    # plans, which would erase the off/on plan difference
-    off = fn(spark, ORACLE_SF_DIR)
-    p_off = plan_string(off)
-    rows_off = _rows(off)
-    spark.catalog.clearCache()
-    on = fn(spark, ORACLE_SF_DIR, **{knob: True})
-    p_on = plan_string(on)
-    rows_on = _rows(on)
-    # the knob adds a materialization point the default plan does not have
-    assert p_on.count("InMemoryRelation") > p_off.count("InMemoryRelation"), (
-        fn_name,
-        knob,
-    )
-    # and the result is identical under both modes
-    assert rows_off == rows_on, f"{fn_name}({knob}=True) changed the result"
 
 
 def test_exact_substring_broadcast_hatch(spark):

@@ -21,7 +21,7 @@ import pytest
 
 from dataframework_spark.operators.multimodal import (
     _BitReader,
-    _encode_gray_jpeg,
+    _encode_jpeg,
     _mean_e4,
     jpeg_pixels,
     synth_jpeg,
@@ -60,7 +60,7 @@ def test_sos_table_selectors_are_honored():
     silent table-0 decode)."""
     rng = np.random.default_rng(42)
     img = rng.integers(0, 256, size=(16, 16)).astype(np.float64)
-    base = _encode_gray_jpeg(img)
+    base = _encode_jpeg((img,))
     moved = _patch_sos_tdta(_retable_dht(base, 1), 0x11)
     assert (jpeg_pixels(bytes(moved)) == jpeg_pixels(base)).all()
 

@@ -1,11 +1,12 @@
-"""Dump ``explain("formatted")`` for named queries to plans/r13/.
+"""Dump ``explain("formatted")`` for named queries into a directory.
 
 Usage:
-    python tools/dump_plans_r13.py before dedup_exact_substring dedup_lsh_eval ...
-    python tools/dump_plans_r13.py after --headline          # the bench.py HEADLINE set
+    python tools/dump_plans.py OUT_DIR before dedup_exact_substring dedup_lsh_eval ...
+    python tools/dump_plans.py OUT_DIR after --headline      # the bench.py HEADLINE set
 
-Writes ``plans/r13/<query>_<suffix>.txt`` — the optimization-round evidence
-files the judge checks plan claims against (guide §1 / §7.2).
+Writes ``OUT_DIR/<query>_<suffix>.txt`` (e.g. ``OUT_DIR=plans/r13``) — the
+before/after plan evidence that plan-shape claims are checked against.
+Reads the tables from the directory in ``SPARK_GRAFT_SF_DIR``.
 """
 
 from __future__ import annotations
@@ -21,17 +22,18 @@ from dataframework_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    suffix = sys.argv[1]
+    if len(sys.argv) < 3:
+        raise SystemExit(__doc__)
+    out_dir, suffix = sys.argv[1], sys.argv[2]
     if suffix not in ("before", "after"):
-        raise SystemExit("first arg must be 'before' or 'after'")
-    names = sys.argv[2:]
+        raise SystemExit("second arg must be 'before' or 'after'")
+    names = sys.argv[3:]
     if "--headline" in names:
         from bench import HEADLINE
 
         names = [n for n in names if n != "--headline"] + list(HEADLINE)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or (os.cpu_count() or 4)
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13")
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="dfx-dump-plans", cpus=cpus)
     specs = all_queries()
