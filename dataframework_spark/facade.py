@@ -10,10 +10,11 @@ Reference lifecycle (SURVEY.md §3):
   center, returning **(train_df, test_df)** DataFrames instead of four
   NumPy arrays.
 * ``pp.train = ...``                 → the :attr:`train` setter (C5,
-  ``preprocess.py:244-267,292-298``): re-planning is free because plans
-  are lazy columns, not materialized index arrays.
+  ``preprocess.py:244-267,292-298``): stores the settings and drops the
+  cached CV table; every other plan is lazy and simply re-reads them.
 * ``get_cv_data(cv)``                → :meth:`get_cv_data` (M6,
-  ``preprocess.py:91-96``).
+  ``preprocess.py:91-96``): two filters over ONE cached table that holds
+  every fold, as the reference slices indices it computed once.
 * ``Lambda(group)``                  → :class:`ParamGrid` (G1/G2,
   ``preprocess.py:482-517``).
 
@@ -22,9 +23,15 @@ Where the reference eagerly loads ``.mat`` files into RAM
 the caller acts — the semantic *upgrade* SURVEY.md §1.4 calls out: same
 results, scan-time column pruning, and nothing driver-resident.
 
+The one exception is the CV table: ``.cache()`` is lazy too, but the first
+action on any fold materializes all folds in executor storage, and later
+folds read that snapshot — the reference's eager-load semantics, once per
+database instead of once per fold and side.
+
 Scale: per-class ops are window functions over ``partitionBy(label)`` (one
-shuffle); centering broadcasts a one-row means table; the permutation is a
-seeded hash ordering (no stored ``r`` matrices, ``preprocess.py:53``).
+shuffle); centering broadcasts a small means table (one row, or one per
+fold); the permutation is a seeded hash ordering (no stored ``r``
+matrices, ``preprocess.py:53``).
 """
 
 from __future__ import annotations
@@ -74,6 +81,7 @@ class PreProcessEngine:
         self._names = list(self._scan_specs)
         self._process = decode_process_config(config.get("process", {}), self._names)
         self._data = {n: self._load(spec) for n, spec in self._scan_specs.items()}
+        self._cv_tables: dict[str, DataFrame] = {}
 
     # -- loading (S3/S4/P1/P2/P3) -------------------------------------------
 
@@ -120,9 +128,13 @@ class PreProcessEngine:
     @train.setter
     def train(self, value: Any) -> None:
         """Runtime reconfiguration (reference ``preprocess.py:292-298``):
-        plans are lazy, so "re-planning" is just storing new settings."""
+        stores the new settings and drops the cached CV tables, which the
+        next :meth:`get_cv_data` re-plans from them."""
         for n in self._names:
             self._process[n]["train"] = adapt_train_item(value)
+        for table in self._cv_tables.values():
+            table.unpersist()
+        self._cv_tables.clear()
 
     # -- execution (M1) ------------------------------------------------------
 
@@ -166,20 +178,44 @@ class PreProcessEngine:
 
     def get_cv_data(self, fold: int, database: str | None = None) -> tuple[DataFrame, DataFrame]:
         """Fold ``fold``'s (cv_train, cv_test) slices (M6,
-        ``preprocess.py:91-96``) via the exploded general plan (T2+T3 —
-        covers both the linspace and the rotating leave-one-out regime).
+        ``preprocess.py:91-96``): two filters over the database's cached
+        all-folds table (:meth:`_cv_table`), as the reference slices the
+        fold indices it computed once.  ``fold`` outside ``range(cv)``
+        raises ``IndexError``, as :meth:`ParamGrid.row` does.
+
+        The table is lazy until the first action on any fold; from then on
+        every fold reads that one materialization — a snapshot, like the
+        reference's eager load, so a later rewrite of the source files is
+        not seen until the :attr:`train` setter drops the table."""
+        name = database or self._names[0]
+        self.database(name)  # unknown names raise ConfigError first
+        if not 0 <= fold < self._process[name]["cv"]:
+            raise IndexError(fold)
+        plan = self._cv_table(name).where(F.col("fold") == fold)
+        return plan.where(F.col("role") == "train"), plan.where(F.col("role") == "test")
+
+    def _cv_table(self, name: str) -> DataFrame:
+        """Every fold of the seed-0 split at once, cached: one row per
+        (train sample, fold) with its ``role`` — the exploded general plan
+        (T2+T3, covers both the linspace and the rotating leave-one-out
+        regime).
 
         When ``center`` is configured, each fold is re-centered by its OWN
         fold-train per-dimension means (reference ``preprocess.py:80-84``
         re-centers every CV slice after the global pass) — fold-test rows
         get the fold-train means subtracted, exactly like the outer
-        train/test pair."""
-        name = database or self._names[0]
+        train/test pair.  One grouped means aggregate serves all folds.
+
+        ``spark.catalog.clearCache()`` leaves the stored frame correct but
+        uncached: each later action recomputes every fold."""
+        table = self._cv_tables.get(name)
+        if table is not None:
+            return table
         spec, proc = self._scan_specs[name], self._process[name]
         df = self.database(name)
         order = [seeded_order(spec["key"], seed=0), spec["key"]]
         split = train_test_split(df, spec["label"], order, proc["train"][0], proc["cv"])
-        plan = cv_plan(split, proc["cv"]).where(F.col("fold") == fold)
+        plan = cv_plan(split, proc["cv"])
         keep = [c for c in plan.columns if c not in ("_n", "_rn", "_train_size")]
         plan = plan.select(*keep)
         if proc["center"]:
@@ -189,8 +225,10 @@ class PreProcessEngine:
                 ),
                 spec["features"],
                 train_col="_is_fold_train",
+                by=("fold",),
             ).drop("_is_fold_train")
-        return plan.where(F.col("role") == "train"), plan.where(F.col("role") == "test")
+        table = self._cv_tables[name] = plan.cache()
+        return table
 
 
 class ParamGrid:

@@ -193,6 +193,7 @@ def center_features(
     features_col: str,
     train_col: str = "is_train",
     ndigits: int = 6,
+    by: tuple[str, ...] = (),
 ) -> DataFrame:
     """Full-vector fit/transform centering (reference ``preprocess.py:76-84``):
     subtract the per-DIMENSION train means from EVERY dimension of every
@@ -200,30 +201,36 @@ def center_features(
     ``center=True`` semantics (r1 centered only the first dimension on the
     facade path; ADVICE r1).
 
+    ``by`` centers each group separately, as if the call ran on each
+    group's rows alone: means are per ``(*by, dim)`` and each row gets its
+    own group's vector (a group without train rows gets NULL features).
+
     Plan shape: posexplode of TRAIN rows only → per-dim mean (one shuffle,
-    dim-sized result) → means collected into ONE array row, broadcast back
-    → ``zip_with`` subtract (narrow, codegen).  The data table itself
-    never explodes or shuffles."""
+    dim-sized result) → means collected into ONE array row per group,
+    broadcast back (cross join, or a join on ``by``) → ``zip_with``
+    subtract (narrow, codegen).  The data table itself never explodes or
+    shuffles."""
+    by = list(by)
     exploded = df.where(F.col(train_col) == 1).select(
-        F.posexplode(F.col(features_col).cast("array<double>")).alias("pos", "val")
+        *by, F.posexplode(F.col(features_col).cast("array<double>")).alias("pos", "val")
     )
-    means = exploded.groupBy("pos").agg(F.round(F.avg("val"), ndigits).alias("m"))
-    marr = means.groupBy().agg(
+    means = exploded.groupBy(*by, "pos").agg(F.round(F.avg("val"), ndigits).alias("m"))
+    marr = F.broadcast(means.groupBy(*by).agg(
         F.expr("transform(array_sort(collect_list(struct(pos, m))), s -> s.m)").alias(
             "_dim_means"
         )
-    )
-    return (
-        df.crossJoin(F.broadcast(marr))
-        .withColumn(
-            features_col,
-            F.expr(
-                f"zip_with(cast({features_col} as array<double>), _dim_means, "
-                "(x, m) -> x - m)"
-            ),
-        )
-        .drop("_dim_means")
-    )
+    ))
+    if by:
+        joined = df.join(marr, by, "left").select(*df.columns, "_dim_means")
+    else:
+        joined = df.crossJoin(marr)
+    return joined.withColumn(
+        features_col,
+        F.expr(
+            f"zip_with(cast({features_col} as array<double>), _dim_means, "
+            "(x, m) -> x - m)"
+        ),
+    ).drop("_dim_means")
 
 
 def extend_bias(df: DataFrame, features_col: str | None = None) -> DataFrame:

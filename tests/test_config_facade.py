@@ -226,6 +226,95 @@ def test_facade_cv_slices_disjoint(engine):
     assert tr and te and not (tr & te)
 
 
+def test_facade_cv_fold_out_of_range_raises(engine):
+    # like ParamGrid.row: an index outside range(cv) is an error, not two
+    # empty slices
+    for fold in (-1, 5, 99):
+        with pytest.raises(IndexError):
+            engine.get_cv_data(fold)
+
+
+def test_facade_cv_folds_centered_by_fold_train_means(engine):
+    """Every fold of the cached all-folds table: membership follows the
+    linspace rule on the seed-0 permutation, the fold-train slice is
+    mean-zero per dimension, and each fold-test vector is the raw vector
+    minus that fold's train means rounded to 6 digits."""
+    import hashlib
+
+    import numpy as np
+
+    cv = 5
+    raw = {
+        r.vec_id: (r.label, np.asarray(r.embedding, dtype=np.float64))
+        for r in engine.database("embeddings").collect()
+    }
+    by_label: dict[int, list[int]] = {}
+    for key, (label, _) in raw.items():
+        by_label.setdefault(label, []).append(key)
+    want_fold = {}  # train key -> the fold whose test slice holds it
+    for keys in by_label.values():
+        keys.sort(key=lambda k: (int(hashlib.md5(f"0:{k}".encode()).hexdigest()[:15], 16), k))
+        train_size = max(int(len(keys) * 0.7 + 0.5), min(cv, len(keys)))
+        for rank, key in enumerate(keys[:train_size], start=1):
+            want_fold[key] = (rank * cv - 1) // train_size
+    for fold in range(cv):
+        cv_train, cv_test = engine.get_cv_data(fold)
+        tr = {r.vec_id: np.asarray(r.embedding) for r in cv_train.collect()}
+        te = {r.vec_id: np.asarray(r.embedding) for r in cv_test.collect()}
+        assert set(te) == {k for k, f in want_fold.items() if f == fold}
+        assert set(tr) == {k for k, f in want_fold.items() if f != fold}
+        assert np.abs(np.mean(list(tr.values()), axis=0)).max() < 1e-6
+        means = np.round(np.mean([raw[k][1] for k in tr], axis=0), 6)
+        for key, vec in te.items():
+            np.testing.assert_allclose(vec, raw[key][1] - means, rtol=0, atol=1e-9)
+
+
+def test_facade_train_setter_replans_cv_table(spark, sf_dir):
+    import pyspark.sql.functions as F
+
+    eng = PreProcessEngine(
+        spark,
+        {
+            "database": {"name": "embeddings", "root": sf_dir},
+            "process": {"cv": 5, "train": 0.7, "center": True},
+        },
+    )
+    cv_train, cv_test = eng.get_cv_data(0)
+    assert cv_train.count() > 0  # materializes the cached table
+    eng.train = 10
+    cv_train, cv_test = eng.get_cv_data(0)
+    both = cv_train.select("vec_id", "label").union(cv_test.select("vec_id", "label"))
+    per_class = both.groupBy("label").agg(
+        F.count("*").alias("n"), F.countDistinct("vec_id").alias("keys")
+    ).collect()
+    assert len(per_class) == 10
+    assert all(r.n == r.keys == 10 for r in per_class)
+
+
+def test_facade_builders_launch_no_jobs(spark, sf_dir):
+    """Lazy builders: ``generator()`` and ``get_cv_data()`` only plan —
+    the CV table is a lazy ``.cache()``, not an eager materialization.
+    Jobs are counted under a job group."""
+    eng = PreProcessEngine(
+        spark,
+        {
+            "database": {"name": "embeddings", "root": sf_dir},
+            "process": {"cv": 5, "train": 0.7, "extend": True, "center": True},
+        },
+    )
+    sc, group = spark.sparkContext, "dfx-lazy-facade-builders"
+    sc.setJobGroup(group, "lazy builder probe")
+    try:
+        eng.generator()
+        eng.get_cv_data(0)
+        eng.get_cv_data(4)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        eng.get_cv_data(1)[1].count()  # control: an action is counted
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def test_facade_train_setter_replans(spark, sf_dir):
     eng = PreProcessEngine(
         spark, {"database": {"name": "embeddings", "root": sf_dir}, "process": {"train": -1}}

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from dataframework_spark.operators.ml_prep import (
     assign_folds,
     center,
+    center_features,
     cv_plan,
     extend_bias,
     param_grid,
@@ -150,6 +151,25 @@ def test_center_train_mean_zero(spark):
         split.where("is_train = 1").agg(F.avg("x")).collect()[0][0]
     )
     assert abs((row.x - row.x_centered) - round(all_train_mean, 10)) < 1e-9
+
+
+def test_center_features_by_group_equals_per_group_call(spark):
+    """``by=("g",)`` centers each group by its own train means: the same
+    rows as the ungrouped call run on that group's rows alone."""
+    rows = [
+        (i, g, int(i % 3 != 0), [float(i * (g + 1)), float((i * 7) % 5) - g, 0.5 * g])
+        for g in range(3)
+        for i in range(g * 10, g * 10 + 7 + g)
+    ]
+    df = spark.createDataFrame(rows, ["id", "g", "is_train", "f"])
+    grouped = center_features(df, "f", by=("g",))
+    assert grouped.columns == df.columns
+    got = {r.id: r.f for r in grouped.collect()}
+    for g in range(3):
+        alone = center_features(df.where(F.col("g") == g), "f").collect()
+        assert alone
+        for r in alone:
+            assert got[r.id] == r.f, (g, r.id)
 
 
 def test_extend_bias_array_append(spark):
