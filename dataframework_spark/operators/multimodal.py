@@ -27,10 +27,26 @@ Decode tiers:
   variable-width LZW dictionary decoding + interlace reordering in pure
   Python/numpy, covering the dictionary-codec family (vs zlib's
   LZ77+huffman and JPEG's DCT+huffman).
+* **TIFF and FLAC decode for real (r10)** — `mm_tiff_decode` walks the
+  IFD and LZW-decodes strips (MSB-first, early width change, predictor
+  undo, both byte orders); `mm_flac_decode` unpacks FIXED/LPC/VERBATIM
+  subframes with Rice residuals and checks CRC-8/CRC-16/MD5.
+  `mm_decode_router` dispatches mixed payloads to all of these by magic
+  bytes.
+* **MP4 and MP3 headers are probed, not decoded** — `mm_mp4_probe` and
+  `mm_mp4_frame_index` walk ISO BMFF boxes and sample tables;
+  `mm_mp3_probe` walks MPEG audio frame headers and ID3 tags.
 * **Only mp3-class codecs remain a stub** — the container ships no
   ffmpeg, so `mm_decode_features` uses a clearly-marked deterministic
   fake (`_fake_decode`) behind the same signature, which still
   hash-verifies the Arrow mapInPandas path end-to-end.
+
+Every synthesized-payload query runs through one per-doc stage,
+``_per_doc``: the query supplies its codec call and output schema, and
+the helper owns the round-robin spread of ``documents.doc_id`` over
+``defaultParallelism`` partitions and the pandas dtypes derived from the
+DDL schema (``_PANDAS_DTYPES``).  ``mm_decode_features`` is the one other
+Python stage: it decodes the ``text`` column vectorized, not per doc.
 
 Scale design: decode is embarrassingly parallel per-partition Python with
 Arrow transfer (the one legitimate Pandas-UDF hot path in this engine —
@@ -43,7 +59,7 @@ never enter Python.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 
@@ -176,6 +192,38 @@ def mm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield out
 
     return docs.mapInPandas(decode_partition, schema=_DECODE_SCHEMA)
+
+
+# pandas dtype per DDL type of a ``_per_doc`` schema; the nullable ``Int*``
+# dtypes carry a codec's ``None`` (the router's width of an audio doc) as NULL.
+_PANDAS_DTYPES = {"int": "Int32", "bigint": "Int64", "double": "float64", "string": object}
+
+
+def _per_doc(
+    spark: SparkSession,
+    sf_dir: str,
+    rows: Callable[[int], Iterable[tuple]],
+    schema: str,
+) -> DataFrame:
+    """The per-doc media stage: one Arrow-batched ``mapInPandas`` over
+    ``documents.doc_id``.  ``rows(doc_id)`` yields the doc's output rows
+    without ``doc_id``, which is prepended; the DDL ``schema`` (``doc_id
+    bigint`` first) names and types the columns.
+
+    The scan is spread round-robin over ``defaultParallelism`` partitions
+    (one Python worker per partition, so a single-split scan would
+    serialize the stage); no keyed exchange, memory = batch × payload."""
+    dtypes = {n: _PANDAS_DTYPES[t] for n, t in (f.split() for f in schema.split(","))}
+    names = list(dtypes)
+    docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
+    docs = docs.repartition(spark.sparkContext.defaultParallelism)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            recs = [(d, *r) for d in map(int, pdf["doc_id"]) for r in rows(d)]
+            yield pd.DataFrame(recs, columns=names).astype(dtypes)
+
+    return docs.mapInPandas(run, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -319,6 +367,8 @@ def wav_samples(payload: bytes):
             raise ValueError(f"chunk {cc!r} overruns payload: {size} bytes at {pos}")
         body = payload[pos + 8 : pos + 8 + size]
         if cc == b"fmt ":
+            if size < 16:
+                raise ValueError(f"fmt chunk too short: {size} bytes")
             fmt = struct.unpack("<HHIIHH", body[:16])
         elif cc == b"data":
             data = body
@@ -328,6 +378,8 @@ def wav_samples(payload: bytes):
     audio_fmt, channels, sr, _byte_rate, _block, bits = fmt
     if audio_fmt != 1 or bits != 16:
         raise ValueError(f"unsupported encoding: fmt={audio_fmt} bits={bits}")
+    if channels == 0 or sr == 0:
+        raise ValueError(f"invalid fmt chunk: channels={channels} sample_rate={sr}")
     if len(data) % 2:
         raise ValueError(f"PCM16 data chunk has odd length {len(data)}")
     s = np.frombuffer(data, dtype="<i2").astype(np.int32)
@@ -375,26 +427,11 @@ def mm_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     alignment, endianness, header fields), not just the plumbing.  Scale
     shape is identical to ``mm_decode_features``: Arrow-batched
     ``mapInPandas``, embarrassingly parallel, memory = batch × payload."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
     schema = (
         "doc_id bigint, sample_rate bigint, n_samples bigint, "
         "duration_ms bigint, rms double, n_zero_cross bigint"
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode_wav(synth_wav(int(d))) for d in pdf["doc_id"]]
-            out = pd.DataFrame(
-                feats,
-                columns=["sample_rate", "n_samples", "duration_ms", "rms", "n_zero_cross"],
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].astype("int64"))
-            yield out
-
-    return docs.mapInPandas(run, schema=schema)
+    return _per_doc(spark, sf_dir, lambda d: [decode_wav(synth_wav(d))], schema)
 
 
 def synth_bmp(doc_id: int) -> bytes:
@@ -511,29 +548,11 @@ def mm_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     catch padding/BGR mistakes.  Oracle recomputes from the pixel
     formula; bytes never enter DuckDB.  Same Arrow mapInPandas scale
     shape as every decode stage."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
     schema = (
         "doc_id bigint, width int, height int, mean_r_e4 bigint, "
         "mean_g_e4 bigint, mean_b_e4 bigint, corner_tl_r int, n_bytes bigint"
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode_bmp(synth_bmp(int(d))) for d in pdf["doc_id"]]
-            out = pd.DataFrame(
-                feats,
-                columns=[
-                    "width", "height", "mean_r_e4", "mean_g_e4", "mean_b_e4",
-                    "corner_tl_r", "n_bytes",
-                ],
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].astype("int64"))
-            yield out
-
-    return docs.mapInPandas(run, schema=schema)
+    return _per_doc(spark, sf_dir, lambda d: [decode_bmp(synth_bmp(d))], schema)
 
 
 @register(
@@ -575,26 +594,11 @@ def mm_bmp_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline stage with the real byte-level decode in front of it; same
     Arrow mapInPandas scale shape as every decode stage (the resize adds
     O(pixels) per task, no extra shuffle)."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
     schema = (
         "doc_id bigint, out_w int, out_h int, mean_r_e4 bigint, mean_g_e4 bigint, "
         "mean_b_e4 bigint, checksum double"
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [resize_bmp_2x(synth_bmp(int(d))) for d in pdf["doc_id"]]
-            out = pd.DataFrame(
-                feats,
-                columns=["out_w", "out_h", "mean_r_e4", "mean_g_e4", "mean_b_e4", "checksum"],
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].astype("int64"))
-            yield out
-
-    return docs.mapInPandas(run, schema=schema)
+    return _per_doc(spark, sf_dir, lambda d: [resize_bmp_2x(synth_bmp(d))], schema)
 
 
 # ---------------------------------------------------------------------------
@@ -668,21 +672,10 @@ def mm_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the hash column is 8 bytes/image; near-identical images (≤2
     flipped bits) cluster via the existing MinHash-LSH band trick over
     hash nibbles if needed (see ``dedup.py``)."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "dhash": [dhash_bmp(synth_bmp(int(d))) for d in pdf["doc_id"]],
-                }
-            )
-
-    hashes = docs.mapInPandas(run, schema="doc_id bigint, dhash string")
+    hashes = _per_doc(
+        spark, sf_dir, lambda d: [(dhash_bmp(synth_bmp(d)),)],
+        "doc_id bigint, dhash string",
+    )
     return hashes.groupBy("dhash").agg(
         F.count(F.lit(1)).alias("n_images"),
         F.min("doc_id").alias("rep_doc"),
@@ -760,10 +753,6 @@ def mm_audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``mapInPandas``, embarrassingly parallel, no shuffle at all; VAD
     state (the previous frame's verdict) lives inside a doc, never
     across rows."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
     schema = (
         "doc_id bigint, n_frames bigint, n_active bigint, "
         "n_segments bigint, active_ms bigint"
@@ -779,16 +768,7 @@ def mm_audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         starts = int(np.sum(act & np.concatenate(([1], 1 - act[:-1]))))
         return nf, int(act.sum()), starts, int(act.sum()) * 20
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [vad(int(d)) for d in pdf["doc_id"]]
-            out = pd.DataFrame(
-                feats, columns=["n_frames", "n_active", "n_segments", "active_ms"]
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].astype("int64"))
-            yield out
-
-    return docs.mapInPandas(run, schema=schema)
+    return _per_doc(spark, sf_dir, lambda d: [vad(d)], schema)
 
 
 # ---------------------------------------------------------------------------
@@ -885,28 +865,16 @@ def mm_image_sobel(spark: SparkSession, sf_dir: str) -> DataFrame:
     never leaves the Python worker), identical to the rest of the
     decode family.  All outputs are exact integers or single ratios of
     them, so the value hash is engine-portable."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
     schema = (
         "doc_id bigint, width int, height int, n_interior bigint, "
         "edge_energy bigint, max_edge bigint"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [sobel_bmp(synth_bmp(int(d))) for d in pdf["doc_id"]]
-            out = pd.DataFrame(
-                feats,
-                columns=["width", "height", "n_interior", "edge_energy", "max_edge"],
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].astype("int64"))
-            yield out
-
     # mean ratio rounded JVM-side (half-up, matching DuckDB ROUND) — see
     # sobel_bmp docstring for the banker's-rounding trap.
-    return docs.mapInPandas(run, schema=schema).select(
+    return _per_doc(
+        spark, sf_dir, lambda d: [sobel_bmp(synth_bmp(d))], schema
+    ).select(
         "doc_id",
         "width",
         "height",
@@ -1224,30 +1192,12 @@ def mm_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     JPEG, leaving mp3 as the sole documented externals-only codec.  Same
     Arrow mapInPandas scale shape as every decode stage — embarrassingly
     parallel, memory = batch x payload."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
     schema = (
         "doc_id bigint, width int, height int, mean_r_e4 bigint, "
         "mean_g_e4 bigint, mean_b_e4 bigint, corner_tl_r int, "
         "corner_br_b int, filter_types string"
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode_png(synth_png(int(d))) for d in pdf["doc_id"]]
-            out = pd.DataFrame(
-                feats,
-                columns=[
-                    "width", "height", "mean_r_e4", "mean_g_e4", "mean_b_e4",
-                    "corner_tl_r", "corner_br_b", "filter_types",
-                ],
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].astype("int64"))
-            yield out
-
-    return docs.mapInPandas(run, schema=schema)
+    return _per_doc(spark, sf_dir, lambda d: [decode_png(synth_png(d))], schema)
 
 
 def resize_png_2x(payload: bytes) -> tuple[int, int, int, int, int, float]:
@@ -1307,26 +1257,11 @@ def mm_png_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash covers the whole chain: chunk walk → inflate → all five
     defilters → block grid.  Same Arrow mapInPandas scale shape; the
     resize adds O(pixels) per task, no extra shuffle."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
     schema = (
         "doc_id bigint, out_w int, out_h int, mean_r_e4 bigint, mean_g_e4 bigint, "
         "mean_b_e4 bigint, checksum double"
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [resize_png_2x(synth_png(int(d))) for d in pdf["doc_id"]]
-            out = pd.DataFrame(
-                feats,
-                columns=["out_w", "out_h", "mean_r_e4", "mean_g_e4", "mean_b_e4", "checksum"],
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].astype("int64"))
-            yield out
-
-    return docs.mapInPandas(run, schema=schema)
+    return _per_doc(spark, sf_dir, lambda d: [resize_png_2x(synth_png(d))], schema)
 
 
 def synth_png_v2(doc_id: int) -> bytes:
@@ -1482,31 +1417,12 @@ def mm_png_palette_adam7_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     palettes (PLTE not a multiple of 3, index past the last entry) and
     the remaining honest limits (sub-8-bit depths, other color types).
     Same Arrow mapInPandas scale shape as every decode stage."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
     schema = (
         "doc_id bigint, width int, height int, color_type int, interlaced int, "
         "mean_r_e4 bigint, mean_g_e4 bigint, mean_b_e4 bigint, "
         "corner_tl_r int, corner_br_b int, filter_types string"
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode_png_v2(synth_png_v2(int(d))) for d in pdf["doc_id"]]
-            out = pd.DataFrame(
-                feats,
-                columns=[
-                    "width", "height", "color_type", "interlaced",
-                    "mean_r_e4", "mean_g_e4", "mean_b_e4",
-                    "corner_tl_r", "corner_br_b", "filter_types",
-                ],
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].astype("int64"))
-            yield out
-
-    return docs.mapInPandas(run, schema=schema)
+    return _per_doc(spark, sf_dir, lambda d: [decode_png_v2(synth_png_v2(d))], schema)
 
 
 # ---------------------------------------------------------------------------
@@ -2494,29 +2410,11 @@ def mm_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     streams).  Same Arrow mapInPandas scale shape as every decode stage.
 
     The codec stub now claims externals-only for mp3 alone."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
     schema = (
         "doc_id bigint, width int, height int, mean_px_e4 bigint, "
         "corner_tl bigint, corner_br bigint, n_blocks bigint"
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode_jpeg(synth_jpeg(int(d))[0]) for d in pdf["doc_id"]]
-            out = pd.DataFrame(
-                feats,
-                columns=[
-                    "width", "height", "mean_px_e4", "corner_tl", "corner_br",
-                    "n_blocks",
-                ],
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].astype("int64"))
-            yield out
-
-    return docs.mapInPandas(run, schema=schema)
+    return _per_doc(spark, sf_dir, lambda d: [decode_jpeg(synth_jpeg(d)[0])], schema)
 
 
 def synth_jpeg_restart(doc_id: int):
@@ -2597,33 +2495,14 @@ def mm_jpeg_restart_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     encodings of the same random image must decode identically
     (tests/test_jpeg_decode.py).  Same Arrow mapInPandas scale shape as
     every decode stage."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
     schema = (
         "doc_id bigint, width int, height int, mean_px_e4 bigint, "
         "corner_tl bigint, corner_br bigint, n_blocks bigint, "
         "restart_interval bigint"
     )
-
-    def run(batches):
-        for pdf in batches:
-            feats = [
-                decode_jpeg_restart(synth_jpeg_restart(int(d))[0])
-                for d in pdf["doc_id"]
-            ]
-            out = pd.DataFrame(
-                feats,
-                columns=[
-                    "width", "height", "mean_px_e4", "corner_tl", "corner_br",
-                    "n_blocks", "restart_interval",
-                ],
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].astype("int64"))
-            yield out
-
-    return docs.mapInPandas(run, schema=schema)
+    return _per_doc(
+        spark, sf_dir, lambda d: [decode_jpeg_restart(synth_jpeg_restart(d)[0])], schema
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2779,33 +2658,14 @@ def mm_jpeg_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     color-JPEG heavy, and greyscale-baseline-only was the documented
     honest limit.  Same Arrow mapInPandas scale shape as every decode
     stage."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
     schema = (
         "doc_id bigint, width int, height int, mean_rgb_e4 bigint, "
         "corner_r int, corner_g int, corner_b int, checksum bigint, "
         "n_mcus bigint"
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                decode_jpeg_color(synth_jpeg_color(int(d))[0])
-                for d in pdf["doc_id"]
-            ]
-            out = pd.DataFrame(
-                feats,
-                columns=[
-                    "width", "height", "mean_rgb_e4", "corner_r", "corner_g",
-                    "corner_b", "checksum", "n_mcus",
-                ],
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].astype("int64"))
-            yield out
-
-    return docs.mapInPandas(run, schema=schema)
+    return _per_doc(
+        spark, sf_dir, lambda d: [decode_jpeg_color(synth_jpeg_color(d)[0])], schema
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2900,32 +2760,16 @@ def mm_jpeg_progressive_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests (SOF0-in-progressive, restart intervals, bad refinement
     amplitudes, truncated scans).  Same Arrow mapInPandas scale shape
     as every decode stage."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
     schema = (
         "doc_id bigint, width int, height int, mean_px_e4 bigint, "
         "corner_tl bigint, corner_br bigint, n_blocks bigint, n_scans bigint"
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                decode_jpeg_progressive(synth_jpeg_progressive(int(d))[0])
-                for d in pdf["doc_id"]
-            ]
-            out = pd.DataFrame(
-                feats,
-                columns=[
-                    "width", "height", "mean_px_e4", "corner_tl", "corner_br",
-                    "n_blocks", "n_scans",
-                ],
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].astype("int64"))
-            yield out
-
-    return docs.mapInPandas(run, schema=schema)
+    return _per_doc(
+        spark,
+        sf_dir,
+        lambda d: [decode_jpeg_progressive(synth_jpeg_progressive(d)[0])],
+        schema,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3019,35 +2863,19 @@ def mm_jpeg_color_progressive_decode(spark: SparkSession, sf_dir: str) -> DataFr
     byte-for-byte (tests/test_jpeg_progressive.py).  ``n_scans`` pins
     the eight-scan walk.  Same Arrow mapInPandas scale shape as every
     decode stage."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
     schema = (
         "doc_id bigint, width int, height int, mean_rgb_e4 bigint, "
         "corner_r int, corner_g int, corner_b int, checksum bigint, "
         "n_mcus bigint, n_scans bigint"
     )
-
-    def run(batches):
-        for pdf in batches:
-            feats = [
-                decode_jpeg_color_progressive(
-                    synth_jpeg_color_progressive(int(d))[0]
-                )
-                for d in pdf["doc_id"]
-            ]
-            out = pd.DataFrame(
-                feats,
-                columns=[
-                    "width", "height", "mean_rgb_e4", "corner_r", "corner_g",
-                    "corner_b", "checksum", "n_mcus", "n_scans",
-                ],
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].astype("int64"))
-            yield out
-
-    return docs.mapInPandas(run, schema=schema)
+    return _per_doc(
+        spark,
+        sf_dir,
+        lambda d: [
+            decode_jpeg_color_progressive(synth_jpeg_color_progressive(d)[0])
+        ],
+        schema,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3393,29 +3221,11 @@ def mm_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one documented externals-only codec.  Same Arrow mapInPandas
     scale shape as every decode stage — embarrassingly parallel, no
     shuffle, memory = batch x payload."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
     schema = (
         "doc_id bigint, width int, height int, mean_idx_e4 bigint, "
         "checksum bigint, ycheck bigint, corner_tl int, interlaced int"
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode_gif(synth_gif(int(d))) for d in pdf["doc_id"]]
-            out = pd.DataFrame(
-                feats,
-                columns=[
-                    "width", "height", "mean_idx_e4", "checksum", "ycheck",
-                    "corner_tl", "interlaced",
-                ],
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].astype("int64"))
-            yield out
-
-    return docs.mapInPandas(run, schema=schema)
+    return _per_doc(spark, sf_dir, lambda d: [decode_gif(synth_gif(d))], schema)
 
 
 # ---------------------------------------------------------------------------
@@ -3800,30 +3610,12 @@ def mm_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     bump convention of the r9 dictionary-codec core.  Same Arrow
     mapInPandas scale shape as every decode stage — embarrassingly
     parallel, no shuffle, memory = batch × payload."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
     schema = (
         "doc_id bigint, width int, height int, mean_idx_e4 bigint, "
         "checksum bigint, ycheck bigint, corner_tl int, n_strips int, "
         "predictor int, big_endian int"
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode_tiff(synth_tiff(int(d))) for d in pdf["doc_id"]]
-            out = pd.DataFrame(
-                feats,
-                columns=[
-                    "width", "height", "mean_idx_e4", "checksum", "ycheck",
-                    "corner_tl", "n_strips", "predictor", "big_endian",
-                ],
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].astype("int64"))
-            yield out
-
-    return docs.mapInPandas(run, schema=schema)
+    return _per_doc(spark, sf_dir, lambda d: [decode_tiff(synth_tiff(d))], schema)
 
 
 # ---------------------------------------------------------------------------
@@ -4402,31 +4194,12 @@ def mm_flac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     predictors) — so the audio-codec family is now covered by a real
     decoder rather than a stub.  Same Arrow mapInPandas scale shape as
     every decode stage — embarrassingly parallel, no shuffle."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
     schema = (
         "doc_id bigint, sample_rate int, n_samples bigint, n_frames int, "
         "checksum bigint, mean_abs_e4 bigint, first_sample int, "
         "last_sample int, min_sample int, max_sample int"
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode_flac(synth_flac(int(d))) for d in pdf["doc_id"]]
-            out = pd.DataFrame(
-                feats,
-                columns=[
-                    "sample_rate", "n_samples", "n_frames", "checksum",
-                    "mean_abs_e4", "first_sample", "last_sample",
-                    "min_sample", "max_sample",
-                ],
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].astype("int64"))
-            yield out
-
-    return docs.mapInPandas(run, schema=schema)
+    return _per_doc(spark, sf_dir, lambda d: [decode_flac(synth_flac(d))], schema)
 
 
 # ---------------------------------------------------------------------------
@@ -4700,31 +4473,11 @@ def mm_decode_router(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``mapInPandas`` over doc_id only — no shuffle, embarrassingly
     parallel, identical to every decode stage; adding a codec is one
     more branch in :func:`route_media`, not another corpus pass."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
     schema = (
         "doc_id bigint, fmt string, verdict string, width int, height int, "
         "n_units bigint, feat_e4 bigint"
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [route_media(synth_media(int(d))) for d in pdf["doc_id"]]
-            out = pd.DataFrame(
-                rows,
-                columns=["fmt", "verdict", "width", "height", "n_units", "feat_e4"],
-            )
-            for col, dt in (
-                ("width", "Int32"), ("height", "Int32"),
-                ("n_units", "Int64"), ("feat_e4", "Int64"),
-            ):
-                out[col] = out[col].astype(dt)  # nullable ints for Arrow
-            out.insert(0, "doc_id", pdf["doc_id"].astype("int64"))
-            yield out
-
-    return docs.mapInPandas(run, schema=schema)
+    return _per_doc(spark, sf_dir, lambda d: [route_media(synth_media(d))], schema)
 
 
 # ---------------------------------------------------------------------------
@@ -5028,31 +4781,12 @@ def mm_mp4_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     mixes pixel/sample DECODERS, and container metadata is a different
     family.  Same Arrow mapInPandas scale shape as every mm op —
     embarrassingly parallel, no shuffle."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
     schema = (
         "doc_id bigint, n_tracks int, n_video int, n_audio int, "
         "duration_ms bigint, width int, height int, video_codec string, "
         "audio_codec string, channels int, sample_rate int, mdat_form int"
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [mp4_probe(synth_mp4(int(d))) for d in pdf["doc_id"]]
-            out = pd.DataFrame(
-                feats,
-                columns=[
-                    "n_tracks", "n_video", "n_audio", "duration_ms", "width",
-                    "height", "video_codec", "audio_codec", "channels",
-                    "sample_rate", "mdat_form",
-                ],
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].astype("int64"))
-            yield out
-
-    return docs.mapInPandas(run, schema=schema)
+    return _per_doc(spark, sf_dir, lambda d: [mp4_probe(synth_mp4(d))], schema)
 
 
 # ---------------------------------------------------------------------------
@@ -5264,31 +4998,12 @@ def mm_mp3_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel/sample decoders; container metadata is a separate family.
     Same Arrow ``mapInPandas`` scale shape as every mm op:
     embarrassingly parallel, no shuffle, no Python in any join path."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
     schema = (
         "doc_id bigint, n_frames int, sample_rate int, channel_mode string, "
         "br_min_kbps int, br_max_kbps int, cbr int, duration_ms bigint, "
         "audio_bytes bigint, id3v2 int, id3v1 int"
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [mp3_probe(synth_mp3(int(d))) for d in pdf["doc_id"]]
-            out = pd.DataFrame(
-                feats,
-                columns=[
-                    "n_frames", "sample_rate", "channel_mode", "br_min_kbps",
-                    "br_max_kbps", "cbr", "duration_ms", "audio_bytes",
-                    "id3v2", "id3v1",
-                ],
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].astype("int64"))
-            yield out
-
-    return docs.mapInPandas(run, schema=schema)
+    return _per_doc(spark, sf_dir, lambda d: [mp3_probe(synth_mp3(d))], schema)
 
 
 # ---------------------------------------------------------------------------
@@ -5568,34 +5283,14 @@ def mm_mp4_frame_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     Companion of ``mm_mp4_probe`` (container identity) — this is
     container GEOMETRY.  Same Arrow ``mapInPandas`` shape:
     embarrassingly parallel, no shuffle."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
     schema = (
         "doc_id bigint, k int, sample_idx int, byte_off bigint, "
         "n_bytes int, pts_ms bigint"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                stride = 2 + d % 3
-                for idx, off, sz, pts in mp4_frame_index(
-                    synth_mp4_indexed(d), stride
-                ):
-                    recs.append((d, idx // stride, idx, off, sz, pts))
-            out = pd.DataFrame(
-                recs,
-                columns=["doc_id", "k", "sample_idx", "byte_off", "n_bytes", "pts_ms"],
-            )
-            for col, dt in (
-                ("doc_id", "int64"), ("k", "int32"), ("sample_idx", "int32"),
-                ("byte_off", "int64"), ("n_bytes", "int32"), ("pts_ms", "int64"),
-            ):
-                out[col] = out[col].astype(dt)
-            yield out
+    def frames(d: int):
+        stride = 2 + d % 3
+        for idx, off, sz, pts in mp4_frame_index(synth_mp4_indexed(d), stride):
+            yield idx // stride, idx, off, sz, pts
 
-    return docs.mapInPandas(run, schema=schema)
+    return _per_doc(spark, sf_dir, frames, schema)

@@ -16,6 +16,7 @@ import pytest
 from dataframework_spark.operators.multimodal import (
     decode_bmp,
     decode_wav,
+    route_media,
     synth_bmp,
     synth_wav,
 )
@@ -72,6 +73,31 @@ def test_wav_rejects_odd_pcm16_data_length():
     raw[40:44] = struct.pack("<I", size - 1)
     with pytest.raises(ValueError, match="odd length"):
         decode_wav(bytes(raw))
+
+
+def _wav_with_fmt(fmt_body: bytes) -> bytes:
+    """``synth_wav(1)``'s data chunk behind a hand-built ``fmt `` chunk."""
+    data_chunk = synth_wav(1)[36:]
+    body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt_body)) + fmt_body + data_chunk
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
+@pytest.mark.parametrize(
+    "fmt_body, match",
+    [
+        # 14 bytes: the bits-per-sample field is missing
+        (struct.pack("<HHIIH", 1, 1, 8000, 16000, 2), "fmt chunk too short"),
+        (struct.pack("<HHIIHH", 1, 1, 0, 0, 2, 16), "sample_rate=0"),
+        (struct.pack("<HHIIHH", 1, 0, 8000, 16000, 2, 16), "channels=0"),
+    ],
+    ids=["short_fmt_chunk", "zero_sample_rate", "zero_channels"],
+)
+def test_wav_rejects_malformed_fmt_chunk(fmt_body, match):
+    payload = _wav_with_fmt(fmt_body)
+    with pytest.raises(ValueError, match=match):
+        decode_wav(payload)
+    with pytest.raises(ValueError, match=match):
+        route_media(payload)
 
 
 def test_wav_chunk_walk_skips_unknown_chunks():

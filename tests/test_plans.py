@@ -690,13 +690,44 @@ def test_compaction_plan_physical_layout(spark, sf_dir):
     assert "documents_compacted" in p, p
 
 
-def test_vad_no_shuffle(spark, sf_dir):
-    """VAD is embarrassingly parallel mapInPandas — zero keyed exchanges,
-    no joins; the only movement is the round-robin spread of the scan."""
-    from dataframework_spark.operators.multimodal import mm_audio_vad_segments
+# Every query built on multimodal._per_doc, with its keyed-exchange count:
+# only mm_image_dhash adds one, for its groupBy on the hash.
+_PER_DOC_QUERIES = {
+    "mm_wav_decode": 0,
+    "mm_bmp_decode": 0,
+    "mm_bmp_resize": 0,
+    "mm_image_dhash": 1,
+    "mm_audio_vad_segments": 0,
+    "mm_image_sobel": 0,
+    "mm_png_decode": 0,
+    "mm_png_resize": 0,
+    "mm_png_palette_adam7_decode": 0,
+    "mm_jpeg_decode": 0,
+    "mm_jpeg_restart_decode": 0,
+    "mm_jpeg_color_decode": 0,
+    "mm_jpeg_progressive_decode": 0,
+    "mm_jpeg_color_progressive_decode": 0,
+    "mm_gif_decode": 0,
+    "mm_tiff_decode": 0,
+    "mm_flac_decode": 0,
+    "mm_decode_router": 0,
+    "mm_mp4_probe": 0,
+    "mm_mp3_probe": 0,
+    "mm_mp4_frame_index": 0,
+}
 
-    df = mm_audio_vad_segments(spark, sf_dir)
-    assert exchange_count(df) == 0, plan_string(df, mode="simple")
+
+@pytest.mark.parametrize("name", list(_PER_DOC_QUERIES))
+def test_vad_no_shuffle(spark, sf_dir, name):
+    """Every per-doc media stage (VAD included) is embarrassingly parallel
+    mapInPandas — no keyed exchange, no joins; the only movement is the
+    round-robin spread of the scan, plus mm_image_dhash's one groupBy."""
+    from dataframework_spark.operators import multimodal
+
+    df = getattr(multimodal, name)(spark, sf_dir)
+    simple = plan_string(df, mode="simple")
+    assert exchange_count(df) == _PER_DOC_QUERIES[name], simple
+    assert "RoundRobinPartitioning" in simple, simple
     assert "Join" not in plan_string(df)
 
 

@@ -1,24 +1,20 @@
-"""Scale probe of the r9 operator wave (the per-round discipline since
-r5: every round's heaviest newcomers get a measured scale row, not an
-argument).
+"""Scale probe of ``dedup_simhash_hamming`` on the token-renamed corpus.
 
-* ``mm_decode_router`` / ``mm_gif_decode`` — embarrassingly parallel
-  Arrow mapInPandas, probed at 1000x on the cached .scratch/scale1000x
-  replica (per-doc decode, no pair expansion, duplication harmless): the
-  router runs one magic-byte dispatch + the routed parser per doc; GIF
-  runs one LZW dictionary walk + de-interlace per doc.  The claim is
-  pure linearity, the shape already measured for WAV/BMP/PNG/JPEG.
-* ``dedup_simhash_hamming`` — NOT probed on the replica (M-way exact
-  duplicates share identical 64-bit signatures, so in-band pairs grow
-  ~M² by construction — the same degeneracy that excludes the 16-bit
-  version).  Probed instead at 10x/100x on the r9 token-renamed corpus
-  (``probe_textmut_r9.build_corpus``): per-copy vocabularies are
-  disjoint so signatures re-roll per copy, the true pair set grows ~M,
-  and any cross-copy pair is a measured 2⁻⁶⁴-scale accident (vs the
-  16-bit form's measured n²/2¹⁶ birthday mass — the comparison this
-  operator exists to win).
+The operator is NOT probed on the 1000x replica: M-way exact duplicates
+share identical 64-bit signatures, so in-band pairs grow ~M² by
+construction — the same degeneracy that excludes the 16-bit version.
+It is probed instead at 1x/10x/100x on the token-renamed corpus
+(``probe_textmut_r9.build_corpus``): per-copy vocabularies are disjoint
+so signatures re-roll per copy, the true pair set grows ~M, and any
+cross-copy pair is a measured 2⁻⁶⁴-scale accident (vs the 16-bit form's
+measured n²/2¹⁶ birthday mass — the comparison this operator exists to
+win).
 
-Writes one JSON line (captured as SCALEPROBE_R9OPS_r9.json).
+Usage:  python tools/probe_r9ops_1000x.py
+Prints one JSON line: the ``dedup_simhash_hamming`` entry of
+SCALEPROBE_R9OPS_r9.json.  That file's replica rows (``mm_decode_router``,
+``mm_gif_decode``) come from
+``SPARK_GRAFT_PROBE=mm_decode_router,mm_gif_decode python tools/scale_probe.py 1000``.
 """
 
 from __future__ import annotations
@@ -37,26 +33,6 @@ from dataframework_spark.session import get_spark
 
 all_queries()  # import the operator modules so the registry is populated
 from tools.probe_textmut_r9 import OFFSET, build_corpus
-from tools.scale_probe import BASE, build_replica
-
-SCRATCH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
-)
-OUT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "SCALEPROBE_R9OPS_r9.json",
-)
-
-REPLICA_PROBE = ["mm_decode_router", "mm_gif_decode"]
-
-
-def timed(spark, name: str, sf_dir: str) -> float:
-    fn = get_spec(name).fn
-    t0 = time.perf_counter()
-    fn(spark, sf_dir).count()
-    dt = round(time.perf_counter() - t0, 3)
-    spark.catalog.clearCache()
-    return dt
 
 
 def probe_simhash64(spark, sf_dir: str) -> dict:
@@ -80,25 +56,8 @@ def probe_simhash64(spark, sf_dir: str) -> dict:
 
 
 def main() -> None:
-    m = 1000
-    rep_dir = os.path.join(SCRATCH, f"scale{m}x")
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
-    if not os.path.exists(os.path.join(rep_dir, "documents.parquet")):
-        build_replica(spark, m, rep_dir)
-    results = {}
-    timed(spark, REPLICA_PROBE[0], BASE)  # warm-up: JVM/codegen/worker pool
-    for name in REPLICA_PROBE:
-        t1 = timed(spark, name, BASE)
-        t1000 = timed(spark, name, rep_dir)
-        results[name] = {
-            "t_1x": t1,
-            "t_1000x": t1000,
-            "ratio": round(t1000 / t1, 2) if t1 > 0 else None,
-        }
-        print(f"# {name}: 1x {t1}s  1000x {t1000}s  ratio {results[name]['ratio']}",
-              file=sys.stderr)
-
     sh: dict = {"corpus": "token-renamed (probe_textmut_r9), sf0.1 base"}
     base = probe_simhash64(spark, build_corpus(1))
     sh["m1"] = base
@@ -110,13 +69,7 @@ def main() -> None:
         r["wall_ratio_vs_1x"] = round(r["wall_sec"] / base["wall_sec"], 2)
         sh[f"m{mm}"] = r
         print(f"# dedup_simhash_hamming m{mm}: {r}", file=sys.stderr)
-    results["dedup_simhash_hamming"] = sh
-
-    out = {"m": m, "results": results}
-    line = json.dumps(out)
-    print(line)
-    with open(OUT, "w") as f:
-        f.write(line + "\n")
+    print(json.dumps({"results": {"dedup_simhash_hamming": sh}}))
 
 
 if __name__ == "__main__":
