@@ -1,5 +1,9 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
 
+Usage:
+    python bench.py                      # the HEADLINE set (BENCH_ALL=1: every query)
+    python bench.py q1_pricing_summary dedup_minhash_lsh ...   # just these
+
 Runs on local[$SPARK_GRAFT_CPUS] (default: all cores) and prints ONE JSON
 line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
@@ -52,9 +56,14 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
-    spark = get_spark(app_name="dfx-bench", cpus=cpus)
     specs = all_queries()
-    names = [n for n in (specs if os.environ.get("BENCH_ALL") else HEADLINE) if n in specs]
+    names = sys.argv[1:]
+    unknown = [n for n in names if n not in specs]
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
+    if not names:
+        names = [n for n in (specs if os.environ.get("BENCH_ALL") else HEADLINE) if n in specs]
+    spark = get_spark(app_name="dfx-bench", cpus=cpus)
 
     # Warmups (untimed) so one-time initialization is not charged to the
     # first queries that happen to hit each subsystem: a trivial plan for
@@ -87,9 +96,11 @@ def main() -> None:
     for _ in range(reps):
         for name in names:
             df = specs[name].fn(spark, sf_dir)
+            spark.sparkContext.setJobDescription(f"bench:{name}")
             t0 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
             samples[name].append(round(time.perf_counter() - t0, 3))
+            spark.sparkContext.setJobDescription(None)
             # Per-query lifecycle: drop this query's cached intermediates so
             # a 200-query BENCH_ALL run doesn't accumulate every query's
             # cache in one JVM (observed heap OOM).  Untimed — cache

@@ -22,6 +22,17 @@ partitioned corpus (linear scan, embarrassingly parallel); LSH/IVF first
 restrict to one bucket/cell — i.e. a partition-pruning join key — which is
 the standard way to make ANN shuffle-free when the corpus is bucketed by
 cell id at write time.
+
+Product quantization (flat PQ and IVF-PQ) runs on one quantizer core:
+``_sq_l2`` (the squared-L2 fold), ``_assign`` (coarse cell + residual,
+rejecting NULL or wrong-size vectors), ``_codebook`` (the md5-ordered
+codeword sample), ``_sub_d2``/``_encode`` (subspace distances and their
+argmin codes) and ``_adc`` (asymmetric distance).  The IVF-PQ build
+(``_ivfpq_index``), the persisted-index serve and the frozen-quantizer
+append all call it, with ``_load_quantizer`` reading the persisted
+centroids and codebook back, so build, serve and append share one
+quantizer by construction.  The DuckDB twins share
+``_duck_ivfpq_index`` (the ``v … coded`` CTE chain) and ``_duck_adc``.
 """
 
 from __future__ import annotations
@@ -532,6 +543,98 @@ _PQ_SUBDIM = _DIM // _PQ_M
 _PQ_K = 16      # codewords per subspace
 
 
+# ---------------------------------------------------------------------------
+# The quantizer core: one helper per PQ / IVF-PQ step.  Flat PQ, the IVF-PQ
+# build, the persisted-index serve and the frozen-quantizer append all call
+# these, so build ≡ serve ≡ append holds by construction.
+# ---------------------------------------------------------------------------
+
+
+def _sq_l2(a: str, b: str) -> str:
+    """Spark SQL: squared L2 distance of two double arrays (one
+    left-to-right fold)."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)"
+
+
+def _sub_sq_l2(a: str, b: str) -> str:
+    """:func:`_sq_l2` over subspace ``m`` (a lambda variable, 0-based)."""
+    return _sq_l2(*(f"slice({x}, m * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM})" for x in (a, b)))
+
+
+def _argmin(arr: str) -> str:
+    """0-based position of the first minimum: ties go to the lower id."""
+    return f"array_position({arr}, array_min({arr})) - 1"
+
+
+def _ordered_array(*cols: str):
+    """Aggregate: the last of ``cols`` collected into one array, ordered
+    by ``cols`` (the 1-row broadcast form of centroids and codebooks)."""
+    return F.expr(
+        f"transform(array_sort(collect_list(struct({', '.join(cols)}))), s -> s.{cols[-1]})"
+    )
+
+
+def _assign(
+    vecs: DataFrame, cents_row: DataFrame, vec: str, cid: str = "cid", r: str = "r"
+) -> DataFrame:
+    """Coarse IVF assignment against the 1-row ``cents`` array: ``cs``
+    (squared L2 to every centroid, rounded 6 dp), ``cid`` (its argmin)
+    and the residual ``r`` = vec − centroid(cid).  Zero shuffle: the
+    centroids broadcast and the argmin is an in-row expression.
+
+    A NULL vector or one whose size is not {_DIM} raises here, so build,
+    serve and append never file it under a NULL cell."""
+    checked = (
+        f"if(size({vec}) <=> {_DIM}, cents, raise_error("
+        f"'IVF-PQ vectors must be non-NULL arrays of {_DIM} doubles'))"
+    )
+    return (
+        vecs.crossJoin(F.broadcast(cents_row))
+        .withColumn("cs", F.expr(f"transform({checked}, c -> round({_sq_l2(vec, 'c')}, 6))"))
+        .withColumn(cid, F.expr(_argmin("cs")).cast("int"))
+        .withColumn(r, F.expr(f"zip_with({vec}, element_at(cents, {cid} + 1), (x, y) -> x - y)"))
+    )
+
+
+def _codebook(vecs: DataFrame, vec: str) -> DataFrame:
+    """The 1-row ``cb`` codebook: ``vec`` of the {_PQ_K} rows with the
+    smallest md5(vec_id) (ties on vec_id), codeword k = array position k
+    (k-means init without the engine-specific iterations)."""
+    h = F.md5(F.col("vec_id").cast("string")).alias("h")
+    return (
+        vecs.select(h, "vec_id", vec)
+        .orderBy("h", "vec_id")
+        .limit(_PQ_K)
+        .agg(_ordered_array("h", "vec_id", vec).alias("cb"))
+    )
+
+
+def _sub_d2(vec: str, cb: str = "cb") -> str:
+    """The {_PQ_M}×{_PQ_K} matrix of subspace distances from ``vec`` to
+    every codeword of ``cb``."""
+    return (
+        f"transform(sequence(0, {_PQ_M - 1}), m -> transform({cb}, c -> {_sub_sq_l2(vec, 'c')}))"
+    )
+
+
+def _encode(vecs: DataFrame, cb_row: DataFrame, vec: str) -> DataFrame:
+    """PQ-encode ``vec`` against the broadcast 1-row ``cb``: ``codes`` is
+    the per-subspace argmin codeword ({_PQ_M} ints); ``cb`` rides along."""
+    return vecs.crossJoin(F.broadcast(cb_row)).withColumn(
+        "codes", F.expr(f"transform({_sub_d2(vec)}, ds -> cast({_argmin('ds')} as int))")
+    )
+
+
+def _adc(res: str) -> str:
+    """Asymmetric distance (ADC), rounded 6 dp: residual ``res`` against
+    the vector the row's ``codes`` reconstruct from ``cb``."""
+    cw = "element_at(cb, element_at(codes, m + 1) + 1)"
+    return (
+        f"round(aggregate(sequence(0, {_PQ_M - 1}), 0D, "
+        f"(t, m) -> t + {_sub_sq_l2(res, cw)}), 6)"
+    )
+
+
 @register(
     "sim_pq_codebook",
     oracle=f"""
@@ -581,25 +684,7 @@ def sim_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan (swap the sample for `sim_ivf_kmeans`-style Spark ML centers,
     rows-only check)."""
     emb = load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"])
-    h = F.md5(F.col("vec_id").cast("string"))
-    cb16 = (
-        emb.select(h.alias("h"), "vec_id", as_double("embedding").alias("c"))
-        .orderBy("h", "vec_id")
-        .limit(_PQ_K)
-    )
-    # one row: codewords sorted by (h, vec_id) → index k = array position
-    cbarr = cb16.agg(
-        F.expr("transform(array_sort(collect_list(struct(h, vec_id, c))), s -> s.c)").alias(
-            "cb"
-        )
-    )
-    sub_d2 = (
-        f"transform(sequence(0, {_PQ_M - 1}), m -> "
-        f"transform(cb, c -> aggregate(zip_with("
-        f"slice(e, m * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM}), "
-        f"slice(c, m * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM}), "
-        f"(x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)))"
-    )
+    cbarr = _codebook(emb.select("vec_id", as_double("embedding").alias("c")), "c")
     coded = (
         emb.select("vec_id", as_double("embedding").alias("e"))
         .crossJoin(F.broadcast(cbarr))
@@ -607,9 +692,9 @@ def sim_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             F.explode(
                 F.expr(
-                    f"transform({sub_d2}, (ds, m) -> struct("
+                    f"transform({_sub_d2('e')}, (ds, m) -> struct("
                     "m as subspace, "
-                    "cast(array_position(ds, array_min(ds)) - 1 as bigint) as code, "
+                    f"cast({_argmin('ds')} as bigint) as code, "
                     "array_min(ds) as d2))"
                 )
             ).alias("s"),
@@ -694,35 +779,9 @@ def sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries, per-query heaps via partitioned rank — the corpus never
     shuffles."""
     emb = load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"])
-    h = F.md5(F.col("vec_id").cast("string"))
-    cbarr = (
-        emb.select(h.alias("h"), "vec_id", as_double("embedding").alias("c"))
-        .orderBy("h", "vec_id")
-        .limit(_PQ_K)
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(h, vec_id, c))), s -> s.c)"
-            ).alias("cb")
-        )
-    )
-    sub_d2 = (
-        f"transform(sequence(0, {_PQ_M - 1}), m -> "
-        f"transform(cb, c -> aggregate(zip_with("
-        f"slice(e, m * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM}), "
-        f"slice(c, m * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM}), "
-        f"(x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)))"
-    )
+    cbarr = _codebook(emb.select("vec_id", as_double("embedding").alias("c")), "c")
     # corpus → (vec_id, e, codes[8]); the codebook rides along for ADC
-    coded = (
-        emb.select("vec_id", as_double("embedding").alias("e"))
-        .crossJoin(F.broadcast(cbarr))
-        .withColumn(
-            "codes",
-            F.expr(
-                f"transform({sub_d2}, ds -> cast(array_position(ds, array_min(ds)) - 1 as int))"
-            ),
-        )
-    )
+    coded = _encode(emb.select("vec_id", as_double("embedding").alias("e")), cbarr, "e")
     # r12 opt (guide §1.2 per-task work): ADC's defining trick is the
     # per-query distance LOOKUP TABLE — the {_PQ_M}×{_PQ_K} subspace
     # distances are computed ONCE per query (inside the broadcast build,
@@ -731,18 +790,11 @@ def sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LUT cell is the IDENTICAL expression the per-pair form evaluated,
     # and the outer sum keeps the identical m-order, so every distance is
     # bit-equal and the rounded ranking keys cannot move.
-    q_lut = (
-        f"transform(sequence(0, {_PQ_M - 1}), m -> "
-        f"transform(qcb, c -> aggregate(zip_with("
-        f"slice(qe, m * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM}), "
-        f"slice(c, m * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM}), "
-        f"(x, y) -> (x - y) * (x - y)), 0D, (a2, v) -> a2 + v)))"
-    )
     queries = (
         emb.where(F.col("vec_id") < _N_QUERIES)
         .select(F.col("vec_id").alias("query_id"), as_double("embedding").alias("qe"))
         .crossJoin(F.broadcast(cbarr.select(F.col("cb").alias("qcb"))))
-        .selectExpr("query_id", "qe", f"{q_lut} as lut")
+        .selectExpr("query_id", "qe", f"{_sub_d2('qe', 'qcb')} as lut")
     )
     paired = coded.join(F.broadcast(queries))
     adc_d = F.round(
@@ -752,10 +804,7 @@ def sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         6,
     )
-    exact_d = F.round(
-        F.expr("aggregate(zip_with(qe, e, (x, y) -> (x - y) * (x - y)), 0D, (a, v) -> a + v)"),
-        6,
-    )
+    exact_d = F.round(F.expr(_sq_l2("qe", "e")), 6)
     both = paired.select("query_id", "vec_id", adc_d.alias("d_adc"), exact_d.alias("d_ex"))
     w_adc = Window.partitionBy("query_id").orderBy("d_adc", "vec_id")
     w_ex = Window.partitionBy("query_id").orderBy("d_ex", "vec_id")
@@ -797,89 +846,22 @@ def _duck_subdist(r: str, c: str, m: str) -> str:
     )
 
 
-def _ivfpq_index(
-    spark: SparkSession, sf_dir: str, predicate=None, n_centroids: int = _N_CENTROIDS
-):
-    """Build the IVF-PQ index tables shared by the nprobe variants:
-    returns ``(e, centarr, assigned, coded)`` — the raw corpus, the
-    1-row broadcast centroid array, the per-vector (cell, residual)
-    assignment, and the per-vector {_PQ_M}-byte code rows carrying the
-    broadcast codebook for ADC.
-
-    ``n_centroids`` is the cells-∝-corpus production knob: registered
-    queries pin it at {_N_CENTROIDS} for oracle-checkability, but at
-    scale the cell COUNT must grow with the corpus so the cell SIZE a
-    query scans stays constant — ``tools/probe_sim_lifecycle.py``
-    measures exactly that (the FLAT fixed-batch serve claim)."""
-    emb = load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"])
-    if predicate is not None:  # train/encode on a corpus subset (the
-        emb = emb.where(predicate)  # incremental-append base snapshot)
-    e = emb.select("vec_id", as_double("embedding").alias("e"))
-    # 1-row broadcast: the n_centroids coarse centroids as an array of arrays
-    centarr = (
-        e.where(F.col("vec_id") < n_centroids)
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(vec_id, e))), s -> s.e)"
-            ).alias("cents")
-        )
+def _duck_adc(qr: str) -> str:
+    """DuckDB twin of :func:`_adc`: residual ``qr`` against coded row
+    ``c`` reconstructed from ``cbs``."""
+    return (
+        f"ROUND(list_aggregate(list_transform(generate_series(0, {_PQ_M - 1}), m ->\n"
+        f"               {_duck_subdist(qr, 'cbs[c.codes[m + 1] + 1]', 'm')}), 'sum'), 6)"
     )
-    # zero-shuffle assignment: argmin over an in-expression centroid array
-    # (vs sim_ivf_topk's join+window — no corpus exchange at all here)
-    assigned = (
-        e.crossJoin(F.broadcast(centarr))
-        .withColumn(
-            "cs",
-            F.expr(
-                "transform(cents, c -> round(aggregate(zip_with(e, c, "
-                "(x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v), 6))"
-            ),
-        )
-        .withColumn(
-            "cid", (F.expr("array_position(cs, array_min(cs))") - 1).cast("int")
-        )
-        .withColumn(
-            "r", F.expr("zip_with(e, element_at(cents, cid + 1), (x, y) -> x - y)")
-        )
-        .select("vec_id", "e", "cs", "cid", "r")
-    )
-    assigned = assigned.localCheckpoint()  # reused by codebook, codes, queries
-    cbarr = (
-        assigned.select(
-            F.md5(F.col("vec_id").cast("string")).alias("h"), "vec_id", "r"
-        )
-        .orderBy("h", "vec_id")
-        .limit(_PQ_K)
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(h, vec_id, r))), s -> s.r)"
-            ).alias("cb")
-        )
-    )
-    sub_d2 = (
-        f"transform(sequence(0, {_PQ_M - 1}), m -> "
-        f"transform(cb, c -> aggregate(zip_with("
-        f"slice(r, m * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM}), "
-        f"slice(c, m * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM}), "
-        f"(x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)))"
-    )
-    coded = (
-        assigned.crossJoin(F.broadcast(cbarr))
-        .withColumn(
-            "codes",
-            F.expr(
-                f"transform({sub_d2}, ds -> cast(array_position(ds, array_min(ds)) - 1 as int))"
-            ),
-        )
-        .select("vec_id", "cid", "codes", "cb")
-    )
-    return e, centarr, assigned, coded
 
 
-@register(
-    "sim_ivfpq_recall",
-    oracle=f"""
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+def _duck_ivfpq_index(train: str = "TRUE") -> str:
+    """DuckDB twin of :func:`_ivfpq_index`: the ``WITH v, cent, assigned,
+    res, cb, coded`` CTEs every IVF-PQ oracle starts from.  ``train`` is
+    the codebook training predicate over ``res`` (all rows, or the base
+    snapshot of an appended index); the caller appends its own CTEs and
+    final ``SELECT``."""
+    return f"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
     cent AS (SELECT list(e ORDER BY vec_id) AS cents FROM v WHERE vec_id < {_N_CENTROIDS}),
     assigned AS (
       SELECT vec_id, e, cs, list_position(cs, list_min(cs)) - 1 AS cid
@@ -896,6 +878,7 @@ def _ivfpq_index(
     cb AS (
       SELECT list(r ORDER BY h, vec_id) AS cbs
       FROM (SELECT md5(CAST(vec_id AS VARCHAR)) AS h, vec_id, r FROM res
+            WHERE {train}
             ORDER BY h, vec_id LIMIT {_PQ_K})),
     coded AS (
       SELECT vec_id, cid,
@@ -904,13 +887,53 @@ def _ivfpq_index(
                  list_transform(cbs, c -> {_duck_subdist('r', 'c', 'm')}),
                  list_min(list_transform(cbs, c -> {_duck_subdist('r', 'c', 'm')}))) - 1
              ) AS codes
-      FROM res, cb),
+      FROM res, cb)"""
+
+
+def _ivfpq_index(
+    spark: SparkSession, sf_dir: str, predicate=None, n_centroids: int = _N_CENTROIDS
+):
+    """Build the IVF-PQ index tables shared by the nprobe variants:
+    returns ``(e, centarr, assigned, coded)`` — the raw corpus, the
+    1-row broadcast centroid array, the per-vector (cell, residual)
+    assignment, and the per-vector {_PQ_M}-byte code rows carrying the
+    broadcast codebook for ADC.
+
+    Assignment (:func:`_assign`), codebook (:func:`_codebook`) and
+    encoding (:func:`_encode`) are the quantizer core the persisted-index
+    serve and append paths also call, so a built code row and a served
+    or appended one come from the same expressions.
+
+    ``n_centroids`` is the cells-∝-corpus production knob: registered
+    queries pin it at {_N_CENTROIDS} for oracle-checkability, but at
+    scale the cell COUNT must grow with the corpus so the cell SIZE a
+    query scans stays constant — ``tools/probe_sim_lifecycle.py``
+    measures exactly that (the FLAT fixed-batch serve claim)."""
+    emb = load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"])
+    if predicate is not None:  # train/encode on a corpus subset (the
+        emb = emb.where(predicate)  # incremental-append base snapshot)
+    e = emb.select("vec_id", as_double("embedding").alias("e"))
+    # 1-row broadcast: the n_centroids coarse centroids as an array of arrays
+    centarr = e.where(F.col("vec_id") < n_centroids).agg(
+        _ordered_array("vec_id", "e").alias("cents")
+    )
+    # zero-shuffle assignment (vs sim_ivf_topk's join+window)
+    assigned = _assign(e, centarr, "e").select("vec_id", "e", "cs", "cid", "r")
+    assigned = assigned.localCheckpoint()  # reused by codebook, codes, queries
+    coded = _encode(assigned, _codebook(assigned, "r"), "r").select(
+        "vec_id", "cid", "codes", "cb"
+    )
+    return e, centarr, assigned, coded
+
+
+@register(
+    "sim_ivfpq_recall",
+    oracle=f"""
+    {_duck_ivfpq_index()},
     q AS (SELECT vec_id AS query_id, cid AS qcid, r AS qr, e AS qe FROM res
           WHERE vec_id >= {_IVFPQ_Q0} AND vec_id < {_IVFPQ_Q0 + _N_QUERIES}),
     adc AS (
-      SELECT q.query_id, q.qcid AS cell, c.vec_id,
-             ROUND(list_aggregate(list_transform(generate_series(0, {_PQ_M - 1}), m ->
-               {_duck_subdist('q.qr', 'cbs[c.codes[m + 1] + 1]', 'm')}), 'sum'), 6) AS d
+      SELECT q.query_id, q.qcid AS cell, c.vec_id, {_duck_adc('q.qr')} AS d
       FROM q JOIN coded c ON c.cid = q.qcid AND c.vec_id <> q.query_id, cb),
     adc_top AS (
       SELECT query_id, cell, vec_id FROM adc
@@ -969,31 +992,18 @@ def sim_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r").alias("qr"),
         F.col("e").alias("qe"),
     )
-    adc_d = F.round(
-        F.expr(
-            f"aggregate(sequence(0, {_PQ_M - 1}), 0D, (acc, m) -> acc + "
-            f"aggregate(zip_with("
-            f"slice(qr, m * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM}), "
-            f"slice(element_at(cb, element_at(codes, m + 1) + 1), m * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM}), "
-            f"(x, y) -> (x - y) * (x - y)), 0D, (a2, v) -> a2 + v))"
-        ),
-        6,
-    )
     w_adc = Window.partitionBy("query_id").orderBy("d", "vec_id")
     adc_top = (
         coded.join(
             F.broadcast(q),
             (F.col("cid") == F.col("qcid")) & (F.col("vec_id") != F.col("query_id")),
         )
-        .select("query_id", F.col("qcid").alias("cell"), "vec_id", adc_d.alias("d"))
+        .select("query_id", F.col("qcid").alias("cell"), "vec_id", F.expr(_adc("qr")).alias("d"))
         .withColumn("rn", F.row_number().over(w_adc))
         .where(F.col("rn") <= _TOPK)
         .select(F.col("query_id").alias("aq"), "cell", F.col("vec_id").alias("an"))
     )
-    exact_d = F.round(
-        F.expr("aggregate(zip_with(qe, e, (x, y) -> (x - y) * (x - y)), 0D, (a, v) -> a + v)"),
-        6,
-    )
+    exact_d = F.round(F.expr(_sq_l2("qe", "e")), 6)
     w_ex = Window.partitionBy("query_id").orderBy("d", "vec_id")
     exact_top = (
         e.join(F.broadcast(q.select("query_id", "qe", "qcid")), F.col("vec_id") != F.col("query_id"))
@@ -1019,32 +1029,7 @@ def sim_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sim_ivfpq_nprobe2",
     oracle=f"""
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    cent AS (SELECT list(e ORDER BY vec_id) AS cents FROM v WHERE vec_id < {_N_CENTROIDS}),
-    assigned AS (
-      SELECT vec_id, e, cs, list_position(cs, list_min(cs)) - 1 AS cid
-      FROM (SELECT v.vec_id, v.e,
-                   list_transform(cents, c -> ROUND(list_aggregate(
-                     list_transform(generate_series(1, {_DIM}),
-                                    i -> (e[i] - c[i]) * (e[i] - c[i])), 'sum'), 6)) AS cs
-            FROM v, cent)),
-    res AS (
-      SELECT a.vec_id, a.cid,
-             list_transform(generate_series(1, {_DIM}),
-                            i -> a.e[i] - cents[a.cid + 1][i]) AS r
-      FROM assigned a, cent),
-    cb AS (
-      SELECT list(r ORDER BY h, vec_id) AS cbs
-      FROM (SELECT md5(CAST(vec_id AS VARCHAR)) AS h, vec_id, r FROM res
-            ORDER BY h, vec_id LIMIT {_PQ_K})),
-    coded AS (
-      SELECT vec_id, cid,
-             list_transform(generate_series(0, {_PQ_M - 1}), m ->
-               list_position(
-                 list_transform(cbs, c -> {_duck_subdist('r', 'c', 'm')}),
-                 list_min(list_transform(cbs, c -> {_duck_subdist('r', 'c', 'm')}))) - 1
-             ) AS codes
-      FROM res, cb),
+    {_duck_ivfpq_index()},
     qbase AS (
       SELECT a.vec_id AS query_id, a.e AS qe, a.cid AS cell1,
              list_position(cs2, list_min(cs2)) - 1 AS cell2
@@ -1065,9 +1050,7 @@ def sim_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                             i -> qe[i] - cents[cell2 + 1][i]) AS pr
       FROM qbase, cent),
     adc AS (
-      SELECT q.query_id, c.vec_id,
-             ROUND(list_aggregate(list_transform(generate_series(0, {_PQ_M - 1}), m ->
-               {_duck_subdist('q.pr', 'cbs[c.codes[m + 1] + 1]', 'm')}), 'sum'), 6) AS d
+      SELECT q.query_id, c.vec_id, {_duck_adc('q.pr')} AS d
       FROM q JOIN coded c ON c.cid = q.pcell AND c.vec_id <> q.query_id, cb),
     adc_top AS (
       SELECT query_id, vec_id FROM adc
@@ -1141,31 +1124,18 @@ def sim_ivfpq_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cid2").alias("pcell"), F.col("r2").alias("pr"),
         )
     )
-    adc_d = F.round(
-        F.expr(
-            f"aggregate(sequence(0, {_PQ_M - 1}), 0D, (acc, m) -> acc + "
-            f"aggregate(zip_with("
-            f"slice(pr, m * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM}), "
-            f"slice(element_at(cb, element_at(codes, m + 1) + 1), m * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM}), "
-            f"(x, y) -> (x - y) * (x - y)), 0D, (a2, v) -> a2 + v))"
-        ),
-        6,
-    )
     w_adc = Window.partitionBy("query_id").orderBy("d", "vec_id")
     adc_top = (
         coded.join(
             F.broadcast(probes),
             (F.col("cid") == F.col("pcell")) & (F.col("vec_id") != F.col("query_id")),
         )
-        .select("query_id", "vec_id", adc_d.alias("d"))
+        .select("query_id", "vec_id", F.expr(_adc("pr")).alias("d"))
         .withColumn("rn", F.row_number().over(w_adc))
         .where(F.col("rn") <= _TOPK)
         .select(F.col("query_id").alias("aq"), F.col("vec_id").alias("an"))
     )
-    exact_d = F.round(
-        F.expr("aggregate(zip_with(qe, e, (x, y) -> (x - y) * (x - y)), 0D, (a, v) -> a + v)"),
-        6,
-    )
+    exact_d = F.round(F.expr(_sq_l2("qe", "e")), 6)
     w_ex = Window.partitionBy("query_id").orderBy("d", "vec_id")
     exact_top = (
         e.join(
@@ -1296,6 +1266,17 @@ def ivfpq_index_paths(base: str) -> dict[str, str]:
     }
 
 
+def _load_quantizer(spark: SparkSession, base: str) -> tuple[DataFrame, DataFrame]:
+    """The persisted quantizer as the 1-row ``cents`` and ``cb`` frames
+    :func:`_assign` and :func:`_encode` take, in the build's order."""
+    paths = ivfpq_index_paths(base)
+    cents_row = spark.read.parquet(paths["centroids"]).agg(
+        _ordered_array("cid", "c").alias("cents")
+    )
+    cb_row = spark.read.parquet(paths["codebook"]).agg(_ordered_array("k", "cw").alias("cb"))
+    return cents_row, cb_row
+
+
 def ivfpq_persist(
     spark: SparkSession,
     sf_dir: str,
@@ -1349,12 +1330,11 @@ def ivfpq_serve(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     touch of the embeddings table is the {_N_QUERIES}-row query fetch
     (vec_id range filter, pushed to the parquet scan) — at serve time
     queries are runtime input, not index state.  Centroids and codebook
-    load as two tiny parquet reads and broadcast; the query's cell
-    assignment and residual are computed against the LOADED centroids
-    with the exact build-time arithmetic (cs rounded 6 dp, argmin with
-    id tie-break), so build and serve rank identically — the oracle
-    rebuilds the index from scratch in DuckDB and must value-hash-match
-    this served output."""
+    load as two tiny parquet reads and broadcast; the query's cell and
+    residual come from the build's own :func:`_assign` over the LOADED
+    centroids, so build and serve share one quantizer by construction —
+    the oracle rebuilds the index from scratch in DuckDB and must
+    value-hash-match this served output."""
     emb = load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"])
     qdf = emb.where(
         (F.col("vec_id") >= _IVFPQ_Q0) & (F.col("vec_id") < _IVFPQ_Q0 + _N_QUERIES)
@@ -1364,39 +1344,15 @@ def ivfpq_serve(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
 
 def ivfpq_serve_frame(spark: SparkSession, base: str, qdf: DataFrame) -> DataFrame:
     """:func:`ivfpq_serve` parameterized over the query batch: ``qdf``
-    is any (query_id, qe) frame (qe = double[{_DIM}]).  Same serve plan
-    — loaded centroids/codebook broadcast, build-time assignment
-    arithmetic, static nprobe partition pruning, manifest-style cell
-    reads; the distinct-cell bound is ``n_centroids``, not the batch
-    size, so arbitrarily large batches keep the bounded collect."""
+    is any (query_id, qe) frame (qe = double[{_DIM}]; anything else
+    raises).  Same serve plan — loaded centroids/codebook broadcast, the
+    build's :func:`_assign` and :func:`_adc`, static nprobe partition
+    pruning, manifest-style cell reads; the distinct-cell bound is
+    ``n_centroids``, not the batch size, so arbitrarily large batches
+    keep the bounded collect."""
     paths = ivfpq_index_paths(base)
-    cents_row = spark.read.parquet(paths["centroids"]).agg(
-        F.expr("transform(array_sort(collect_list(struct(cid, c))), s -> s.c)").alias(
-            "cents"
-        )
-    )
-    cb_row = spark.read.parquet(paths["codebook"]).agg(
-        F.expr("transform(array_sort(collect_list(struct(k, cw))), s -> s.cw)").alias(
-            "cb"
-        )
-    )
-    q = (
-        qdf.crossJoin(F.broadcast(cents_row))
-        .withColumn(
-            "cs",
-            F.expr(
-                "transform(cents, c -> round(aggregate(zip_with(qe, c, "
-                "(x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v), 6))"
-            ),
-        )
-        .withColumn(
-            "qcid", (F.expr("array_position(cs, array_min(cs))") - 1).cast("int")
-        )
-        .withColumn(
-            "qr", F.expr("zip_with(qe, element_at(cents, qcid + 1), (x, y) -> x - y)")
-        )
-        .select("query_id", "qcid", "qr")
-    )
+    cents_row, cb_row = _load_quantizer(spark, base)
+    q = _assign(qdf, cents_row, "qe", cid="qcid", r="qr").select("query_id", "qcid", "qr")
     # static nprobe pruning (r12, measured by the SIMLIFE probe): the
     # query batch's cells are known BEFORE the index is read, so push
     # them as a literal partition filter — the codes scan then reads
@@ -1425,23 +1381,13 @@ def ivfpq_serve_frame(spark: SparkSession, base: str, qdf: DataFrame) -> DataFra
     else:  # every probed cell is empty — serve over the (empty) pruned scan
         codes_pq = spark.read.parquet(paths["codes"])
     codes_pq = codes_pq.where(F.col("cid").isin(qcells))
-    adc_d = F.round(
-        F.expr(
-            f"aggregate(sequence(0, {_PQ_M - 1}), 0D, (acc, m) -> acc + "
-            f"aggregate(zip_with("
-            f"slice(qr, m * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM}), "
-            f"slice(element_at(cb, element_at(codes, m + 1) + 1), m * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM}), "
-            f"(x, y) -> (x - y) * (x - y)), 0D, (a2, v) -> a2 + v))"
-        ),
-        6,
-    )
     scored = (
         codes_pq.join(
             F.broadcast(q),
             (F.col("cid") == F.col("qcid")) & (F.col("vec_id") != F.col("query_id")),
         )
         .crossJoin(F.broadcast(cb_row))
-        .select("query_id", F.col("qcid").alias("cell"), "vec_id", adc_d.alias("d"))
+        .select("query_id", F.col("qcid").alias("cell"), "vec_id", F.expr(_adc("qr")).alias("d"))
     )
     w = Window.partitionBy("query_id").orderBy("d", "vec_id")
     return (
@@ -1460,38 +1406,11 @@ def ivfpq_serve_frame(spark: SparkSession, base: str, qdf: DataFrame) -> DataFra
 @register(
     "sim_ivfpq_persist_serve",
     oracle=f"""
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    cent AS (SELECT list(e ORDER BY vec_id) AS cents FROM v WHERE vec_id < {_N_CENTROIDS}),
-    assigned AS (
-      SELECT vec_id, e, cs, list_position(cs, list_min(cs)) - 1 AS cid
-      FROM (SELECT v.vec_id, v.e,
-                   list_transform(cents, c -> ROUND(list_aggregate(
-                     list_transform(generate_series(1, {_DIM}),
-                                    i -> (e[i] - c[i]) * (e[i] - c[i])), 'sum'), 6)) AS cs
-            FROM v, cent)),
-    res AS (
-      SELECT a.vec_id, a.cid,
-             list_transform(generate_series(1, {_DIM}),
-                            i -> a.e[i] - cents[a.cid + 1][i]) AS r
-      FROM assigned a, cent),
-    cb AS (
-      SELECT list(r ORDER BY h, vec_id) AS cbs
-      FROM (SELECT md5(CAST(vec_id AS VARCHAR)) AS h, vec_id, r FROM res
-            ORDER BY h, vec_id LIMIT {_PQ_K})),
-    coded AS (
-      SELECT vec_id, cid,
-             list_transform(generate_series(0, {_PQ_M - 1}), m ->
-               list_position(
-                 list_transform(cbs, c -> {_duck_subdist('r', 'c', 'm')}),
-                 list_min(list_transform(cbs, c -> {_duck_subdist('r', 'c', 'm')}))) - 1
-             ) AS codes
-      FROM res, cb),
+    {_duck_ivfpq_index()},
     q AS (SELECT vec_id AS query_id, cid AS qcid, r AS qr FROM res
           WHERE vec_id >= {_IVFPQ_Q0} AND vec_id < {_IVFPQ_Q0 + _N_QUERIES}),
     adc AS (
-      SELECT q.query_id, q.qcid AS cell, c.vec_id,
-             ROUND(list_aggregate(list_transform(generate_series(0, {_PQ_M - 1}), m ->
-               {_duck_subdist('q.qr', 'cbs[c.codes[m + 1] + 1]', 'm')}), 'sum'), 6) AS d
+      SELECT q.query_id, q.qcid AS cell, c.vec_id, {_duck_adc('q.qr')} AS d
       FROM q JOIN coded c ON c.cid = q.qcid AND c.vec_id <> q.query_id, cb)
     SELECT query_id,
            CAST(cell AS BIGINT) AS cell,
@@ -1538,9 +1457,10 @@ def ivfpq_append(spark: SparkSession, sf_dir: str, base: str, predicate) -> None
     invalidate every already-stored code), then their {_PQ_M}-byte code
     rows append into the existing cell partitions.
 
-    Because code assignment is deterministic given (centroids, codebook),
-    append-then-serve is bit-identical to rebuild-then-serve over the
-    same final corpus — the property the registered query's oracle
+    The delta is coded by the build's own :func:`_assign` and
+    :func:`_encode` over the loaded quantizer, so append-then-serve is
+    bit-identical to rebuild-then-serve over the same final corpus by
+    construction — the property the registered query's oracle
     hash-checks.  At 100 TB this is the ingest path: the daily delta
     pays one narrow assign+encode pass; the corpus already indexed is
     never touched."""
@@ -1553,96 +1473,28 @@ def ivfpq_append(spark: SparkSession, sf_dir: str, base: str, predicate) -> None
 
 def ivfpq_append_frame(spark: SparkSession, base: str, vecs: DataFrame) -> None:
     """:func:`ivfpq_append` parameterized over the delta rows: ``vecs``
-    is any (vec_id, e) frame (e = double[{_DIM}]) — the shape a
-    streaming microbatch hands over.  Same frozen-quantizer coding plan:
-    broadcast loaded centroids + codebook, build-time assignment
-    arithmetic, append into the existing cell partitions."""
-    paths = ivfpq_index_paths(base)
-    cents_row = spark.read.parquet(paths["centroids"]).agg(
-        F.expr("transform(array_sort(collect_list(struct(cid, c))), s -> s.c)").alias(
-            "cents"
-        )
+    is any (vec_id, e) frame (e = double[{_DIM}]; anything else raises
+    and appends nothing) — the shape a streaming microbatch hands over.
+    Same frozen-quantizer coding plan: broadcast loaded centroids +
+    codebook, the build's :func:`_assign` and :func:`_encode`, append
+    into the existing cell partitions."""
+    cents_row, cb_row = _load_quantizer(spark, base)
+    delta_coded = _encode(_assign(vecs, cents_row, "e"), cb_row, "r").select(
+        "vec_id", "cid", "codes"
     )
-    cb_row = spark.read.parquet(paths["codebook"]).agg(
-        F.expr("transform(array_sort(collect_list(struct(k, cw))), s -> s.cw)").alias(
-            "cb"
-        )
+    delta_coded.write.mode("append").partitionBy("cid").parquet(
+        ivfpq_index_paths(base)["codes"]
     )
-    sub_d2 = (
-        f"transform(sequence(0, {_PQ_M - 1}), m -> "
-        f"transform(cb, c -> aggregate(zip_with("
-        f"slice(r, m * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM}), "
-        f"slice(c, m * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM}), "
-        f"(x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)))"
-    )
-    delta_coded = (
-        vecs.crossJoin(F.broadcast(cents_row))
-        # build-time arithmetic exactly: cs rounded 6 dp, argmin with id
-        # tie-break, residual vs the chosen centroid
-        .withColumn(
-            "cs",
-            F.expr(
-                "transform(cents, c -> round(aggregate(zip_with(e, c, "
-                "(x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v), 6))"
-            ),
-        )
-        .withColumn(
-            "cid", (F.expr("array_position(cs, array_min(cs))") - 1).cast("int")
-        )
-        .withColumn(
-            "r", F.expr("zip_with(e, element_at(cents, cid + 1), (x, y) -> x - y)")
-        )
-        .crossJoin(F.broadcast(cb_row))
-        .withColumn(
-            "codes",
-            F.expr(
-                f"transform({sub_d2}, ds -> cast(array_position(ds, array_min(ds)) - 1 as int))"
-            ),
-        )
-        .select("vec_id", "cid", "codes")
-    )
-    delta_coded.write.mode("append").partitionBy("cid").parquet(paths["codes"])
 
 
 @register(
     "sim_ivfpq_incremental_append",
     oracle=f"""
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    cent AS (SELECT list(e ORDER BY vec_id) AS cents FROM v WHERE vec_id < {_N_CENTROIDS}),
-    assigned AS (
-      SELECT vec_id, e, cs, list_position(cs, list_min(cs)) - 1 AS cid
-      FROM (SELECT v.vec_id, v.e,
-                   list_transform(cents, c -> ROUND(list_aggregate(
-                     list_transform(generate_series(1, {_DIM}),
-                                    i -> (e[i] - c[i]) * (e[i] - c[i])), 'sum'), 6)) AS cs
-            FROM v, cent)),
-    res AS (
-      SELECT a.vec_id, a.cid,
-             list_transform(generate_series(1, {_DIM}),
-                            i -> a.e[i] - cents[a.cid + 1][i]) AS r
-      FROM assigned a, cent),
-    cb AS (
-      -- codebook trained on the BASE snapshot only (vec_id % 10 <> 9):
-      -- the delta arrives after training and must reuse the frozen
-      -- quantizer, exactly as the Spark append path does
-      SELECT list(r ORDER BY h, vec_id) AS cbs
-      FROM (SELECT md5(CAST(vec_id AS VARCHAR)) AS h, vec_id, r FROM res
-            WHERE vec_id % 10 <> 9
-            ORDER BY h, vec_id LIMIT {_PQ_K})),
-    coded AS (
-      SELECT vec_id, cid,
-             list_transform(generate_series(0, {_PQ_M - 1}), m ->
-               list_position(
-                 list_transform(cbs, c -> {_duck_subdist('r', 'c', 'm')}),
-                 list_min(list_transform(cbs, c -> {_duck_subdist('r', 'c', 'm')}))) - 1
-             ) AS codes
-      FROM res, cb),
+    {_duck_ivfpq_index(train="vec_id % 10 <> 9")},
     q AS (SELECT vec_id AS query_id, cid AS qcid, r AS qr FROM res
           WHERE vec_id >= {_IVFPQ_Q0} AND vec_id < {_IVFPQ_Q0 + _N_QUERIES}),
     adc AS (
-      SELECT q.query_id, q.qcid AS cell, c.vec_id,
-             ROUND(list_aggregate(list_transform(generate_series(0, {_PQ_M - 1}), m ->
-               {_duck_subdist('q.qr', 'cbs[c.codes[m + 1] + 1]', 'm')}), 'sum'), 6) AS d
+      SELECT q.query_id, q.qcid AS cell, c.vec_id, {_duck_adc('q.qr')} AS d
       FROM q JOIN coded c ON c.cid = q.qcid AND c.vec_id <> q.query_id, cb)
     SELECT query_id,
            CAST(cell AS BIGINT) AS cell,
@@ -1848,13 +1700,7 @@ def sim_index_serve_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.where(
         (F.col("vec_id") >= _IVFPQ_Q0) & (F.col("vec_id") < _IVFPQ_Q0 + _N_QUERIES)
     ).select(F.col("vec_id").alias("query_id"), as_double("embedding").alias("qe"))
-    exact_d = F.round(
-        F.expr(
-            "aggregate(zip_with(qe, e, (x, y) -> (x - y) * (x - y)), "
-            "0D, (a, v) -> a + v)"
-        ),
-        6,
-    )
+    exact_d = F.round(F.expr(_sq_l2("qe", "e")), 6)
     w = Window.partitionBy("query_id").orderBy("d", "vec_id")
     et = (
         emb.select("vec_id", as_double("embedding").alias("e"))

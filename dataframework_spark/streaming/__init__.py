@@ -1069,59 +1069,27 @@ def _sim_stream_split(vec_id_col):
 
 def _sim_stream_oracle() -> str:
     from dataframework_spark.operators.similarity import (
-        _DIM,
-        _IVFPQ_APPEND_ORACLE,
-        _N_CENTROIDS,
-        _PQ_K,
-        _PQ_M,
         _TOPK,
-        _duck_subdist,
+        _duck_adc,
+        _duck_ivfpq_index,
     )
 
-    # same CTE skeleton as the append oracle (full corpus coded against
-    # the base-frozen quantizer), but the ADC join gates the index rows
-    # on the ROUND: batch k sees base rows (tag -1) and batches < k only.
-    _ = _IVFPQ_APPEND_ORACLE  # provenance: structure mirrors this oracle
+    def tag(vec_id: str) -> str:  # _sim_stream_split's batch tag; base rows -1
+        return (
+            f"CASE WHEN {vec_id} % 5 = 4 AND {vec_id} >= 8 "
+            f"THEN ({vec_id} // 5) % {_SIM_STREAM_BATCHES} ELSE -1 END"
+        )
+
+    # the full corpus coded against the base-frozen quantizer; the ADC join
+    # gates the index rows on the ROUND: batch k sees tags < k, i.e. the
+    # base rows (tag -1) and batches < k only.
     return f"""
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    cent AS (SELECT list(e ORDER BY vec_id) AS cents FROM v WHERE vec_id < {_N_CENTROIDS}),
-    assigned AS MATERIALIZED (
-      SELECT vec_id, e, cs, list_position(cs, list_min(cs)) - 1 AS cid
-      FROM (SELECT v.vec_id, v.e,
-                   list_transform(cents, c -> ROUND(list_aggregate(
-                     list_transform(generate_series(1, {_DIM}),
-                                    i -> (e[i] - c[i]) * (e[i] - c[i])), 'sum'), 6)) AS cs
-            FROM v, cent)),
-    res AS MATERIALIZED (
-      SELECT a.vec_id, a.cid,
-             list_transform(generate_series(1, {_DIM}),
-                            i -> a.e[i] - cents[a.cid + 1][i]) AS r,
-             CASE WHEN a.vec_id % 5 = 4 AND a.vec_id >= 8
-                  THEN (a.vec_id // 5) % {_SIM_STREAM_BATCHES}
-                  ELSE -1 END AS tag
-      FROM assigned a, cent),
-    cb AS (
-      -- codebook trained on the BASE snapshot only: streamed vectors
-      -- arrive after training and reuse the frozen quantizer
-      SELECT list(r ORDER BY h, vec_id) AS cbs
-      FROM (SELECT md5(CAST(vec_id AS VARCHAR)) AS h, vec_id, r FROM res
-            WHERE tag = -1
-            ORDER BY h, vec_id LIMIT {_PQ_K})),
-    coded AS MATERIALIZED (
-      SELECT vec_id, cid, tag,
-             list_transform(generate_series(0, {_PQ_M - 1}), m ->
-               list_position(
-                 list_transform(cbs, c -> {_duck_subdist('r', 'c', 'm')}),
-                 list_min(list_transform(cbs, c -> {_duck_subdist('r', 'c', 'm')}))) - 1
-             ) AS codes
-      FROM res, cb),
-    q AS (SELECT tag AS batch, vec_id AS query_id, cid AS qcid, r AS qr
-          FROM res WHERE tag >= 0),
+    {_duck_ivfpq_index(train=f"{tag('vec_id')} = -1")},
+    q AS (SELECT {tag('vec_id')} AS batch, vec_id AS query_id, cid AS qcid, r AS qr
+          FROM res WHERE {tag('vec_id')} >= 0),
     adc AS (
-      SELECT q.batch, q.query_id, q.qcid AS cell, c.vec_id,
-             ROUND(list_aggregate(list_transform(generate_series(0, {_PQ_M - 1}), m ->
-               {_duck_subdist('q.qr', 'cbs[c.codes[m + 1] + 1]', 'm')}), 'sum'), 6) AS d
-      FROM q JOIN coded c ON c.cid = q.qcid AND (c.tag = -1 OR c.tag < q.batch), cb)
+      SELECT q.batch, q.query_id, q.qcid AS cell, c.vec_id, {_duck_adc('q.qr')} AS d
+      FROM q JOIN coded c ON c.cid = q.qcid AND {tag('c.vec_id')} < q.batch, cb)
     SELECT CAST(batch AS BIGINT) AS batch,
            query_id,
            CAST(cell AS BIGINT) AS cell,
