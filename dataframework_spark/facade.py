@@ -41,6 +41,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dataframework_spark.catalog import read_parquet
 from dataframework_spark.config import (
     ConfigError,
     adapt_train_item,
@@ -93,7 +94,7 @@ class PreProcessEngine:
         split it out instead of silently dropping a row
         (``preprocess.py:422`` drops unconditionally — divergence recorded
         in SURVEY.md §2.2)."""
-        df = self.spark.read.parquet(spec["path"])
+        df = read_parquet(self.spark, spec["path"])
         if spec["columns"]:
             df = df.select(*spec["columns"])
         lo, hi = spec["range"]

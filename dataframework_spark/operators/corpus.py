@@ -437,7 +437,7 @@ def _bpe_cte_chain(rounds: int, thru_final: bool = False) -> list[str]:
     return ctes
 
 
-@register("text_bpe_merges", oracle=_bpe_oracle_sql())
+@register("text_bpe_merges", eager=True, oracle=_bpe_oracle_sql())
 def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer training (Sennrich et al. 2016) as a distributed
     pipeline: learn the first {_BPE_ROUNDS} merge rules from corpus word
@@ -533,7 +533,7 @@ def _bpe_encode_oracle_sql(rounds: int = _BPE_ROUNDS) -> str:
     )
 
 
-@register("text_bpe_encode", oracle=_bpe_encode_oracle_sql())
+@register("text_bpe_encode", eager=True, oracle=_bpe_encode_oracle_sql())
 def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer fit → TRANSFORM: apply the merge table
     ``text_bpe_merges`` learns to the corpus itself, reporting per
@@ -649,7 +649,7 @@ def _bpe_mixture_oracle_sql(rounds: int = _BPE_ROUNDS) -> str:
     )
 
 
-@register("corpus_mixture_sample_bpe", oracle=_bpe_mixture_oracle_sql())
+@register("corpus_mixture_sample_bpe", eager=True, oracle=_bpe_mixture_oracle_sql())
 def corpus_mixture_sample_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``corpus_mixture_sample`` with the budget denominated in REAL
     tokenizer tokens (r10 VERDICT "Next round" #3): every pretraining

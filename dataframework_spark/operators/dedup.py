@@ -844,6 +844,7 @@ _PAIRS_SQL_CTE = f"""
 
 @register(
     "dedup_clusters",
+    eager=True,
     oracle=f"""
     WITH RECURSIVE
     {_PAIRS_SQL_CTE},
@@ -2371,6 +2372,7 @@ _LSH_AGG_SQL = """
 
 @register(
     "dedup_lsh_persist_serve",
+    eager=True,
     oracle=f"""
     WITH {_LSH_CORPUS_SQL},
     {_lsh_serve_ctes('s1', 'delta1', 'xsig', 'xbands')}
@@ -2415,6 +2417,7 @@ def dedup_lsh_persist_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_lsh_incremental_append",
+    eager=True,
     oracle=f"""
     WITH {_LSH_CORPUS_SQL},
     {_lsh_serve_ctes('s1', 'delta1', 'xsig', 'xbands')},
@@ -2549,6 +2552,7 @@ def _frames_equal(a: DataFrame, b: DataFrame) -> bool:
 
 @register(
     "dedup_lsh_index_compaction",
+    eager=True,
     oracle=f"""
     WITH {_LSH_CORPUS_SQL},
     {_lsh_serve_ctes('s1', 'delta1', 'xsig', 'xbands')},

@@ -65,7 +65,7 @@ def _duck_oracle() -> str:
     """
 
 
-@register("graph_pagerank_nations", oracle=_duck_oracle())
+@register("graph_pagerank_nations", eager=True, oracle=_duck_oracle())
 def graph_pagerank_nations(
     spark: SparkSession, sf_dir: str, checkpoint: bool = True
 ) -> DataFrame:
@@ -174,7 +174,7 @@ FROM deg d LEFT JOIN node_tri n ON n.node = d.node
 """
 
 
-@register("graph_triangle_count", oracle=_TRIANGLE_ORACLE)
+@register("graph_triangle_count", eager=True, oracle=_TRIANGLE_ORACLE)
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node triangle count + local clustering coefficient over the
     undirected nation trade graph (edge (a,b), a<b, kept when the pair's
@@ -340,7 +340,7 @@ def _lpa_oracle() -> str:
     """
 
 
-@register("graph_label_propagation", oracle=_lpa_oracle())
+@register("graph_label_propagation", eager=True, oracle=_lpa_oracle())
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection by synchronous label propagation, verified as
     a PLANTED-PARTITION recovery benchmark: the nation trade graph's
@@ -484,7 +484,7 @@ def _kcore_oracle() -> str:
     )
 
 
-@register("graph_kcore", oracle=_kcore_oracle())
+@register("graph_kcore", eager=True, oracle=_kcore_oracle())
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-core decomposition of the thresholded nation trade graph: each
     node's coreness (capped at {_KC_MAX}) — the largest k such that the
@@ -574,6 +574,7 @@ _LP_SCALE = 1_000_000_000  # Adamic-Adar summed in integer nano-units
 
 @register(
     "graph_link_prediction",
+    eager=True,
     oracle=_KC_EDGES
     + f""",
     und AS MATERIALIZED (

@@ -837,7 +837,7 @@ def _power_iteration_oracle_sql(iters: int = 8) -> str:
     )
 
 
-@register("ml_power_iteration_pc1", oracle=_power_iteration_oracle_sql())
+@register("ml_power_iteration_pc1", eager=True, oracle=_power_iteration_oracle_sql())
 def ml_power_iteration_pc1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First principal component of the embedding corpus via distributed
     power iteration (8 passes).  Upgraded rows-only → FULL value-hash in
@@ -1695,7 +1695,7 @@ def _leakage_safe_split_oracle() -> str:
     """
 
 
-@register("ml_leakage_safe_split", oracle=_leakage_safe_split_oracle())
+@register("ml_leakage_safe_split", eager=True, oracle=_leakage_safe_split_oracle())
 def ml_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-safe train/test split: every near-dup CLUSTER is assigned
     whole (hash the cluster id, not the doc id), so no document can see a

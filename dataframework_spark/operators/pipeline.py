@@ -35,6 +35,7 @@ _BPE_RE = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]"
 
 @register(
     "pipeline_pretrain_corpus",
+    eager=True,
     oracle=f"""
     WITH RECURSIVE
     {_PAIRS_SQL_CTE},

@@ -1818,6 +1818,7 @@ def profile_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sql_recursive_streaks",
+    eager=True,
     oracle="""
     WITH RECURSIVE d AS (
       SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events

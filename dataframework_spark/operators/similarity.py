@@ -303,6 +303,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sim_ivf_kmeans",
+    eager=True,
     oracle=f"""
     SELECT CAST(vec_id AS BIGINT) AS query_id,
            TRUE AS n_neighbors_ok,
@@ -928,6 +929,7 @@ def _ivfpq_index(
 
 @register(
     "sim_ivfpq_recall",
+    eager=True,
     oracle=f"""
     {_duck_ivfpq_index()},
     q AS (SELECT vec_id AS query_id, cid AS qcid, r AS qr, e AS qe FROM res
@@ -1028,6 +1030,7 @@ def sim_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sim_ivfpq_nprobe2",
+    eager=True,
     oracle=f"""
     {_duck_ivfpq_index()},
     qbase AS (
@@ -1405,6 +1408,7 @@ def ivfpq_serve_frame(spark: SparkSession, base: str, qdf: DataFrame) -> DataFra
 
 @register(
     "sim_ivfpq_persist_serve",
+    eager=True,
     oracle=f"""
     {_duck_ivfpq_index()},
     q AS (SELECT vec_id AS query_id, cid AS qcid, r AS qr FROM res
@@ -1489,6 +1493,7 @@ def ivfpq_append_frame(spark: SparkSession, base: str, vecs: DataFrame) -> None:
 
 @register(
     "sim_ivfpq_incremental_append",
+    eager=True,
     oracle=f"""
     {_duck_ivfpq_index(train="vec_id % 10 <> 9")},
     q AS (SELECT vec_id AS query_id, cid AS qcid, r AS qr FROM res
@@ -1568,6 +1573,7 @@ def ivfpq_index_compact(spark: SparkSession, base: str, compacted: str) -> None:
 
 @register(
     "sim_ivfpq_index_compaction",
+    eager=True,
     oracle=f"""
     WITH served AS ({_IVFPQ_APPEND_ORACLE})
     SELECT *,
@@ -1651,6 +1657,7 @@ def sim_ivfpq_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sim_index_serve_recall",
+    eager=True,
     oracle=f"""
     WITH served AS ({_PERSIST_SERVE_ORACLE}),
     ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),

@@ -31,18 +31,30 @@ class QuerySpec:
     fn: QueryFn
     oracle: str | None  # DuckDB SQL; None → driver does rows-only check
     doc: str = ""
+    # Builds by running jobs: iterative loops, index lifecycles, writes, and
+    # streams run to completion.  Every other builder only plans: 0 jobs
+    # once the session knows its tables' schemas (tests/test_build_jobs.py).
+    eager: bool = False
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
 
 
-def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` under ``name``."""
+def register(
+    name: str, oracle: str | None = None, eager: bool = False
+) -> Callable[[QueryFn], QueryFn]:
+    """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` under ``name``.
+
+    ``eager=True`` declares a builder that must run jobs to build its plan;
+    every other builder launches none.
+    """
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        _REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle, doc=fn.__doc__ or "")
+        _REGISTRY[name] = QuerySpec(
+            name=name, fn=fn, oracle=oracle, doc=fn.__doc__ or "", eager=eager
+        )
         return fn
 
     return deco

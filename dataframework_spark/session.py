@@ -89,10 +89,14 @@ def get_spark(
         # is validated.
         # Quieter local runs.
         "spark.ui.showConsoleProgress": "false",
-        # NOTE: spark.sql.legacy.parquet.nanosAsLong is set just-in-time by
-        # catalog._load_events / streaming._events_stream, which branch on
-        # the ts dtype actually read — the testdata has shipped both
-        # TIMESTAMP(NANOS) and TIMESTAMP(MICROS) across rounds.
+        # Read parquet TIMESTAMP(NANOS) as int64: catalog._load_events and
+        # streaming._events_stream branch on the ts dtype actually read (the
+        # testdata has shipped both NANOS and MICROS) and set this conf
+        # just-in-time on sessions the engine did not build.  Setting it at
+        # start keeps it constant: the conf is part of every cached parquet
+        # schema's key (catalog.parquet_schema), so flipping it mid-session
+        # re-resolves every table read before the flip.
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
     }
     if extra_conf:
         conf.update(extra_conf)

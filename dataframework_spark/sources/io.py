@@ -45,6 +45,7 @@ def _scratch(sf_dir: str, leaf: str) -> str:
 
 @register(
     "sink_parquet_partitioned",
+    eager=True,
     oracle="""
     SELECT lang, source,
            COUNT(*)                        AS n_docs,
@@ -77,6 +78,7 @@ def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sink_csv_roundtrip",
+    eager=True,
     oracle="""
     SELECT o_orderstatus,
            COUNT(*)                    AS n_orders,
@@ -116,6 +118,7 @@ def sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sink_json_roundtrip",
+    eager=True,
     oracle="""
     SELECT r.r_name,
            COUNT(*)  AS n_nations
@@ -150,6 +153,7 @@ _N_BUCKETS = 8
 
 @register(
     "sink_bucketed_join",
+    eager=True,
     oracle="""
     SELECT o.o_orderpriority,
            COUNT(*)                                          AS n_items,
@@ -167,7 +171,11 @@ def sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem ⋈ orders runs with **no exchange on either side** (SortMergeJoin
     over co-located buckets).  At 100 TB, for a join repeated daily, this
     converts the dominant shuffle into a one-time write cost.  Bucket
-    count would be sized ≈ data / (128 MB × executors) at scale."""
+    count would be sized ≈ data / (128 MB × executors) at scale.
+
+    Eager: the builder's two build jobs are these two bucketed writes.
+    They stay in the build because the join's plan scans the two bucketed
+    tables, and a lazy DataFrame cannot hold the writes that produce them."""
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     li_tbl, ord_tbl = f"li_bkt_{tag}", f"ord_bkt_{tag}"
     li = load_table(
@@ -210,6 +218,7 @@ def sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sink_merge_upsert",
+    eager=True,
     oracle="""
     WITH updates AS (
       SELECT o_orderkey, o_orderstatus,
@@ -264,6 +273,7 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sink_orc_roundtrip",
+    eager=True,
     oracle="""
     SELECT s_nationkey,
            COUNT(*)                  AS n_suppliers,
@@ -292,6 +302,7 @@ def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sink_text_lines",
+    eager=True,
     oracle=r"""
     SELECT COUNT(*)                                                        AS n_lines,
            CAST(SUM(length(text)) AS BIGINT)                               AS total_chars,
@@ -329,6 +340,7 @@ def sink_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "source_schema_evolution",
+    eager=True,
     oracle="""
     SELECT CASE WHEN o_orderkey % 2 = 1 THEN o_orderstatus END AS o_orderstatus,
            COUNT(*)                    AS n_orders,
@@ -369,6 +381,7 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "source_corrupt_json",
+    eager=True,
     oracle="""
     SELECT CASE WHEN doc_id % 10 = 3 THEN NULL ELSE lang END AS lang,
            COUNT(*)                                          AS n_rows,
@@ -469,7 +482,7 @@ FROM stats
 """
 
 
-@register("sink_zorder_layout", oracle=_ZORDER_ORACLE)
+@register("sink_zorder_layout", eager=True, oracle=_ZORDER_ORACLE)
 def sink_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton-curve) clustered write + a data-skipping audit that
     *measures* why the layout matters: interleave the bits of two
@@ -536,6 +549,7 @@ def sink_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sink_incremental_agg",
+    eager=True,
     # The oracle is the ONE-SHOT aggregate over the full table: a hash
     # match proves the state+delta merge algebra is lossless.
     oracle="""
@@ -622,6 +636,7 @@ _COMPACT_TARGET = 25000   # target bytes per compacted file
 
 @register(
     "sink_compaction_plan",
+    eager=True,
     oracle=f"""
     WITH files AS (
       SELECT doc_id % {_COMPACT_BATCHES} AS batch_id,
@@ -714,6 +729,7 @@ _XML_SPECIALS = " <&>\"'"
 
 @register(
     "sink_xml_roundtrip",
+    eager=True,
     oracle=f"""
     SELECT c_mktsegment,
            COUNT(*)                   AS n_customers,

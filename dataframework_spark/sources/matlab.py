@@ -316,6 +316,7 @@ def mat_to_long_df(
 
 @register(
     "source_mat_roundtrip",
+    eager=True,
     # the oracle recomputes the same per-label stats straight from parquet:
     # if the MAT container round-trip is byte-faithful, the hashes agree
     oracle="""
@@ -717,6 +718,7 @@ def read_mat73(path: str, domain: list[str] | None = None) -> dict[str, Any] | N
 
 @register(
     "source_mat73_roundtrip",
+    eager=True,
     # identical stats contract to source_mat_roundtrip: the v7.3 container
     # must round-trip the same 60-row fixture to the same per-label hashes
     oracle="""

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from dataframework_spark.catalog import table_path
+from dataframework_spark.catalog import parquet_schema, table_path
 from dataframework_spark.registry import register
 
 _sink_counter = itertools.count()
@@ -52,7 +52,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = table_path(sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     if os.path.isdir(path):
         # production-shaped table: a DIRECTORY of part files — stream it
         # directly.  (Glob-filtering the parent dir instead trips Spark's
@@ -102,6 +102,7 @@ def _run_to_table(stream_df: DataFrame, spark: SparkSession, mode: str = "comple
 
 @register(
     "stream_tumbling_counts",
+    eager=True,
     oracle="""
     SELECT date_trunc('hour', ts)      AS window_start,
            event_type,
@@ -140,6 +141,7 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_session_window",
+    eager=True,
     oracle="""
     WITH g AS (
       SELECT user_id, ts,
@@ -207,6 +209,7 @@ def _user_totals(
 
 @register(
     "stream_stateful_user_totals",
+    eager=True,
     oracle="""
     SELECT user_id, COUNT(*) AS n_events, ROUND(SUM(value), 2) AS sum_value
     FROM events GROUP BY user_id
@@ -261,6 +264,7 @@ def _split_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_multibatch_totals",
+    eager=True,
     oracle="""
     SELECT user_id, COUNT(*) AS n_events, ROUND(SUM(value), 2) AS sum_value
     FROM events GROUP BY user_id
@@ -301,6 +305,7 @@ def stream_multibatch_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_stream_join",
+    eager=True,
     oracle="""
     WITH p AS (SELECT user_id, ts AS p_ts, value FROM events WHERE event_type = 'purchase'),
          s AS (SELECT user_id, ts AS s_ts FROM events WHERE event_type = 'signup')
@@ -358,6 +363,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_dedup_watermark",
+    eager=True,
     oracle="""
     SELECT DISTINCT user_id, event_type FROM events
     """,
@@ -383,6 +389,7 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_static_join",
+    eager=True,
     oracle="""
     SELECT n_name,
            COUNT(*)             AS n_events,
@@ -419,6 +426,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_foreachbatch_sink",
+    eager=True,
     oracle="""
     SELECT user_id, COUNT(*) AS n_events, ROUND(SUM(value), 2) AS sum_value
     FROM events GROUP BY user_id
@@ -552,6 +560,7 @@ def exactly_once_merge_writer(base: str):
 
 @register(
     "stream_exactly_once_merge",
+    eager=True,
     oracle="""
     SELECT user_id, COUNT(*) AS n_events, ROUND(SUM(value), 2) AS sum_value
     FROM events GROUP BY user_id
@@ -613,6 +622,7 @@ def stream_exactly_once_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_sliding_counts",
+    eager=True,
     oracle="""
     WITH w AS (
       SELECT time_bucket(INTERVAL '10 minutes', ts)
@@ -657,6 +667,7 @@ _LATE_SLICE_DAYS = 6  # natural ingest slice width (days)
 
 @register(
     "stream_watermark_finalization",
+    eager=True,
     oracle=f"""
     WITH base AS (
       SELECT event_id, ts, CAST(ts AS DATE) AS day FROM events),
@@ -906,7 +917,7 @@ def _lsh_stream_oracle() -> str:
     """
 
 
-@register("stream_lsh_ingest", oracle=_lsh_stream_oracle())
+@register("stream_lsh_ingest", eager=True, oracle=_lsh_stream_oracle())
 def stream_lsh_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming crawl-dedup ingest: the persisted-LSH-index lifecycle
     run as a real multi-microbatch stream.  Four crawl batches are
@@ -1102,7 +1113,7 @@ def _sim_stream_oracle() -> str:
     """
 
 
-@register("stream_sim_ingest", oracle=_sim_stream_oracle())
+@register("stream_sim_ingest", eager=True, oracle=_sim_stream_oracle())
 def stream_sim_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming embedding-index ingest: the persisted-IVF-PQ lifecycle
     run as a real multi-microbatch stream, search-before-insert.  The

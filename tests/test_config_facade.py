@@ -292,19 +292,23 @@ def test_facade_train_setter_replans_cv_table(spark, sf_dir):
 
 
 def test_facade_builders_launch_no_jobs(spark, sf_dir):
-    """Lazy builders: ``generator()`` and ``get_cv_data()`` only plan —
-    the CV table is a lazy ``.cache()``, not an eager materialization.
-    Jobs are counted under a job group."""
-    eng = PreProcessEngine(
-        spark,
-        {
-            "database": {"name": "embeddings", "root": sf_dir},
-            "process": {"cv": 5, "train": 0.7, "extend": True, "center": True},
-        },
-    )
+    """Lazy builders: once the session has read the table, the engine's
+    scans, ``generator()`` and ``get_cv_data()`` only plan — the CV table
+    is a lazy ``.cache()``, not an eager materialization.  Jobs are
+    counted under a job group."""
+    from dataframework_spark.catalog import load_table
+
+    load_table(spark, sf_dir, "embeddings")  # the one warm read
     sc, group = spark.sparkContext, "dfx-lazy-facade-builders"
     sc.setJobGroup(group, "lazy builder probe")
     try:
+        eng = PreProcessEngine(
+            spark,
+            {
+                "database": {"name": "embeddings", "root": sf_dir},
+                "process": {"cv": 5, "train": 0.7, "extend": True, "center": True},
+            },
+        )
         eng.generator()
         eng.get_cv_data(0)
         eng.get_cv_data(4)

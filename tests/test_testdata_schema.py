@@ -150,3 +150,83 @@ def test_events_loader_handles_every_known_encoding(spark, tmp_path):
         )
         row = df.collect()[0]
         assert row["ts"] == base, (label, row["ts"], base)
+
+
+def test_events_loader_follows_rewrite_in_same_session(spark, tmp_path):
+    """The session's cached schema is keyed on the file listing: rewriting
+    one path from ns to µs ``ts`` must re-resolve, not reuse the int64
+    schema of the ns file."""
+    import pyarrow as pa
+
+    from dataframework_spark.catalog import _load_events
+
+    base = datetime.datetime(2024, 1, 2, 3, 4, 5, 678901)
+    micros = int(base.replace(tzinfo=datetime.timezone.utc).timestamp() * 1_000_000)
+    path = str(tmp_path / "events.parquet")
+    for unit, scale in (("ns", 1000), ("us", 1)):
+        pq.write_table(
+            pa.table(
+                {"event_id": pa.array([1], pa.int64()),
+                 "ts": pa.array([micros * scale], pa.timestamp(unit))}
+            ),
+            path,
+        )
+        df = _load_events(spark, path)
+        assert df.schema["ts"].dataType.simpleString() == "timestamp", unit
+        assert df.collect()[0]["ts"] == base, unit
+
+
+def test_schema_follows_binary_as_string(spark, tmp_path):
+    """Type-shaping confs are part of the cache key: flipping
+    ``binaryAsString`` between two reads of one file changes the schema."""
+    import pyarrow as pa
+
+    from dataframework_spark.catalog import parquet_schema
+
+    path = str(tmp_path / "blob.parquet")
+    pq.write_table(pa.table({"b": pa.array([b"x"], pa.binary())}), path)
+    conf = "spark.sql.parquet.binaryAsString"
+    before = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "false")
+        as_binary = parquet_schema(spark, path)
+        spark.conf.set(conf, "true")
+        as_string = parquet_schema(spark, path)
+    finally:
+        spark.conf.set(conf, before)
+    assert as_binary["b"].dataType.simpleString() == "binary"
+    assert as_string["b"].dataType.simpleString() == "string"
+
+
+def _read_jobs(session, path, group):
+    from dataframework_spark.catalog import read_parquet
+
+    sc = session.sparkContext
+    sc.setJobGroup(group, "schema resolution probe")
+    try:
+        read_parquet(session, path)
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_schema_resolved_once_per_session(spark, sf_dir):
+    """A warm path reads with 0 jobs; a new session resolves it again, even
+    with the same type-shaping confs."""
+    from dataframework_spark.catalog import _SCHEMA_CONFS, read_parquet
+
+    path = table_path(sf_dir, "orders")
+    read_parquet(spark, path)
+    assert _read_jobs(spark, path, "dfx-schema-warm") == []
+    fresh = spark.newSession()
+    for conf in _SCHEMA_CONFS:
+        fresh.conf.set(conf, spark.conf.get(conf))
+    assert _read_jobs(fresh, path, "dfx-schema-new-session")
+
+
+def test_missing_path_raises_spark_path_not_found(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException) as err:
+        load_table(spark, str(tmp_path), "orders")
+    assert err.value.getCondition() == "PATH_NOT_FOUND"
