@@ -453,8 +453,8 @@ def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     (count DESC, pair ASC) tie-break via a bounded 1-row collect, and
     rewrites symbol arrays with a pure higher-order fold expression
     (:func:`_bpe_merge_expr` — no UDFs).  ``localCheckpoint`` per round
-    truncates the growing lineage, the same pattern as
-    ``graph_pagerank_nations`` and ``dedup_clusters``.
+    truncates the growing lineage; unlike ``iterate.fixpoint``'s loops,
+    each round hinges on a driver-side argmax ``collect``.
 
     Output: one row per learned merge — (round, left, right, merged,
     pair_count).  Upgraded rows-only → FULL value-hash in r4: the merge

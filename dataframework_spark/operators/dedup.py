@@ -45,6 +45,7 @@ from dataframework_spark.functions.arrays import (
     tid_sql,
     tokens,
 )
+from dataframework_spark.functions.iterate import fixpoint
 from dataframework_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -842,6 +843,38 @@ _PAIRS_SQL_CTE = f"""
 """
 
 
+def connected_components(edges: DataFrame) -> DataFrame:
+    """Connected components of the undirected graph ``edges`` (``a``,
+    ``b``): one ``(node, root)`` row per node, ``root`` = the smallest node
+    id in its component.  Min-label propagation: each round every node
+    takes the smallest root among itself and its neighbours.  Roots only
+    decrease, so :func:`fixpoint`, uncapped, stops within (component
+    diameter + 1) rounds.  At 100 TB this is GraphX / GraphFrames
+    connected components, kept dependency-free."""
+    edges = edges.cache()  # read twice per round
+    nodes = (
+        edges.select(F.col("a").alias("node"))
+        .unionByName(edges.select(F.col("b").alias("node")))
+        .distinct()
+    )
+
+    def step(labels: DataFrame) -> DataFrame:
+        m1 = edges.join(labels, edges.a == labels.node).select(F.col("b").alias("node"), "root")
+        m2 = edges.join(labels, edges.b == labels.node).select(F.col("a").alias("node"), "root")
+        return (
+            labels.select("node", "root", F.col("root").alias("prev"))
+            .unionByName(m1, allowMissingColumns=True)
+            .unionByName(m2, allowMissingColumns=True)
+            .groupBy("node")
+            .agg(F.min("root").alias("root"), F.min("prev").alias("prev"))
+        )
+
+    labels = fixpoint(
+        nodes.withColumn("root", F.col("node")), step, None, changed=F.col("root") != F.col("prev")
+    )
+    return labels.select("node", "root")
+
+
 @register(
     "dedup_clusters",
     eager=True,
@@ -863,50 +896,14 @@ _PAIRS_SQL_CTE = f"""
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster resolution: connected components over the near-dup pair
-    graph (min-doc_id label propagation), the step that turns pairwise
+    graph (:func:`connected_components`), the step that turns pairwise
     matches into keep/drop decisions — pairs are NOT transitive closures
-    (A~B, B~C ⇏ A~C pairwise), so real dedup clusters need this.
-
-    Iterative DataFrame algorithm: each round, every node takes the min
-    label among itself and its neighbors; converges in O(component
-    diameter) rounds (near-dup clusters are tiny — here ≤ 3 rounds).
-    ``localCheckpoint`` cuts lineage each round — without it the plan
-    doubles per iteration and the job dies of analysis time long before
-    data size matters (THE classic iterative-Spark trap).  At 100 TB this
-    is exactly GraphX/GraphFrames connected components; the DataFrame
-    form keeps the engine dependency-free.  Keeper = cluster minimum, the
-    same rule as ``dedup_exact``."""
+    (A~B, B~C ⇏ A~C pairwise), so real dedup clusters need this.  Keeper
+    = cluster minimum, the same rule as ``dedup_exact``."""
     pairs = dedup_ngram_jaccard(spark, sf_dir)
-    edges = pairs.select(F.col("doc_a").cast("bigint"), F.col("doc_b").cast("bigint")).cache()
-    nodes = (
-        edges.select(F.col("doc_a").alias("node"))
-        .unionByName(edges.select(F.col("doc_b").alias("node")))
-        .distinct()
+    labels = connected_components(
+        pairs.select(F.col("doc_a").cast("bigint").alias("a"), F.col("doc_b").cast("bigint").alias("b"))
     )
-    labels = nodes.withColumn("root", F.col("node")).localCheckpoint()
-    for _ in range(20):  # >= any real component diameter; breaks at fixpoint
-        m1 = edges.join(labels, edges.doc_a == labels.node).select(
-            F.col("doc_b").alias("node"), "root"
-        )
-        m2 = edges.join(labels, edges.doc_b == labels.node).select(
-            F.col("doc_a").alias("node"), "root"
-        )
-        new_labels = (
-            labels.unionByName(m1)
-            .unionByName(m2)
-            .groupBy("node")
-            .agg(F.min("root").alias("root"))
-            .localCheckpoint()  # cut lineage: O(1) plan depth per round
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.root") != F.col("o.root"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
     w = Window.partitionBy("root")
     return labels.select(
         F.col("node").alias("doc_id"),

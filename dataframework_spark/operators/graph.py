@@ -4,8 +4,9 @@ connected-components sibling lives in ``operators/dedup.py``).
 
 No reference counterpart (Alrash/DataFramework has no joins at all —
 SURVEY.md §2.3); this demonstrates the iterative-algorithm pattern the
-north star needs beyond one-shot relational plans: a fixed number of
-sparse matrix-vector products expressed as join + aggregate.
+north star needs beyond one-shot relational plans: synchronous rounds
+of join + aggregate (sparse matrix-vector products, votes, peels), each
+driven by :func:`~dataframework_spark.functions.iterate.fixpoint`.
 
 Scale design (100 TB): the expensive part is EDGE AGGREGATION — the
 four-way fact join that collapses lineitem-scale data down to a
@@ -14,21 +15,65 @@ AFTER that collapse, on broadcast-sized tables, so iteration count never
 multiplies big-data shuffles.  The same shape holds for any entity graph:
 aggregate edges first, iterate on the contracted graph.  (For graphs
 whose contracted form is still huge, each iteration is one
-shuffle-on-dst join — PageRank's classic Pregel shape — and the loop
-below works unchanged; only the broadcast hints go.)
+shuffle-on-dst join — PageRank's classic Pregel shape — and the loops
+below work unchanged; only the broadcast hints go.)  Every builder starts
+from the same fact contraction, :func:`_trade_revenue`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from dataframework_spark.catalog import load_table
+from dataframework_spark.functions.iterate import fixpoint
 from dataframework_spark.registry import register
 
 _N = 25  # |nation| — fixed-size TPC-H dimension at every scale factor
 _DAMP = 0.85
 _ITERS = 3
+
+
+def _trade_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The fact contraction every graph builder starts from: lineitem ⋈
+    orders ⋈ broadcast(customer) ⋈ broadcast(supplier), one row per line
+    with its buyer nation ``c_nationkey``, seller nation ``s_nationkey``
+    and revenue ``rev``.  Callers group it into their edge list."""
+    li = load_table(spark, sf_dir, "lineitem", columns=["l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"])
+    orders = load_table(spark, sf_dir, "orders", columns=["o_orderkey", "o_custkey"])
+    cust = load_table(spark, sf_dir, "customer", columns=["c_custkey", "c_nationkey"])
+    supp = load_table(spark, sf_dir, "supplier", columns=["s_suppkey", "s_nationkey"])
+    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    return (
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
+        .select("c_nationkey", "s_nationkey", rev.alias("rev"))
+    )
+
+
+def _threshold_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The undirected cross-nation trade graph ``(a, b)``, ``a < b``, kept
+    where the pair's revenue exceeds the mean pair revenue (non-complete at
+    every scale factor); tiny, and checkpointed for callers that reread it."""
+    raw = (
+        _trade_revenue(spark, sf_dir)
+        .where(F.col("c_nationkey") != F.col("s_nationkey"))
+        .groupBy(
+            F.least("c_nationkey", "s_nationkey").alias("a"),
+            F.greatest("c_nationkey", "s_nationkey").alias("b"),
+        )
+        # Round w (and the mean below) to 2dp before the threshold compare:
+        # Spark's partial-aggregation order is nondeterministic, so an edge
+        # within float noise of the mean could otherwise flip cross-engine.
+        .agg(F.round(F.sum("rev"), 2).alias("w"))
+    )
+    raw = raw.cache()  # consumed twice: threshold + edge list (≤300 rows)
+    mean_w = raw.agg(F.round(F.avg("w"), 2).alias("mean_w"))
+    e = raw.crossJoin(F.broadcast(mean_w)).where(F.col("w") > F.col("mean_w"))
+    return e.select("a", "b").localCheckpoint()
+
 
 # One PageRank step as a DuckDB CTE pair: contribution join + dangling mass.
 _DUCK_STEP = """
@@ -65,10 +110,49 @@ def _duck_oracle() -> str:
     """
 
 
+def _pagerank_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The directed trade graph ``(src, dst, w_norm)``: customer-nation →
+    supplier-nation revenue, normalised over each source's out-edges by a
+    window over the ≤625-row adjacency.  Cached: every round reads it."""
+    raw = (
+        _trade_revenue(spark, sf_dir)
+        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
+        .agg(F.sum("rev").alias("w"))
+    )
+    w_norm = F.col("w") / F.sum("w").over(Window.partitionBy("src"))
+    return raw.select("src", "dst", w_norm.alias("w_norm")).cache()
+
+
+def _pagerank_step(e: DataFrame, r: DataFrame) -> DataFrame:
+    """One synchronous PageRank round: the rank ``r`` (node, r) of every
+    node pushed along ``e``, plus the dangling mass spread uniformly.
+    Every join broadcasts its ≤25-row side; rounded at 10 dp so chained
+    float folds cannot drift across engines."""
+    contrib = (
+        e.join(F.broadcast(r.withColumnRenamed("node", "src_node")), F.col("src") == F.col("src_node"))
+        .groupBy("dst")
+        .agg(F.sum(F.col("w_norm") * F.col("r")).alias("c"))
+    )
+    dang = (
+        r.join(e.select(F.col("src").alias("node")).distinct(), "node", "left_anti")
+        .agg(F.coalesce(F.sum("r"), F.lit(0.0)).alias("dang"))
+    )
+    return (
+        r.join(F.broadcast(contrib), r.node == contrib.dst, "left")
+        .crossJoin(F.broadcast(dang))
+        .select(
+            "node",
+            F.round(
+                0.15 / _N
+                + _DAMP * (F.coalesce(F.col("c"), F.lit(0.0)) + F.col("dang") / _N),
+                10,
+            ).alias("r"),
+        )
+    )
+
+
 @register("graph_pagerank_nations", eager=True, oracle=_duck_oracle())
-def graph_pagerank_nations(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def graph_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank (damping 0.85, 3 iterations, dangling mass
     redistributed uniformly) over the directed trade graph whose edges are
     customer-nation → supplier-nation revenue flows — "which nations'
@@ -77,63 +161,15 @@ def graph_pagerank_nations(
 
     Plan: one lineitem-scale join pipeline (dimensions broadcast) collapses
     the facts to a ≤625-row adjacency; out-edge normalization is a window
-    over that tiny table; each iteration is then a broadcast join +
-    25-row aggregate.  Intermediate ranks round at 10 dp (final at 6) so
-    three chained float folds cannot drift across engines.  Each
-    iteration ``localCheckpoint``s the 25-row rank vector: the rank is
-    consumed TWICE per round (contribution join + dangling mass), so an
-    unbroken lineage re-evaluates the previous round's subtree twice —
-    exponential plan growth, the same iterative-Spark trap
-    ``dedup_clusters`` documents."""
-    li = load_table(spark, sf_dir, "lineitem", columns=["l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"])
-    orders = load_table(spark, sf_dir, "orders", columns=["o_orderkey", "o_custkey"])
-    cust = load_table(spark, sf_dir, "customer", columns=["c_custkey", "c_nationkey"])
-    supp = load_table(spark, sf_dir, "supplier", columns=["s_suppkey", "s_nationkey"])
+    over that tiny table; each iteration (:func:`_pagerank_step`) is then a
+    broadcast join + 25-row aggregate.  Intermediate ranks round at 10 dp
+    (final at 6).  :func:`fixpoint` runs exactly ``_ITERS`` rounds with no
+    halt test — ranks never reach an exact fixpoint — and checkpoints each
+    round's rank vector, which the next round reads twice."""
+    e = _pagerank_edges(spark, sf_dir)
     nation = load_table(spark, sf_dir, "nation", columns=["n_nationkey"])
-
-    raw = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("w"))
-    )
-    from pyspark.sql.window import Window
-
-    e = raw.withColumn("w_norm", F.col("w") / F.sum("w").over(Window.partitionBy("src"))).select(
-        "src", "dst", "w_norm"
-    )
-    e = e.cache()
-    nodes = nation.select(F.col("n_nationkey").alias("node"))
-    r = nodes.select("node", (F.lit(1.0) / _N).alias("r"))
-    if checkpoint:
-        r = r.localCheckpoint()
-
-    out_srcs = e.select(F.col("src").alias("node")).distinct()
-    for _ in range(_ITERS):
-        contrib = (
-            e.join(F.broadcast(r.withColumnRenamed("node", "src_node")), F.col("src") == F.col("src_node"))
-            .groupBy("dst")
-            .agg(F.sum(F.col("w_norm") * F.col("r")).alias("c"))
-        )
-        dang = (
-            r.join(out_srcs, "node", "left_anti")
-            .agg(F.coalesce(F.sum("r"), F.lit(0.0)).alias("dang"))
-        )
-        r = (
-            nodes.join(F.broadcast(contrib), nodes.node == contrib.dst, "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "node",
-                F.round(
-                    0.15 / _N
-                    + _DAMP * (F.coalesce(F.col("c"), F.lit(0.0)) + F.col("dang") / _N),
-                    10,
-                ).alias("r"),
-            )
-        )
-        if checkpoint:  # cut lineage: rank is read twice next round
-            r = r.localCheckpoint()
+    r0 = nation.select(F.col("n_nationkey").alias("node"), (F.lit(1.0) / _N).alias("r"))
+    r = fixpoint(r0, lambda r: _pagerank_step(e, r), _ITERS)
     return r.select("node", F.round("r", 6).alias("pagerank"))
 
 
@@ -177,11 +213,9 @@ FROM deg d LEFT JOIN node_tri n ON n.node = d.node
 @register("graph_triangle_count", eager=True, oracle=_TRIANGLE_ORACLE)
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node triangle count + local clustering coefficient over the
-    undirected nation trade graph (edge (a,b), a<b, kept when the pair's
-    total cross-nation revenue exceeds the mean pair revenue — a
-    deterministic threshold that keeps the graph non-complete at every
-    scale factor).  Triangle density is the community-structure primitive
-    behind spam-graph detection and dedup-cluster audits.
+    undirected nation trade graph (:func:`_threshold_edges`).  Triangle
+    density is the community-structure primitive behind spam-graph
+    detection and dedup-cluster audits.
 
     Scale design (100 TB): identical contraction shape to
     ``graph_pagerank_nations`` above — ONE lineitem-scale join pipeline
@@ -194,33 +228,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     join out-edges only: work = Σ out-deg² ≤ m·√m) — the threshold filter
     here plays that sparsifier role.  No reference counterpart
     (Alrash/DataFramework has no joins — SURVEY.md §2.3)."""
-    li = load_table(spark, sf_dir, "lineitem", columns=["l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"])
-    orders = load_table(spark, sf_dir, "orders", columns=["o_orderkey", "o_custkey"])
-    cust = load_table(spark, sf_dir, "customer", columns=["c_custkey", "c_nationkey"])
-    supp = load_table(spark, sf_dir, "supplier", columns=["s_suppkey", "s_nationkey"])
-
-    raw = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .where(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.least("c_nationkey", "s_nationkey").alias("a"),
-            F.greatest("c_nationkey", "s_nationkey").alias("b"),
-        )
-        # Round w (and the mean below) to 2dp before the threshold compare:
-        # Spark's partial-aggregation order is nondeterministic, so an edge
-        # within float noise of the mean could otherwise flip cross-engine.
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("w"))
-    )
-    raw = raw.cache()  # consumed twice: threshold + edge list (≤300 rows)
-    mean_w = raw.agg(F.round(F.avg("w"), 2).alias("mean_w"))
-    e = (
-        raw.crossJoin(F.broadcast(mean_w))
-        .where(F.col("w") > F.col("mean_w"))
-        .select("a", "b")
-    )
-    e = e.localCheckpoint()  # tiny; read 5× below — cut the shared lineage
+    e = _threshold_edges(spark, sf_dir)  # read 5× below
 
     # Triangle enumeration a<b<c: wedge join then closing-edge join.  Both
     # sides are the contracted edge list, so broadcast keeps it shuffle-free.
@@ -357,27 +365,18 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: contract-then-iterate (the graph family's shape) — one
     lineitem-scale join pipeline collapses facts to a ≤75-edge kNN
-    list; each LPA round is a broadcast join + 25-row argmax,
-    ``localCheckpoint``-ed to keep lineage flat.  At 100 TB the
-    contraction is the whole cost; LPA never touches fact data."""
-    li = load_table(spark, sf_dir, "lineitem",
-                    columns=["l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"])
-    orders = load_table(spark, sf_dir, "orders", columns=["o_orderkey", "o_custkey"])
-    cust = load_table(spark, sf_dir, "customer", columns=["c_custkey", "c_nationkey"])
-    supp = load_table(spark, sf_dir, "supplier", columns=["s_suppkey", "s_nationkey"])
+    list; each LPA round is a broadcast join + 25-row argmax.
+    :func:`fixpoint` checkpoints every round and stops early at the
+    first round that moves no label (later rounds would be the
+    identity), capped at ``_LPA_ITERS`` as the oracle's unrolled chain
+    is.  At 100 TB the contraction is the whole cost; LPA never touches
+    fact data."""
     nation = load_table(spark, sf_dir, "nation", columns=["n_nationkey"])
-
     raw = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
+        _trade_revenue(spark, sf_dir)
         .where(F.col("c_nationkey") != F.col("s_nationkey"))
         .groupBy(F.col("c_nationkey").alias("a"), F.col("s_nationkey").alias("b"))
-        .agg(
-            (F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2) * 100)
-            .cast("bigint")
-            .alias("wc")
-        )
+        .agg((F.round(F.sum("rev"), 2) * 100).cast("bigint").alias("wc"))
     )
     bonus = F.when(
         F.col("a") % _LPA_GROUPS == F.col("b") % _LPA_GROUPS, F.lit(_LPA_BONUS)
@@ -389,16 +388,11 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg((F.sum("wc") + F.first(bonus)).alias("wc"))
         .select(F.col("a").alias("src"), F.col("b").alias("dst"), "wc")
     )
-    from pyspark.sql.window import Window as W
-
-    rk = F.row_number().over(W.partitionBy("src").orderBy(F.col("wc").desc(), "dst"))
+    rk = F.row_number().over(Window.partitionBy("src").orderBy(F.col("wc").desc(), "dst"))
     e = sym.withColumn("rk", rk).where(F.col("rk") <= _LPA_TOPK).drop("rk")
     e = e.cache()
 
-    labels = nation.select(
-        F.col("n_nationkey").alias("node"), F.col("n_nationkey").alias("lab")
-    ).localCheckpoint()
-    for _ in range(_LPA_ITERS):
+    def vote(labels: DataFrame) -> DataFrame:
         votes = (
             e.join(
                 F.broadcast(labels.select(F.col("node").alias("dst_node"), F.col("lab").alias("nlab"))),
@@ -407,15 +401,15 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("src").alias("vnode"), F.col("nlab"))
             .agg(F.sum("wc").alias("s"))
         )
-        win = W.partitionBy("vnode").orderBy(F.col("s").desc(), F.col("nlab"))
+        win = Window.partitionBy("vnode").orderBy(F.col("s").desc(), F.col("nlab"))
         best = votes.withColumn("vr", F.row_number().over(win)).where(F.col("vr") == 1)
-        labels = (
-            labels.join(F.broadcast(best.select("vnode", "nlab")),
-                        labels.node == F.col("vnode"), "left")
-            .select("node", F.coalesce("nlab", "lab").alias("lab"))
-            .localCheckpoint()  # labels read again next round; keep lineage flat
-        )
-    cw = W.partitionBy("lab")
+        return labels.join(
+            F.broadcast(best.select("vnode", "nlab")), labels.node == F.col("vnode"), "left"
+        ).select("node", F.coalesce("nlab", "lab").alias("lab"), F.col("lab").alias("prev"))
+
+    labels0 = nation.select(F.col("n_nationkey").alias("node"), F.col("n_nationkey").alias("lab"))
+    labels = fixpoint(labels0, vote, _LPA_ITERS, changed=F.col("lab") != F.col("prev"))
+    cw = Window.partitionBy("lab")
     return labels.select(
         "node",
         F.col("lab").cast("bigint").alias("community"),
@@ -434,7 +428,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _KC_MAX = 6     # coreness capped here (graph has <= 24 degrees anyway)
-_KC_ROUNDS = 4  # unrolled peel rounds per k; fixpoint asserted in tests
+_KC_ROUNDS = 4  # peel-round cap per k; the oracle unrolls this many
 
 _KC_EDGES = """
 WITH raw AS MATERIALIZED (
@@ -492,10 +486,11 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the standard "how deep in the dense region" measure behind
     community cores, spam-ring peeling, and graph-degeneracy orderings —
     the structure triangles (local) and label propagation (partition)
-    don't expose.  Peeling for each k in 2..{_KC_MAX} runs {_KC_ROUNDS}
-    synchronous rounds (fixpoint is reached earlier on this graph and
-    asserted in tests); the oracle unrolls the identical rounds into a
-    static CTE chain (the LPA/BPE discipline).
+    don't expose.  Peeling for each k in 2..{_KC_MAX} runs :func:`fixpoint`
+    rounds over every node with an ``alive`` flag until a round drops no
+    node (the identity), capped at {_KC_ROUNDS} rounds as the oracle's
+    unrolled CTE chain is (the LPA/BPE discipline); a test checks the cap
+    against exact uncapped peeling.
 
     Scale design (100 TB): the contract-then-iterate shape of the whole
     graph family — ONE broadcast-dimension fact join collapses lineitem
@@ -505,33 +500,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     contracted form is still large, each round is the same semi-join
     keyed on node — the classic distributed peeling sweep — and the
     round count is bounded by the degeneracy, not |V|."""
-    li = load_table(
-        spark, sf_dir, "lineitem",
-        columns=["l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"],
-    )
-    orders = load_table(spark, sf_dir, "orders", columns=["o_orderkey", "o_custkey"])
-    cust = load_table(spark, sf_dir, "customer", columns=["c_custkey", "c_nationkey"])
-    supp = load_table(spark, sf_dir, "supplier", columns=["s_suppkey", "s_nationkey"])
-
-    raw = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .where(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.least("c_nationkey", "s_nationkey").alias("a"),
-            F.greatest("c_nationkey", "s_nationkey").alias("b"),
-        )
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("w"))
-    )
-    raw = raw.cache()
-    mean_w = raw.agg(F.round(F.avg("w"), 2).alias("mean_w"))
-    e = (
-        raw.crossJoin(F.broadcast(mean_w))
-        .where(F.col("w") > F.col("mean_w"))
-        .select("a", "b")
-        .localCheckpoint()  # tiny; read in every peel round
-    )
+    e = _threshold_edges(spark, sf_dir)  # read in every peel round
     deg = (
         e.select(F.col("a").alias("node"))
         .unionAll(e.select(F.col("b").alias("node")))
@@ -540,23 +509,28 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
 
+    def peel(s: DataFrame, k: int) -> DataFrame:
+        # One synchronous round: every alive node counts its alive
+        # neighbours and drops out below k; ``dropped`` marks this round's.
+        live = s.where("alive").select("node")
+        ealive = e.join(F.broadcast(live.withColumnRenamed("node", "a")), "a", "leftsemi").join(
+            F.broadcast(live.withColumnRenamed("node", "b")), "b", "leftsemi"
+        )
+        ends = ealive.select(F.col("a").alias("node")).unionAll(ealive.select(F.col("b").alias("node")))
+        d = (
+            s.select("node", F.lit(0).alias("d"), "alive")
+            .unionByName(ends.select("node", F.lit(1).alias("d")), allowMissingColumns=True)
+            .groupBy("node")
+            .agg(F.sum("d").alias("d"), F.max("alive").alias("was"))
+        )
+        was, keep = F.col("was"), F.col("d") >= k
+        return d.select("node", (was & keep).alias("alive"), (was & ~keep).alias("dropped"))
+
     marks = deg.select("node", F.lit(1).alias("kk"))
     for k in range(2, _KC_MAX + 1):
-        alive = deg.select("node")
-        for _ in range(_KC_ROUNDS):
-            ealive = e.join(
-                F.broadcast(alive.withColumnRenamed("node", "a")), "a", "leftsemi"
-            ).join(F.broadcast(alive.withColumnRenamed("node", "b")), "b", "leftsemi")
-            alive = (
-                ealive.select(F.col("a").alias("node"))
-                .unionAll(ealive.select(F.col("b").alias("node")))
-                .groupBy("node")
-                .agg(F.count(F.lit(1)).alias("d"))
-                .where(F.col("d") >= k)
-                .select("node")
-                .localCheckpoint()  # contracted graph; cut 4-round lineage
-            )
-        marks = marks.unionAll(alive.select("node", F.lit(k).alias("kk")))
+        everyone = deg.select("node", F.lit(True).alias("alive"))
+        peeled = fixpoint(everyone, lambda s: peel(s, k), _KC_ROUNDS, changed=F.col("dropped"))
+        marks = marks.unionAll(peeled.where("alive").select("node", F.lit(k).alias("kk")))
     cor = marks.groupBy("node").agg(F.max("kk").cast("bigint").alias("coreness"))
     return deg.join(F.broadcast(cor), "node").select("node", "degree", "coreness")
 
@@ -623,33 +597,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     large, the wedge join keyed on the shared neighbor IS the standard
     distributed form, with the same degree-orientation bound as the
     triangle op; the threshold filter plays the sparsifier."""
-    li = load_table(
-        spark, sf_dir, "lineitem",
-        columns=["l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"],
-    )
-    orders = load_table(spark, sf_dir, "orders", columns=["o_orderkey", "o_custkey"])
-    cust = load_table(spark, sf_dir, "customer", columns=["c_custkey", "c_nationkey"])
-    supp = load_table(spark, sf_dir, "supplier", columns=["s_suppkey", "s_nationkey"])
-
-    raw = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .where(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.least("c_nationkey", "s_nationkey").alias("a"),
-            F.greatest("c_nationkey", "s_nationkey").alias("b"),
-        )
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("w"))
-    )
-    raw = raw.cache()
-    mean_w = raw.agg(F.round(F.avg("w"), 2).alias("mean_w"))
-    e = (
-        raw.crossJoin(F.broadcast(mean_w))
-        .where(F.col("w") > F.col("mean_w"))
-        .select("a", "b")
-        .localCheckpoint()  # tiny; read by und, deg, and the anti-join
-    )
+    e = _threshold_edges(spark, sf_dir)  # read by und, deg, and the anti-join
     und = e.select(F.col("a").alias("x"), F.col("b").alias("n")).unionAll(
         e.select(F.col("b").alias("x"), F.col("a").alias("n"))
     )

@@ -1854,8 +1854,8 @@ def sql_recursive_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     query is the *capability* face; for per-key runs over big data the
     production form is the gap-and-islands window (``day − row_number()``
     constant per island, one shuffle, zero iterations), and for
-    data-unbounded recursion (transitive closure) the ``dedup_clusters``
-    loop with ``localCheckpoint`` is the scale-hardened form."""
+    data-unbounded recursion (transitive closure) the ``fixpoint`` loop
+    of ``dedup.connected_components`` is the scale-hardened form."""
     ev = load_table(spark, sf_dir, "events", columns=["user_id", "ts"])
     # Spark's recursion ROW limit (default 1e6, a runaway-recursion valve)
     # counts rows accumulated across ALL levels; this recursion is

@@ -250,13 +250,21 @@ def test_logreg_gradient_exchange_is_dim_sized(spark, sf_dir):
 
 def test_pagerank_iterations_broadcast(spark, sf_dir):
     # the fact join may shuffle; the 25-node iteration tables must not.
-    # checkpoint=False keeps the full lineage visible (the production
-    # path localCheckpoints each round, which truncates the plan).
-    from dataframework_spark.operators.graph import graph_pagerank_nations
+    # One round over checkpointed edges and ranks (what every round of
+    # the production loop sees): its joins all broadcast, none shuffles.
+    from pyspark.sql import functions as F
 
-    df = graph_pagerank_nations(spark, sf_dir, checkpoint=False)
-    p = plan_string(df)
-    assert p.count("BroadcastHashJoin") >= 5, p
+    from dataframework_spark.catalog import load_table
+    from dataframework_spark.operators.graph import _N, _pagerank_edges, _pagerank_step
+
+    e = _pagerank_edges(spark, sf_dir).localCheckpoint()
+    nation = load_table(spark, sf_dir, "nation", columns=["n_nationkey"])
+    r = nation.select(F.col("n_nationkey").alias("node"), F.lit(1.0 / _N).alias("r")).localCheckpoint()
+    p = plan_string(_pagerank_step(e, r))
+    assert "SortMergeJoin" not in p and "ShuffledHashJoin" not in p, p
+    # formatted output lists each join twice: contribution, dangling
+    # anti join and the node ⋈ contribution left join
+    assert p.count("BroadcastHashJoin") >= 2 * 3, p
 
 
 def test_q16_anti_join_broadcasts_exclusion(spark, sf_dir):
@@ -970,11 +978,12 @@ def test_random_projection_jl_contract(spark, sf_dir):
 
 
 def test_kcore_matches_exact_python_peeling(spark, sf_dir):
-    """graph_kcore's 4-round unrolled peel must agree with an EXACT
-    independent reimplementation: collect the contracted edge list (tiny
-    by construction) and run textbook peeling to convergence in plain
-    Python, capping at _KC_MAX — any node where the unrolled rounds
-    stopped short of the fixpoint shows up as a coreness mismatch."""
+    """graph_kcore's peel (at most _KC_ROUNDS rounds per k) must agree
+    with an EXACT independent reimplementation: collect the contracted
+    edge list (tiny by construction) and run textbook peeling to
+    convergence in plain Python, capping at _KC_MAX — any node where the
+    capped rounds stopped short of the fixpoint shows up as a coreness
+    mismatch."""
     from dataframework_spark.operators.graph import _KC_MAX, graph_kcore
     from pyspark.sql import functions as F
 
