@@ -47,6 +47,7 @@ from dataframework_spark.functions.arrays import (
 )
 from dataframework_spark.functions.iterate import fixpoint
 from dataframework_spark.registry import register
+from dataframework_spark.sources import index_store
 
 # ---------------------------------------------------------------------------
 # D1 — exact dedup (hash groupBy on normalized text)
@@ -1361,7 +1362,7 @@ def dedup_url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (doc_id % 5 of the base) and double-fetches inside the batch
 # (doc_id % 3 of the fresh docs), each under a new ingest doc_id.
 _INC_SEED = 17
-_INC_BUCKET_DUCK = (
+INC_BUCKET_DUCK = (
     f"CAST('0x' || substr(md5('{_INC_SEED}:' || CAST(doc_id AS VARCHAR)), 1, 15)"
     " AS BIGINT) % 10"
 )
@@ -1375,7 +1376,7 @@ _INC_FP_DUCK = r"md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))"
 @register(
     "dedup_incremental_batch",
     oracle=f"""
-    WITH b AS (SELECT doc_id, text, {_INC_BUCKET_DUCK} AS b FROM documents),
+    WITH b AS (SELECT doc_id, text, {INC_BUCKET_DUCK} AS b FROM documents),
     base AS (SELECT doc_id, text FROM b WHERE b < 8),
     fresh AS (SELECT doc_id, text FROM b WHERE b >= 8),
     delta AS (
@@ -1893,7 +1894,8 @@ def dedup_contamination_severity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # without ever rescanning the corpus (the reference's whole-corpus
 # reload per run, ``DFW/preprocess.py:390-407``, is exactly what does
 # not scale).  The persisted index mirrors ``sim_ivfpq_persist_serve``
-# (similarity.py): two parquet tables under one base path —
+# (similarity.py): two parquet tables under one base path, declared in
+# ``LSH_LAYOUT`` and read/written through ``sources/index_store.py`` —
 #
 #   sigs/   doc_id, h0..h15          (16 × 8 B per doc — the index,
 #                                     ~1e-4 of corpus bytes at 100 TB)
@@ -1910,9 +1912,10 @@ def dedup_contamination_severity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LSH_MATCH = 12  # of _MH_K = 16 signature components
 
-
-def lsh_index_paths(base: str) -> dict[str, str]:
-    return {"sigs": base + "/sigs", "bands": base + "/bands"}
+LSH_LAYOUT: index_store.Layout = {
+    "sigs": ("doc_id bigint, " + ", ".join(f"h{i} bigint" for i in range(_MH_K)), None),
+    "bands": ("doc_id bigint, bk string, band int", "band"),
+}
 
 
 def minhash_signature_frame(docs: DataFrame, with_xh: bool = False) -> DataFrame:
@@ -1966,15 +1969,15 @@ def _lsh_band_frame(sig: DataFrame) -> DataFrame:
     return bands
 
 
+def _lsh_index_write(sig: DataFrame, base: str, mode: str) -> None:
+    index_store.write(sig, LSH_LAYOUT, base, "sigs", mode)
+    index_store.write(_lsh_band_frame(sig), LSH_LAYOUT, base, "bands", mode)
+
+
 def lsh_index_build(spark: SparkSession, docs: DataFrame, base: str) -> None:
     """One corpus pass → persisted signature + band tables (overwrite)."""
-    paths = lsh_index_paths(base)
-    sig = minhash_signature_frame(docs)
-    sig.cache()
-    sig.write.mode("overwrite").parquet(paths["sigs"])
-    _lsh_band_frame(sig).write.mode("overwrite").partitionBy("band").parquet(
-        paths["bands"]
-    )
+    sig = minhash_signature_frame(docs).cache()
+    _lsh_index_write(sig, base, "overwrite")
     sig.unpersist()
 
 
@@ -1984,11 +1987,7 @@ def lsh_index_append(spark: SparkSession, sigs: DataFrame, base: str) -> None:
     MinHash signatures are permutation-frozen by construction, so
     append-then-serve ≡ rebuild-then-serve (the property
     ``dedup_lsh_incremental_append``'s oracle value-hashes)."""
-    paths = lsh_index_paths(base)
-    sigs.write.mode("append").parquet(paths["sigs"])
-    _lsh_band_frame(sigs).write.mode("append").partitionBy("band").parquet(
-        paths["bands"]
-    )
+    _lsh_index_write(sigs, base, "append")
 
 
 _LSH_PAIR_EXPR = (
@@ -2065,9 +2064,8 @@ def lsh_serve(
     joins on (xdoc, src) so a delta doc id colliding with an index id
     can never cross-wire signatures; the final per-doc flag set is
     batch-bounded and broadcast."""
-    paths = lsh_index_paths(base)
-    xsig = spark.read.parquet(paths["sigs"])
-    xbands = spark.read.parquet(paths["bands"])
+    xsig = index_store.read(spark, LSH_LAYOUT, base, "sigs")
+    xbands = index_store.read(spark, LSH_LAYOUT, base, "bands")
     # exact pre-collapse: signatures + xh are computed in ONE map pass
     # over the whole batch (signature cost on exact copies is wasted but
     # linear and exchange-free); the collapse itself is a window-min
@@ -2189,7 +2187,7 @@ def _lsh_verdict_agg(v: DataFrame) -> DataFrame:
     )
 
 
-def _lsh_corpus_split(spark: SparkSession, sf_dir: str):
+def lsh_corpus_split(spark: SparkSession, sf_dir: str):
     """Returns ``(base, f1, f2, cached)`` — the last element is the
     cached bucket frame the first three derive from; callers own its
     ``unpersist()`` once their lifecycle run is materialized (the
@@ -2263,7 +2261,7 @@ def _lsh_delta2(base: DataFrame, f2: DataFrame, new1: DataFrame) -> DataFrame:
     )
 
 
-def _lsh_sig_sql(src: str) -> str:
+def lsh_sig_sql(src: str) -> str:
     return (
         f"SELECT doc_id, {_mh_exprs_duck()} FROM ("
         f"SELECT doc_id, {duck_tid_sql('shingle', _MH_P)} AS tid FROM ("
@@ -2272,7 +2270,7 @@ def _lsh_sig_sql(src: str) -> str:
     )
 
 
-def _lsh_bands_sql(sig: str) -> str:
+def lsh_bands_sql(sig: str) -> str:
     return " UNION ALL ".join(
         f"SELECT doc_id, {band} AS bk, {i} AS band FROM {sig}"
         for i, band in enumerate(_band_cols())
@@ -2286,7 +2284,7 @@ def _lsh_match_sql(a: str, b: str) -> str:
     return f"({s}) >= {_LSH_MATCH}"
 
 
-def _lsh_serve_ctes(p: str, src: str, xsig: str, xbands: str) -> str:
+def lsh_serve_ctes(p: str, src: str, xsig: str, xbands: str) -> str:
     """CTE chain ending in ``{p}_v (doc_id, verdict)`` — the DuckDB twin
     of :func:`lsh_serve` in full: exact ``md5(text)`` pre-collapse
     (keeper = min doc_id; other members decided ``dup_in_delta`` by
@@ -2303,8 +2301,8 @@ def _lsh_serve_ctes(p: str, src: str, xsig: str, xbands: str) -> str:
     {p}_reps AS (
       SELECT d.doc_id, d.text FROM {p}_d d
       JOIN {p}_k k ON k.xh = d.xh AND k.kid = d.doc_id),
-    {p}_sig AS ({_lsh_sig_sql(f'{p}_reps')}),
-    {p}_bands AS ({_lsh_bands_sql(f'{p}_sig')}),
+    {p}_sig AS ({lsh_sig_sql(f'{p}_reps')}),
+    {p}_bands AS ({lsh_bands_sql(f'{p}_sig')}),
     {p}_cand AS (
       SELECT DISTINCT d.doc_id AS ddoc, x.doc_id AS xdoc
       FROM {p}_bands d JOIN {xbands} x ON d.band = x.band AND d.bk = x.bk),
@@ -2345,7 +2343,7 @@ def _lsh_serve_ctes(p: str, src: str, xsig: str, xbands: str) -> str:
 
 
 _LSH_CORPUS_SQL = f"""
-    b AS (SELECT doc_id, text, {_INC_BUCKET_DUCK} AS b FROM documents),
+    b AS (SELECT doc_id, text, {INC_BUCKET_DUCK} AS b FROM documents),
     base AS (SELECT doc_id, text FROM b WHERE b < 8),
     f1 AS (SELECT doc_id, text FROM b WHERE b = 8),
     f2 AS (SELECT doc_id, text FROM b WHERE b = 9),
@@ -2355,8 +2353,8 @@ _LSH_CORPUS_SQL = f"""
       UNION ALL SELECT doc_id + 2000000, text || ' zzrecrawl' FROM base
         WHERE doc_id % 11 = 0
       UNION ALL SELECT doc_id + 3000000, text FROM f1 WHERE doc_id % 3 = 0),
-    xsig AS ({_lsh_sig_sql('base')}),
-    xbands AS ({_lsh_bands_sql('xsig')})"""
+    xsig AS ({lsh_sig_sql('base')}),
+    xbands AS ({lsh_bands_sql('xsig')})"""
 
 _LSH_AGG_SQL = """
     SELECT verdict,
@@ -2372,7 +2370,7 @@ _LSH_AGG_SQL = """
     eager=True,
     oracle=f"""
     WITH {_LSH_CORPUS_SQL},
-    {_lsh_serve_ctes('s1', 'delta1', 'xsig', 'xbands')}
+    {lsh_serve_ctes('s1', 'delta1', 'xsig', 'xbands')}
     {_LSH_AGG_SQL.format(v='s1_v')}
     """,
 )
@@ -2401,7 +2399,7 @@ def dedup_lsh_persist_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     honest serve wall is inside the call, reported in round notes."""
     from dataframework_spark.sources.io import _scratch
 
-    base_docs, f1, _, corpus_cache = _lsh_corpus_split(spark, sf_dir)
+    base_docs, f1, _, corpus_cache = lsh_corpus_split(spark, sf_dir)
     path = _scratch(sf_dir, "lsh_index")
     lsh_index_build(spark, base_docs, path)
     verdicts, _, dcache = lsh_serve(spark, path, _lsh_delta1(base_docs, f1))
@@ -2409,7 +2407,7 @@ def dedup_lsh_persist_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdicts.write.mode("overwrite").parquet(results)
     dcache.unpersist()
     corpus_cache.unpersist()
-    return _lsh_verdict_agg(spark.read.parquet(results))
+    return _lsh_verdict_agg(spark.read.schema(verdicts.schema).parquet(results))
 
 
 @register(
@@ -2417,21 +2415,21 @@ def dedup_lsh_persist_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     eager=True,
     oracle=f"""
     WITH {_LSH_CORPUS_SQL},
-    {_lsh_serve_ctes('s1', 'delta1', 'xsig', 'xbands')},
+    {lsh_serve_ctes('s1', 'delta1', 'xsig', 'xbands')},
     new1 AS (
       SELECT d.doc_id, d.text FROM delta1 d
       JOIN s1_v v ON v.doc_id = d.doc_id WHERE v.verdict = 'new'),
     xsig2 AS (
       SELECT * FROM xsig
       UNION ALL SELECT s.* FROM s1_sig s JOIN new1 n ON n.doc_id = s.doc_id),
-    xbands2 AS ({_lsh_bands_sql('xsig2')}),
+    xbands2 AS ({lsh_bands_sql('xsig2')}),
     delta2 AS (
       SELECT doc_id, text FROM f2
       UNION ALL SELECT doc_id + 4000000, text FROM base WHERE doc_id % 13 = 0
       UNION ALL SELECT doc_id + 5000000, text || ' zzsecond' FROM new1
         WHERE doc_id % 2 = 0
       UNION ALL SELECT doc_id + 6000000, text FROM f2 WHERE doc_id % 5 = 0),
-    {_lsh_serve_ctes('s2', 'delta2', 'xsig2', 'xbands2')}
+    {lsh_serve_ctes('s2', 'delta2', 'xsig2', 'xbands2')}
     {_LSH_AGG_SQL.format(v='s2_v')}
     """,
 )
@@ -2458,7 +2456,7 @@ def dedup_lsh_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     call and are reported in round notes."""
     from dataframework_spark.sources.io import _scratch
 
-    base_docs, f1, f2, corpus_cache = _lsh_corpus_split(spark, sf_dir)
+    base_docs, f1, f2, corpus_cache = lsh_corpus_split(spark, sf_dir)
     path = _scratch(sf_dir, "lsh_index_inc")
     lsh_index_build(spark, base_docs, path)
     delta1 = _lsh_delta1(base_docs, f1).cache()  # batch-sized; 3 consumers
@@ -2474,10 +2472,9 @@ def dedup_lsh_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ``test_lsh_new_set_is_append_stable``.  The staged parquet is the
     # immutable record of what the batch decided.
     staging = path + "/staging_batch1"
-    dsig1.join(F.broadcast(new_ids), "doc_id").write.mode("overwrite").parquet(
-        staging
-    )
-    staged = spark.read.parquet(staging)
+    new_sigs = dsig1.join(F.broadcast(new_ids), "doc_id")
+    new_sigs.write.mode("overwrite").parquet(staging)
+    staged = spark.read.schema(new_sigs.schema).parquet(staging)
     lsh_index_append(spark, staged, path)
     new_docs = delta1.join(F.broadcast(staged.select("doc_id")), "doc_id")
     v2, _, dcache2 = lsh_serve(spark, path, _lsh_delta2(base_docs, f2, new_docs))
@@ -2485,7 +2482,7 @@ def dedup_lsh_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2.write.mode("overwrite").parquet(results)
     for frame in (dcache2, dcache1, delta1, corpus_cache):
         frame.unpersist()
-    return _lsh_verdict_agg(spark.read.parquet(results))
+    return _lsh_verdict_agg(spark.read.schema(v2.schema).parquet(results))
 
 
 # ---------------------------------------------------------------------------
@@ -2494,79 +2491,26 @@ def dedup_lsh_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _parquet_file_count(path: str) -> int:
-    """Count data files under a parquet root — the manifest-level stat
-    compaction exists to improve.  Driver-side metadata listing (the
-    same information a lakehouse manifest read returns), never data."""
-    import os
-
-    n = 0
-    for root, _dirs, files in os.walk(path):
-        n += sum(1 for f in files if f.endswith(".parquet"))
-    return n
-
-
-def lsh_index_compact(
-    spark: SparkSession, base: str, compacted: str, n_sig_files: int = 1
-) -> None:
-    """Rewrite an appended-to LSH index (N file generations: the build
-    plus one small parquet per :func:`lsh_index_append`) into a
-    compacted twin: signatures coalesced to ``n_sig_files``, band rows
-    re-exchanged so each ``band=`` partition holds exactly one file.
-
-    Content-preserving by construction — rows are read and rewritten,
-    nothing is recomputed — and hash-PROVEN by the registered query,
-    which compares the compacted tables against a from-scratch rebuild
-    and serves a crawl batch whose oracle rebuilds in DuckDB.
-
-    At 100 TB, ``n_sig_files`` comes from the byte manifest exactly as
-    ``sink_compaction_plan`` bins it (cumulative-bytes div target); the
-    band table's natural compaction unit is its ``band`` partition, so
-    the rewrite is ONE exchange keyed by the partition column — the
-    cheapest shuffle the layout admits.  Appends never rewrite history
-    (``lsh_index_append`` stays O(delta)); this op is the between-
-    ingests maintenance pass that pays the read-amplification debt
-    back."""
-    paths = lsh_index_paths(base)
-    cpaths = lsh_index_paths(compacted)
-    sigs = spark.read.parquet(paths["sigs"])
-    sigs.coalesce(n_sig_files).write.mode("overwrite").parquet(cpaths["sigs"])
-    bands = spark.read.parquet(paths["bands"])
-    (
-        bands.repartition("band")
-        .write.mode("overwrite")
-        .partitionBy("band")
-        .parquet(cpaths["bands"])
-    )
-
-
-def _frames_equal(a: DataFrame, b: DataFrame) -> bool:
-    """Exact multiset equality of two frames (same column order assumed);
-    two anti-diffs instead of a hash so a mismatch is falsifiable in
-    either direction."""
-    return a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
-
-
 @register(
     "dedup_lsh_index_compaction",
     eager=True,
     oracle=f"""
     WITH {_LSH_CORPUS_SQL},
-    {_lsh_serve_ctes('s1', 'delta1', 'xsig', 'xbands')},
+    {lsh_serve_ctes('s1', 'delta1', 'xsig', 'xbands')},
     new1 AS (
       SELECT d.doc_id, d.text FROM delta1 d
       JOIN s1_v v ON v.doc_id = d.doc_id WHERE v.verdict = 'new'),
     xsig2 AS (
       SELECT * FROM xsig
       UNION ALL SELECT s.* FROM s1_sig s JOIN new1 n ON n.doc_id = s.doc_id),
-    xbands2 AS ({_lsh_bands_sql('xsig2')}),
+    xbands2 AS ({lsh_bands_sql('xsig2')}),
     delta2 AS (
       SELECT doc_id, text FROM f2
       UNION ALL SELECT doc_id + 4000000, text FROM base WHERE doc_id % 13 = 0
       UNION ALL SELECT doc_id + 5000000, text || ' zzsecond' FROM new1
         WHERE doc_id % 2 = 0
       UNION ALL SELECT doc_id + 6000000, text FROM f2 WHERE doc_id % 5 = 0),
-    {_lsh_serve_ctes('s2', 'delta2', 'xsig2', 'xbands2')}
+    {lsh_serve_ctes('s2', 'delta2', 'xsig2', 'xbands2')}
     SELECT *,
            TRUE AS sigs_equal_rebuild,
            TRUE AS bands_equal_rebuild,
@@ -2582,8 +2526,8 @@ def dedup_lsh_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``new`` signatures in TWO separate generations (split by doc_id
     parity — same final content as one append, but real small-file
     debt: ≥ 3 sig parquets, ≥ 3 files per band partition), then
-    :func:`lsh_index_compact` the index and serve crawl batch #2
-    against the COMPACTED form alone.
+    compact the index (:func:`index_store.compact` over ``LSH_LAYOUT``)
+    and serve crawl batch #2 against the COMPACTED form alone.
 
     Three proofs ride in the one output:
 
@@ -2601,13 +2545,12 @@ def dedup_lsh_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
       equality flags; one that corrupts a band flips the hash).
 
     Scale: compaction reads each index row once and writes it once —
-    one exchange keyed by the band partition column; the signature side
-    bins by the byte manifest at real scale (``n_sig_files`` knob, the
-    ``sink_compaction_plan`` discipline).  Serving is untouched: the
-    compacted index is the same two tables with fewer files."""
+    one exchange keyed by the band partition column, and the signature
+    table coalesced to one file.  Serving is untouched: the compacted
+    index is the same two tables with fewer files."""
     from dataframework_spark.sources.io import _scratch
 
-    base_docs, f1, f2, corpus_cache = _lsh_corpus_split(spark, sf_dir)
+    base_docs, f1, f2, corpus_cache = lsh_corpus_split(spark, sf_dir)
     path = _scratch(sf_dir, "lsh_index_cmp")
     cmp_path = _scratch(sf_dir, "lsh_index_cmp_compacted")
     lsh_index_build(spark, base_docs, path)
@@ -2615,43 +2558,28 @@ def dedup_lsh_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1, dsig1, dcache1 = lsh_serve(spark, path, delta1)
     new_ids = v1.where(F.col("verdict") == "new").select("doc_id")
     staging = path + "/staging_batch1"
-    dsig1.join(F.broadcast(new_ids), "doc_id").write.mode("overwrite").parquet(
-        staging
-    )
-    staged = spark.read.parquet(staging)
+    new_sigs = dsig1.join(F.broadcast(new_ids), "doc_id")
+    new_sigs.write.mode("overwrite").parquet(staging)
+    staged = spark.read.schema(new_sigs.schema).parquet(staging)
     # two real append GENERATIONS (parity split: union == one append) —
     # the small-file debt this op exists to pay down
     lsh_index_append(spark, staged.where(F.col("doc_id") % 2 == 0), path)
     lsh_index_append(spark, staged.where(F.col("doc_id") % 2 == 1), path)
 
-    paths = lsh_index_paths(path)
-    sig_files_before = _parquet_file_count(paths["sigs"])
-    lsh_index_compact(spark, path, cmp_path)
-    cpaths = lsh_index_paths(cmp_path)
-    sig_files_after = _parquet_file_count(cpaths["sigs"])
-    import os
-
-    band_part_max = max(
-        _parquet_file_count(os.path.join(cpaths["bands"], d))
-        for d in os.listdir(cpaths["bands"])
-        if d.startswith("band=")
-    )
+    sig_files_before = sum(index_store.file_counts(LSH_LAYOUT, path, "sigs").values())
+    index_store.compact(spark, LSH_LAYOUT, path, cmp_path)
+    sig_files_after = sum(index_store.file_counts(LSH_LAYOUT, cmp_path, "sigs").values())
+    band_files = index_store.file_counts(LSH_LAYOUT, cmp_path, "bands").values()
 
     # rebuild-from-scratch comparison: base ∪ batch-1-new, fresh signatures
     new_docs = delta1.join(F.broadcast(staged.select("doc_id")), "doc_id")
     rebuilt = minhash_signature_frame(base_docs.unionByName(new_docs))
     rebuilt.cache()  # consumed by the sig diff AND the band diff
-    csigs = spark.read.parquet(cpaths["sigs"]).select(rebuilt.columns)
-    sigs_equal = _frames_equal(csigs, rebuilt.select(rebuilt.columns))
-    band_cols = ["doc_id", "bk", "band"]
-    cbands = (
-        spark.read.parquet(cpaths["bands"])
-        .select([F.col(c).cast("int").alias(c) if c == "band" else F.col(c) for c in band_cols])
-    )
-    rbands = _lsh_band_frame(rebuilt).select(
-        [F.col(c).cast("int").alias(c) if c == "band" else F.col(c) for c in band_cols]
-    )
-    bands_equal = _frames_equal(cbands, rbands)
+    csigs = index_store.read(spark, LSH_LAYOUT, cmp_path, "sigs")
+    sigs_equal = index_store.frames_equal(csigs, rebuilt.select(csigs.columns))
+    cbands = index_store.read(spark, LSH_LAYOUT, cmp_path, "bands")
+    rbands = _lsh_band_frame(rebuilt).select(cbands.columns)
+    bands_equal = index_store.frames_equal(cbands, rbands)
     rebuilt.unpersist()
 
     v2, _, dcache2 = lsh_serve(spark, cmp_path, _lsh_delta2(base_docs, f2, new_docs))
@@ -2660,10 +2588,10 @@ def dedup_lsh_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     for frame in (dcache2, dcache1, delta1, corpus_cache):
         frame.unpersist()
     return (
-        _lsh_verdict_agg(spark.read.parquet(results))
+        _lsh_verdict_agg(spark.read.schema(v2.schema).parquet(results))
         .withColumn("sigs_equal_rebuild", F.lit(sigs_equal))
         .withColumn("bands_equal_rebuild", F.lit(bands_equal))
         .withColumn("sig_files_ge_3_before", F.lit(sig_files_before >= 3))
         .withColumn("sig_files_1_after", F.lit(sig_files_after == 1))
-        .withColumn("band_partitions_single_file", F.lit(band_part_max == 1))
+        .withColumn("band_partitions_single_file", F.lit(all(n == 1 for n in band_files)))
     )

@@ -52,6 +52,7 @@ from dataframework_spark.functions.arrays import (
     norm_sql,
 )
 from dataframework_spark.registry import register
+from dataframework_spark.sources import index_store
 
 _DIM = 64
 _TOPK = 5
@@ -1258,25 +1259,22 @@ def sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def ivfpq_index_paths(base: str) -> dict[str, str]:
-    """The three parquet tables an IVF-PQ index persists as."""
-    import os
-
-    return {
-        "centroids": os.path.join(base, "centroids"),
-        "codebook": os.path.join(base, "codebook"),
-        "codes": os.path.join(base, "codes"),
-    }
+IVFPQ_LAYOUT: index_store.Layout = {
+    "centroids": ("cid int, c array<double>", None),
+    "codebook": ("k int, cw array<double>", None),
+    "codes": ("vec_id bigint, codes array<int>, cid int", "cid"),
+}
 
 
 def _load_quantizer(spark: SparkSession, base: str) -> tuple[DataFrame, DataFrame]:
     """The persisted quantizer as the 1-row ``cents`` and ``cb`` frames
     :func:`_assign` and :func:`_encode` take, in the build's order."""
-    paths = ivfpq_index_paths(base)
-    cents_row = spark.read.parquet(paths["centroids"]).agg(
+    cents_row = index_store.read(spark, IVFPQ_LAYOUT, base, "centroids").agg(
         _ordered_array("cid", "c").alias("cents")
     )
-    cb_row = spark.read.parquet(paths["codebook"]).agg(_ordered_array("k", "cw").alias("cb"))
+    cb_row = index_store.read(spark, IVFPQ_LAYOUT, base, "codebook").agg(
+        _ordered_array("k", "cw").alias("cb")
+    )
     return cents_row, cb_row
 
 
@@ -1288,9 +1286,9 @@ def ivfpq_persist(
     n_centroids: int = _N_CENTROIDS,
 ) -> None:
     """Build the IVF-PQ index (one corpus pass via :func:`_ivfpq_index`)
-    and write it as three parquet tables:
+    and write it as the three tables of ``IVFPQ_LAYOUT``:
 
-    * ``centroids`` — (cid, c): the 8 coarse centroid vectors;
+    * ``centroids`` — (cid, c): the coarse centroid vectors;
     * ``codebook``  — (k, cw): the {_PQ_K} residual codewords;
     * ``codes``     — (vec_id, codes) **partitioned by cid**: the
       {_PQ_M}-byte-per-vector serving payload, laid out so nprobe=1
@@ -1301,28 +1299,16 @@ def ivfpq_persist(
     This is the index lifecycle a real ANN deployment needs: train/encode
     once (expensive, corpus-sized), serve many times from the compact
     persisted form without ever touching the corpus again."""
-    paths = ivfpq_index_paths(base)
     _, centarr, _, coded = _ivfpq_index(
         spark, sf_dir, predicate=predicate, n_centroids=n_centroids
     )
-    (
-        centarr.select(F.posexplode("cents").alias("cid", "c"))
-        .write.mode("overwrite")
-        .parquet(paths["centroids"])
-    )
-    (
-        coded.select("cb")
-        .limit(1)
-        .select(F.posexplode("cb").alias("k", "cw"))
-        .write.mode("overwrite")
-        .parquet(paths["codebook"])
-    )
-    (
-        coded.select("vec_id", "cid", "codes")
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(paths["codes"])
-    )
+    tables = {
+        "centroids": centarr.select(F.posexplode("cents").alias("cid", "c")),
+        "codebook": coded.select("cb").limit(1).select(F.posexplode("cb").alias("k", "cw")),
+        "codes": coded.select("vec_id", "codes", "cid"),
+    }
+    for table, frame in tables.items():
+        index_store.write(frame, IVFPQ_LAYOUT, base, table)
 
 
 def ivfpq_serve(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
@@ -1353,37 +1339,22 @@ def ivfpq_serve_frame(spark: SparkSession, base: str, qdf: DataFrame) -> DataFra
     pruning, manifest-style cell reads; the distinct-cell bound is
     ``n_centroids``, not the batch size, so arbitrarily large batches
     keep the bounded collect."""
-    paths = ivfpq_index_paths(base)
     cents_row, cb_row = _load_quantizer(spark, base)
     q = _assign(qdf, cents_row, "qe", cid="qcid", r="qr").select("query_id", "qcid", "qr")
     # static nprobe pruning (r12, measured by the SIMLIFE probe): the
-    # query batch's cells are known BEFORE the index is read, so push
-    # them as a literal partition filter — the codes scan then reads
-    # only the ≤ batch-size matching cell directories instead of every
-    # cell (the dynamic join filter alone scanned the whole table and
-    # made the fixed-batch serve wall grow with the index).
+    # query batch's cells are known BEFORE the index is read, so the
+    # codes scan opens only the ≤ batch-size probed cell directories
+    # (a manifest-style read: raw partition discovery listed all k cell
+    # dirs before pruning, and at k = 8·M that metadata walk alone grew
+    # the serve wall) instead of every cell — the dynamic join filter
+    # alone scanned the whole table and made the fixed-batch serve wall
+    # grow with the index.  The store keeps the cell filter on top, so
+    # the pruning is also plan-visible (PartitionFilters, pinned in
+    # test_plans.py).
     # bounded collect: ≤ n_centroids (8 registered) distinct cells —
     # cell-count-sized, never corpus- or batch-sized
     qcells = sorted({r["qcid"] for r in q.select("qcid").distinct().collect()})
-    # manifest-style read: open ONLY the probed cell directories (the
-    # SIMLIFE probe measured raw partition discovery listing all k cell
-    # dirs before pruning — at k = 8·M that metadata walk alone grew the
-    # serve wall; a lakehouse table would resolve this from its manifest,
-    # and enumerating the known partition paths is the plain-parquet
-    # equivalent).  The isin filter stays on top so the pruning is also
-    # plan-visible (PartitionFilters, pinned in test_plans.py).
-    import os as _os
-
-    cell_dirs = [
-        d
-        for c in qcells
-        if _os.path.isdir(d := _os.path.join(paths["codes"], f"cid={c}"))
-    ]
-    if cell_dirs:
-        codes_pq = spark.read.option("basePath", paths["codes"]).parquet(*cell_dirs)
-    else:  # every probed cell is empty — serve over the (empty) pruned scan
-        codes_pq = spark.read.parquet(paths["codes"])
-    codes_pq = codes_pq.where(F.col("cid").isin(qcells))
+    codes_pq = index_store.read(spark, IVFPQ_LAYOUT, base, "codes", parts=qcells)
     scored = (
         codes_pq.join(
             F.broadcast(q),
@@ -1484,11 +1455,9 @@ def ivfpq_append_frame(spark: SparkSession, base: str, vecs: DataFrame) -> None:
     into the existing cell partitions."""
     cents_row, cb_row = _load_quantizer(spark, base)
     delta_coded = _encode(_assign(vecs, cents_row, "e"), cb_row, "r").select(
-        "vec_id", "cid", "codes"
+        "vec_id", "codes", "cid"
     )
-    delta_coded.write.mode("append").partitionBy("cid").parquet(
-        ivfpq_index_paths(base)["codes"]
-    )
+    index_store.write(delta_coded, IVFPQ_LAYOUT, base, "codes", "append")
 
 
 @register(
@@ -1546,31 +1515,6 @@ _PERSIST_SERVE_ORACLE = _get_spec("sim_ivfpq_persist_serve").oracle
 _IVFPQ_APPEND_ORACLE = _get_spec("sim_ivfpq_incremental_append").oracle
 
 
-def ivfpq_index_compact(spark: SparkSession, base: str, compacted: str) -> None:
-    """Rewrite an appended-to IVF-PQ index into its compacted twin: the
-    cell-partitioned ``codes`` table re-exchanged so every ``cid=``
-    partition holds exactly one file (appends stage one small parquet
-    per ingest batch per cell — the same debt :func:`dedup.lsh_index_compact`
-    pays for the band index); centroids and codebook are constants-sized
-    and coalesce to one file each.  Content-preserving by construction
-    (read → rewrite, nothing recomputed); the registered query proves it
-    by multiset equality against the uncompacted tables AND a serve
-    whose oracle rebuilds the index from scratch."""
-    paths = ivfpq_index_paths(base)
-    cpaths = ivfpq_index_paths(compacted)
-    for leaf in ("centroids", "codebook"):
-        spark.read.parquet(paths[leaf]).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(cpaths[leaf])
-    (
-        spark.read.parquet(paths["codes"])
-        .repartition("cid")
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(cpaths["codes"])
-    )
-
-
 @register(
     "sim_ivfpq_index_compaction",
     eager=True,
@@ -1589,9 +1533,11 @@ def sim_ivfpq_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     family: build + persist the base index (90% snapshot), append the
     10% delta in TWO separate ingest waves (vec_id parity split — same
     final content as one append, but real small-file debt: ≥ 2 code
-    parquets in every cell the delta touched), then
-    :func:`ivfpq_index_compact` and serve the standard query batch from
-    the COMPACTED index alone.
+    parquets in every cell the delta touched), then compact it
+    (:func:`index_store.compact` over ``IVFPQ_LAYOUT``: one exchange on
+    ``cid`` for the codes, centroids and codebook coalesced to one file
+    each) and serve the standard query batch from the COMPACTED index
+    alone.
 
     Three proofs in one output: the served top-k value-hashes against
     the DuckDB oracle that rebuilds the FINAL index from scratch
@@ -1602,12 +1548,6 @@ def sim_ivfpq_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     untouched — same three tables, fewer files, and the static nprobe
     partition filter now opens one file per probed cell instead of one
     per ingest generation."""
-    import os
-
-    from dataframework_spark.operators.dedup import (
-        _frames_equal,
-        _parquet_file_count,
-    )
     from dataframework_spark.sources.io import _scratch
 
     delta_pred = F.col("vec_id") % 10 == 9
@@ -1621,32 +1561,19 @@ def sim_ivfpq_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivfpq_append(spark, sf_dir, base, delta_pred & (F.col("vec_id") % 2 == 0))
     ivfpq_append(spark, sf_dir, base, delta_pred & (F.col("vec_id") % 2 == 1))
 
-    paths = ivfpq_index_paths(base)
-    cpaths = ivfpq_index_paths(cmp_base)
-    codes = spark.read.parquet(paths["codes"])
+    codes = index_store.read(spark, IVFPQ_LAYOUT, base, "codes")
     touched = sorted(
         r["cid"]
         # bounded collect: ≤ _N_CENTROIDS (8) distinct cells exist at all
         for r in codes.where(delta_pred).select("cid").distinct().collect()
     )
-    before_ok = all(
-        _parquet_file_count(os.path.join(paths["codes"], f"cid={c}")) >= 2
-        for c in touched
-    )
-    ivfpq_index_compact(spark, base, cmp_base)
-    after_ok = all(
-        _parquet_file_count(os.path.join(cpaths["codes"], d)) == 1
-        for d in os.listdir(cpaths["codes"])
-        if d.startswith("cid=")
-    )
-    cols = ["vec_id", "codes", "cid"]
-    ccodes = spark.read.parquet(cpaths["codes"]).select(
-        [F.col(c).cast("int").alias(c) if c == "cid" else F.col(c) for c in cols]
-    )
-    ocodes = codes.select(
-        [F.col(c).cast("int").alias(c) if c == "cid" else F.col(c) for c in cols]
-    )
-    content_ok = _frames_equal(ccodes, ocodes)
+    before = index_store.file_counts(IVFPQ_LAYOUT, base, "codes")
+    before_ok = all(before.get(c, 0) >= 2 for c in touched)
+    index_store.compact(spark, IVFPQ_LAYOUT, base, cmp_base)
+    after = index_store.file_counts(IVFPQ_LAYOUT, cmp_base, "codes")
+    after_ok = all(n == 1 for n in after.values())
+    ccodes = index_store.read(spark, IVFPQ_LAYOUT, cmp_base, "codes")
+    content_ok = index_store.frames_equal(ccodes, codes)
     return (
         ivfpq_serve(spark, sf_dir, cmp_base)
         .withColumn("codes_equal_precompaction", F.lit(content_ok))

@@ -24,14 +24,17 @@ from __future__ import annotations
 
 import itertools
 import os
-from collections.abc import Iterator
+import shutil
+from collections.abc import Iterable, Iterator
 from typing import Any
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import StructType
 
 from dataframework_spark.catalog import parquet_schema, table_path
 from dataframework_spark.registry import register
@@ -76,23 +79,84 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw
 
 
-def _run_to_table(stream_df: DataFrame, spark: SparkSession, mode: str = "complete") -> DataFrame:
-    """Execute a streaming plan to completion into a memory sink; return
-    the materialized result as a batch DataFrame."""
-    name = f"dfx_stream_sink_{next(_sink_counter)}"
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
+def _drain(
+    writer: DataStreamWriter, batch_fn=None, tag_col: str | None = None
+) -> StructType | None:
+    """Run a stream to completion: start ``writer`` with an
+    ``availableNow`` trigger, process every available file, stop.
+
+    ``batch_fn(frame, batch_id)`` becomes the ``foreachBatch`` sink.  With
+    ``tag_col`` it is instead called once per distinct tag of each
+    micro-batch, in ascending tag order, as ``batch_fn(rows, tag)`` — so a
+    trigger that packs two feed files still processes them in feed order —
+    and returns the frame it wrote; ``_drain`` then returns that frame's
+    schema, for the caller's read-back, and raises if no tagged row came."""
+    written = None
+    if tag_col is not None:
+        per_tag = batch_fn
+
+        def batch_fn(bdf: DataFrame, _batch_id: int) -> None:
+            nonlocal written
+            # bounded collect: one distinct tag per feed file in the trigger
+            for tag in sorted(r[0] for r in bdf.select(tag_col).distinct().collect()):
+                written = per_tag(bdf.where(F.col(tag_col) == tag), tag).schema
+
+    if batch_fn is not None:
+        writer = writer.foreachBatch(batch_fn)
+    q = writer.trigger(availableNow=True).start()
     try:
         q.processAllAvailable()
     finally:
         q.stop()
         q.awaitTermination()
+    if tag_col is not None and written is None:
+        raise ValueError(f"the stream delivered no {tag_col}-tagged rows")
+    return written
+
+
+def _run_to_table(stream_df: DataFrame, spark: SparkSession, mode: str = "complete") -> DataFrame:
+    """Execute a streaming plan to completion into a memory sink; return
+    the materialized result as a batch DataFrame."""
+    name = f"dfx_stream_sink_{next(_sink_counter)}"
+    _drain(stream_df.writeStream.format("memory").queryName(name).outputMode(mode))
     return spark.table(name)
+
+
+def _ordered_feed(
+    spark: SparkSession, frame: DataFrame, tag_col: str, tags: Iterable, path: str
+) -> DataFrame:
+    """Stage ``frame`` at ``path`` as one parquet file per tag, written in
+    ``tags`` order, and stream the files back one per trigger in that order.
+
+    The file source orders files by modification time, and two quick writes
+    can tie on a coarse-granularity filesystem, leaving their order
+    unspecified (r10 ADVICE).  So each tag's file gets its mtime pinned to
+    epoch + 10·(i+1) s — a spacing that survives 2 s (FAT) rounding — and the
+    observed mtimes are asserted strictly increasing in tag order: rank
+    order, not float equality, since an mtime-normalizing mount may
+    truncate the stamp but cannot reorder it (r11 ADVICE).  The stream's
+    schema is ``frame``'s, never a re-read."""
+    shutil.rmtree(path, ignore_errors=True)
+    files: list[str] = []
+    for i, tag in enumerate(tags):
+        frame.where(F.col(tag_col) == tag).coalesce(1).write.mode("append").parquet(path)
+        new = [
+            n for n in os.listdir(path)
+            if n.endswith(".parquet") and os.path.join(path, n) not in files
+        ]
+        assert len(new) == 1, f"one feed file per tag, got {new} for tag {tag}"
+        files.append(os.path.join(path, new[0]))
+        stamp = 10.0 * (i + 1)
+        os.utime(files[-1], (stamp, stamp))
+    got = [os.path.getmtime(f) for f in files]
+    assert all(a < b for a, b in zip(got, got[1:])), (
+        f"feed-file mod-times not strictly increasing in batch order: {got}"
+    )
+    return (
+        spark.readStream.schema(frame.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(path)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -254,9 +318,8 @@ def _split_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events", columns=["user_id", "ts", "value"])
     path = _scratch(sf_dir, "events_split")
     ev.repartitionByRange(_N_SPLIT_FILES, "ts").write.mode("overwrite").parquet(path)
-    schema = spark.read.parquet(path).schema  # plain µs timestamps now
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(path)
     )
@@ -447,31 +510,24 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     real target could dedup replayed batches — here the scratch dir is
     cleared up front and the stream uses a fresh temp checkpoint, so
     every run reprocesses everything (what the oracle comparison needs)."""
-    import shutil
-
     from dataframework_spark.sources.io import _scratch
 
     ev = _split_events_stream(spark, sf_dir)
     out = _scratch(sf_dir, "events_fb_sink")
     shutil.rmtree(out, ignore_errors=True)
 
-    def _write_batch(bdf: DataFrame, batch_id: int) -> None:
-        (
+    def _partials(bdf: DataFrame, batch_id: int) -> DataFrame:
+        return (
             bdf.groupBy("user_id")
             .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sv"))
             .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(out)
         )
 
-    q = ev.writeStream.foreachBatch(_write_batch).trigger(availableNow=True).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
-
-    back = spark.read.parquet(out)
+    _drain(
+        ev.writeStream,
+        lambda bdf, batch_id: _partials(bdf, batch_id).write.mode("append").parquet(out),
+    )
+    back = spark.read.schema(_partials(ev, 0).schema).parquet(out)
     return back.groupBy("user_id").agg(
         F.sum("n").alias("n_events"), F.round(F.sum("sv"), 2).alias("sum_value")
     )
@@ -511,7 +567,6 @@ def exactly_once_merge_writer(base: str):
     state table is partitioned and only partitions containing the
     batch's keys rewrite (the ``sink_merge_upsert`` pruning note)."""
     import json
-    import shutil
 
     def _latest(bdf_spark) -> tuple[int, set, DataFrame | None]:
         ptr = os.path.join(base, "latest.json")
@@ -522,12 +577,11 @@ def exactly_once_merge_writer(base: str):
         vdir = os.path.join(base, f"state_v{v}")
         with open(os.path.join(vdir, "ledger.json")) as fh:
             applied = set(json.load(fh)["batch_ids"])
-        totals = bdf_spark.read.parquet(os.path.join(vdir, "totals"))
+        totals = bdf_spark.read.schema(_USER_TOTALS_SCHEMA).parquet(os.path.join(vdir, "totals"))
         return v, applied, totals
 
     def _write_batch(bdf: DataFrame, batch_id: int) -> None:
-        sp = bdf.sparkSession
-        v, applied, totals = _latest(sp)
+        v, applied, totals = _latest(bdf.sparkSession)
         if batch_id in applied:  # replayed after a committed success
             return
         partial = bdf.groupBy("user_id").agg(
@@ -580,8 +634,6 @@ def stream_exactly_once_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     demonstrate: there, replay safety is delegated to the target; here
     the commit protocol (versioned state + batch ledger + atomic pointer
     flip) provides it on plain parquet."""
-    import shutil
-
     from dataframework_spark.sources.io import _scratch
 
     ev = _split_events_stream(spark, sf_dir)
@@ -589,13 +641,7 @@ def stream_exactly_once_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)
     os.makedirs(base, exist_ok=True)
     writer = exactly_once_merge_writer(base)
-
-    q = ev.writeStream.foreachBatch(writer).trigger(availableNow=True).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    _drain(ev.writeStream, writer)
 
     # Replay batch 0: re-deliver the first time slice under its original
     # batch_id.  The ledger hit must skip it; the hash proves it did.
@@ -605,7 +651,7 @@ def stream_exactly_once_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         for f in os.listdir(split_path)
         if f.endswith(".parquet") and not f.startswith("_")
     )[0]
-    replay = spark.read.parquet(os.path.join(split_path, first_file))
+    replay = spark.read.schema(ev.schema).parquet(os.path.join(split_path, first_file))
     writer(replay, 0)
 
     _, applied, totals = writer.read_latest(spark)
@@ -719,50 +765,27 @@ def stream_watermark_finalization(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Scale: staging is one bounded file per slice; state is one row per
     open daily window, bounded by the watermark horizon."""
-    import os
-    import shutil
-
     from dataframework_spark.catalog import load_table
     from dataframework_spark.sources.io import _scratch
 
     ev = load_table(spark, sf_dir, "events", columns=["event_id", "ts"])
     lo = ev.agg(F.min(F.to_date("ts")).alias("d0"))
-    r = ev.crossJoin(F.broadcast(lo)).withColumn(
-        "s",
-        F.expr(f"datediff(to_date(ts), d0) div {_LATE_SLICE_DAYS}")
-        + F.when(F.col("event_id") % 17 == 0, 1)
-        .when(F.col("event_id") % 23 == 0, 2)
-        .otherwise(0),
+    r = ev.crossJoin(F.broadcast(lo)).select(
+        "event_id",
+        "ts",
+        (
+            F.expr(f"datediff(to_date(ts), d0) div {_LATE_SLICE_DAYS}")
+            + F.when(F.col("event_id") % 17 == 0, 1)
+            .when(F.col("event_id") % 23 == 0, 2)
+            .otherwise(0)
+        ).alias("s"),
     )
-    path = _scratch(sf_dir, "events_late_slices")
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path, exist_ok=True)
     slice_ids = sorted(
         row.s for row in r.select("s").distinct().collect()  # bounded: ~(span/6)+2 rows
     )
-    tmp = _scratch(sf_dir, "events_late_tmp")
-    for s in slice_ids:
-        shutil.rmtree(tmp, ignore_errors=True)
-        (
-            r.where(F.col("s") == s)
-            .select("event_id", "ts")
-            .coalesce(1)  # one ingest FILE per slice — the staging IS the point
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        # sequential renames give strictly ordered mtimes; names sort the
-        # same way, so the file source's (mtime, path) order is the slice
-        # order either way
-        os.replace(os.path.join(tmp, part), os.path.join(path, f"slice_{s:03d}.parquet"))
-    shutil.rmtree(tmp, ignore_errors=True)
-
-    schema = spark.read.parquet(path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(path)
-    )
+    # one ingest FILE per slice, in slice order — the staging IS the point
+    path = _scratch(sf_dir, "events_late_slices")
+    stream = _ordered_feed(spark, r, "s", slice_ids, path)
     agg = (
         stream.withWatermark("ts", f"{_LATE_WM_DAYS} days")
         .groupBy(F.window("ts", "1 day").alias("w"))
@@ -846,14 +869,14 @@ def _lsh_stream_oracle() -> str:
     previous rounds left — composed from the dedup module's CTE
     builders so the SQL stays in lockstep with the batch lifecycle."""
     from dataframework_spark.operators.dedup import (
-        _INC_BUCKET_DUCK,
-        _lsh_bands_sql,
-        _lsh_serve_ctes,
-        _lsh_sig_sql,
+        INC_BUCKET_DUCK,
+        lsh_bands_sql,
+        lsh_serve_ctes,
+        lsh_sig_sql,
     )
 
     parts = [
-        f"b AS (SELECT doc_id, text, {_INC_BUCKET_DUCK} AS b FROM documents)",
+        f"b AS (SELECT doc_id, text, {INC_BUCKET_DUCK} AS b FROM documents)",
         "base AS (SELECT doc_id, text FROM b WHERE b < 8)",
         "f1 AS (SELECT doc_id, text FROM b WHERE b = 8)",
         f"""crawl AS (
@@ -868,19 +891,19 @@ def _lsh_stream_oracle() -> str:
           UNION ALL
           SELECT doc_id + 3000000, text, {_LSH_STREAM_TAG_DUCK} AS tag
           FROM f1 WHERE doc_id % 3 = 0)""",
-        f"xsig0 AS ({_lsh_sig_sql('base')})",
-        f"xbands0 AS ({_lsh_bands_sql('xsig0')})",
+        f"xsig0 AS ({lsh_sig_sql('base')})",
+        f"xbands0 AS ({lsh_bands_sql('xsig0')})",
     ]
     finals = []
     for k in range(_LSH_STREAM_BATCHES):
         parts.append(
             f"c{k} AS (SELECT doc_id, text FROM crawl WHERE tag = {k})"
         )
-        # _lsh_serve_ctes returns a leading-comma-free CTE chain ending
+        # lsh_serve_ctes returns a leading-comma-free CTE chain ending
         # in s{k}_v and exposing s{k}_sig (representative signatures —
         # the appendable rows) for the next round's index union
         parts.append(
-            _lsh_serve_ctes(f"s{k}", f"c{k}", f"xsig{k}", f"xbands{k}")
+            lsh_serve_ctes(f"s{k}", f"c{k}", f"xsig{k}", f"xbands{k}")
             .strip()
             .lstrip()
         )
@@ -892,7 +915,7 @@ def _lsh_stream_oracle() -> str:
               SELECT s.* FROM s{k}_sig s
               JOIN s{k}_v v ON v.doc_id = s.doc_id AND v.verdict = 'new')"""
             )
-            parts.append(f"xbands{k + 1} AS ({_lsh_bands_sql(f'xsig{k + 1}')})")
+            parts.append(f"xbands{k + 1} AS ({lsh_bands_sql(f'xsig{k + 1}')})")
         finals.append(
             f"SELECT {k} AS batch, verdict, doc_id FROM s{k}_v"
         )
@@ -932,115 +955,62 @@ def stream_lsh_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     breaks the hash.
 
     Determinism discipline: ordering across triggers is STRUCTURAL, not
-    temporal — after writing batch k's file its mod-time is explicitly
-    set to epoch+k+1 seconds (and each file asserted to carry exactly
-    its own batch's stamp), so the
-    file source's timestamp order equals tag order even on filesystems
-    whose write timestamps tie at coarse granularity (the r10 ADVICE
-    hazard: two rapid writes sharing a mod-time leave the tie order
-    unspecified, and tag k+1 served before tag k breaks the +2000000
-    arm's verdicts).  Within a trigger the handler additionally
-    processes rows grouped by their own batch tag in ascending order,
-    so trigger packing cannot reorder the ingest either.  Scratch
-    results + index are rebuilt from zero each run
-    (static overwrite truncates the band partitions), so the run is a
-    pure function of the corpus — what the oracle comparison needs.
+    temporal — the crawl batches are staged by :func:`_ordered_feed`,
+    which pins each file's mod-time in batch order (tag k+1 served
+    before tag k would break the +2000000 arm's verdicts), and
+    :func:`_drain` hands each trigger's rows to the handler grouped by
+    their own batch tag in ascending order, so trigger packing cannot
+    reorder the ingest either.  Scratch results + index are rebuilt from
+    zero each run (static overwrite truncates the band partitions), so
+    the run is a pure function of the corpus — what the oracle
+    comparison needs.
 
     At 100 TB this is the production shape: the corpus is scanned once
     at index build; each arriving batch pays one batch-sized signature
     pass + two index-partitioned joins + a batch-sized append; nothing
     rescans, and state lives in the index files, not executor memory."""
-    import shutil
-
     from dataframework_spark.operators.dedup import (
-        _lsh_corpus_split,
-        _lsh_verdict_agg,
+        lsh_corpus_split,
         lsh_index_append,
         lsh_index_build,
         lsh_serve,
     )
     from dataframework_spark.sources.io import _scratch
 
-    base_docs, f1, _, corpus_cache = _lsh_corpus_split(spark, sf_dir)
+    base_docs, f1, _, corpus_cache = lsh_corpus_split(spark, sf_dir)
     idx = _scratch(sf_dir, "lsh_stream_idx")
-    crawl_path = _scratch(sf_dir, "lsh_stream_crawl")
     results = _scratch(sf_dir, "lsh_stream_results")
-    shutil.rmtree(crawl_path, ignore_errors=True)
     shutil.rmtree(results, ignore_errors=True)
     shutil.rmtree(idx, ignore_errors=True)
 
     lsh_index_build(spark, base_docs, idx)
     crawl = _lsh_crawl_stream_rows(base_docs, f1)
-    # one file per batch; ordering made STRUCTURAL by pinning each new
-    # data file's mod-time to epoch+k (file-source order = timestamp
-    # order, and two sequential writes may otherwise tie at coarse
-    # mtime granularity with unspecified tie order — r10 ADVICE)
-    stamped: dict[str, float] = {}
-    for k in range(_LSH_STREAM_BATCHES):
-        crawl.where(F.col("tag") == k).coalesce(1).write.mode("append").parquet(
-            crawl_path
-        )
-        for name in sorted(os.listdir(crawl_path)):
-            if name.endswith(".parquet") and name not in stamped:
-                # batch k's one new file → epoch + 10*(k+1); the 10 s
-                # spacing survives coarse-granularity filesystems (FAT
-                # rounds to 2 s) without collapsing adjacent batches
-                stamped[name] = float((k + 1) * 10)
-                p = os.path.join(crawl_path, name)
-                os.utime(p, (stamped[name], stamped[name]))
-    # order-PINNING check: observed mod-times must be STRICTLY increasing
-    # in batch order (a permutation would serve tag k+1 before tag k and
-    # still pass a distinctness-only check).  Rank order, not exact float
-    # equality — mtime-normalizing mounts may truncate the stamp (r11
-    # ADVICE) but cannot reorder a 10 s spacing.
-    assert len(stamped) == _LSH_STREAM_BATCHES, "one data file per crawl batch"
-    got_in_batch_order = [
-        os.path.getmtime(os.path.join(crawl_path, name))
-        for name, _ in sorted(stamped.items(), key=lambda kv: kv[1])
-    ]
-    assert all(
-        a < b for a, b in zip(got_in_batch_order, got_in_batch_order[1:])
-    ), f"crawl-file mod-times not strictly increasing in batch order: {got_in_batch_order}"
-
-    schema = spark.read.parquet(crawl_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(crawl_path)
+    stream = _ordered_feed(
+        spark, crawl, "tag", range(_LSH_STREAM_BATCHES), _scratch(sf_dir, "lsh_stream_crawl")
     )
+    def _ingest(rows: DataFrame, tag: int) -> DataFrame:
+        verdicts, dsig, dcache = lsh_serve(spark, idx, rows.select("doc_id", "text"))
+        # batch-sized; consumed by BOTH the staging write and the
+        # results write — uncached each would re-run the serve DAG
+        verdicts = verdicts.cache()
+        staging = idx + f"/staging_b{tag}"
+        new_ids = verdicts.where(F.col("verdict") == "new").select("doc_id")
+        new_sigs = dsig.join(F.broadcast(new_ids), "doc_id")
+        new_sigs.write.mode("overwrite").parquet(staging)
+        staged = spark.read.schema(new_sigs.schema).parquet(staging)
+        out = verdicts.withColumn("batch", F.lit(int(tag)).cast("bigint"))
+        out.write.mode("append").parquet(results)
+        lsh_index_append(spark, staged, idx)
+        verdicts.unpersist()
+        dcache.unpersist()
+        return out
 
-    def _ingest(bdf: DataFrame, batch_id: int) -> None:
-        # bounded collect: ≤ _LSH_STREAM_BATCHES (= 4) distinct tags can
-        # ever share a trigger — one per staged crawl file
-        tags = sorted(r.tag for r in bdf.select("tag").distinct().collect())
-        for tag in tags:  # tag-ordered even if a trigger packs 2 files
-            docs = bdf.where(F.col("tag") == tag).select("doc_id", "text")
-            verdicts, dsig, dcache = lsh_serve(spark, idx, docs)
-            # batch-sized; consumed by BOTH the staging write and the
-            # results write — uncached each would re-run the serve DAG
-            verdicts = verdicts.cache()
-            staging = idx + f"/staging_b{tag}"
-            new_ids = verdicts.where(F.col("verdict") == "new").select("doc_id")
-            dsig.join(F.broadcast(new_ids), "doc_id").write.mode(
-                "overwrite"
-            ).parquet(staging)
-            staged = spark.read.parquet(staging)
-            verdicts.withColumn("batch", F.lit(int(tag)).cast("bigint")).write.mode(
-                "append"
-            ).parquet(results)
-            lsh_index_append(spark, staged, idx)
-            verdicts.unpersist()
-            dcache.unpersist()
-
-    q = stream.writeStream.foreachBatch(_ingest).trigger(availableNow=True).start()
     try:
-        q.processAllAvailable()
+        schema = _drain(stream.writeStream, _ingest, tag_col="tag")
     finally:
-        q.stop()
-        q.awaitTermination()
         corpus_cache.unpersist()
 
-    back = spark.read.parquet(results)
+    back = spark.read.schema(schema).parquet(results)
     return (
         back.groupBy("batch", "verdict")
         .agg(
@@ -1130,13 +1100,12 @@ def stream_sim_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches, retrains the quantizer, or serves a batch against its own
     rows flips neighbor sets and breaks the hash.
 
-    Determinism discipline is ``stream_lsh_ingest``'s verbatim: ordering
-    across triggers is STRUCTURAL (each staged file's mod-time pinned to
-    epoch + 10·(k+1) s, rank-order-asserted strictly increasing), and
-    within a trigger rows are processed grouped by their own batch tag
-    ascending, so trigger packing cannot reorder the ingest.  Scratch
-    index + results are rebuilt from zero each run — the run is a pure
-    function of the corpus.
+    Determinism discipline is ``stream_lsh_ingest``'s verbatim: the
+    feed is staged by :func:`_ordered_feed` (mod-times pinned in batch
+    order) and :func:`_drain` processes each trigger's rows grouped by
+    their own batch tag ascending, so trigger packing cannot reorder the
+    ingest.  Scratch index + results are rebuilt from zero each run —
+    the run is a pure function of the corpus.
 
     At 100 TB this is the production ingest path for an embedding
     corpus: one corpus pass at base build; each arriving batch pays one
@@ -1145,8 +1114,6 @@ def stream_sim_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest-style reads — the r12 serve plan), and a batch-sized
     parquet append; nothing rescans, and state lives in the index
     files, not executor memory."""
-    import shutil
-
     from dataframework_spark.catalog import load_table
     from dataframework_spark.operators.similarity import (
         as_double,
@@ -1157,9 +1124,8 @@ def stream_sim_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataframework_spark.sources.io import _scratch
 
     idx = _scratch(sf_dir, "sim_stream_idx")
-    feed_path = _scratch(sf_dir, "sim_stream_feed")
     results = _scratch(sf_dir, "sim_stream_results")
-    for p in (idx, feed_path, results):
+    for p in (idx, results):
         shutil.rmtree(p, ignore_errors=True)
 
     delta, tag = _sim_stream_split(F.col("vec_id"))
@@ -1169,62 +1135,24 @@ def stream_sim_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = emb.where(delta).select(
         "vec_id", as_double("embedding").alias("e"), tag.cast("bigint").alias("tag")
     )
-    # one file per batch; ordering made STRUCTURAL by pinning mod-times
-    # (10 s spacing survives coarse-granularity filesystems; rank order
-    # asserted, not exact floats — the r11 ADVICE discipline)
-    stamped: dict[str, float] = {}
-    for k in range(_SIM_STREAM_BATCHES):
-        feed.where(F.col("tag") == k).coalesce(1).write.mode("append").parquet(
-            feed_path
-        )
-        for name in sorted(os.listdir(feed_path)):
-            if name.endswith(".parquet") and name not in stamped:
-                stamped[name] = float((k + 1) * 10)
-                p = os.path.join(feed_path, name)
-                os.utime(p, (stamped[name], stamped[name]))
-    assert len(stamped) == _SIM_STREAM_BATCHES, "one data file per vector batch"
-    got_in_batch_order = [
-        os.path.getmtime(os.path.join(feed_path, name))
-        for name, _ in sorted(stamped.items(), key=lambda kv: kv[1])
-    ]
-    assert all(
-        a < b for a, b in zip(got_in_batch_order, got_in_batch_order[1:])
-    ), f"feed-file mod-times not strictly increasing in batch order: {got_in_batch_order}"
-
-    schema = spark.read.parquet(feed_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_path)
+    stream = _ordered_feed(
+        spark, feed, "tag", range(_SIM_STREAM_BATCHES), _scratch(sf_dir, "sim_stream_feed")
     )
+    def _ingest(rows: DataFrame, t: int) -> DataFrame:
+        # batch-sized; consumed by BOTH the serve and the append —
+        # uncached each would re-run the feed-read DAG
+        batch = rows.select("vec_id", "e").cache()
+        qdf = batch.select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
+        out = ivfpq_serve_frame(spark, idx, qdf).withColumn(
+            "batch", F.lit(int(t)).cast("bigint")
+        )
+        out.write.mode("append").parquet(results)
+        ivfpq_append_frame(spark, idx, batch)
+        batch.unpersist()
+        return out
 
-    def _ingest(bdf: DataFrame, batch_id: int) -> None:
-        # bounded collect: ≤ _SIM_STREAM_BATCHES (= 4) distinct tags can
-        # ever share a trigger — one per staged feed file
-        tags = sorted(r.tag for r in bdf.select("tag").distinct().collect())
-        for t in tags:  # tag-ordered even if a trigger packs 2 files
-            batch = bdf.where(F.col("tag") == t).select("vec_id", "e")
-            # batch-sized; consumed by BOTH the serve and the append —
-            # uncached each would re-run the feed-read DAG
-            batch = batch.cache()
-            qdf = batch.select(
-                F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-            )
-            served = ivfpq_serve_frame(spark, idx, qdf)
-            served.withColumn("batch", F.lit(int(t)).cast("bigint")).write.mode(
-                "append"
-            ).parquet(results)
-            ivfpq_append_frame(spark, idx, batch)
-            batch.unpersist()
-
-    q = stream.writeStream.foreachBatch(_ingest).trigger(availableNow=True).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
-
-    back = spark.read.parquet(results)
+    schema = _drain(stream.writeStream, _ingest, tag_col="tag")
+    back = spark.read.schema(schema).parquet(results)
     return back.select(
         "batch", "query_id", "cell", "rank", "neighbor_id", "dist"
     )

@@ -37,11 +37,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import pyspark.sql.functions as F  # noqa: E402
 
 from dataframework_spark.operators.similarity import (  # noqa: E402
+    IVFPQ_LAYOUT,
     ivfpq_append,
-    ivfpq_index_paths,
     ivfpq_persist,
     ivfpq_serve,
 )
+from dataframework_spark.sources import index_store  # noqa: E402
 from dataframework_spark.registry import all_queries  # noqa: E402
 from dataframework_spark.session import get_spark  # noqa: E402
 
@@ -60,10 +61,9 @@ def main() -> None:
 
     print("== 1. build + persist (base snapshot, ~90% of the corpus) ==")
     ivfpq_persist(spark, SF_DIR, base, predicate=~delta_pred)
-    paths = ivfpq_index_paths(base)
-    n_codes = spark.read.parquet(paths["codes"]).count()
-    n_cells = len(spark.read.parquet(paths["centroids"]).collect())
-    print(f"  {n_codes} vectors coded into {n_cells} cells at {paths['codes']}")
+    n_codes = index_store.read(spark, IVFPQ_LAYOUT, base, "codes").count()
+    n_cells = index_store.read(spark, IVFPQ_LAYOUT, base, "centroids").count()
+    print(f"  {n_codes} vectors coded into {n_cells} cells under {base}")
 
     print("== 2. serve from the persisted index ==")
     for r in ivfpq_serve(spark, SF_DIR, base).orderBy("query_id", "rank").collect()[:5]:
@@ -71,7 +71,7 @@ def main() -> None:
 
     print("== 3. ingest the delta with the frozen quantizer ==")
     ivfpq_append(spark, SF_DIR, base, delta_pred)
-    n_after = spark.read.parquet(paths["codes"]).count()
+    n_after = index_store.read(spark, IVFPQ_LAYOUT, base, "codes").count()
     print(f"  codes: {n_codes} -> {n_after} (append-only; existing files untouched)")
 
     print("== 4. re-serve over base + delta ==")

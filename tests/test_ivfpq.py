@@ -29,9 +29,7 @@ def index(spark, sf_dir, tmp_path_factory):
 
 
 def _codes(spark, base):
-    from dataframework_spark.operators.similarity import ivfpq_index_paths
-
-    return spark.read.parquet(ivfpq_index_paths(base)["codes"])
+    return spark.read.parquet(os.path.join(base, "codes"))
 
 
 def test_append_codes_equal_build_codes(spark, sf_dir, index):
@@ -74,7 +72,6 @@ def test_malformed_vector_rejected(spark, index, path, vector):
     step; an append of it writes nothing (no NULL ``cid`` partition)."""
     from dataframework_spark.operators.similarity import (
         ivfpq_append_frame,
-        ivfpq_index_paths,
         ivfpq_serve_frame,
     )
 
@@ -88,6 +85,6 @@ def test_malformed_vector_rejected(spark, index, path, vector):
         else:
             qdf = bad.select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
             ivfpq_serve_frame(spark, index, qdf).collect()
-    codes_dir = ivfpq_index_paths(index)["codes"]
+    codes_dir = os.path.join(index, "codes")
     assert not any("__HIVE_DEFAULT_PARTITION__" in d for d in os.listdir(codes_dir))
     assert _codes(spark, index).count() == n_before

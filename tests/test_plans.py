@@ -523,7 +523,6 @@ def test_ivfpq_append_never_rewrites_existing_codes(spark, sf_dir):
 
     from dataframework_spark.operators.similarity import (
         ivfpq_append,
-        ivfpq_index_paths,
         ivfpq_persist,
     )
     from dataframework_spark.sources.io import _scratch
@@ -532,7 +531,7 @@ def test_ivfpq_append_never_rewrites_existing_codes(spark, sf_dir):
     shutil.rmtree(base, ignore_errors=True)
     delta_pred = F.col("vec_id") % 10 == 9
     ivfpq_persist(spark, sf_dir, base, predicate=~delta_pred)
-    codes = ivfpq_index_paths(base)["codes"]
+    codes = os.path.join(base, "codes")
 
     def _files():
         out = {}

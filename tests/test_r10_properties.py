@@ -155,16 +155,16 @@ def test_lsh_append_then_serve_equals_rebuild_then_serve(spark, tmp_path):
     index yields the SAME batch-2 verdicts as rebuilding the index from
     scratch over base ∪ batch-1-new."""
     from dataframework_spark.operators.dedup import (
-        _lsh_corpus_split,
         _lsh_delta1,
         _lsh_delta2,
+        lsh_corpus_split,
         lsh_index_append,
         lsh_index_build,
         lsh_serve,
     )
 
     sf_dir = "/root/testdata/sf0.001"
-    base_docs, f1, f2, _b = _lsh_corpus_split(spark, sf_dir)
+    base_docs, f1, f2, _b = lsh_corpus_split(spark, sf_dir)
     delta1 = _lsh_delta1(base_docs, f1)
 
     inc = str(tmp_path / "inc")
@@ -199,15 +199,15 @@ def test_lsh_new_set_is_append_stable(spark, tmp_path):
     record is the batch's decision of record; this test pins its
     stability across the append."""
     from dataframework_spark.operators.dedup import (
-        _lsh_corpus_split,
         _lsh_delta1,
+        lsh_corpus_split,
         lsh_index_append,
         lsh_index_build,
         lsh_serve,
     )
 
     sf_dir = "/root/testdata/sf0.001"
-    base_docs, f1, _, _b = _lsh_corpus_split(spark, sf_dir)
+    base_docs, f1, _, _b = lsh_corpus_split(spark, sf_dir)
     idx = str(tmp_path / "idx")
     lsh_index_build(spark, base_docs, idx)
     delta1 = _lsh_delta1(base_docs, f1)

@@ -51,21 +51,19 @@ def _built_appended_index(spark, tmp_path):
 
 
 def test_lsh_compaction_pays_file_debt_and_preserves_content(spark, tmp_path):
-    from dataframework_spark.operators.dedup import (
-        _parquet_file_count,
-        lsh_index_compact,
-        lsh_index_paths,
-    )
+    from dataframework_spark.operators.dedup import LSH_LAYOUT
+    from dataframework_spark.sources.index_store import compact, file_counts, read
 
     idx, _ = _built_appended_index(spark, tmp_path)
     cmp_idx = str(tmp_path / "idx_c")
-    paths, cpaths = lsh_index_paths(idx), lsh_index_paths(cmp_idx)
-    assert _parquet_file_count(paths["sigs"]) >= 3  # build + 2 appends
-    lsh_index_compact(spark, idx, cmp_idx)
-    assert _parquet_file_count(cpaths["sigs"]) == 1
-    for d in os.listdir(cpaths["bands"]):
-        if d.startswith("band="):
-            assert _parquet_file_count(os.path.join(cpaths["bands"], d)) == 1
+    paths = {t: os.path.join(idx, t) for t in LSH_LAYOUT}
+    cpaths = {t: os.path.join(cmp_idx, t) for t in LSH_LAYOUT}
+    assert sum(file_counts(LSH_LAYOUT, idx, "sigs").values()) >= 3  # build + 2 appends
+    compact(spark, LSH_LAYOUT, idx, cmp_idx)
+    assert sum(file_counts(LSH_LAYOUT, cmp_idx, "sigs").values()) == 1
+    bands = read(spark, LSH_LAYOUT, idx, "bands").select("band").distinct().collect()
+    for (band,) in bands:
+        assert file_counts(LSH_LAYOUT, cmp_idx, "bands").get(band, 0) == 1
     # content multiset-identical, both tables
     a = spark.read.parquet(paths["sigs"])
     b = spark.read.parquet(cpaths["sigs"]).select(a.columns)
@@ -76,11 +74,12 @@ def test_lsh_compaction_pays_file_debt_and_preserves_content(spark, tmp_path):
 
 
 def test_lsh_serve_identical_against_compacted_index(spark, tmp_path):
-    from dataframework_spark.operators.dedup import lsh_index_compact, lsh_serve
+    from dataframework_spark.operators.dedup import LSH_LAYOUT, lsh_serve
+    from dataframework_spark.sources.index_store import compact
 
     idx, extra = _built_appended_index(spark, tmp_path)
     cmp_idx = str(tmp_path / "idx_c2")
-    lsh_index_compact(spark, idx, cmp_idx)
+    compact(spark, LSH_LAYOUT, idx, cmp_idx)
     # batch: one base re-crawl, one appended-doc re-crawl, one fresh doc —
     # the appended re-crawl discriminates: it exists only via the appends
     batch = [
@@ -100,29 +99,29 @@ def test_lsh_serve_identical_against_compacted_index(spark, tmp_path):
 
 
 def test_frames_equal_is_falsifiable(spark):
-    from dataframework_spark.operators.dedup import _frames_equal
+    from dataframework_spark.sources.index_store import frames_equal
 
     a = spark.createDataFrame([(1, "x"), (2, "y")], "id bigint, s string")
-    assert _frames_equal(a, a)
+    assert frames_equal(a, a)
     dropped = a.where(F.col("id") != 2)
     mutated = a.withColumn("s", F.when(F.col("id") == 2, "z").otherwise(F.col("s")))
     dup = a.unionAll(a.where(F.col("id") == 1))  # multiset: row count matters
-    assert not _frames_equal(a, dropped)
-    assert not _frames_equal(a, mutated)
-    assert not _frames_equal(a, dup)
+    assert not frames_equal(a, dropped)
+    assert not frames_equal(a, mutated)
+    assert not frames_equal(a, dup)
 
 
 def test_ivfpq_n_centroids_knob(spark, sf_dir, tmp_path):
     from dataframework_spark.operators.similarity import (
         _TOPK,
-        ivfpq_index_paths,
+        IVFPQ_LAYOUT,
         ivfpq_persist,
         ivfpq_serve,
     )
 
     base = str(tmp_path / "ivfpq_k16")
     ivfpq_persist(spark, sf_dir, base, n_centroids=16)
-    paths = ivfpq_index_paths(base)
+    paths = {t: os.path.join(base, t) for t in IVFPQ_LAYOUT}
     assert spark.read.parquet(paths["centroids"]).count() == 16
     cells = spark.read.parquet(paths["codes"]).select("cid").distinct().count()
     assert cells == 16  # every cell non-empty on the gaussian corpus
@@ -270,33 +269,30 @@ def test_ivfpq_compaction_pays_file_debt_and_preserves_codes(spark, sf_dir, tmp_
     serve from the compacted index matches the uncompacted serve."""
     import os
 
-    from dataframework_spark.operators.dedup import (
-        _frames_equal,
-        _parquet_file_count,
-    )
     from dataframework_spark.operators.similarity import (
+        IVFPQ_LAYOUT,
         ivfpq_append,
-        ivfpq_index_compact,
-        ivfpq_index_paths,
         ivfpq_persist,
         ivfpq_serve,
     )
+    from dataframework_spark.sources.index_store import compact, file_counts, frames_equal, read
 
     delta = F.col("vec_id") % 10 == 9
     base, cmp_base = str(tmp_path / "idx"), str(tmp_path / "idx_c")
     ivfpq_persist(spark, sf_dir, base, predicate=~delta)
     ivfpq_append(spark, sf_dir, base, delta & (F.col("vec_id") % 2 == 0))
     ivfpq_append(spark, sf_dir, base, delta & (F.col("vec_id") % 2 == 1))
-    ivfpq_index_compact(spark, base, cmp_base)
-    paths, cpaths = ivfpq_index_paths(base), ivfpq_index_paths(cmp_base)
-    cells = [d for d in os.listdir(cpaths["codes"]) if d.startswith("cid=")]
+    compact(spark, IVFPQ_LAYOUT, base, cmp_base)
+    paths = {t: os.path.join(base, t) for t in IVFPQ_LAYOUT}
+    cpaths = {t: os.path.join(cmp_base, t) for t in IVFPQ_LAYOUT}
+    cells = read(spark, IVFPQ_LAYOUT, base, "codes").select("cid").distinct().collect()
     assert cells
     assert all(
-        _parquet_file_count(os.path.join(cpaths["codes"], d)) == 1 for d in cells
+        file_counts(IVFPQ_LAYOUT, cmp_base, "codes").get(c, 0) == 1 for (c,) in cells
     )
     a = spark.read.parquet(paths["codes"]).select("vec_id", "codes")
     b = spark.read.parquet(cpaths["codes"]).select("vec_id", "codes")
-    assert _frames_equal(a, b)
+    assert frames_equal(a, b)
     orig = {tuple(r) for r in ivfpq_serve(spark, sf_dir, base).collect()}
     comp = {tuple(r) for r in ivfpq_serve(spark, sf_dir, cmp_base).collect()}
     assert orig == comp and len(orig) > 0

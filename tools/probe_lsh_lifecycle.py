@@ -51,18 +51,19 @@ def _copy(col: str) -> F.Column:
 def probe(spark, sf_dir: str, m: int, scratch: str) -> dict:
     from dataframework_spark.operators.dedup import (
         _LSH_MATCH,
-        _lsh_corpus_split,
+        _MH_K,
+        LSH_LAYOUT,
         _lsh_delta1,
         _lsh_nmatch,
-        _MH_K,
+        lsh_corpus_split,
         lsh_index_build,
-        lsh_index_paths,
         lsh_serve,
         minhash_signature_frame,
     )
+    from dataframework_spark.sources import index_store
 
     r: dict = {}
-    base_docs, f1, _, _b = _lsh_corpus_split(spark, sf_dir)
+    base_docs, f1, _, _b = lsh_corpus_split(spark, sf_dir)
     path = os.path.join(scratch, f"lshidx_m{m}")
 
     t0 = time.perf_counter()
@@ -79,9 +80,8 @@ def probe(spark, sf_dir: str, m: int, scratch: str) -> dict:
 
     # cross-copy dup evidence must be exactly zero: recompute the
     # verified (delta doc, index doc) match pairs and decompose by copy
-    paths = lsh_index_paths(path)
-    xsig = spark.read.parquet(paths["sigs"])
-    xbands = spark.read.parquet(paths["bands"])
+    xsig = index_store.read(spark, LSH_LAYOUT, path, "sigs")
+    xbands = index_store.read(spark, LSH_LAYOUT, path, "bands")
     from dataframework_spark.operators.dedup import _lsh_band_frame
 
     dbands = _lsh_band_frame(dsig)

@@ -81,10 +81,11 @@ def build_corpus(spark, m: int) -> str:
 
 def probe(spark, sf_dir: str, m: int, scratch: str) -> dict:
     from dataframework_spark.operators.similarity import (
-        ivfpq_index_paths,
+        IVFPQ_LAYOUT,
         ivfpq_persist,
         ivfpq_serve,
     )
+    from dataframework_spark.sources import index_store
 
     r: dict = {}
     for regime, k in (("fixed8", 8), ("scaledk", 8 * m)):
@@ -111,7 +112,7 @@ def probe(spark, sf_dir: str, m: int, scratch: str) -> dict:
         served = ivfpq_serve(spark, sf_dir, path).collect()
         serve_wall = round(time.perf_counter() - t0, 3)
 
-        codes = spark.read.parquet(ivfpq_index_paths(path)["codes"])
+        codes = index_store.read(spark, IVFPQ_LAYOUT, path, "codes")
         sizes = codes.groupBy("cid").agg(F.count(F.lit(1)).alias("n"))
         stats = sizes.agg(
             F.count(F.lit(1)).alias("cells"),
