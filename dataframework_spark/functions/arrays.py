@@ -53,6 +53,20 @@ def shingles_sql(toks_sql: str, n: int = 3) -> str:
     )
 
 
+def ordered_pairs(arr: str, a: str, b: str) -> Column:
+    """Every ``i < j`` pair of the array column ``arr`` as
+    ``array<struct<a, b>>``, expanded inside the row (nested
+    ``sequence``/``transform``: no join, no exchange).  On a sorted,
+    distinct array each pair comes out once with ``a < b``.  Callers
+    explode it over rows with ``size(arr) >= 2``: at size 1 Spark's
+    ``sequence(1, 0)`` runs descending."""
+    return F.expr(
+        f"flatten(transform(sequence(1, size({arr}) - 1), "
+        f"i -> transform(sequence(i + 1, size({arr})), "
+        f"j -> struct(element_at({arr}, i) as {a}, element_at({arr}, j) as {b}))))"
+    )
+
+
 def duck_shingles_sql(toks_sql: str, n: int = 3) -> str:
     """DuckDB twin of :func:`shingles_sql` (1-based list indexing)."""
     parts = " || ' ' || ".join(f"({toks_sql})[i + {k}]" for k in range(n))

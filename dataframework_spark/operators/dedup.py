@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -41,6 +41,7 @@ from dataframework_spark.functions.arrays import (
     duck_cosine_sql,
     duck_shingles_sql,
     duck_tid_sql,
+    ordered_pairs,
     shingles_sql,
     tid_sql,
     tokens,
@@ -217,20 +218,18 @@ def dedup_ngram_jaccard(
 
 # 16 universal-hash permutations h_i(x) = (a_i·x + b_i) mod P, banded 4×4.
 # Fixed seed ⇒ identical constants are baked into the Spark plan AND the
-# oracle SQL, so both engines compute bit-identical signatures.
+# oracle SQL, so both engines compute bit-identical signatures.  Each
+# MinHash-LSH step is declared once per engine below and shared by the
+# batch query, the persisted index (build, serve, append, compact) and the
+# streamed ingest: the shingle frame, the signature, the band keys and the
+# exact-text keeper; the DuckDB twins are ``lsh_sig_sql``,
+# ``lsh_bands_sql`` and ``keeper_ctes``.
 _MH_P = 2_147_483_647
 _MH_K = 16
 _MH_BANDS = 4
 _MH_ROWS = _MH_K // _MH_BANDS
 _rng = random.Random(42)
 _MH_PARAMS = [(_rng.randrange(1, _MH_P), _rng.randrange(0, _MH_P)) for _ in range(_MH_K)]
-
-
-def _mh_exprs_spark() -> list[str]:
-    return [
-        f"min(pmod({a} * cast(tid as bigint) + {b}, {_MH_P})) as h{i}"
-        for i, (a, b) in enumerate(_MH_PARAMS)
-    ]
 
 
 def _mh_exprs_duck() -> str:
@@ -241,28 +240,120 @@ def _mh_exprs_duck() -> str:
 
 
 def _band_cols() -> list[str]:
+    """The band key of band i: its 4 signature slots joined by commas
+    (the same text in both dialects)."""
     return [
         "concat_ws(',', " + ", ".join(f"h{band * _MH_ROWS + r}" for r in range(_MH_ROWS)) + ")"
         for band in range(_MH_BANDS)
     ]
 
 
+def _text_digest() -> Column:
+    """``xh``: the exact-text fingerprint (md5 of the UTF-8 bytes) that
+    :func:`_mark_keepers` groups on."""
+    return F.md5(F.encode(F.col("text"), "UTF-8")).alias("xh")
+
+
+def _mark_keepers(frame: DataFrame) -> DataFrame:
+    """Adds ``kid``, the min doc_id among the rows sharing ``xh``: each
+    exact-text group keeps its ``doc_id = kid`` row and decides the other
+    members by digest alone.  One ``xh``-keyed exchange of the narrow rows
+    ``frame`` holds (the text never shuffles); a hot template text lands as
+    one linear partition, never as a pair blowup."""
+    return frame.withColumn("kid", F.min("doc_id").over(Window.partitionBy("xh")))
+
+
+def _star_edges(marked: DataFrame, score: Column) -> DataFrame:
+    """One (keeper, member) edge per non-keeper row of a
+    :func:`_mark_keepers` frame: linear in the group size where all-pairs
+    would be C(k, 2).  Identical text ⇒ identical signature, so the keeper
+    meets every bucket a member would have: components under
+    ``dedup_clusters`` are unchanged."""
+    return marked.where("doc_id <> kid").select(
+        F.col("kid").alias("doc_a"), F.col("doc_id").alias("doc_b"), score
+    )
+
+
+def _shingle_frame(docs: DataFrame, with_xh: bool) -> DataFrame:
+    """(doc_id, text) → (doc_id[, xh], sh): each doc's distinct word
+    3-gram shingles.  ``toks`` is a column of its own so the shingle
+    lambda reads it instead of re-tokenizing per shingle."""
+    return docs.withColumn("toks", tokens()).select(
+        "doc_id", *([_text_digest()] if with_xh else []), F.expr(shingles_sql("toks")).alias("sh")
+    )
+
+
+def _signatures(s: DataFrame, *keep: str) -> DataFrame:
+    """(keep..., sh) → (keep..., nsh, h0..h15): ``nsh`` shingles and the 16
+    MinHash minima over the doc's md5-prefix term ids (``tid_sql``; no
+    dictionary, no global sort).  Each minimum is a per-row
+    ``array_min(transform(...))``: no explode, no exchange.  The term-id
+    pass runs once per doc: CollapseProject does not inline the non-cheap
+    ``tids`` alias that 17 expressions read.  A doc with no shingles has
+    ``nsh = 0`` and NULL minima; DuckDB's unnest gives it no row."""
+    tids = s.select(*keep, F.expr(f"transform(sh, t -> {tid_sql('t', _MH_P)})").alias("tids"))
+    return tids.select(
+        *keep,
+        F.size("tids").alias("nsh"),
+        *[
+            F.expr(f"array_min(transform(tids, t -> pmod({a} * t + {b}, {_MH_P})))").alias(f"h{i}")
+            for i, (a, b) in enumerate(_MH_PARAMS)
+        ],
+    )
+
+
+def _lsh_band_frame(sig: DataFrame) -> DataFrame:
+    """(doc_id, h0..h15) → (doc_id, band, bk): one row per band, from one
+    ``posexplode`` pass over the signature rows."""
+    return sig.select(
+        "doc_id",
+        F.posexplode(F.array(*[F.expr(b) for b in _band_cols()])).alias("band", "bk"),
+    )
+
+
+def lsh_sig_sql(src: str) -> str:
+    """DuckDB twin of :func:`_signatures` over a (doc_id, text) source:
+    (doc_id, h0..h15), docs without shingles dropped."""
+    return (
+        f"SELECT doc_id, {_mh_exprs_duck()} FROM ("
+        f"SELECT doc_id, {duck_tid_sql('shingle', _MH_P)} AS tid FROM ("
+        f"SELECT doc_id, unnest({duck_shingles_sql('toks')}) AS shingle FROM ("
+        f"SELECT doc_id, {DUCK_TOKENS_SQL} AS toks FROM {src}))) GROUP BY doc_id"
+    )
+
+
+def lsh_bands_sql(sig: str) -> str:
+    """DuckDB twin of :func:`_lsh_band_frame`."""
+    return " UNION ALL ".join(
+        f"SELECT doc_id, {band} AS bk, {i} AS band FROM {sig}"
+        for i, band in enumerate(_band_cols())
+    )
+
+
+def keeper_ctes(p: str, src: str) -> str:
+    """DuckDB twin of :func:`_mark_keepers` over a (doc_id, text) source:
+    ``{p}_d`` (doc_id, text, xh), ``{p}_k`` (xh, kid), ``{p}_reps``
+    (doc_id, text), one keeper row per distinct text, and ``{p}_dup``
+    (kid, doc_id), every other member with its keeper."""
+    return f"""{p}_d AS (SELECT doc_id, text, md5(text) AS xh FROM {src}),
+    {p}_k AS (SELECT xh, MIN(doc_id) AS kid FROM {p}_d GROUP BY xh),
+    {p}_reps AS (
+      SELECT d.doc_id, d.text FROM {p}_d d
+      JOIN {p}_k k ON k.xh = d.xh AND k.kid = d.doc_id),
+    {p}_dup AS (
+      SELECT k.kid, d.doc_id FROM {p}_d d
+      JOIN {p}_k k ON k.xh = d.xh WHERE d.doc_id <> k.kid)"""
+
+
 @register(
     "dedup_minhash_lsh",
     oracle=f"""
-    WITH d0 AS (SELECT doc_id, md5(text) AS xh, {DUCK_TOKENS_SQL} AS toks
-                FROM documents),
-    k0 AS (SELECT xh, MIN(doc_id) AS kid FROM d0 GROUP BY xh),
-    t AS (SELECT d.doc_id, d.toks FROM d0 d
-          JOIN k0 ON k0.xh = d.xh AND k0.kid = d.doc_id),
+    WITH {keeper_ctes('x', 'documents')},
+    t AS (SELECT doc_id, {DUCK_TOKENS_SQL} AS toks FROM x_reps),
     s AS (SELECT doc_id, {duck_shingles_sql('toks')} AS sh FROM t),
     sz AS (SELECT doc_id, len(sh) AS n FROM s),
-    feat AS (SELECT doc_id, unnest(sh) AS shingle FROM s),
-    ft AS (SELECT doc_id, {duck_tid_sql('shingle', _MH_P)} AS tid FROM feat),
-    sig AS (SELECT doc_id, {_mh_exprs_duck()} FROM ft GROUP BY doc_id),
-    bands AS (
-      {" UNION ALL ".join(f"SELECT doc_id, {band} AS bk, {i} AS band FROM sig" for i, band in enumerate(_band_cols()))}
-    ),
+    sig AS ({lsh_sig_sql('x_reps')}),
+    bands AS ({lsh_bands_sql('sig')}),
     cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a JOIN bands b ON a.band = b.band AND a.bk = b.bk AND a.doc_id < b.doc_id),
@@ -275,8 +366,7 @@ def _band_cols() -> list[str]:
     SELECT doc_a, doc_b, ROUND(inter::DOUBLE / (tot - inter), 4) AS jaccard
     FROM ver WHERE inter::DOUBLE / (tot - inter) >= {_JACCARD_THRESHOLD}
     UNION ALL
-    SELECT k0.kid AS doc_a, d.doc_id AS doc_b, CAST(1.0 AS DOUBLE) AS jaccard
-    FROM d0 d JOIN k0 ON k0.xh = d.xh WHERE d.doc_id <> k0.kid
+    SELECT kid AS doc_a, doc_id AS doc_b, CAST(1.0 AS DOUBLE) AS jaccard FROM x_dup
     """,
 )
 def dedup_minhash_lsh(
@@ -293,108 +383,59 @@ def dedup_minhash_lsh(
     the banding catches a pair with p ≈ 0.986; both engines compute the
     same signatures, so the oracle is still exact.
 
-    Term ids come straight from a cross-dialect md5-prefix hash
-    (``tid_sql``) — no shingle dictionary, no global ``row_number`` sort
-    (the r1 single-partition scale-killer).  Signature construction is
-    fully NARROW since the r12 optimization round: per-doc ``array_min``
-    over the term-id array (the ``minhash_signature_frame`` form) — the
-    former explode + groupBy(doc_id) exchange is gone, and the only
-    corpus-sized exchanges left are the xh window (8-byte term ids, not
-    shingle strings) and the verification joins.
+    Signatures are narrow per-doc array folds (:func:`_signatures`), so
+    the only corpus-sized exchanges are the ``xh`` keeper window (8-byte
+    signature slots, not shingle strings) and the verification joins.
 
-    ``precollapse`` (default on — the REGISTERED semantics since r12,
-    the ``lsh_serve`` hardening ported to the batch emitter per VERDICT
-    r11 #5): docs sharing ``md5(text)`` are folded to their min-doc_id
-    keeper BEFORE banding, and each exact-duplicate group emits LINEAR
-    (keeper, member) star edges at jaccard 1.0 instead of the C(k,2)
-    all-pairs expansion.  Connectivity-preserving for ``dedup_clusters``
-    by construction — identical text ⇒ identical signature ⇒ the keeper
-    meets every bucket the member would have — so components are
-    unchanged while a 100k-copy boilerplate flood costs one bucket entry
-    + 100k star rows instead of a single-task 5×10⁹-struct
-    ``collect_set`` array.  Star edges are digest-decided, so they also
-    cover exact-dup docs too short to shingle.  ``precollapse=False``
-    keeps the pre-r12 exact-all-pairs form (eval/truth tier).
+    ``precollapse`` (default; the registered semantics): docs sharing
+    ``md5(text)`` fold to their min-doc_id keeper BEFORE banding, and each
+    exact-duplicate group emits linear (keeper, member) star edges at
+    jaccard 1.0 (:func:`_star_edges`) instead of the C(k,2) all-pairs
+    expansion.  A 100k-copy boilerplate flood then costs one bucket entry
+    + 100k star rows instead of a single-task 5×10⁹-struct ``collect_set``
+    array.  Star edges are digest-decided, so they also cover exact-dup
+    docs too short to shingle.  ``precollapse=False`` keeps the exact
+    all-pairs form (eval/truth tier).
 
     ``docs`` (optional): a pre-filtered (doc_id, text) frame — used by
     ``dedup_lsh_eval(sample_frac=...)`` to price the banding on a sample.
 
-    ``shingles`` (optional, r13 opt — guide §1.2): a pre-built, cached
-    (doc_id, xh, sh) shingle frame.  ``dedup_lsh_eval`` runs BOTH this
-    query and the exact-Jaccard truth tier over the same corpus; without
-    sharing, each arm re-tokenized and re-shingled every document from
-    scratch (VERDICT r12 #3)."""
+    ``shingles`` (optional): a pre-built, cached (doc_id, xh, sh)
+    :func:`_shingle_frame`.  ``dedup_lsh_eval`` runs BOTH this query and
+    the exact-Jaccard truth tier over the same corpus and shares one, so
+    the corpus is tokenized and shingled once."""
     if docs is None:
         docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
         # single-split local scan → spread CPU-bound shingling across cores
         docs = docs.repartition(spark.sparkContext.defaultParallelism)
-    # Per-doc signature = min over the doc's own term ids — a narrow array
-    # expression (docs with no shingles produced no rows under the old
-    # explode, hence the ``nsh`` filter).  The md5 term-id pass stays
-    # single-evaluation: CollapseProject refuses to inline the non-cheap
-    # ``tids`` alias referenced 17× (the ``minhash_signature_frame``
-    # guarantee).
-    sig_cols = [
-        F.expr(f"array_min(transform(tids, t -> pmod({a} * t + {b}, {_MH_P})))").alias(
-            f"h{i}"
-        )
-        for i, (a, b) in enumerate(_MH_PARAMS)
-    ]
     star = None
     if precollapse:
-        # r12 opt (guide §2.3 / §8: decide with small rows, keep heavy
-        # payloads out of exchanges).  The pre-r12-opt shape shuffled the
-        # shingle-STRING sets through the xh window; the first r12 cut
-        # moved 8-byte term-id ARRAYS instead (~3× lighter).  Now the
-        # 16-slot signature is computed per doc BELOW the window —
-        # signatures of exact-dup texts are identical by construction, so
-        # keeper selection loses nothing — and the xh exchange moves
-        # (doc_id, xh, nsh, h0..h15): ~170 B/doc instead of the
-        # ~8·|shingles| B/doc tids array, another ~5-8× cut.  The wasted
-        # work is 16 ``array_min``s per DUPLICATE doc (whose keeper
-        # recomputes the same signature) — trivial next to the md5 term-id
-        # pass, which already ran per doc in every previous shape.
         if shingles is not None:
             s = shingles
         else:
-            s = docs.withColumn("toks", tokens()).select(
-                "doc_id",
-                F.md5(F.encode(F.col("text"), "UTF-8")).alias("xh"),
-                F.expr(shingles_sql("toks")).alias("sh"),
-            )
+            s = _shingle_frame(docs, with_xh=True)
             s.cache()  # verification + the signature branch both derive from it
-        sigall = s.select(
-            "doc_id", "xh", F.expr(f"transform(sh, t -> {tid_sql('t', _MH_P)})").alias("tids")
-        ).select("doc_id", "xh", F.size("tids").alias("nsh"), *sig_cols)
-        marked = sigall.withColumn("kid", F.min("doc_id").over(Window.partitionBy("xh")))
+        # Signatures are computed per doc BELOW the keeper window:
+        # exact-dup texts have identical signatures by construction, so
+        # keeper selection loses nothing, and the xh exchange moves
+        # (doc_id, xh, nsh, h0..h15), ~170 B/doc, instead of a per-doc
+        # shingle or term-id array.  The cost is 16 ``array_min``s per
+        # duplicate doc, trivial next to the md5 term-id pass.
+        marked = _mark_keepers(_signatures(s, "doc_id", "xh"))
         marked.cache()  # both branches (keeper signatures + star edges) derive from it
         sig = marked.where("doc_id = kid").where(F.col("nsh") > 0).select(
             "doc_id", *[f"h{i}" for i in range(_MH_K)]
         )
-        star = marked.where("doc_id <> kid").select(
-            F.col("kid").alias("doc_a"),
-            F.col("doc_id").alias("doc_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
+        star = _star_edges(marked, F.lit(1.0).alias("jaccard"))
         s = s.select("doc_id", "sh")
     else:
         if shingles is not None:
             s = shingles.select("doc_id", "sh")
         else:
-            s = docs.withColumn("toks", tokens()).select(
-                "doc_id", F.expr(shingles_sql("toks")).alias("sh")
-            )
+            s = _shingle_frame(docs, with_xh=False)
             s.cache()  # reused: signature branch AND verification
-        keep = s.select(
-            "doc_id", F.expr(f"transform(sh, t -> {tid_sql('t', _MH_P)})").alias("tids")
-        )
-        sig = keep.where(F.size("tids") > 0).select("doc_id", *sig_cols)
-    # one posexplode pass replaces the former 4-arm union over a cached
-    # signature table (same rows: (doc_id, band, bk))
-    bands = sig.select(
-        "doc_id",
-        F.posexplode(F.array(*[F.expr(b) for b in _band_cols()])).alias("band", "bk"),
-    )
+        sig = _signatures(s, "doc_id").where(F.col("nsh") > 0).drop("nsh")
+    bands = _lsh_band_frame(sig)
     # Candidate generation is NOT a self-join: the band table is
     # CORPUS-sized, and a self-join invites Catalyst to broadcast a side
     # whose columnar size estimate (~tens of MB) hides a 10× JVM build
@@ -402,20 +443,15 @@ def dedup_minhash_lsh(
     # tools/scale_probe.py.  Instead group each (band, bucket) and expand
     # doc-id pairs NARROWLY inside the bucket (same pattern as
     # join_basket_affinity): one exchange, no join, nothing to broadcast.
-    # Bucket pair expansion is quadratic in bucket size — but a mega
-    # bucket is a genuine duplicate cluster, whose pairs every candidate
-    # scheme must emit anyway.
+    # Bucket pair expansion is quadratic in bucket size and uncapped: a
+    # mega bucket is a genuine duplicate cluster, whose pairs every
+    # candidate scheme must emit anyway.
     buckets = bands.groupBy("band", "bk").agg(
         F.array_sort(F.collect_set("doc_id")).alias("ids")
     )
-    pair_expr = F.expr(
-        "flatten(transform(sequence(1, size(ids) - 1), "
-        "i -> transform(sequence(i + 1, size(ids)), "
-        "j -> struct(element_at(ids, i) as doc_a, element_at(ids, j) as doc_b))))"
-    )
     cand = (
         buckets.where(F.size("ids") >= 2)
-        .select(F.explode(pair_expr).alias("p"))
+        .select(F.explode(ordered_pairs("ids", "doc_a", "doc_b")).alias("p"))
         .select("p.doc_a", "p.doc_b")
         .distinct()
     )
@@ -424,13 +460,11 @@ def dedup_minhash_lsh(
     # choose here broadcasts the shingle-set side from a stale small
     # estimate (5.0-6.6 s at sf0.1, driver OOM at 100x), while
     # shuffle_hash holds 2.7-3.4 s locally and completes at 100x.  The
-    # shingle sets are the data-sized side at any real scale.
-    # r12 opt (guide §2.3): the verify exchange moves 8-byte xxhash64
-    # shingle ids, not the ~20-25 B shingle strings (~3× fewer bytes per
-    # side), and the exact `array_intersect` compares longs.  The md5
-    # term-id signature math is untouched (oracle-matched); collision
-    # odds for the hashed intersect are the repo's accepted
-    # |shingles|²/2⁶⁵ argument.
+    # shingle sets are the data-sized side at any real scale.  The verify
+    # exchange moves 8-byte xxhash64 shingle ids, not the ~20-25 B
+    # shingle strings, and the exact `array_intersect` compares longs
+    # (collision odds: the repo's accepted |shingles|²/2⁶⁵ argument); the
+    # signatures keep the oracle-matched md5 term ids.
     sa = s.select(
         F.col("doc_id").alias("doc_a"),
         F.expr("transform(sh, x -> xxhash64(x))").alias("sh_a"),
@@ -604,12 +638,8 @@ def simhash64_signatures(
 @register(
     "dedup_simhash_hamming",
     oracle=f"""
-    WITH d0 AS (SELECT doc_id, md5(text) AS xh, {DUCK_TOKENS_SQL} AS toks
-                FROM documents),
-    k0 AS (SELECT xh, MIN(doc_id) AS kid FROM d0 GROUP BY xh),
-    t AS (SELECT d.doc_id, d.toks FROM d0 d
-          JOIN k0 ON k0.xh = d.xh AND k0.kid = d.doc_id),
-    feat AS (SELECT doc_id, unnest(toks) AS token FROM t),
+    WITH {keeper_ctes('x', 'documents')},
+    feat AS (SELECT doc_id, unnest({DUCK_TOKENS_SQL}) AS token FROM x_reps),
     bitsum AS (SELECT doc_id, {_sh64_duck_bitsums()} FROM feat GROUP BY doc_id),
     sig AS (SELECT doc_id, {_sh64_sig_sql('duck')} AS sig FROM bitsum)
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -617,8 +647,7 @@ def simhash64_signatures(
     FROM sig a JOIN sig b ON a.doc_id < b.doc_id
     WHERE bit_count(xor(a.sig, b.sig)) <= {_SH64_R}
     UNION ALL
-    SELECT k0.kid AS doc_a, d.doc_id AS doc_b, CAST(0 AS INT) AS hamming
-    FROM d0 d JOIN k0 ON k0.xh = d.xh WHERE d.doc_id <> k0.kid
+    SELECT kid AS doc_a, doc_id AS doc_b, CAST(0 AS INT) AS hamming FROM x_dup
     """,
 )
 def dedup_simhash_hamming(
@@ -632,20 +661,18 @@ def dedup_simhash_hamming(
     of `dedup_simhash` (Manku, Jain & Sarma, WWW 2007: simhash dedup at
     web scale runs exactly this shape at f = 64, k = 3).
 
-    ``precollapse`` (default on — the REGISTERED semantics since r12,
-    VERDICT r11 #5, the ``dedup_minhash_lsh`` port): exact-duplicate
-    docs fold to their min-doc_id keeper by ``md5(text)`` before the
-    band self-join, and each group emits linear (keeper, member) star
-    edges at hamming 0 instead of C(k,2) all-pairs.  Identical text ⇒
-    identical signature, so the keeper inherits every band bucket the
-    members would have hit — components under ``dedup_clusters``-style
-    resolution are unchanged, and an exact-dup flood can no longer
-    square the candidate join.  The digest frames are narrow
-    (doc_id + 16-byte hash); the signature join that drops the members
-    is on doc_id.  ``precollapse=False`` keeps the pre-r12 form.
+    ``precollapse`` (default; the registered semantics, as in
+    ``dedup_minhash_lsh``): exact-duplicate docs fold to their
+    min-doc_id keeper by ``md5(text)`` before the band self-join, and
+    each group emits linear (keeper, member) star edges at hamming 0
+    (:func:`_star_edges`) instead of C(k,2) all-pairs, so an exact-dup
+    flood can no longer square the candidate join.  The digest frames
+    are narrow (doc_id + 16-byte hash); the signature join that drops
+    the members is on doc_id.  ``precollapse=False`` keeps the
+    all-pairs form.
 
-    Why this exists next to the 16-bit bucket version: the r9
-    token-rename probe measured the 16-bit key's n²/2¹⁶ birthday pair
+    Why this exists next to the 16-bit bucket version: the token-rename
+    probe measured the 16-bit key's n²/2¹⁶ birthday pair
     mass directly (SCALEPROBE_TEXTMUT_r9.json) — at 64 bits that term is
     ~n²/2⁶⁴ ≈ 0, so every emitted pair is token-distribution signal,
     not key-width accident.  Equal-width SQL on both engines keeps the
@@ -670,22 +697,8 @@ def dedup_simhash_hamming(
     if precollapse:
         if docs is None:
             docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-        xh0 = docs.select(
-            "doc_id", F.md5(F.encode(F.col("text"), "UTF-8")).alias("xh")
-        )
-        # r12 opt (guide §2.4): the keeper id is a window-min over the
-        # digest — ONE xh-keyed exchange of the narrow (doc_id, xh) frame,
-        # where the former groupBy + shuffle_hash join-back shape paid the
-        # same exchange twice more (k0 build + join) and re-scanned docs
-        # for the second side.  Identical kid per row by definition.
-        mem = xh0.withColumn(
-            "kid", F.min("doc_id").over(Window.partitionBy("xh"))
-        ).cache()  # star + reps
-        star = mem.where(F.col("doc_id") != F.col("kid")).select(
-            F.col("kid").alias("doc_a"),
-            F.col("doc_id").alias("doc_b"),
-            F.lit(0).cast("int").alias("hamming"),
-        )
+        mem = _mark_keepers(docs.select("doc_id", _text_digest())).cache()  # star + reps
+        star = _star_edges(mem, F.lit(0).cast("int").alias("hamming"))
         reps = mem.where(F.col("doc_id") == F.col("kid")).select("doc_id")
         sig = sig.join(reps.hint("shuffle_hash"), "doc_id")
     sig = sig.cache()  # both join sides
@@ -1082,22 +1095,10 @@ def dedup_lsh_eval(
     if sample_frac < 1.0:
         docs = docs.where(_doc_sample_pred(sample_frac, "lsheval"))
     docs = docs.repartition(spark.sparkContext.defaultParallelism)
-    # r13 opt (guide §1.2; VERDICT r12 #3): BOTH tiers consume the same
-    # per-doc shingle sets, but each arm used to re-tokenize and
-    # re-shingle the whole corpus from scratch — the pair lists were
-    # cached, the corpus-sized scan+shingle work was not.  One shared
-    # (doc_id, xh, sh) frame is built and cached here and handed to both
-    # arms (`toks` materialized before the shingle transform — the HOF
-    # lambda re-evaluation discipline).
-    shared = (
-        docs.withColumn("toks", tokens())
-        .select(
-            "doc_id",
-            F.md5(F.encode(F.col("text"), "UTF-8")).alias("xh"),
-            F.expr(shingles_sql("toks")).alias("sh"),
-        )
-        .cache()
-    )
+    # BOTH tiers consume the same per-doc shingle sets: one shared, cached
+    # (doc_id, xh, sh) frame spares each arm its own corpus-sized
+    # tokenize + shingle pass.
+    shared = _shingle_frame(docs, with_xh=True).cache()
     # r12 opt (guide §1.2 "don't compute things you throw away"): each pair
     # list feeds TWO consumers (its own count + the hits join), and Catalyst
     # does not dedupe identical logical subtrees — only physically identical
@@ -1920,53 +1921,18 @@ LSH_LAYOUT: index_store.Layout = {
 
 def minhash_signature_frame(docs: DataFrame, with_xh: bool = False) -> DataFrame:
     """(doc_id, text) → (doc_id, h0..h15) with ZERO exchanges: the
-    min-hash of a doc is a per-row array fold, so instead of the
-    explode → groupBy(doc_id) shuffle of the original pipeline the 16
-    signature components are ``array_min(transform(...))`` expressions
-    over the shingle-tid array — whole-stage codegen, nothing leaves
-    the row.  Measured 2.4× faster at sf0.1 AND the 100 TB win is
-    structural: signature building was the lifecycle's only
-    corpus-sized shuffle, now it is a narrow map feeding the band
-    write.  Values are identical to the exploded form (same tids, same
-    mins — the DuckDB oracles keep the unnest + GROUP BY formulation,
-    so the equivalence is hash-proven on every lifecycle query).
-
-    Docs with no shingles (< 3 tokens) are dropped, matching the
-    exploded form (no rows survive the unnest on either engine).
-
-    ``with_xh=True`` additionally carries ``xh = md5(text)`` through the
-    same single map pass — the exact-text fingerprint :func:`lsh_serve`'s
-    pre-collapse groups on (per-row hash of a column already in hand,
-    so the extra cost is a digest, not a scan)."""
+    :func:`_signatures` of every doc with ≥ 3 tokens.  Shorter docs have
+    no shingles and get no signature on either engine.  ``with_xh=True``
+    also carries ``xh`` (:func:`_text_digest`) through the same map pass,
+    for :func:`lsh_serve`'s exact pre-collapse."""
     # the no-shingles filter is on the cheap TOKEN count, not on the
     # shingle array: Catalyst pushes deterministic filters below the
     # caller's repartition, and a pushed filter re-evaluates its whole
     # expression on the pre-exchange (single-split) scan — with the
     # shingle form that serialized the entire shingling pass onto one
     # task (seen in .explain and in a 2× wall regression)
-    extra = (
-        [F.md5(F.encode(F.col("text"), "UTF-8")).alias("xh")] if with_xh else []
-    )
-    s = (
-        docs.where(F.size(tokens()) >= 3)
-        .withColumn("toks", tokens())
-        .select("doc_id", *extra, F.expr(shingles_sql("toks")).alias("sh"))
-    )
-    tid_arr = f"transform(sh, x -> {tid_sql('x', _MH_P)})"
-    mins = [
-        f"array_min(transform(tid_arr, t -> pmod({a} * t + {b}, {_MH_P}))) AS h{i}"
-        for i, (a, b) in enumerate(_MH_PARAMS)
-    ]
-    keep = ["doc_id"] + (["xh"] if with_xh else [])
-    return s.select(*keep, F.expr(tid_arr).alias("tid_arr")).selectExpr(*keep, *mins)
-
-
-def _lsh_band_frame(sig: DataFrame) -> DataFrame:
-    bands = None
-    for i, band in enumerate(_band_cols()):
-        piece = sig.select("doc_id", F.expr(band).alias("bk"), F.lit(i).alias("band"))
-        bands = piece if bands is None else bands.unionByName(piece)
-    return bands
+    s = _shingle_frame(docs.where(F.size(tokens()) >= 3), with_xh)
+    return _signatures(s, "doc_id", *(["xh"] if with_xh else [])).drop("nsh")
 
 
 def _lsh_index_write(sig: DataFrame, base: str, mode: str) -> None:
@@ -1990,27 +1956,22 @@ def lsh_index_append(spark: SparkSession, sigs: DataFrame, base: str) -> None:
     _lsh_index_write(sigs, base, "append")
 
 
-_LSH_PAIR_EXPR = (
-    "flatten(transform(sequence(1, size(ids) - 1), "
-    "i -> transform(sequence(i + 1, size(ids)), "
-    "j -> struct(element_at(ids, i) as edoc, element_at(ids, j) as ddoc))))"
-)
-
-# Within-batch bucket-expansion cap (r10 VERDICT "What's wrong" #2): the
-# serve path needs per-doc VERDICTS, not the pair list, so a bucket never
-# justifies k²/2 pair structs.  Buckets of ≤ _LSH_BUCKET_CAP distinct
-# texts keep the exact all-pairs expansion (any earlier member is valid
-# first-seen evidence, ≤ C(64,2) = 2016 structs per bucket); bigger
-# buckets compare each member against the bucket REPRESENTATIVE (min
-# doc_id) only — linear in bucket size, no bucket array ever
-# materializes.  A member that near-matches some other member but not
-# the representative can come out `new` — the documented approximation,
+# Within-batch bucket-expansion cap: the serve path needs per-doc
+# VERDICTS, not the pair list, so a bucket never justifies k²/2 pair
+# structs.  Buckets of ≤ _LSH_BUCKET_CAP distinct texts keep the exact
+# all-pairs expansion (any earlier member is valid first-seen
+# evidence, ≤ C(64,2) = 2016 structs per bucket); bigger buckets
+# compare each member against the bucket REPRESENTATIVE (min doc_id)
+# only — linear in bucket size, no bucket array ever materializes.  A
+# member that near-matches some other member but not the
+# representative can come out `new` — the documented approximation,
 # one more probabilistic layer on a banding scheme that is already
-# probabilistic (both engines apply the identical rule, so the verdicts
-# stay deterministic and value-hash-checkable).  Pair-OUTPUT operators
-# (dedup_minhash_lsh and friends) are exempt by design: their contract
-# IS the pair list, and a mega bucket there is a genuine duplicate
-# cluster whose pairs every candidate scheme must emit.
+# probabilistic (both engines apply the identical rule, so the
+# verdicts stay deterministic and value-hash-checkable).  Pair-OUTPUT
+# operators (dedup_minhash_lsh and friends) are exempt by design:
+# their contract IS the pair list, and a mega bucket there is a
+# genuine duplicate cluster whose pairs every candidate scheme must
+# emit.
 _LSH_BUCKET_CAP = 64
 
 
@@ -2040,19 +2001,19 @@ def lsh_serve(
     representative, so the frame covers the append by construction),
     and the CACHED pre-collapse frame both branches derive from — the
     caller owns ``cache.unpersist()`` once its verdicts/appends are
-    materialized (registry runs share one session; r10 ADVICE).
+    materialized (registry runs share one session).
 
-    Hot-bucket hardening (r10 VERDICT #1): the delta is exact-hash
-    PRE-COLLAPSED before anything touches MinHash — docs sharing
-    ``md5(text)`` are decided by digest alone (keeper = min doc_id stays
-    a representative; every other member is ``dup_in_delta``, which is
-    literally what it is: first seen earlier in this batch).  A
-    boilerplate-heavy crawl batch (100k identical error pages — routine
-    in real crawls) therefore contributes ONE representative to the
-    band buckets instead of 100k ids in one bucket array and ~5×10⁹
-    pair structs.  The residual near-dup (non-identical) flood is
-    bounded by ``_LSH_BUCKET_CAP``: oversized buckets compare members
-    against the bucket representative only (see the cap note above).
+    Hot-bucket hardening: the delta is exact-hash PRE-COLLAPSED before
+    anything touches MinHash — docs sharing ``md5(text)`` are decided by
+    digest alone (keeper = min doc_id stays a representative; every
+    other member is ``dup_in_delta``, which is literally what it is:
+    first seen earlier in this batch).  A boilerplate-heavy crawl batch
+    (100k identical error pages — routine in real crawls) therefore
+    contributes ONE representative to the band buckets instead of 100k
+    ids in one bucket array and ~5×10⁹ pair structs.  The residual
+    near-dup (non-identical) flood is bounded by ``_LSH_BUCKET_CAP``:
+    oversized buckets compare members against the bucket representative
+    only (see the cap note above).
 
     Scale shape: candidate evidence from BOTH sources — the (band, bk)
     join against the persisted band table and the within-batch bucket
@@ -2068,18 +2029,12 @@ def lsh_serve(
     xbands = index_store.read(spark, LSH_LAYOUT, base, "bands")
     # exact pre-collapse: signatures + xh are computed in ONE map pass
     # over the whole batch (signature cost on exact copies is wasted but
-    # linear and exchange-free); the collapse itself is a window-min
-    # over xh — one NARROW batch-sized exchange (doc_id + digest +
-    # 16 longs, the text never shuffles), and a hot template key lands
-    # as one linear partition of narrow rows, never as a pair blowup
-    sig_all = minhash_signature_frame(delta, with_xh=True)
-    # cache the MARKED frame, not just the representative slice: the
-    # verdict union's exdup branch is its complement, and an uncached
-    # marked would re-run the whole delta scan + window exchange once
-    # per verdicts materialization (r11 review finding)
-    marked = sig_all.withColumn(
-        "kid", F.min("doc_id").over(Window.partitionBy("xh"))
-    ).cache()
+    # linear and exchange-free), then one narrow batch-sized keeper
+    # window.  The MARKED frame is cached, not just the representative
+    # slice: the verdict union's exdup branch is its complement, and an
+    # uncached marked would re-run the whole delta scan + window exchange
+    # once per verdicts materialization
+    marked = _mark_keepers(minhash_signature_frame(delta, with_xh=True)).cache()
     dsig = marked.where("doc_id = kid").drop("kid", "xh")
     exdup = marked.where("doc_id <> kid").select("doc_id")
     dbands = _lsh_band_frame(dsig)
@@ -2114,7 +2069,7 @@ def lsh_serve(
     )
     cand_small = (
         small.where(F.size("ids") >= 2)
-        .select(F.explode(F.expr(_LSH_PAIR_EXPR)).alias("p"))
+        .select(F.explode(ordered_pairs("ids", "edoc", "ddoc")).alias("p"))
         .select(
             F.col("p.ddoc").alias("ddoc"),
             F.col("p.edoc").alias("xdoc"),  # evidence = the EARLIER doc
@@ -2261,22 +2216,6 @@ def _lsh_delta2(base: DataFrame, f2: DataFrame, new1: DataFrame) -> DataFrame:
     )
 
 
-def lsh_sig_sql(src: str) -> str:
-    return (
-        f"SELECT doc_id, {_mh_exprs_duck()} FROM ("
-        f"SELECT doc_id, {duck_tid_sql('shingle', _MH_P)} AS tid FROM ("
-        f"SELECT doc_id, unnest({duck_shingles_sql('toks')}) AS shingle FROM ("
-        f"SELECT doc_id, {DUCK_TOKENS_SQL} AS toks FROM {src}))) GROUP BY doc_id"
-    )
-
-
-def lsh_bands_sql(sig: str) -> str:
-    return " UNION ALL ".join(
-        f"SELECT doc_id, {band} AS bk, {i} AS band FROM {sig}"
-        for i, band in enumerate(_band_cols())
-    )
-
-
 def _lsh_match_sql(a: str, b: str) -> str:
     s = " + ".join(
         f"CASE WHEN {a}.h{i} = {b}.h{i} THEN 1 ELSE 0 END" for i in range(_MH_K)
@@ -2293,14 +2232,9 @@ def lsh_serve_ctes(p: str, src: str, xsig: str, xbands: str) -> str:
     index joins, and the cap-aware within-batch expansion (all-pairs
     for buckets ≤ ``_LSH_BUCKET_CAP``, member-vs-representative for
     overflow buckets)."""
+    shingled = f"(SELECT doc_id, text FROM {src} WHERE len({DUCK_TOKENS_SQL}) >= 3)"
     return f"""
-    {p}_d AS (
-      SELECT doc_id, text, md5(text) AS xh FROM {src}
-      WHERE len({DUCK_TOKENS_SQL}) >= 3),
-    {p}_k AS (SELECT xh, MIN(doc_id) AS kid FROM {p}_d GROUP BY xh),
-    {p}_reps AS (
-      SELECT d.doc_id, d.text FROM {p}_d d
-      JOIN {p}_k k ON k.xh = d.xh AND k.kid = d.doc_id),
+    {keeper_ctes(p, shingled)},
     {p}_sig AS ({lsh_sig_sql(f'{p}_reps')}),
     {p}_bands AS ({lsh_bands_sql(f'{p}_sig')}),
     {p}_cand AS (
@@ -2337,9 +2271,7 @@ def lsh_serve_ctes(p: str, src: str, xsig: str, xbands: str) -> str:
       LEFT JOIN {p}_mb mb ON mb.doc_id = s.doc_id
       LEFT JOIN {p}_md md ON md.doc_id = s.doc_id
       UNION ALL
-      SELECT d.doc_id, 'dup_in_delta' AS verdict
-      FROM {p}_d d JOIN {p}_k k ON k.xh = d.xh
-      WHERE d.doc_id <> k.kid)"""
+      SELECT doc_id, 'dup_in_delta' AS verdict FROM {p}_dup)"""
 
 
 _LSH_CORPUS_SQL = f"""

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from dataframework_spark.catalog import load_table
+from dataframework_spark.functions.arrays import ordered_pairs
 from dataframework_spark.functions.ranking import global_order_stats, with_global_ntile
 from dataframework_spark.registry import register
 
@@ -2089,14 +2090,9 @@ def join_basket_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     bc = baskets.select(F.explode("brands").alias("p_brand")).groupBy("p_brand").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    pair_expr = F.expr(
-        "flatten(transform(sequence(1, size(brands) - 1), "
-        "i -> transform(sequence(i + 1, size(brands)), "
-        "j -> struct(element_at(brands, i) as brand_a, element_at(brands, j) as brand_b))))"
-    )
     pairs = (
         baskets.where(F.size("brands") >= 2)
-        .select(F.explode(pair_expr).alias("p"))
+        .select(F.explode(ordered_pairs("brands", "brand_a", "brand_b")).alias("p"))
         .groupBy(F.col("p.brand_a").alias("brand_a"), F.col("p.brand_b").alias("brand_b"))
         .agg(F.count(F.lit(1)).alias("pair_count"))
     )

@@ -5,7 +5,8 @@ components, PageRank, label propagation and k-core loops.  These tests pin
 its contract: it stops at the first round that changes nothing and never
 runs past its cap, its halt test rides on the round's checkpoint job, an
 uncapped run reaches the true fixpoint, and the loops it drives give the
-same answer whatever the shuffle partitioning.
+same answer whatever the shuffle partitioning, as do the in-bucket pair
+emitters.
 """
 
 from __future__ import annotations
@@ -75,6 +76,14 @@ def test_connected_components_runs_past_any_round_cap(spark):
 
 
 _ITERATIVE = ["dedup_clusters", "graph_label_propagation", "graph_kcore", "graph_pagerank_nations"]
+# emitters that expand in-bucket i<j pairs (``ordered_pairs``) or keep one
+# doc per exact text
+_PAIR_EMITTERS = [
+    "dedup_minhash_lsh",
+    "dedup_simhash_hamming",
+    "dedup_lsh_eval",
+    "join_basket_affinity",
+]
 
 
 def _value_hash(df) -> str:
@@ -82,9 +91,9 @@ def _value_hash(df) -> str:
     return hashlib.sha256(repr((sorted(df.columns), rows)).encode()).hexdigest()
 
 
-@pytest.mark.parametrize("name", _ITERATIVE)
+@pytest.mark.parametrize("name", _ITERATIVE + _PAIR_EMITTERS)
 def test_result_invariant_under_shuffle_partitions(spark, name):
-    """Each loop's order-insensitive value hash at sf0.001 is the same at
+    """Each query's order-insensitive value hash at sf0.001 is the same at
     1, 7 and 32 shuffle partitions."""
     key = "spark.sql.shuffle.partitions"
     prior = spark.conf.get(key)
