@@ -2231,38 +2231,44 @@ def lsh_serve_ctes(p: str, src: str, xsig: str, xbands: str) -> str:
     ``{p}_bands`` so incremental chains can union them into the index),
     index joins, and the cap-aware within-batch expansion (all-pairs
     for buckets ≤ ``_LSH_BUCKET_CAP``, member-vs-representative for
-    overflow buckets)."""
+    overflow buckets).
+
+    Every CTE of the chain is ``MATERIALIZED``: DuckDB otherwise inlines
+    each reference, and a second serve over an index that unions the
+    first serve's signatures (``dedup_lsh_incremental_append``,
+    ``dedup_lsh_index_compaction``) re-plans the first chain once per
+    band arm — minutes of planning and more than 6 GB even at sf0.001."""
     shingled = f"(SELECT doc_id, text FROM {src} WHERE len({DUCK_TOKENS_SQL}) >= 3)"
     return f"""
     {keeper_ctes(p, shingled)},
-    {p}_sig AS ({lsh_sig_sql(f'{p}_reps')}),
-    {p}_bands AS ({lsh_bands_sql(f'{p}_sig')}),
-    {p}_cand AS (
+    {p}_sig AS MATERIALIZED ({lsh_sig_sql(f'{p}_reps')}),
+    {p}_bands AS MATERIALIZED ({lsh_bands_sql(f'{p}_sig')}),
+    {p}_cand AS MATERIALIZED (
       SELECT DISTINCT d.doc_id AS ddoc, x.doc_id AS xdoc
       FROM {p}_bands d JOIN {xbands} x ON d.band = x.band AND d.bk = x.bk),
-    {p}_mb AS (
+    {p}_mb AS MATERIALIZED (
       SELECT DISTINCT c.ddoc AS doc_id
       FROM {p}_cand c
       JOIN {p}_sig a ON a.doc_id = c.ddoc
       JOIN {xsig} b ON b.doc_id = c.xdoc
       WHERE {_lsh_match_sql('a', 'b')}),
-    {p}_bsz AS (
+    {p}_bsz AS MATERIALIZED (
       SELECT band, bk, COUNT(*) AS n, MIN(doc_id) AS repid
       FROM {p}_bands GROUP BY band, bk),
-    {p}_dp AS (
+    {p}_dp AS MATERIALIZED (
       SELECT DISTINCT q.doc_id AS ddoc, pp.doc_id AS edoc
       FROM {p}_bands pp
       JOIN {p}_bands q
         ON pp.band = q.band AND pp.bk = q.bk AND pp.doc_id < q.doc_id
       JOIN {p}_bsz z ON z.band = q.band AND z.bk = q.bk
       WHERE z.n <= {_LSH_BUCKET_CAP} OR pp.doc_id = z.repid),
-    {p}_md AS (
+    {p}_md AS MATERIALIZED (
       SELECT DISTINCT g.ddoc AS doc_id
       FROM {p}_dp g
       JOIN {p}_sig a ON a.doc_id = g.ddoc
       JOIN {p}_sig b ON b.doc_id = g.edoc
       WHERE {_lsh_match_sql('a', 'b')}),
-    {p}_v AS (
+    {p}_v AS MATERIALIZED (
       SELECT s.doc_id,
              CASE WHEN mb.doc_id IS NOT NULL THEN 'dup_of_base'
                   WHEN md.doc_id IS NOT NULL THEN 'dup_in_delta'

@@ -392,7 +392,7 @@ def ml_center_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT pos, ROUND(AVG(val), 6) AS dim_mean
       FROM exploded WHERE is_train = 1 GROUP BY pos)
     SELECT e.vec_id AS vec_id, e.pos AS pos, e.is_train AS is_train,
-           ROUND(e.val - m.dim_mean, 4) AS val_centered
+           ROUND(e.val - m.dim_mean, 4) + 0.0 AS val_centered
     FROM exploded e JOIN means m ON e.pos = m.pos
     WHERE e.pos < 4
     """,

@@ -1311,8 +1311,8 @@ def agg_stats_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     "agg_minby_maxby",
     oracle="""
     SELECT l_returnflag,
-           ARG_MAX(l_suppkey, l_orderkey * 10 + l_linenumber) AS last_suppkey,
-           ARG_MIN(l_suppkey, l_orderkey * 10 + l_linenumber) AS first_suppkey,
+           MAX({'k': l_orderkey * 10 + l_linenumber, 's': l_suppkey}).s AS last_suppkey,
+           MIN({'k': l_orderkey * 10 + l_linenumber, 's': l_suppkey}).s AS first_suppkey,
            COUNT(*) FILTER (WHERE l_discount > 0.04)          AS n_discounted,
            BOOL_AND(l_quantity > 0)                           AS all_positive_qty,
            BOOL_OR(l_tax > 0.07)                              AS any_high_tax
@@ -1323,15 +1323,21 @@ def agg_stats_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_minby_maxby(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Argmin/argmax + filtered and boolean aggregates: ``max_by``/``min_by``
     (≡ DuckDB ``arg_max``/``arg_min``), ``count_if`` (≡ ``COUNT(*)
-    FILTER``), ``bool_and``/``bool_or``.  The ordering key
-    (orderkey·10 + linenumber) is unique per row, so argmin/argmax are
-    deterministic — ``max_by`` on a non-unique key is an arbitrary pick
-    that can never hash-match another engine."""
+    FILTER``), ``bool_and``/``bool_or``.  ``max_by`` on a non-unique key
+    is an arbitrary pick that can never hash-match another engine, and
+    orderkey·10 + linenumber is not unique in the generated lineitem
+    (4,599 keys over 6,000 rows at sf0.001).  So the ordering key is the
+    struct (orderkey·10 + linenumber, suppkey): rows that tie on it carry
+    the same suppkey, so the pick is the same in every engine.  DuckDB
+    1.0's ``arg_max`` takes no struct key; its twin takes ``max`` of the
+    same struct and reads the suppkey back."""
     li = load_table(
         spark, sf_dir, "lineitem",
         columns=["l_returnflag", "l_orderkey", "l_linenumber", "l_suppkey", "l_discount", "l_quantity", "l_tax"],
     )
-    ord_key = F.col("l_orderkey") * 10 + F.col("l_linenumber")
+    ord_key = F.struct(
+        (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("k"), F.col("l_suppkey").alias("s")
+    )
     return li.groupBy("l_returnflag").agg(
         F.max_by("l_suppkey", ord_key).alias("last_suppkey"),
         F.min_by("l_suppkey", ord_key).alias("first_suppkey"),

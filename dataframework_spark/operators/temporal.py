@@ -829,7 +829,8 @@ def window_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_seasonality_profile",
     oracle="""
     SELECT isodow(ts) AS dow, hour(ts) AS hod,
-           COUNT(*) AS n_events, round(AVG(value), 2) AS avg_value
+           COUNT(*) AS n_events,
+           ROUND(AVG(CAST(ROUND(value * 100) AS BIGINT))) / 100 AS avg_value
     FROM events GROUP BY 1, 2
     """,
 )
@@ -839,13 +840,19 @@ def events_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     forecasting and anomaly baselines.  Spark ``weekday()`` is Mon=0,
     DuckDB ``isodow`` is Mon=1; the +1 pins the ISO convention in both
     dialects.  Aggregate is 168 cells — fully map-side combinable, the
-    exchange is constant-size at any corpus scale."""
+    exchange is constant-size at any corpus scale.
+
+    ``value`` carries whole cents, so the mean is taken over integer
+    cents and rounded to a whole cent before the division by 100: the
+    sum is then exact in any order, where a double sum's last bits depend
+    on the summation order and can round a mean on a half cent apart
+    (95.02 vs 95.03 at sf0.001)."""
     ev = load_table(spark, sf_dir, "events", columns=["ts", "value"])
     return ev.groupBy(
         (F.weekday("ts") + F.lit(1)).alias("dow"), F.hour("ts").alias("hod")
     ).agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.round(F.avg("value"), 2).alias("avg_value"),
+        (F.round(F.avg(F.round(F.col("value") * 100).cast("bigint"))) / 100).alias("avg_value"),
     )
 
 

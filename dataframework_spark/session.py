@@ -17,6 +17,24 @@ single-process NumPy library whose "session" is ``PreProcessTransfer``
   seed pairs): ``llm_corpus``, which caches often and never reaches the
   facade, fell from a 40.1 to a 29.2 CPU-second warm pass (median, -27%)
   and from 77.4 to 58.9 CPU-seconds cold (-24%).
+* **Each generated class compiled once per session.**  Spark compiles
+  every whole-stage pipeline and generated projection with Janino and
+  keeps the classes in an LRU cache of ``spark.sql.codegen.cache.maxEntries``
+  entries, 100 by default.  One llm_corpus pass generates about 220
+  classes, so every warm pass compiled every class again, and the JVM
+  then JIT-compiled the new classes again too.  Two settings fix it:
+  the cache holds 4096 classes, and whole-stage classes are named
+  without their stage id (``spark.sql.codegen.useIdInClassName``).  AQE
+  numbers a plan's stages in the order their child stages finish, so
+  with the id in the name the same pipeline became a new class from run
+  to run.  Census of the whole registry at sf0.01 (``bench.py`` with
+  ``BENCH_ALL=1 BENCH_REPS=2``, ``local[4]``): the first rep compiles
+  3,461 classes and the second 20 (7,258 and 7,256 with Spark's
+  defaults).  Memory cost: Metaspace at the end is 257 MB, against
+  232 MB with the defaults, whose evicted classes are unloaded.
+  ``maxEntries`` is a static conf: it takes effect only when
+  ``get_spark`` launches the JVM, and a session the caller built keeps
+  the cache it was started with.
 * **Arrow** enabled for any pandas interchange (vectorized, never row-wise).
 * ``spark.sql.shuffle.partitions`` defaults to a small value for local test
   runs; on a real cluster AQE coalescing makes the initial number mostly
@@ -69,6 +87,11 @@ def get_spark(
         "spark.sql.adaptive.skewJoin.enabled": "true",
         # AQE for cached plans too (see the module docstring).
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+        # Generated-class cache sized to the registry's working set, and
+        # whole-stage classes named without their stage id, so a re-run
+        # compiles nothing (see the module docstring).
+        "spark.sql.codegen.cache.maxEntries": "4096",
+        "spark.sql.codegen.useIdInClassName": "false",
         "spark.sql.shuffle.partitions": str(sp),
         # Vectorized Arrow transfer for any pandas_udf / toPandas path.
         "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -105,3 +128,11 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Spark's code generator has compiled in this JVM so far (the
+    count of ``CodegenMetrics``' compilation-time histogram): one per miss
+    of the generated-class cache."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
