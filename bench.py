@@ -7,13 +7,20 @@ Usage:
 Runs on local[$SPARK_GRAFT_CPUS] (default: all cores) and prints ONE JSON
 line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ..., "codegen_compiles": [per rep],
-"codegen_compiles_by_query": {name: n} (last rep), "metaspace_mb": ...}.
+"jit_compile_s": [per rep], "codegen_compiles_by_query": {name: n}
+(last rep), "metaspace_mb": ...}.
 
 ``codegen_compiles`` counts the classes Spark's code generator compiled
 while building and running each rep's queries; with every class of the
 set cached, a second rep compiles none.  ``BENCH_ALL=1 BENCH_REPS=2``
 is therefore the whole registry's codegen census, and ``metaspace_mb``
 (the JVM's class-metadata space when the last rep ends) its memory cost.
+
+``jit_compile_s`` is the time the JVM's JIT compiler threads spent
+compiling during each rep (the change in the compilation MXBean's
+total), summed over those threads: HotSpot, not Spark, compiling the
+engine's and Spark's own methods to machine code.  It falls from the
+first rep to the steady ones as the hot code settles.
 
 Each query is materialized through the ``noop`` sink so the full physical
 plan executes (scan → shuffle → agg) without paying collect/serialization
@@ -104,8 +111,11 @@ def main() -> None:
         raise SystemExit(f"BENCH_REPS must be an integer, got {reps_raw!r}") from exc
     samples: dict[str, list[float]] = {n: [] for n in names}
     compiles: list[int] = []
+    jit_s: list[float] = []
+    jit = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
     for _ in range(reps):
         rep_start = codegen_compiles(spark)
+        jit_start = jit.getTotalCompilationTime()
         by_query: dict[str, int] = {}
         for name in names:
             start = codegen_compiles(spark)
@@ -123,6 +133,7 @@ def main() -> None:
             # is free.
             spark.catalog.clearCache()
         compiles.append(codegen_compiles(spark) - rep_start)
+        jit_s.append(round((jit.getTotalCompilationTime() - jit_start) / 1000, 2))
 
     def median(xs: list[float]) -> float:
         s = sorted(xs)
@@ -148,6 +159,7 @@ def main() -> None:
                 "reps": reps,
                 "spread": spread,
                 "codegen_compiles": compiles,
+                "jit_compile_s": jit_s,
                 "codegen_compiles_by_query": by_query,
                 "metaspace_mb": round(metaspace / 2**20, 1),
             }

@@ -1299,12 +1299,15 @@ def ivfpq_persist(
     This is the index lifecycle a real ANN deployment needs: train/encode
     once (expensive, corpus-sized), serve many times from the compact
     persisted form without ever touching the corpus again."""
-    _, centarr, _, coded = _ivfpq_index(
+    _, centarr, assigned, coded = _ivfpq_index(
         spark, sf_dir, predicate=predicate, n_centroids=n_centroids
     )
     tables = {
         "centroids": centarr.select(F.posexplode("cents").alias("cid", "c")),
-        "codebook": coded.select("cb").limit(1).select(F.posexplode("cb").alias("k", "cw")),
+        # the 1-row codebook itself, not a limit over ``coded``: Spark names
+        # a limit's counter from a JVM-wide sequence, so a stage with a
+        # limit compiles as a new class in every build
+        "codebook": _codebook(assigned, "r").select(F.posexplode("cb").alias("k", "cw")),
         "codes": coded.select("vec_id", "codes", "cid"),
     }
     for table, frame in tables.items():

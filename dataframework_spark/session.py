@@ -35,6 +35,33 @@ single-process NumPy library whose "session" is ``PreProcessTransfer``
   ``maxEntries`` is a static conf: it takes effect only when
   ``get_spark`` launches the JVM, and a session the caller built keeps
   the cache it was started with.
+* **The JIT compiles only what is hot.**  HotSpot's tiered compiler
+  kept compiling Spark's own planner and runtime methods pass after
+  pass: the long tail of a code base this size, one lukewarm method at
+  a time.  On perfbench's ``local[2]`` session (llm_corpus, seed 7),
+  the JVM's compiler threads took 15.5 CPU-s of the first warm pass
+  against 2.9 for the task threads, and ``-XX:+LogCompilation``
+  counted 2,914 level-3 and 935 level-4 compiles in that pass and still
+  1,397 and 390 in the third; with k=2, 7.9 CPU-s, 2,214 and 721, then
+  937 and 319.  ``-XX:CompileThresholdScaling=2`` doubles every
+  tier's invocation and back-edge thresholds, so a method a pass calls
+  a few hundred times stays at a lower tier, while per-row and
+  per-batch loops reach C2 a few thousand iterations later.  k was
+  chosen by measurement.  On perfbench tabular (5 seed pairs,
+  ``e2e_cpu_s`` median) the parent took 31.2 CPU-s, k=2 29.7, k=4
+  24.1 and k=8 26.3.  But k=4 fails the sf0.1 check (``bench.py``
+  HEADLINE, ``local[4]``, 3 pairs): its fourth rep took 32.5 CPU-s
+  and 21.7 s of wall against 27.3 and 14.4, and in reps 6-8 of 8 its
+  wall was 19% higher, because it defers compiles rather than avoiding
+  them and runs the code in between in profiled C1.  k=2 was no worse
+  by the fourth rep (28.6 CPU-s and 16.3 s against 28.9 and 17.4).
+  C1 alone (``-XX:TieredStopAtLevel=1``) cut the warm pass further
+  but, without C2, raised the sf0.1 steady rep from 31.7 to 39.0
+  CPU-s.  ``SCALE.md`` has the tables.  The flag goes in
+  ``spark.driver.defaultJavaOptions``, which Spark puts before
+  ``spark.driver.extraJavaOptions``; HotSpot takes a flag's last
+  value, so a caller overrides k through ``extraJavaOptions``.  Like
+  the heap size, it applies only when ``get_spark`` launches the JVM.
 * **Arrow** enabled for any pandas interchange (vectorized, never row-wise).
 * ``spark.sql.shuffle.partitions`` defaults to a small value for local test
   runs; on a real cluster AQE coalescing makes the initial number mostly
@@ -92,6 +119,10 @@ def get_spark(
         # compiles nothing (see the module docstring).
         "spark.sql.codegen.cache.maxEntries": "4096",
         "spark.sql.codegen.useIdInClassName": "false",
+        # JIT only what is hot: every tier's compile thresholds doubled
+        # (see the module docstring).  Spark puts extraJavaOptions after
+        # these, so a caller's own flag there wins.
+        "spark.driver.defaultJavaOptions": "-XX:CompileThresholdScaling=2",
         "spark.sql.shuffle.partitions": str(sp),
         # Vectorized Arrow transfer for any pandas_udf / toPandas path.
         "spark.sql.execution.arrow.pyspark.enabled": "true",
