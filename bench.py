@@ -22,6 +22,13 @@ total), summed over those threads: HotSpot, not Spark, compiling the
 engine's and Spark's own methods to machine code.  It falls from the
 first rep to the steady ones as the hot code settles.
 
+At sf0.1 the default ``BENCH_REPS=3`` median still includes JIT warm-up:
+on ``local[4]`` the JIT threads spent 70–104 s in rep 1, 11–14 s in rep 3
+and still 4–7 s in rep 8, and the per-rep CPU kept falling through rep 6.
+``value`` and ``queries`` keep the 3-rep median so the r01–r13 trajectory
+stays comparable; read them as warm-up included.  The scale guard in
+``SCALE.md`` reads reps 6–8 of ``BENCH_REPS=8`` instead.
+
 Each query is materialized through the ``noop`` sink so the full physical
 plan executes (scan → shuffle → agg) without paying collect/serialization
 or disk-write costs — the measurement is engine time, not driver I/O.

@@ -10,6 +10,13 @@ The reference has no vector math beyond NumPy means
 (``/root/reference/DFW/preprocess.py:76-84``); these exist for the
 north-star LLM-pipeline operators (SURVEY.md §2.10).
 
+Key hashing lives here and nowhere else in the engine: the seeded
+md5-prefix id (:func:`tid_sql` / :func:`duck_tid_sql`), the 64-bit shingle
+fold (:func:`fold_keys`) and the normalized-text fingerprint
+(:func:`text_fp` / :data:`DUCK_TEXT_FP_SQL`) are the only declarations of
+how a key becomes an integer or a digest; ``tests/test_source_policy.py``
+fails if an operator spells one out again.
+
 Scale notes: all expressions are per-row (narrow) — they vectorize inside
 codegen and never shuffle.  Cosine over ``array<float>`` is computed in
 double on both engines so the oracle hash cannot be flipped by f32 noise.
@@ -78,26 +85,66 @@ def duck_shingles_sql(toks_sql: str, n: int = 3) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Cross-dialect term ids (string → bounded bigint, identical on both engines)
+# Key hashing (key → bounded bigint or digest, identical on both engines)
 # ---------------------------------------------------------------------------
 
 # MinHash/SimHash need an integer id per shingle/token.  A dictionary
 # (global row_number over the distinct vocabulary) is a single-partition
 # sort of the whole corpus vocabulary — the r1 scale-killer.  Instead both
 # engines hash the term directly: the first 15 hex digits of md5 (60 bits,
-# < int64) reduced mod a caller-chosen modulus.  Collisions (~|V|²/2m) map
-# the SAME term to the SAME id on both engines, so oracles stay exact; for
-# signature math a rare shared id merely perturbs one minhash slot.
+# < int64), optionally reduced mod a caller-chosen modulus.  Collisions
+# (~|V|²/2m) map the SAME term to the SAME id on both engines, so oracles
+# stay exact; for signature math a rare shared id merely perturbs one
+# minhash slot.  The same id, salted, is every seeded split, sample and
+# synthetic key in the engine.
 
 
-def tid_sql(col: str, mod: int) -> str:
-    """Spark SQL: deterministic term id in ``[0, mod)`` for a string column."""
-    return f"cast(conv(substring(md5({col}), 1, 15), 16, 10) as bigint) % {mod}"
+def _key_parts(parts: tuple[str, ...], cast: str) -> list[str]:
+    # a quoted salt literal ('cms', '31:') goes in as is; any other part is
+    # a SQL expression, cast to string
+    def is_salt(p: str) -> bool:
+        return p[0] == p[-1] == "'" and "'" not in p[1:-1]
+
+    return [p if is_salt(p) else cast.format(p) for p in parts]
 
 
-def duck_tid_sql(col: str, mod: int) -> str:
-    """DuckDB twin of :func:`tid_sql` (hex-literal cast instead of conv)."""
-    return f"CAST('0x' || substr(md5({col}), 1, 15) AS BIGINT) % {mod}"
+def tid_sql(*parts: str, mod: int | None = None) -> str:
+    """Spark SQL: the seeded md5-prefix id of the key ``parts``
+    concatenated, a bigint in ``[0, 2^60)``, or in ``[0, mod)`` with a
+    modulus.  A part is a salt literal (``"'cms'"``) or a SQL expression,
+    cast to string; a NULL part gives a NULL id (``concat``)."""
+    key = ", ".join(_key_parts(parts, "cast({} as string)"))
+    if len(parts) > 1:
+        key = f"concat({key})"
+    h = f"cast(conv(substring(md5({key}), 1, 15), 16, 10) as bigint)"
+    return h if mod is None else f"{h} % {mod}"
+
+
+def duck_tid_sql(*parts: str, mod: int | None = None) -> str:
+    """DuckDB twin of :func:`tid_sql` (hex-literal cast instead of conv;
+    ``||`` is NULL when a part is)."""
+    key = " || ".join(_key_parts(parts, "CAST({} AS VARCHAR)"))
+    h = f"CAST('0x' || substr(md5({key}), 1, 15) AS BIGINT)"
+    return h if mod is None else f"{h} % {mod}"
+
+
+def fold_keys(arr: str) -> str:
+    """Spark SQL: an array of string keys folded to 64-bit ``xxhash64`` ids
+    inside the row, so exchanges and exact set intersections run on 8-byte
+    longs.  The one place the fold width is set (collision budget:
+    ``SCALE.md``, 64-bit key-folding).  DuckDB has no twin: the oracles
+    compare the key strings themselves."""
+    return f"transform({arr}, x -> xxhash64(x))"
+
+
+def text_fp() -> Column:
+    """Spark: the exact-dup fingerprint — md5 of ``text`` with whitespace
+    runs collapsed to one space, trimmed and lower-cased."""
+    return F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))))
+
+
+#: DuckDB twin of :func:`text_fp`.
+DUCK_TEXT_FP_SQL = r"md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))"
 
 
 # ---------------------------------------------------------------------------

@@ -29,7 +29,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from dataframework_spark.catalog import load_table
-from dataframework_spark.functions.arrays import DUCK_TOKENS_SQL, TOKENS_SQL, tokens
+from dataframework_spark.functions.arrays import (
+    DUCK_TEXT_FP_SQL,
+    DUCK_TOKENS_SQL,
+    TOKENS_SQL,
+    duck_tid_sql,
+    text_fp,
+    tid_sql,
+    tokens,
+)
 from dataframework_spark.functions.ranking import global_order_stats
 from dataframework_spark.registry import register
 
@@ -222,8 +230,8 @@ _MIX_MOD = 1_000_000
     kept AS (
       SELECT t.source, t.n
       FROM tok t JOIN rates r ON t.source = r.source
-      WHERE CAST('0x' || substr(md5(CAST(t.doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-            % {_MIX_MOD} < CAST(FLOOR(r.rate * {_MIX_MOD}) AS BIGINT))
+      WHERE {duck_tid_sql("t.doc_id", mod=_MIX_MOD)}
+            < CAST(FLOOR(r.rate * {_MIX_MOD}) AS BIGINT))
     SELECT r.source,
            r.src_tokens,
            ROUND(r.rate, 6)                    AS rate,
@@ -274,10 +282,7 @@ def corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("source", "src_tokens", "rate")
     )
     thr = F.floor(F.col("rate") * _MIX_MOD).cast("bigint")
-    keep = F.expr(
-        f"cast(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10) as bigint) "
-        f"% {_MIX_MOD}"
-    )
+    keep = F.expr(tid_sql("doc_id", mod=_MIX_MOD))
     kept = (
         tok.join(F.broadcast(rates), on="source")
         .where(keep < thr)
@@ -630,8 +635,8 @@ def _bpe_mixture_oracle_sql(rounds: int = _BPE_ROUNDS) -> str:
         f"""kept AS (
       SELECT t.source, t.n_ws, t.n_bpe
       FROM dt t JOIN rates r ON t.source = r.source
-      WHERE CAST('0x' || substr(md5(CAST(t.doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-            % {_MIX_MOD} < CAST(FLOOR(r.rate * {_MIX_MOD}) AS BIGINT))"""
+      WHERE {duck_tid_sql("t.doc_id", mod=_MIX_MOD)}
+            < CAST(FLOOR(r.rate * {_MIX_MOD}) AS BIGINT))"""
     )
     return (
         "WITH "
@@ -729,10 +734,7 @@ def corpus_mixture_sample_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("source", "src_ws", "src_bpe", "rate")
     )
     thr = F.floor(F.col("rate") * _MIX_MOD).cast("bigint")
-    keep = F.expr(
-        f"cast(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10) as bigint) "
-        f"% {_MIX_MOD}"
-    )
+    keep = F.expr(tid_sql("doc_id", mod=_MIX_MOD))
     kept = (
         dt.join(F.broadcast(rates.select("source", "rate")), on="source")
         .where(keep < thr)
@@ -917,18 +919,13 @@ _SC_MOD = 4     # 1-in-4 blocks masked -> ~25% corruption rate
 
 
 def _sc_mask_duck(i: str) -> str:
-    return (
-        f"CASE WHEN CAST('0x' || substr(md5('sc:' || CAST(doc_id AS VARCHAR) || ':' "
-        f"|| CAST({i} AS VARCHAR)), 1, 15) AS BIGINT) % {_SC_MOD} = 0 THEN 1 ELSE 0 END"
-    )
+    h = duck_tid_sql("'sc:'", "doc_id", "':'", i, mod=_SC_MOD)
+    return f"CASE WHEN {h} = 0 THEN 1 ELSE 0 END"
 
 
 def _sc_mask_spark(i: str) -> str:
-    return (
-        f"case when cast(conv(substring(md5(concat('sc:', cast(doc_id as string), ':', "
-        f"cast({i} as string))), 1, 15), 16, 10) as bigint) % {_SC_MOD} = 0 "
-        "then 1 else 0 end"
-    )
+    h = tid_sql("'sc:'", "doc_id", "':'", i, mod=_SC_MOD)
+    return f"case when {h} = 0 then 1 else 0 end"
 
 
 @register(
@@ -1130,7 +1127,7 @@ _FUNNEL_STAGES = [
     oracle=f"""
     WITH t AS (
       SELECT doc_id,
-             md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fp,
+             {DUCK_TEXT_FP_SQL} AS fp,
              {DUCK_TOKENS_SQL} AS toks
       FROM documents),
     f AS (
@@ -1193,7 +1190,7 @@ def corpus_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = docs.withColumn("toks", tokens())
     n = F.size("toks")
     nd = n.cast("double")
-    fp = F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))))
+    fp = text_fp()
     p1 = n.between(30, 400)
     p2 = F.round(F.size(F.array_distinct("toks")) / nd, 4) >= 0.3
     p3 = F.round(

@@ -39,10 +39,13 @@ from dataframework_spark.functions.arrays import (
     DUCK_TOKENS_SQL,
     TOKENS_SQL,
     duck_cosine_sql,
+    DUCK_TEXT_FP_SQL,
     duck_shingles_sql,
     duck_tid_sql,
+    fold_keys,
     ordered_pairs,
     shingles_sql,
+    text_fp,
     tid_sql,
     tokens,
 )
@@ -57,10 +60,10 @@ from dataframework_spark.sources import index_store
 
 @register(
     "dedup_exact",
-    oracle=r"""
+    oracle=f"""
     WITH h AS (
       SELECT doc_id,
-             md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fp
+             {DUCK_TEXT_FP_SQL} AS fp
       FROM documents)
     SELECT fp,
            COUNT(*)    AS n_copies,
@@ -78,9 +81,8 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # regex-normalize + digest is CPU-bound; spread a single-split local
     # scan across cores (cluster scans get this from their input splits)
     docs = docs.repartition(spark.sparkContext.defaultParallelism)
-    fp = F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))))
     return (
-        docs.select("doc_id", fp.alias("fp"))
+        docs.select("doc_id", text_fp().alias("fp"))
         .groupBy("fp")
         .agg(F.count(F.lit(1)).alias("n_copies"), F.min("doc_id").alias("keeper_doc_id"))
     )
@@ -150,7 +152,7 @@ def dedup_ngram_jaccard(
     if shingles is not None:
         s = shingles.select(
             "doc_id",
-            F.expr("transform(sh, x -> xxhash64(x))").alias("sh"),
+            F.expr(fold_keys("sh")).alias("sh"),
         )
     else:
         if docs is None:
@@ -172,7 +174,7 @@ def dedup_ngram_jaccard(
         # but never verified output.
         s = docs.withColumn("toks", tokens()).select(
             "doc_id",
-            F.expr(f"transform({shingles_sql('toks')}, x -> xxhash64(x))").alias("sh"),
+            F.expr(fold_keys(shingles_sql("toks"))).alias("sh"),
         )
     s = s.withColumn("n", F.size("sh")).cache()  # reused: index build + verification
     inv = s.select("doc_id", "n", F.explode("sh").alias("shingle"))
@@ -291,7 +293,7 @@ def _signatures(s: DataFrame, *keep: str) -> DataFrame:
     pass runs once per doc: CollapseProject does not inline the non-cheap
     ``tids`` alias that 17 expressions read.  A doc with no shingles has
     ``nsh = 0`` and NULL minima; DuckDB's unnest gives it no row."""
-    tids = s.select(*keep, F.expr(f"transform(sh, t -> {tid_sql('t', _MH_P)})").alias("tids"))
+    tids = s.select(*keep, F.expr(f"transform(sh, t -> {tid_sql('t', mod=_MH_P)})").alias("tids"))
     return tids.select(
         *keep,
         F.size("tids").alias("nsh"),
@@ -316,7 +318,7 @@ def lsh_sig_sql(src: str) -> str:
     (doc_id, h0..h15), docs without shingles dropped."""
     return (
         f"SELECT doc_id, {_mh_exprs_duck()} FROM ("
-        f"SELECT doc_id, {duck_tid_sql('shingle', _MH_P)} AS tid FROM ("
+        f"SELECT doc_id, {duck_tid_sql('shingle', mod=_MH_P)} AS tid FROM ("
         f"SELECT doc_id, unnest({duck_shingles_sql('toks')}) AS shingle FROM ("
         f"SELECT doc_id, {DUCK_TOKENS_SQL} AS toks FROM {src}))) GROUP BY doc_id"
     )
@@ -467,11 +469,11 @@ def dedup_minhash_lsh(
     # signatures keep the oracle-matched md5 term ids.
     sa = s.select(
         F.col("doc_id").alias("doc_a"),
-        F.expr("transform(sh, x -> xxhash64(x))").alias("sh_a"),
+        F.expr(fold_keys("sh")).alias("sh_a"),
     ).hint("shuffle_hash")
     sb = s.select(
         F.col("doc_id").alias("doc_b"),
-        F.expr("transform(sh, x -> xxhash64(x))").alias("sh_b"),
+        F.expr(fold_keys("sh")).alias("sh_b"),
     ).hint("shuffle_hash")
     ver = (
         cand.join(sa, "doc_a")
@@ -509,7 +511,7 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     ft = feat.select(
         "doc_id",
         F.expr(
-            f"pmod({_SH_MUL}L * ({tid_sql('token', _MH_P)}) + {_SH_ADD}, {_SH_MOD})"
+            f"pmod({_SH_MUL}L * ({tid_sql('token', mod=_MH_P)}) + {_SH_ADD}, {_SH_MOD})"
         ).alias("g"),
     )
     bit_sum = [
@@ -530,7 +532,7 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH t AS (SELECT doc_id, {DUCK_TOKENS_SQL} AS toks FROM documents),
     feat AS (SELECT doc_id, unnest(toks) AS token FROM t),
     ft AS (SELECT doc_id,
-           ({_SH_MUL}::BIGINT * ({duck_tid_sql('token', _MH_P)}) + {_SH_ADD}) % {_SH_MOD} AS g
+           ({_SH_MUL}::BIGINT * ({duck_tid_sql('token', mod=_MH_P)}) + {_SH_ADD}) % {_SH_MOD} AS g
            FROM feat),
     sig AS (
       SELECT doc_id,
@@ -607,8 +609,8 @@ def _sh64_sig_sql(engine: str) -> str:
 
 
 def _sh64_duck_bitsums() -> str:
-    tid_a = duck_tid_sql("'sh64a:' || token", 1 << 32)
-    tid_b = duck_tid_sql("'sh64b:' || token", 1 << 32)
+    tid_a = duck_tid_sql("'sh64a:'", "token", mod=1 << 32)
+    tid_b = duck_tid_sql("'sh64b:'", "token", mod=1 << 32)
     return ",\n      ".join(
         f"SUM(CASE WHEN ((({tid_a if j < 32 else tid_b}) >> {j % 32}) & 1) = 1 "
         f"THEN 1 ELSE -1 END) AS s{j}"
@@ -628,8 +630,8 @@ def simhash64_signatures(
     feat = docs.select("doc_id", F.explode(tokens()).alias("token"))
     ft = feat.select(
         "doc_id",
-        F.expr(tid_sql("concat('sh64a:', token)", 1 << 32)).alias("ga"),
-        F.expr(tid_sql("concat('sh64b:', token)", 1 << 32)).alias("gb"),
+        F.expr(tid_sql("'sh64a:'", "token", mod=1 << 32)).alias("ga"),
+        F.expr(tid_sql("'sh64b:'", "token", mod=1 << 32)).alias("gb"),
     )
     bitsum = ft.groupBy("doc_id").agg(*_sh64_sum_exprs_spark())
     return bitsum.select("doc_id", F.expr(_sh64_sig_sql("spark")).alias("sig"))
@@ -971,7 +973,7 @@ def dedup_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = docs.withColumn("toks", tokens())
     s = t.select(
         "doc_id",
-        F.expr(f"transform({shingles_sql('toks', 8)}, x -> xxhash64(x))").alias("sh"),
+        F.expr(fold_keys(shingles_sql("toks", 8))).alias("sh"),
     ).cache()
     ev = s.where(F.col("doc_id") % 2 == 1).select(
         "doc_id", F.size("sh").alias("n_shingles"), F.explode("sh").alias("shingle")
@@ -1039,11 +1041,8 @@ def _doc_sample_pred(frac: float, salt: str):
     """Deterministic, portable doc sample: md5-prefix hash of doc_id
     thresholded at ``frac`` (the ``sample_seeded_fraction`` discipline —
     no RNG state, identical membership on every engine and every run)."""
-    expr = (
-        f"cast(conv(substring(md5(concat('{salt}:', cast(doc_id as string))), "
-        "1, 15), 16, 10) as bigint) % 1000000"
-    )
-    return F.expr(expr) < int(round(frac * 1_000_000))
+    keep = F.expr(tid_sql(f"'{salt}:'", "doc_id", mod=1_000_000))
+    return keep < int(round(frac * 1_000_000))
 
 
 def _check_frac(frac: float, name: str) -> None:
@@ -1208,7 +1207,7 @@ def dedup_ngram_containment(
     # with B then |A\B| > (1-t)·|A|, independent of how ties rank.
     s = docs.withColumn("toks", tokens()).select(
         "doc_id",
-        F.expr(f"transform({shingles_sql('toks')}, x -> xxhash64(x))").alias("sh"),
+        F.expr(fold_keys(shingles_sql("toks"))).alias("sh"),
     )
     s = s.withColumn("n", F.size("sh")).cache()
     inv = s.select("doc_id", "n", F.explode("sh").alias("shingle"))
@@ -1364,15 +1363,8 @@ def dedup_url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (doc_id % 5 of the base) and double-fetches inside the batch
 # (doc_id % 3 of the fresh docs), each under a new ingest doc_id.
 _INC_SEED = 17
-INC_BUCKET_DUCK = (
-    f"CAST('0x' || substr(md5('{_INC_SEED}:' || CAST(doc_id AS VARCHAR)), 1, 15)"
-    " AS BIGINT) % 10"
-)
-_INC_BUCKET_SPARK = (
-    f"cast(conv(substring(md5(concat('{_INC_SEED}:', cast(doc_id as string))), 1, 15),"
-    " 16, 10) as bigint) % 10"
-)
-_INC_FP_DUCK = r"md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))"
+INC_BUCKET_DUCK = duck_tid_sql(f"'{_INC_SEED}:'", "doc_id", mod=10)
+_INC_BUCKET_SPARK = tid_sql(f"'{_INC_SEED}:'", "doc_id", mod=10)
 
 
 @register(
@@ -1387,8 +1379,8 @@ _INC_FP_DUCK = r"md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))"
       SELECT doc_id + 100000, text FROM base WHERE doc_id % 5 = 0
       UNION ALL
       SELECT doc_id + 200000, text FROM fresh WHERE doc_id % 3 = 0),
-    base_fps AS (SELECT DISTINCT {_INC_FP_DUCK} AS fp FROM base),
-    dh AS (SELECT doc_id, {_INC_FP_DUCK} AS fp FROM delta),
+    base_fps AS (SELECT DISTINCT {DUCK_TEXT_FP_SQL} AS fp FROM base),
+    dh AS (SELECT doc_id, {DUCK_TEXT_FP_SQL} AS fp FROM delta),
     marked AS (
       SELECT d.doc_id, d.fp,
              (bf.fp IS NOT NULL) AS in_base,
@@ -1434,9 +1426,8 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # derive from one cached (doc_id, bucket, fp) frame instead of each
     # re-running the scan + whitespace-normalize + md5 pass (the before-
     # plan carried four documents scans).
-    fp = F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))))
     bucketed = (
-        docs.select("doc_id", F.expr(_INC_BUCKET_SPARK).alias("b"), fp.alias("fp"))
+        docs.select("doc_id", F.expr(_INC_BUCKET_SPARK).alias("b"), text_fp().alias("fp"))
         .cache()
     )
     base = bucketed.where(F.col("b") < 8).select("doc_id", "fp")

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from dataframework_spark.catalog import load_table
-from dataframework_spark.functions.arrays import tokens
+from dataframework_spark.functions.arrays import duck_tid_sql, tid_sql, tokens
 from dataframework_spark.functions.ranking import global_order_stats
 from dataframework_spark.registry import register
 
@@ -47,7 +47,12 @@ from dataframework_spark.registry import register
 # ---------------------------------------------------------------------------
 
 
-def seeded_order(*cols: str | Column, seed: int = 42) -> Column:
+def _seeded_key(cols: tuple[str, ...], seed: int) -> list[str]:
+    # key parts ``'seed:' col1 ':' col2 ...``
+    return [f"'{seed}:'", *[p for c in cols for p in ("':'", c)][1:]]
+
+
+def seeded_order(*cols: str, seed: int = 42) -> Column:
     """Deterministic pseudo-random sort key (reference T6, ``preprocess.py:53``).
 
     The reference replays experiments by storing permutation matrices in the
@@ -55,20 +60,19 @@ def seeded_order(*cols: str | Column, seed: int = 42) -> Column:
     the row key — reproducible, shuffle-free of stored state, and a new
     ``seed`` plays the role of the replication index ``no``.
 
-    Hash = first 15 hex digits of md5 over ``seed:col1:col2...`` (60 bits,
-    fits int64) — the same cross-dialect construction as
-    :func:`dataframework_spark.functions.arrays.tid_sql`, chosen over
-    ``xxhash64`` so permutations are identical in ANY engine that has md5
-    (DuckDB oracles included), not just Spark.
+    Hash = the md5-prefix id (:func:`dataframework_spark.functions.arrays.tid_sql`)
+    of ``seed:col1:col2...``, chosen over ``xxhash64`` so permutations are
+    identical in ANY engine that has md5 (DuckDB oracles included), not just
+    Spark.  A NULL key column gives a NULL hash on both engines; an
+    ascending sort puts NULLs first, so in the facade's split order a row
+    with a NULL key ranks first in its class (and lands in train).
     """
-    key = F.concat_ws(":", F.lit(str(seed)), *[F.col(c) if isinstance(c, str) else c for c in cols])
-    return F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("bigint")
+    return F.expr(tid_sql(*_seeded_key(cols, seed)))
 
 
 def duck_seeded_order_sql(*cols: str, seed: int = 42) -> str:
     """DuckDB twin of :func:`seeded_order` (same md5-prefix integer)."""
-    casted = " || ':' || ".join(f"CAST({c} AS VARCHAR)" for c in cols)
-    return f"CAST('0x' || substr(md5('{seed}:' || {casted}), 1, 15) AS BIGINT)"
+    return duck_tid_sql(*_seeded_key(cols, seed))
 
 
 def _train_size_expr(n: Column, train_setting: float | int, cv: int) -> Column:
@@ -538,13 +542,12 @@ def ml_pipeline_generator(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ml_seeded_permutation",
-    oracle="""
+    oracle=f"""
     SELECT vec_id, label,
            CAST(row_number() OVER (
              PARTITION BY label
-             ORDER BY CAST('0x' || substr(md5('7:' || CAST(vec_id AS VARCHAR)), 1, 15)
-                           AS BIGINT),
-                      vec_id) AS BIGINT) AS perm_pos
+             ORDER BY {duck_seeded_order_sql("vec_id", seed=7)}, vec_id)
+             AS BIGINT) AS perm_pos
     FROM embeddings
     """,
 )
@@ -1640,23 +1643,6 @@ _LS_BUCKETS = 10
 _LS_TRAIN_BUCKETS = 8  # 80/20
 
 
-def _ls_bucket_sql(expr: str) -> str:
-    """Portable seeded hash bucket (Spark dialect): md5-prefix mod, the
-    ``sample_seeded_fraction`` idiom — identical in DuckDB, run-over-run
-    stable, repartition-invariant."""
-    return (
-        f"cast(conv(substring(md5(concat('{_LS_SEED}:', {expr})), 1, 15),"
-        f" 16, 10) as bigint) % {_LS_BUCKETS}"
-    )
-
-
-def _ls_bucket_duck(expr: str) -> str:
-    return (
-        f"CAST('0x' || substr(md5('{_LS_SEED}:' || {expr}), 1, 15) AS BIGINT)"
-        f" % {_LS_BUCKETS}"
-    )
-
-
 def _leakage_safe_split_oracle() -> str:
     from dataframework_spark.operators.dedup import _PAIRS_SQL_CTE
 
@@ -1673,7 +1659,7 @@ def _leakage_safe_split_oracle() -> str:
     docs AS (
       SELECT d.doc_id,
              COALESCE(c.cluster_id, d.doc_id) AS cluster_id,
-             CASE WHEN {_ls_bucket_duck("CAST(d.doc_id AS VARCHAR)")}
+             CASE WHEN {duck_seeded_order_sql("d.doc_id", seed=_LS_SEED)} % {_LS_BUCKETS}
                        < {_LS_TRAIN_BUCKETS} THEN 1 ELSE 0 END AS naive_train
       FROM documents d LEFT JOIN comp c USING (doc_id)),
     pc AS (
@@ -1682,7 +1668,7 @@ def _leakage_safe_split_oracle() -> str:
       FROM docs GROUP BY cluster_id),
     g AS (
       SELECT *,
-             CASE WHEN {_ls_bucket_duck("CAST(cluster_id AS VARCHAR)")}
+             CASE WHEN {duck_seeded_order_sql("cluster_id", seed=_LS_SEED)} % {_LS_BUCKETS}
                        < {_LS_TRAIN_BUCKETS} THEN 'train' ELSE 'test' END AS split
       FROM pc)
     SELECT split,
@@ -1728,10 +1714,9 @@ def ml_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"),
-            (
-                F.expr(_ls_bucket_sql("cast(doc_id as string)"))
-                < _LS_TRAIN_BUCKETS
-            ).cast("int").alias("naive_train"),
+            (seeded_order("doc_id", seed=_LS_SEED) % _LS_BUCKETS < _LS_TRAIN_BUCKETS)
+            .cast("int")
+            .alias("naive_train"),
         )
     )
     per_cluster = full.groupBy("cluster_id").agg(
@@ -1742,8 +1727,7 @@ def ml_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = per_cluster.withColumn(
         "split",
         F.when(
-            F.expr(_ls_bucket_sql("cast(cluster_id as string)"))
-            < _LS_TRAIN_BUCKETS,
+            seeded_order("cluster_id", seed=_LS_SEED) % _LS_BUCKETS < _LS_TRAIN_BUCKETS,
             F.lit("train"),
         ).otherwise(F.lit("test")),
     )
@@ -1773,15 +1757,14 @@ _MI_PRICE_BIN = 50000  # fixed-width price bins: no global sort, unlike ntile
 # precedent: conversion probability 70% for pre-1996 orders vs 20% after,
 # with md5-prefix hash noise.  MI(year; label) then has a known ground
 # truth and the other two features are honest ~zero controls.
-_MI_LABEL_DUCK = """
-    CASE WHEN (CAST('0x' || substr(md5('mi:' || CAST(o_orderkey AS VARCHAR)), 1, 15)
-               AS BIGINT) % 10)
+_MI_KEY = ("'mi:'", "o_orderkey")
+_MI_LABEL_DUCK = f"""
+    CASE WHEN ({duck_tid_sql(*_MI_KEY, mod=10)})
               < (CASE WHEN year(o_orderdate) <= 1995 THEN 7 ELSE 2 END)
          THEN 'hit' ELSE 'miss' END
 """
 _MI_LABEL_SPARK = (
-    "case when (cast(conv(substring(md5(concat('mi:', cast(o_orderkey as string))),"
-    " 1, 15), 16, 10) as bigint) % 10)"
+    f"case when ({tid_sql(*_MI_KEY, mod=10)})"
     " < (case when year(o_orderdate) <= 1995 then 7 else 2 end)"
     " then 'hit' else 'miss' end"
 )
@@ -1882,14 +1865,8 @@ def ml_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _CV_GRID_FOLDS = 3
 _CV_LAMBDAS = (0, 1000, 10000)
-_CVG_FOLD_DUCK = (
-    "CAST('0x' || substr(md5('cv:' || CAST(l_orderkey AS VARCHAR)), 1, 15)"
-    f" AS BIGINT) % {_CV_GRID_FOLDS}"
-)
-_CVG_FOLD_SPARK = (
-    "cast(conv(substring(md5(concat('cv:', cast(l_orderkey as string))), 1, 15),"
-    f" 16, 10) as bigint) % {_CV_GRID_FOLDS}"
-)
+_CVG_FOLD_DUCK = duck_tid_sql("'cv:'", "l_orderkey", mod=_CV_GRID_FOLDS)
+_CVG_FOLD_SPARK = tid_sql("'cv:'", "l_orderkey", mod=_CV_GRID_FOLDS)
 _CVG_LAMBDA_VALUES = ", ".join(f"({v})" for v in _CV_LAMBDAS)
 
 

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataframework_spark.catalog import load_table
-from dataframework_spark.functions.arrays import DUCK_TOKENS_SQL, tokens
+from dataframework_spark.functions.arrays import DUCK_TEXT_FP_SQL, DUCK_TOKENS_SQL, text_fp, tokens
 from dataframework_spark.operators.dedup import _PAIRS_SQL_CTE, dedup_clusters
 from dataframework_spark.operators.text import _SW_ARRAY, _SW_DUCK
 from dataframework_spark.registry import register
@@ -58,7 +58,7 @@ _BPE_RE = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]"
     exact_kept AS (
       SELECT * FROM quality
       QUALIFY row_number() OVER (
-        PARTITION BY md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))
+        PARTITION BY {DUCK_TEXT_FP_SQL}
         ORDER BY doc_id) = 1),
     kept AS (
       SELECT k.* FROM exact_kept k
@@ -92,10 +92,9 @@ def pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     quality = t.where(q >= 0.7)
 
-    fp = F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))))
     from pyspark.sql.window import Window
 
-    w_fp = Window.partitionBy(fp).orderBy("doc_id")
+    w_fp = Window.partitionBy(text_fp()).orderBy("doc_id")
     exact_kept = (
         quality.withColumn("_rn", F.row_number().over(w_fp)).where(F.col("_rn") == 1).drop("_rn")
     )

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from dataframework_spark.catalog import load_table
-from dataframework_spark.functions.arrays import ordered_pairs
+from dataframework_spark.functions.arrays import duck_tid_sql, ordered_pairs, tid_sql
 from dataframework_spark.functions.ranking import global_order_stats, with_global_ntile
 from dataframework_spark.registry import register
 
@@ -3035,10 +3035,7 @@ def _cms_key_spark() -> str:
     # hash (exactly portable): bits 0-3 plant 4 geometric heavy hitters
     # (50% / 25% / 12.5% / 6.25% of rows), the remaining 1/16 of rows
     # spread uniformly over a 3000-key tail via the independent high bits.
-    h = (
-        "cast(conv(substring(md5(concat('cmsk:', cast(l_orderkey as string), ':', "
-        "cast(l_linenumber as string))), 1, 15), 16, 10) as bigint)"
-    )
+    h = tid_sql("'cmsk:'", "l_orderkey", "':'", "l_linenumber")
     return (
         f"case when {h} % 2 = 1 then 0 "
         f"when {h} % 4 = 2 then 1 "
@@ -3049,10 +3046,7 @@ def _cms_key_spark() -> str:
 
 
 def _cms_key_duck() -> str:
-    h = (
-        "CAST('0x' || substr(md5('cmsk:' || CAST(l_orderkey AS VARCHAR) || ':' || "
-        "CAST(l_linenumber AS VARCHAR)), 1, 15) AS BIGINT)"
-    )
+    h = duck_tid_sql("'cmsk:'", "l_orderkey", "':'", "l_linenumber")
     return (
         f"CASE WHEN {h} % 2 = 1 THEN 0 "
         f"WHEN {h} % 4 = 2 THEN 1 "
@@ -3062,21 +3056,8 @@ def _cms_key_duck() -> str:
     )
 
 
-def _cms_bucket_spark(jcol: str, kcol: str) -> str:
-    return (
-        f"cast(conv(substring(md5(concat('cms', cast({jcol} as string), ':', "
-        f"cast({kcol} as string))), 1, 15), 16, 10) as bigint) % {_CMS_W}"
-    )
-
-
-def _cms_bucket_duck(jexpr: str, kexpr: str) -> str:
-    return (
-        f"CAST('0x' || substr(md5('cms' || CAST({jexpr} AS VARCHAR) || ':' || "
-        f"CAST({kexpr} AS VARCHAR)), 1, 15) AS BIGINT) % {_CMS_W}"
-    )
-
-
 _CMS_VALUES = ", ".join(f"({j})" for j in range(_CMS_D))
+_CMS_CELL = ("'cms'", "d.j", "':'")  # a cell's key parts ahead of the stream key
 
 
 @register(
@@ -3084,7 +3065,7 @@ _CMS_VALUES = ", ".join(f"({j})" for j in range(_CMS_D))
     oracle=f"""
     WITH keys AS (SELECT {_cms_key_duck()} AS k FROM lineitem),
     cells AS (
-      SELECT d.j AS j, {_cms_bucket_duck('d.j', 'k')} AS bucket, COUNT(*) AS c
+      SELECT d.j AS j, {duck_tid_sql(*_CMS_CELL, "k", mod=_CMS_W)} AS bucket, COUNT(*) AS c
       FROM keys CROSS JOIN (VALUES {_CMS_VALUES}) AS d(j)
       GROUP BY 1, 2),
     truth AS (
@@ -3095,7 +3076,7 @@ _CMS_VALUES = ", ".join(f"({j})" for j in range(_CMS_D))
       FROM truth t
       CROSS JOIN (VALUES {_CMS_VALUES}) AS d(j)
       JOIN cells c
-        ON c.j = d.j AND c.bucket = {_cms_bucket_duck('d.j', 't.k')}
+        ON c.j = d.j AND c.bucket = {duck_tid_sql(*_CMS_CELL, "t.k", mod=_CMS_W)}
       GROUP BY t.k, t.true_count)
     SELECT k AS item_key,
            CAST(true_count AS BIGINT)           AS true_count,
@@ -3152,6 +3133,7 @@ def agg_cms_audit(
         spark, sf_dir, "lineitem", columns=["l_orderkey", "l_linenumber"]
     ).select(F.expr(_cms_key_spark()).alias("k"))
     js = F.array(*[F.lit(j) for j in range(_CMS_D)])
+    bucket = F.expr(tid_sql("'cms'", "j", "':'", "k", mod=_CMS_W))
     # r12 opt (guide §1.2 "distributed algorithm" / §2.3 "aggregate before
     # you shuffle"): collapse the stream to per-KEY counts FIRST (one scan,
     # one map-side-combinable exchange over ~3k keys), then build BOTH the
@@ -3164,7 +3146,7 @@ def agg_cms_audit(
     keycnt = li.groupBy("k").agg(F.count(F.lit(1)).alias("true_count")).cache()
     cells = (
         keycnt.withColumn("j", F.explode(js))
-        .withColumn("bucket", F.expr(_cms_bucket_spark("j", "k")))
+        .withColumn("bucket", bucket)
         .groupBy("j", "bucket")
         .agg(F.sum("true_count").alias("c"))
     )
@@ -3172,15 +3154,10 @@ def agg_cms_audit(
     if exact_sample_frac < 1.0:
         # per-KEY sample: all rows of a key are kept or dropped together,
         # so kept keys bill exact counts (see docstring)
-        pred = F.expr(
-            "cast(conv(substring(md5(concat('cms-exact:', cast(k as string))), "
-            "1, 15), 16, 10) as bigint) % 1000000"
-        ) < int(round(exact_sample_frac * 1_000_000))
-        truth_src = keycnt.where(pred)
+        keep = F.expr(tid_sql("'cms-exact:'", "k", mod=1_000_000))
+        truth_src = keycnt.where(keep < int(round(exact_sample_frac * 1_000_000)))
     truth = truth_src.orderBy(F.col("true_count").desc(), "k").limit(_CMS_TOP)
-    probes = truth.withColumn("j", F.explode(js)).withColumn(
-        "bucket", F.expr(_cms_bucket_spark("j", "k"))
-    )
+    probes = truth.withColumn("j", F.explode(js)).withColumn("bucket", bucket)
     est = (
         probes.join(F.broadcast(cells), ["j", "bucket"])
         .groupBy("k", "true_count")
@@ -3256,36 +3233,16 @@ def window_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FPR_B = 4096  # audit bitmap buckets (small on purpose: non-vacuous FPR)
 
 
-def _fpr_bucket_spark(col: str):
-    """Portable digest bucket (Spark dialect): md5-prefix integer mod
-    ``_FPR_B`` — the ``seeded_order`` idiom, so DuckDB lands on the SAME
-    buckets and the measured FPR is bit-identical cross-engine (xxhash64,
-    the production digest's hash, exists only in Spark)."""
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("dig:"), F.col(col).cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("bigint")
-    return F.pmod(h, F.lit(_FPR_B))
-
-
-def _fpr_bucket_duck(expr: str) -> str:
-    return (
-        f"CAST('0x' || substr(md5('dig:' || CAST({expr} AS VARCHAR)), 1, 15) "
-        f"AS BIGINT) % {_FPR_B}"
-    )
-
-
 @register(
     "join_digest_fpr_audit",
     oracle=f"""
     WITH qual AS (SELECT c_custkey FROM customer WHERE c_acctbal > 8000.0),
-    b AS (SELECT DISTINCT {_fpr_bucket_duck('c_custkey')} AS bkt FROM qual),
+    b AS (SELECT DISTINCT {duck_tid_sql("'dig:'", "c_custkey", mod=_FPR_B)} AS bkt FROM qual),
     nonqual AS (
       SELECT o_custkey FROM orders o
       WHERE NOT EXISTS (SELECT 1 FROM qual q WHERE q.c_custkey = o.o_custkey)),
     flag AS (
-      SELECT CASE WHEN ({_fpr_bucket_duck('o_custkey')})
+      SELECT CASE WHEN ({duck_tid_sql("'dig:'", "o_custkey", mod=_FPR_B)})
                   IN (SELECT bkt FROM b) THEN 1 ELSE 0 END AS fp
       FROM nonqual)
     SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM qual) AS n_qual_keys,
@@ -3324,7 +3281,8 @@ def join_digest_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     minhash OOM discipline); one orders scan feeds both."""
     cust = load_table(spark, sf_dir, "customer", columns=["c_custkey", "c_acctbal"])
     qual = cust.where(F.col("c_acctbal") > 8000.0).select("c_custkey")
-    buckets = qual.select(_fpr_bucket_spark("c_custkey").alias("bkt")).distinct()
+    bkt = F.expr(tid_sql("'dig:'", "c_custkey", mod=_FPR_B))
+    buckets = qual.select(bkt.alias("bkt")).distinct()
     n_qual = qual.agg(F.count(F.lit(1)).cast("bigint").alias("n_qual_keys"))
     n_b = buckets.agg(F.count(F.lit(1)).cast("bigint").alias("n_buckets_set"))
 
@@ -3333,7 +3291,7 @@ def join_digest_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         qual.hint("shuffle_hash"), orders.o_custkey == qual.c_custkey, "left_anti"
     )
     flagged = (
-        nonqual.select(_fpr_bucket_spark("o_custkey").alias("obkt"))
+        nonqual.select(F.expr(tid_sql("'dig:'", "o_custkey", mod=_FPR_B)).alias("obkt"))
         .join(F.broadcast(buckets), F.col("obkt") == F.col("bkt"), "left")
         .select(F.col("bkt").isNotNull().cast("int").alias("fp"))
     )

@@ -23,7 +23,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from dataframework_spark.catalog import load_table
-from dataframework_spark.functions.arrays import DUCK_TOKENS_SQL, tokens
+from dataframework_spark.functions.arrays import (
+    DUCK_TOKENS_SQL,
+    duck_tid_sql,
+    fold_keys,
+    tid_sql,
+    tokens,
+)
 from dataframework_spark.registry import register
 
 # A tiny fixed English stopword list — enough for ratio features and the
@@ -858,7 +864,7 @@ def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = toks.select(
         "doc_id",
         F.explode(
-            F.expr(f"transform({shingles_sql('toks', _BOILER_N)}, x -> xxhash64(x))")
+            F.expr(fold_keys(shingles_sql("toks", _BOILER_N)))
         ).alias("shingle"),
     )
     w = Window.partitionBy("shingle")
@@ -1246,7 +1252,7 @@ def text_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     # precedent).  Counts, fertilities, and therefore every probability
     # are unchanged; the output is per-doc aggregates only.
     t = docs.withColumn("_w", tokens()).select(
-        "doc_id", F.expr("transform(_w, x -> xxhash64(x))").alias("toks")
+        "doc_id", F.expr(fold_keys("_w")).alias("toks")
     )
     t = t.cache()  # read 3x: unigram counts, bigram counts, scoring stream
     tr = t.where(F.col("doc_id") % 2 == 0)
@@ -1609,22 +1615,14 @@ _LID_SCALE = 1_000_000
 _LID_TRAIN_PCT = 7    # md5(doc_id) % 10 < 7 → train, else test
 
 
-def _lid_hash_spark(col: str) -> str:
-    return (
-        f"cast(conv(substring(md5({col}), 1, 15), 16, 10) as bigint) % {_LID_B}"
-    )
-
-
 _LANGID_ORACLE = f"""
     WITH d AS (
       SELECT doc_id, lang, text,
-             CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-               % 10 AS s
+             {duck_tid_sql("doc_id", mod=10)} AS s
       FROM documents WHERE length(text) >= 3),
     trg AS (
       SELECT lang,
-             CAST('0x' || substr(md5(substr(text, i + 1, 3)), 1, 15) AS BIGINT)
-               % {_LID_B} AS g
+             {duck_tid_sql("substr(text, i + 1, 3)", mod=_LID_B)} AS g
       FROM d, UNNEST(range(length(text) - 2)) AS t(i)
       WHERE s < {_LID_TRAIN_PCT}),
     cnt AS (SELECT lang, g, COUNT(*)::BIGINT AS c FROM trg GROUP BY 1, 2),
@@ -1647,8 +1645,7 @@ _LANGID_ORACLE = f"""
       FROM nl l),
     tsg AS (
       SELECT doc_id, lang AS lang_true,
-             CAST('0x' || substr(md5(substr(text, i + 1, 3)), 1, 15) AS BIGINT)
-               % {_LID_B} AS g,
+             {duck_tid_sql("substr(text, i + 1, 3)", mod=_LID_B)} AS g,
              COUNT(*)::BIGINT AS tf
       FROM d, UNNEST(range(length(text) - 2)) AS t(i)
       WHERE s >= {_LID_TRAIN_PCT}
@@ -1704,10 +1701,7 @@ def text_langid_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the trigram explode + hashing is CPU-bound; spread a single-split
     # local scan across cores (r13 — the dedup_exact note, overlooked here)
     docs = docs.repartition(spark.sparkContext.defaultParallelism)
-    split = F.expr(
-        "cast(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10) "
-        "as bigint) % 10"
-    )
+    split = F.expr(tid_sql("doc_id", mod=10))
     d = docs.withColumn("s", split)
     tri = "explode(transform(sequence(1, length(text) - 2), i -> substring(text, i, 3)))"
     # r13 opt (guide §2.3 aggregate-before-shuffle / §1.2 per-task work,
@@ -1721,7 +1715,7 @@ def text_langid_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("lang", F.expr(tri).alias("tri"))
         .groupBy("lang", "tri")
         .agg(F.count(F.lit(1)).alias("c0"))
-        .select("lang", F.expr(_lid_hash_spark("tri")).alias("g"), "c0")
+        .select("lang", F.expr(tid_sql("tri", mod=_LID_B)).alias("g"), "c0")
     )
     # r12 opt (guide §1.2: one pass, not two): ``cnt`` is the bounded
     # (lang, bucket) count table; the per-lang trigram total is its
@@ -1771,7 +1765,7 @@ def text_langid_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "lang_true", "tri")
         .agg(F.count(F.lit(1)).alias("tf0"))
         .select(
-            "doc_id", "lang_true", F.expr(_lid_hash_spark("tri")).alias("g"), "tf0"
+            "doc_id", "lang_true", F.expr(tid_sql("tri", mod=_LID_B)).alias("g"), "tf0"
         )
         .groupBy("doc_id", "lang_true", "g")
         .agg(F.sum("tf0").alias("tf"))
@@ -1860,8 +1854,7 @@ def _tq_e4(num: str, den: str, div: str) -> str:
 _TQUAL_ORACLE = f"""
     WITH t AS (
       SELECT doc_id, {DUCK_TOKENS_SQL} AS toks,
-             CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-               % 10 AS s
+             {duck_tid_sql("doc_id", mod=10)} AS s
       FROM documents),
     b AS (
       SELECT doc_id, s,
@@ -1960,10 +1953,7 @@ def text_quality_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines classify every doc identically and the whole
     fit→score→bill pipeline value-hashes."""
     docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-    split = F.expr(
-        "cast(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10) "
-        "as bigint) % 10"
-    )
+    split = F.expr(tid_sql("doc_id", mod=10))
     t = docs.withColumn("toks", tokens()).where(F.size("toks") >= 1)
     base = t.select(
         "doc_id",

@@ -29,6 +29,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
 from dataframework_spark.catalog import load_table
+from dataframework_spark.functions.arrays import duck_tid_sql, tid_sql
 from dataframework_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -228,8 +229,8 @@ _SEEDED_MOD = 1_000_000
     SELECT label,
            COUNT(*) AS n_sampled
     FROM embeddings
-    WHERE CAST('0x' || substr(md5('{_SEEDED_SEED}:' || CAST(vec_id AS VARCHAR)), 1, 15)
-               AS BIGINT) % {_SEEDED_MOD} < {int(_SEEDED_FRAC * _SEEDED_MOD)}
+    WHERE {duck_tid_sql(f"'{_SEEDED_SEED}:'", "vec_id", mod=_SEEDED_MOD)}
+          < {int(_SEEDED_FRAC * _SEEDED_MOD)}
     GROUP BY label
     """,
 )
@@ -249,10 +250,7 @@ def sample_seeded_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     wants from a seed; the hash compare is a row-local scan predicate
     with no shuffle beyond the tiny per-label count."""
     emb = load_table(spark, sf_dir, "embeddings", columns=["vec_id", "label"])
-    keep = F.expr(
-        f"cast(conv(substring(md5(concat('{_SEEDED_SEED}:', cast(vec_id as string))), 1, 15),"
-        f" 16, 10) as bigint) % {_SEEDED_MOD}"
-    )
+    keep = F.expr(tid_sql(f"'{_SEEDED_SEED}:'", "vec_id", mod=_SEEDED_MOD))
     return (
         emb.where(keep < int(_SEEDED_FRAC * _SEEDED_MOD))
         .groupBy("label")

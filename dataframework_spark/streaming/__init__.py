@@ -37,6 +37,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
 from dataframework_spark.catalog import parquet_schema, table_path
+from dataframework_spark.functions.arrays import duck_tid_sql, tid_sql
 from dataframework_spark.registry import register
 
 _sink_counter = itertools.count()
@@ -824,14 +825,8 @@ def stream_watermark_finalization(spark: SparkSession, sf_dir: str) -> DataFrame
 # DuckDB from scratch.
 
 _LSH_STREAM_BATCHES = 4
-_LSH_STREAM_TAG_SPARK = (
-    "cast(conv(substring(md5(concat('31:', cast(doc_id as string))), 1, 15),"
-    f" 16, 10) as bigint) % {_LSH_STREAM_BATCHES}"
-)
-_LSH_STREAM_TAG_DUCK = (
-    "CAST('0x' || substr(md5('31:' || CAST(doc_id AS VARCHAR)), 1, 15)"
-    f" AS BIGINT) % {_LSH_STREAM_BATCHES}"
-)
+_LSH_STREAM_TAG_SPARK = tid_sql("'31:'", "doc_id", mod=_LSH_STREAM_BATCHES)
+_LSH_STREAM_TAG_DUCK = duck_tid_sql("'31:'", "doc_id", mod=_LSH_STREAM_BATCHES)
 
 
 def _lsh_crawl_stream_rows(base: DataFrame, f1: DataFrame) -> DataFrame:

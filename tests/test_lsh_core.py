@@ -6,12 +6,17 @@ with ``DFX_FULL_TESTS=1``; the parity test here checks the Spark signature
 and band frames against their DuckDB twins (``lsh_sig_sql`` /
 ``lsh_bands_sql``) on a handful of in-memory docs, in seconds.  The empty
 input test pins that the batch emitters and the serve path return zero
-rows, not an error, when there is nothing to dedup.
+rows, not an error, when there is nothing to dedup.  The key-hash parity
+case checks the hashing core under every key-driven operator
+(``functions/arrays.py``: the seeded md5-prefix id and the
+normalized-text fingerprint) on edge-case keys, NULL included.
 """
 
 from __future__ import annotations
 
 import duckdb
+import pytest
+from pyspark.sql import functions as F
 
 from dataframework_spark.catalog import DEFAULT_SF_DIR
 
@@ -65,6 +70,49 @@ def test_signature_and_band_frames_match_duckdb(spark):
     by_id = {r[0]: r[1:] for r in spark_sigs}
     assert by_id[5] == by_id[6]  # exact copies sign alike
     assert len(spark_bands) == 4 * len(spark_sigs)
+
+
+@pytest.mark.parametrize(
+    ("key", "spark_type", "duck_type"),
+    [
+        (None, "string", "VARCHAR"),
+        ("", "string", "VARCHAR"),
+        ("Café NAÏVE — déjà-vu 東京 タワー", "string", "VARCHAR"),
+        ("\t  Tabs\tand\n\nnew  lines \r\n", "string", "VARCHAR"),
+        (-9_007_199_254_740_993, "bigint", "BIGINT"),
+        (2**53 + 1, "bigint", "BIGINT"),
+    ],
+    ids=["null", "empty", "non-ascii", "whitespace", "negative-bigint", "bigint-above-2^53"],
+)
+def test_key_hash_core_matches_duckdb(spark, key, spark_type, duck_type):
+    """The seeded id (``seeded_order``), a salted multi-part id with a
+    modulus and the normalized-text fingerprint are equal on both engines;
+    a NULL key gives a NULL id on both."""
+    from dataframework_spark.functions.arrays import (
+        DUCK_TEXT_FP_SQL,
+        duck_tid_sql,
+        text_fp,
+        tid_sql,
+    )
+    from dataframework_spark.operators.ml_prep import duck_seeded_order_sql, seeded_order
+
+    parts = ("'cms'", "k", "':'", "k")
+    row = spark.createDataFrame([(key,)], f"k {spark_type}").select(
+        "k", F.col("k").cast("string").alias("text")
+    )
+    got = row.select(seeded_order("k"), F.expr(tid_sql(*parts, mod=97)), text_fp()).first()
+    con = duckdb.connect()
+    try:
+        want = con.execute(
+            f"SELECT {duck_seeded_order_sql('k')}, {duck_tid_sql(*parts, mod=97)}, "
+            f"{DUCK_TEXT_FP_SQL} FROM (SELECT k, CAST(k AS VARCHAR) AS text "
+            f"FROM (SELECT CAST(? AS {duck_type}) AS k))",
+            [key],
+        ).fetchone()
+    finally:
+        con.close()
+    assert tuple(got) == want
+    assert (got[0] is None) == (key is None)
 
 
 def test_lsh_emitters_return_zero_rows_on_empty_input(spark, tmp_path):

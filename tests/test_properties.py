@@ -401,15 +401,16 @@ def test_leakage_safe_split_invariants(spark, sf_dir):
     # cluster coherence: within every near-dup cluster, exactly one
     # grouped-split assignment (hash of the shared cluster id)
     comp = dedup_clusters(spark, sf_dir)
-    from dataframework_spark.operators.ml_prep import _LS_TRAIN_BUCKETS, _ls_bucket_sql
+    from dataframework_spark.operators.ml_prep import (
+        _LS_BUCKETS,
+        _LS_SEED,
+        _LS_TRAIN_BUCKETS,
+        seeded_order,
+    )
 
+    bucket = seeded_order("cluster_id", seed=_LS_SEED) % _LS_BUCKETS
     per_cluster = (
-        comp.select(
-            "cluster_id",
-            (
-                F.expr(_ls_bucket_sql("cast(cluster_id as string)")) < _LS_TRAIN_BUCKETS
-            ).alias("is_train"),
-        )
+        comp.select("cluster_id", (bucket < _LS_TRAIN_BUCKETS).alias("is_train"))
         .groupBy("cluster_id")
         .agg(F.count_distinct("is_train").alias("n_assignments"))
     )

@@ -110,3 +110,28 @@ def test_every_collect_site_carries_a_bound_justification():
         "comment with the word 'bounded' naming what bounds the rows):\n"
         + "\n".join(hits)
     )
+
+
+def test_key_hashing_is_declared_once():
+    """How a key becomes an integer or a digest is declared once per
+    engine, in ``functions/arrays.py``: the seeded md5-prefix id
+    (``tid_sql`` / ``duck_tid_sql``), the 64-bit shingle fold
+    (``fold_keys``) and the normalized-text fingerprint (``text_fp`` /
+    ``DUCK_TEXT_FP_SQL``).  The spellings live in SQL strings, so this
+    scans the raw text, not ``_code_lines``."""
+    pat = re.compile(
+        r"substring\(md5|substr\(md5|F\.conv\(|x -> xxhash64\(x\)"
+        r"|md5\(\s*(F\.)?lower\(\s*(F\.)?trim\(\s*(F\.)?regexp_replace"
+    )
+    home = ENGINE / "functions" / "arrays.py"
+    hits = [
+        f"{p.relative_to(ENGINE)}:{i}: {line.strip()}"
+        for p in _source_files()
+        if p != home
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if pat.search(line)
+    ]
+    assert not hits, (
+        "key hashing spelled out outside functions/arrays.py (call tid_sql / "
+        "duck_tid_sql, fold_keys or text_fp / DUCK_TEXT_FP_SQL):\n" + "\n".join(hits)
+    )
