@@ -24,6 +24,8 @@ double on both engines so the oracle hash cannot be flipped by f32 noise.
 
 from __future__ import annotations
 
+import string
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -137,14 +139,25 @@ def fold_keys(arr: str) -> str:
     return f"transform({arr}, x -> xxhash64(x))"
 
 
+# The fingerprint's whitespace class and case fold, spelled so both engines
+# read them alike: Java's ``\s`` matches U+000B and RE2's does not, and the
+# two ``lower`` functions differ on ``İ`` and a final ``Σ``.
+_FP_SPACE = r"[\t\n\x0B\f\r ]+"
+_UPPER, _LOWER = string.ascii_uppercase, string.ascii_lowercase
+
+
 def text_fp() -> Column:
-    """Spark: the exact-dup fingerprint — md5 of ``text`` with whitespace
-    runs collapsed to one space, trimmed and lower-cased."""
-    return F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))))
+    """Spark: the exact-dup fingerprint — md5 of ``text`` with every run of
+    ASCII whitespace (tab, LF, VT, FF, CR, space) collapsed to one space,
+    trimmed, and ASCII letters A-Z folded to a-z; every other character,
+    non-ASCII letters and spaces included, is kept as is."""
+    return F.md5(F.translate(F.trim(F.regexp_replace("text", _FP_SPACE, " ")), _UPPER, _LOWER))
 
 
 #: DuckDB twin of :func:`text_fp`.
-DUCK_TEXT_FP_SQL = r"md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))"
+DUCK_TEXT_FP_SQL = (
+    f"md5(translate(trim(regexp_replace(text, '{_FP_SPACE}', ' ', 'g')), '{_UPPER}', '{_LOWER}'))"
+)
 
 
 # ---------------------------------------------------------------------------

@@ -1736,7 +1736,7 @@ def dedup_semdedup(
     ``8 + ceil(log2 M)`` planes and the in-cluster pair count stays
     ~linear in n.  The registered query keeps ``n_planes=None`` (the
     shared 8-plane bucket; oracle unchanged).
-    ``tools/probe_semdedup_scale.py`` measures exactly this on a
+    ``python tools/scale_probe.py semdedup`` measures exactly this on a
     perturbed NON-replica corpus (SCALEPROBE_SEMDEDUP_r7.json)."""
     bucket_sql = (
         _sd_bucket_spark("v") if n_planes is None else _sd_bucket_spark("v", n_planes)

@@ -909,8 +909,9 @@ def _ivfpq_index(
     ``n_centroids`` is the cells-∝-corpus production knob: registered
     queries pin it at {_N_CENTROIDS} for oracle-checkability, but at
     scale the cell COUNT must grow with the corpus so the cell SIZE a
-    query scans stays constant — ``tools/probe_sim_lifecycle.py``
-    measures exactly that (the FLAT fixed-batch serve claim)."""
+    query scans stays constant — ``python tools/scale_probe.py
+    sim_lifecycle`` measures exactly that (the FLAT fixed-batch serve
+    claim)."""
     emb = load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"])
     if predicate is not None:  # train/encode on a corpus subset (the
         emb = emb.where(predicate)  # incremental-append base snapshot)

@@ -81,8 +81,21 @@ def test_signature_and_band_frames_match_duckdb(spark):
         ("\t  Tabs\tand\n\nnew  lines \r\n", "string", "VARCHAR"),
         (-9_007_199_254_740_993, "bigint", "BIGINT"),
         (2**53 + 1, "bigint", "BIGINT"),
+        ("a\x0bb", "string", "VARCHAR"),
+        ("İstanbul", "string", "VARCHAR"),
+        ("ΣΑΣ", "string", "VARCHAR"),
     ],
-    ids=["null", "empty", "non-ascii", "whitespace", "negative-bigint", "bigint-above-2^53"],
+    ids=[
+        "null",
+        "empty",
+        "non-ascii",
+        "whitespace",
+        "negative-bigint",
+        "bigint-above-2^53",
+        "vertical-tab",
+        "dotted-capital-i",
+        "final-sigma",
+    ],
 )
 def test_key_hash_core_matches_duckdb(spark, key, spark_type, duck_type):
     """The seeded id (``seeded_order``), a salted multi-part id with a

@@ -121,7 +121,7 @@ def test_key_hashing_is_declared_once():
     scans the raw text, not ``_code_lines``."""
     pat = re.compile(
         r"substring\(md5|substr\(md5|F\.conv\(|x -> xxhash64\(x\)"
-        r"|md5\(\s*(F\.)?lower\(\s*(F\.)?trim\(\s*(F\.)?regexp_replace"
+        r"|md5\(\s*(F\.)?translate\(\s*(F\.)?trim\(\s*(F\.)?regexp_replace"
     )
     home = ENGINE / "functions" / "arrays.py"
     hits = [

@@ -1,10 +1,12 @@
-"""Every ``dataframework_spark`` name a tool or example imports exists.
+"""Every ``dataframework_spark`` or ``tools`` name a tool or example imports
+exists.
 
 The scripts under ``tools/`` and ``examples/`` are not run by the test
 suite, and most import engine names inside functions, so a plain module
 import would not notice a deleted or renamed name.  This walks each
 script's syntax tree and resolves every ``from dataframework_spark… import
-name`` and ``import dataframework_spark…``, function-level ones included.
+name``, ``from tools.<module> import name`` and ``import …`` of either,
+function-level ones included.
 """
 
 from __future__ import annotations
@@ -24,18 +26,19 @@ SCRIPTS = sorted(
 )
 
 
+_PREFIXES = ("dataframework_spark", "tools.")
+
+
 def _engine_imports(path: str):
     with open(os.path.join(ROOT, path)) as fh:
         tree = ast.parse(fh.read(), path)
     for node in ast.walk(tree):
-        if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(
-            "dataframework_spark"
-        ):
+        if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(_PREFIXES):
             for alias in node.names:
                 yield node.lineno, node.module, alias.name
         elif isinstance(node, ast.Import):
             for alias in node.names:
-                if alias.name.startswith("dataframework_spark"):
+                if alias.name.startswith(_PREFIXES):
                     yield node.lineno, alias.name, None
 
 

@@ -4,7 +4,7 @@ Usage:
     python tools/dump_plans.py OUT_DIR before dedup_exact_substring dedup_lsh_eval ...
     python tools/dump_plans.py OUT_DIR after --headline      # the bench.py HEADLINE set
 
-Writes ``OUT_DIR/<query>_<suffix>.txt`` (e.g. ``OUT_DIR=plans/r13``) — the
+Writes ``OUT_DIR/<query>_<suffix>.txt`` (e.g. ``OUT_DIR=.scratch/plans``) — the
 before/after plan evidence that plan-shape claims are checked against.
 Reads the tables from the directory in ``SPARK_GRAFT_SF_DIR``.
 """

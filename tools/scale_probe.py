@@ -1,29 +1,69 @@
-"""Measured-scaling probe: does each operator's runtime grow like its plan
+"""Scale probes: does each operator's runtime and output grow like its plan
 says it should?
 
-SCALE.md argues every shipped plan survives a 100× scale-up; this tool
-MEASURES the claim at the scales this sandbox can hold.  It synthesizes a
-key-consistent M× replica of sf0.1 (each copy's int64 keys offset by
-i·10^10, so every join key still matches within its copy and dimension
-tables stay shared), runs a probe list of scale-path queries at 1× and
-M×, and prints the time ratio next to the data ratio.  A linear-path
-query should scale ≲ M (per-task overheads amortize); anything
-super-linear is a plan bug the small-SF suite cannot see.
+SCALE.md argues every shipped plan survives a 100× scale-up; these probes
+MEASURE the claim at the scales this sandbox can hold.  Each probe builds
+an M-copy corpus from a base scale factor, runs its operators once at 1×
+to warm the JVM (discarded), once at 1× as the base, then at each M, and
+prints one JSON line with its statistics and each one's ratio to 1×.
 
-Usage:  python tools/scale_probe.py [M]        (default M=10)
-Writes the replica under .scratch/scale{M}x (~M × 16 MB) and one JSON
-line of results.
+Copy j of every corpus shifts its int64 ids by ``j · OFFSET``, so
+``id // OFFSET == j`` names a row's copy and pair outputs split into
+same-copy and cross-copy pairs.  The corpora differ in the per-copy
+transform (SCALE.md explains why each exists):
+
+* ``offset_keys``   — key-offset replica; dimension tables stay shared;
+* ``rename_tokens`` — every token ``tok → tok~j``: within-copy Jaccard
+  kept exactly, copies shingle-disjoint;
+* ``qr_rotate``     — a seeded QR rotation plus σ_rel noise per copy
+  (copy 0 verbatim), with the documents table key-offset alongside;
+* ``circular_rotate`` — dimensions rotated by ``j % d``, sign flipped for
+  ``j ≥ d``: every within-copy distance kept;
+* ``time_shift``    — timestamps shifted by ``j · (span + 1 day)``, so
+  copies occupy disjoint days;
+* ``flood``         — a template row per copy, ``{0}``/``{1}``/``{2}`` in
+  its text filled with ``j``, ``7j``, ``13j``: N identical (or near)
+  boilerplate pages.
+
+Probes (default M list in brackets):
+
+* ``replica`` [10] — the scale-path query list ``PROBE`` (or the
+  comma-separated ``SPARK_GRAFT_PROBE``) on the key-offset replica;
+* ``sweep`` [10] — every registered query on the replica, except the
+  enumerated ``EXCLUSIONS`` (one M);
+* ``semdedup`` [10 100 1000], ``rotation`` [10 100] — the QR-rotated
+  embeddings;
+* ``textmut`` [10 100], ``simhash64`` [10 100], ``lsh_lifecycle``
+  [10 100] — the token-renamed documents;
+* ``timeshift`` [10 100] — the time-shifted events;
+* ``sim_lifecycle`` [10 100] — the circularly rotated embeddings;
+* ``hotbucket`` [10 100] — ``lsh_serve`` on 50%-boilerplate crawl batches
+  of M × 2000 docs;
+* ``pairflood`` [1000 10000] — the batch pair emitters on documents plus
+  an N-page exact flood.
+
+The base is sf0.1 (sf0.01 for ``hotbucket`` and ``pairflood``);
+``SPARK_GRAFT_SF_DIR`` overrides it.  Corpora and indexes are cached under
+the git-ignored ``.scratch/``; nothing else is written.
+
+Usage:  python tools/scale_probe.py PROBE [M ...]
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from dataframework_spark.catalog import TABLES, load_table, table_path
@@ -31,10 +71,142 @@ from dataframework_spark.registry import all_queries
 from dataframework_spark.session import get_spark
 
 BASE = "/root/testdata/sf0.1"
-OFFSET = 10_000_000_000  # per-copy key offset; M ≤ 10^8 stays inside int64
+SMALL = "/root/testdata/sf0.01"
+OFFSET = 10_000_000_000  # per-copy id offset; M ≤ 10^8 stays inside int64
 
-# key columns to offset per copy, per table (dimension tables region/nation
-# are shared across copies — they stay constant-size like real dims)
+
+# ---------------------------------------------------------------------------
+# Corpora: one copy writer, one transform per synthesis
+# ---------------------------------------------------------------------------
+
+
+def scratch(*parts: str) -> str:
+    return os.path.join(ROOT, ".scratch", *parts)
+
+
+def write_copies(table: pa.Table, m: int, dst: str, copy) -> None:
+    """Write ``copy(table, j)`` for j in 0..m-1 to the parquet file ``dst``.
+    An existing ``dst`` is kept: corpora are deterministic, so they are
+    built once and cached."""
+    if os.path.exists(dst):
+        return
+    os.makedirs(os.path.dirname(dst), exist_ok=True)
+    tmp = dst + ".tmp"
+    writer, batch, rows = None, [], 0
+    try:
+        for j in range(m):
+            t = copy(table, j)
+            batch.append(t)
+            rows += t.num_rows
+            if rows >= 1_000_000 or j == m - 1:  # few copies per row group
+                out = pa.concat_tables(batch)
+                writer = writer or pq.ParquetWriter(tmp, out.schema)
+                writer.write_table(out)
+                batch, rows = [], 0
+    finally:
+        if writer is not None:
+            writer.close()
+    os.replace(tmp, dst)
+
+
+def _set(t: pa.Table, col: str, values) -> pa.Table:
+    return t.set_column(t.schema.get_field_index(col), col, values)
+
+
+def offset_keys(*cols: str):
+    """Copy j: each of ``cols`` += j·OFFSET."""
+
+    def copy(t: pa.Table, j: int) -> pa.Table:
+        for col in cols:
+            t = _set(t, col, pc.add(t.column(col), j * OFFSET))
+        return t
+
+    return copy
+
+
+def rename_tokens(t: pa.Table, j: int) -> pa.Table:
+    """Copy j: doc_id += j·OFFSET, every whitespace token gets the suffix
+    ``~j`` (a vocabulary bijection per copy, disjoint across copies; copy 0
+    is suffixed too, so 1× is the same class), n_chars recomputed."""
+    text = pc.replace_substring_regex(t.column("text"), pattern=r"(\S+)", replacement=rf"\1~{j}")
+    t = _set(offset_keys("doc_id")(t, j), "text", text)
+    return _set(t, "n_chars", pc.cast(pc.utf8_length(text), t.schema.field("n_chars").type))
+
+
+SIGMA_REL = 0.1  # jitter on top of the per-copy QR rotation
+
+
+def _vectors(t: pa.Table) -> np.ndarray:
+    col = t.column("embedding").combine_chunks()
+    return col.flatten().to_numpy().reshape(len(col), -1)
+
+
+def _with_vectors(t: pa.Table, j: int, v: np.ndarray, typ) -> pa.Table:
+    arr = pa.ListArray.from_arrays(
+        pa.array(np.arange(0, v.size + 1, v.shape[1]), pa.int32()), pa.array(v.ravel(), typ)
+    )
+    return _set(offset_keys("vec_id")(t, j), "embedding", arr)
+
+
+def qr_rotate(t: pa.Table, j: int) -> pa.Table:
+    """Copy 0 is the base verbatim; copy j > 0 applies a seeded random
+    rotation (QR of a seeded Gaussian matrix) plus SIGMA_REL relative
+    noise.  A rotation keeps every within-copy cosine, so each copy carries
+    the base's cluster structure pointed in a fresh direction."""
+    emb = _vectors(t)
+    if j > 0:
+        norms = np.linalg.norm(emb, axis=1, keepdims=True).astype(np.float32)
+        rng = np.random.default_rng(j)
+        q, _ = np.linalg.qr(rng.standard_normal((emb.shape[1],) * 2))
+        noise = rng.standard_normal(emb.shape).astype(np.float32)
+        noise /= np.linalg.norm(noise, axis=1, keepdims=True)
+        emb = (emb @ q.astype(np.float32)) + SIGMA_REL * norms * noise
+    return _with_vectors(t, j, emb, pa.float32())
+
+
+def circular_rotate(t: pa.Table, j: int) -> pa.Table:
+    """Copy j: dimensions rotated by ``j % d`` and, for ``j ≥ d``, the sign
+    flipped (2d distinct orthogonal maps), as doubles; vec_id, embedding."""
+    emb = _vectors(t).astype(np.float64)
+    d = emb.shape[1]
+    if j >= 2 * d:
+        raise ValueError(f"only {2 * d} distinct circular rotations")
+    v = np.roll(emb, -(j % d), axis=1) * (-1.0 if j >= d else 1.0)
+    return _with_vectors(t.select(["vec_id", "embedding"]), j, v, pa.float64())
+
+
+DAY_US = 86_400_000_000
+
+
+def time_shift(t: pa.Table, j: int) -> pa.Table:
+    """Copy j: ts += j·(span + 1 day) in whole days, so copies' day buckets
+    are disjoint; event_id and user_id += j·OFFSET."""
+    ts_us = pc.cast(t.column("ts"), pa.int64())
+    lo, hi = pc.min(ts_us).as_py(), pc.max(ts_us).as_py()
+    stride = ((hi - lo) // DAY_US + 2) * DAY_US
+    ts = pc.cast(pc.add(ts_us, j * stride), t.schema.field("ts").type)
+    return _set(offset_keys("event_id", "user_id")(t, j), "ts", ts)
+
+
+def flood(t: pa.Table, j: int) -> pa.Table:
+    """Copy j of (doc_id, text) template rows: doc_id += j, each text's
+    ``{0}``, ``{1}``, ``{2}`` filled with j, 7j, 13j."""
+    text = [s.format(j, 7 * j, 13 * j) for s in t.column("text").to_pylist()]
+    t = _set(t, "doc_id", pc.add(t.column("doc_id"), j))
+    return _set(t, "text", pa.array(text, pa.string()))
+
+
+def _corpus(kind: str, base: str, m: int, tables: dict) -> str:
+    """``.scratch/<kind>/<base name>/m<M>``, each ``name: copy`` table of
+    ``tables`` written as M copies of the base table."""
+    out = scratch(kind, os.path.basename(base), f"m{m}")
+    for name, copy in tables.items():
+        write_copies(pq.read_table(table_path(base, name)), m, table_path(out, name), copy)
+    return out
+
+
+# key columns offset per copy; tables not listed (region, nation) are
+# shared dimensions, copied once
 KEY_COLS = {
     "customer": ["c_custkey"],
     "supplier": ["s_suppkey"],
@@ -46,7 +218,92 @@ KEY_COLS = {
     "embeddings": ["vec_id"],
 }
 
-# Scale-path probe list: one representative per family whose SCALE.md
+
+def build_replica(base: str, m: int) -> str:
+    """The key-consistent M× replica of ``base``: every join key still
+    matches within its copy, dimension tables stay constant-size."""
+    out = scratch("replica", os.path.basename(base), f"m{m}")
+    for name in TABLES:
+        keys = KEY_COLS.get(name, [])
+        write_copies(
+            pq.read_table(table_path(base, name)), m if keys else 1,
+            table_path(out, name), offset_keys(*keys),
+        )
+    return out
+
+
+def qr_corpus(base: str, m: int) -> str:
+    return _corpus("qr_rotation", base, m, {"embeddings": qr_rotate,
+                                             "documents": offset_keys("doc_id")})
+
+
+def token_corpus(base: str, m: int) -> str:
+    return _corpus("token_rename", base, m, {"documents": rename_tokens})
+
+
+# ---------------------------------------------------------------------------
+# Measurement: one timer, one same-copy split, one ratio-vs-1x pass
+# ---------------------------------------------------------------------------
+
+
+def measure(spark, fn):
+    """``(fn(), wall seconds)``; Spark's cache is cleared after, so no
+    measurement reads another's cached frames."""
+    t0 = time.perf_counter()
+    try:
+        return fn(), round(time.perf_counter() - t0, 3)
+    finally:
+        spark.catalog.clearCache()
+
+
+def copy_of(col: str):
+    return (F.col(col) / OFFSET).cast("bigint")
+
+
+def pair_split(df, a: str, b: str, *extra):
+    """The one-row aggregate of a pair frame whose id columns are ``a`` and
+    ``b``: ``n`` pairs, ``w`` of them within one copy, and ``extra``."""
+    return df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.sum((copy_of(a) == copy_of(b)).cast("bigint")), F.lit(0)).alias("w"),
+        *extra,
+    ).collect()[0]
+
+
+def _add_ratios(r: dict, base: dict, ratios: dict) -> None:
+    for name, key in ratios.items():
+        if isinstance(key, dict):
+            _add_ratios(r[name], base[name], key)
+        elif base[key]:
+            r[name] = round(r[key] / base[key], 2)
+
+
+def scale_pass(spark, run, corpus, ms, ratios: dict, tag="m", size="data_ratio") -> dict:
+    """``run(corpus(M), M)`` once at 1× to warm the JVM (discarded), once
+    at 1× as the base, then at each M.  Each M's result gets ``size`` = M
+    and, for every ``name: key`` of ``ratios`` (nested dicts follow the
+    result's nesting), ``name`` = its ``key`` over the base's when the base
+    is nonzero."""
+    run(corpus(1), 1)
+    base = run(corpus(1), 1)
+    results = {f"{tag}1": base}
+    for m in ms:
+        r = run(corpus(m), m)
+        r[size] = m
+        _add_ratios(r, base, ratios)
+        results[f"{tag}{m}"] = r
+    return results
+
+
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+# ---------------------------------------------------------------------------
+# replica / sweep: registered queries on the key-offset replica
+# ---------------------------------------------------------------------------
+
+# Scale-path query list: one representative per family whose SCALE.md
 # claim is "linear in data" (brute/exact eval tiers are intentionally
 # excluded — their cost model is quadratic by design and documented).
 PROBE = [
@@ -68,79 +325,782 @@ PROBE = [
 ]
 
 
-def build_replica(spark, m: int, out_dir: str) -> None:
-    """Materialize the M× replica.  Tiered: when a smaller replica K×
-    (K | M) is already cached, build M× as M/K offset copies of IT instead
-    of M copies of the base — 1000× becomes a 10-branch union over the
-    cached 100× files rather than a 1000-branch plan.  Copy j's keys get
-    ``+ j·K·OFFSET``: the K× source already occupies [0, K·OFFSET), so
-    strides stay collision-free and max keys (M·OFFSET = 10^13 at 1000×)
-    sit far inside int64."""
-    os.makedirs(out_dir, exist_ok=True)
-    scratch = os.path.dirname(out_dir)
-    src_dir, k = BASE, 1
-    for tier in (10, 100):
-        tier_dir = os.path.join(scratch, f"scale{tier}x")
-        if tier < m and m % tier == 0 and all(
-            os.path.exists(os.path.join(tier_dir, f"{t}.parquet")) for t in TABLES
-        ):
-            src_dir, k = tier_dir, tier
-    for name in TABLES:
-        dst = os.path.join(out_dir, f"{name}.parquet")
-        if os.path.exists(dst):
-            continue
-        df = load_table(spark, src_dir, name)
-        keys = KEY_COLS.get(name)
-        if not keys:  # shared dimension: copy through
-            df.write.mode("overwrite").parquet(dst)
-            continue
-        copies = []
-        for i in range(m // k):
-            c = df
-            for col in keys:
-                c = c.withColumn(col, F.col(col) + F.lit(i * k * OFFSET))
-            copies.append(c)
-        out = copies[0]
-        for c in copies[1:]:
-            out = out.unionByName(c)
-        out.write.mode("overwrite").parquet(dst)
-
-
-def time_query(spark, fn, sf_dir: str, reps: int = 2) -> float:
-    best = None
-    for _ in range(reps):
-        df = fn(spark, sf_dir)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-        spark.catalog.clearCache()
-    return round(best, 3)
-
-
-def main() -> None:
-    m = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                           ".scratch", f"scale{m}x")
-    spark = get_spark(app_name="scale-probe", cpus=os.cpu_count() or 8)
-    build_replica(spark, m, out_dir)
+def replica(spark, base: str, ms: list[int]) -> dict:
+    """Noop-run seconds of each probe query (plan built outside the timer)
+    on the 1× base and the M× replica."""
     specs = all_queries()
-    probe = PROBE
+    names = PROBE
     if os.environ.get("SPARK_GRAFT_PROBE"):  # comma-separated override
-        probe = [n.strip() for n in os.environ["SPARK_GRAFT_PROBE"].split(",") if n.strip()]
-        unknown = [n for n in probe if n not in specs]
-        assert not unknown, f"unknown probe queries: {unknown}"
-    spark.range(1000).selectExpr("sum(id)").collect()
+        names = [n.strip() for n in os.environ["SPARK_GRAFT_PROBE"].split(",") if n.strip()]
+        unknown = [n for n in names if n not in specs]
+        if unknown:
+            raise SystemExit(f"unknown probe queries: {unknown}")
+
+    def run(sf_dir, m):
+        out = {}
+        for n in names:
+            df = specs[n].fn(spark, sf_dir)
+            out[n] = {"wall_sec": measure(spark, lambda: _noop(df))[1]}
+        return out
+
+    results = scale_pass(
+        spark, run, lambda m: base if m == 1 else build_replica(base, m), ms,
+        {n: {"wall_ratio_vs_1x": "wall_sec"} for n in names},
+    )
+    return {"probe": "replica", "results": results}
+
+
+# Every entry must name a registered query; reasons are part of the
+# published artifact.  Keep this list SHORT — the default is to sweep.
+# Exclusions are NOT correctness waivers — every excluded query still
+# passes its value-hash oracle at sf0.01 in-repo.  They are cost-model
+# documentation: the replica turns each document into an M-way near-
+# duplicate, so operators whose OUTPUT is the pairwise near-dup structure
+# grow ~M² rows by construction (their scale-path siblings — MinHash-LSH
+# banding, blocked fuzzy match — ARE swept).
+EXCLUSIONS: dict[str, str] = {
+    "dedup_ngram_jaccard": (
+        "exact pairwise-Jaccard eval tier: the replica makes every doc an "
+        "M-way near-dup, so in-block candidate pairs grow ~M^2 by "
+        "construction (scale path = dedup_minhash_lsh, which IS swept).  "
+        "MEASURED on the non-replica token-renamed corpus instead "
+        "(SCALEPROBE_TEXTMUT_r9.json): output pairs exactly 100x at 100x "
+        "data, zero cross-copy, wall 25x"
+    ),
+    "dedup_ngram_containment": (
+        "exact pairwise-containment eval tier: same ~M^2 in-block pair "
+        "growth on the replica.  MEASURED on the token-renamed corpus "
+        "(SCALEPROBE_TEXTMUT_r9.json): pairs exactly 100x at 100x, wall 47x"
+    ),
+    "dedup_lsh_eval": (
+        "LSH tuning evaluator: joins LSH candidates against the exact "
+        "pairwise-Jaccard truth set (the eval tier it exists to price).  "
+        "MEASURED on the token-renamed corpus (SCALEPROBE_TEXTMUT_r9.json): "
+        "truth 100.0x / candidates 99.8x at 100x, precision/recall stable "
+        "at 0.997/0.999, wall 23x"
+    ),
+    "dedup_embedding_cosine": (
+        "all-pairs cosine: replica-dense blocks emit ~M^2 near-dup pairs "
+        "per original doc by construction.  MEASURED on the non-replica "
+        "rotated corpus instead (SCALEPROBE_ROTATION_r8.json): within-copy "
+        "pairs grow exactly ~M and the r8 n_blocks knob bounds the GEMM "
+        "tile at any corpus size; the exact tier's compute is O(n^2 d) "
+        "by design — the swept approximate tier is the 100 TB path"
+    ),
+    "dedup_semdedup": (
+        "SemDeDup in-cluster pairwise cosine: the M-x replica puts M "
+        "copies of every vector in one bucket, so in-cluster pairs grow "
+        "~M^2 by construction (real corpora don't; at scale k grows with "
+        "n keeping cluster size ~constant — the paper's core argument)"
+    ),
+    # dedup_simhash_hamming RE-ADMITTED in r12 (exclusions 13 -> 12): the
+    # exact-dup pre-collapse port folds the replica's M-way identical
+    # copies by md5(text) before the band self-join, so in-band pairs no
+    # longer grow ~M^2 — the same mechanism that re-admitted the LSH
+    # lifecycle pair in r11.  Flood evidence: SCALEPROBE_PAIRFLOOD_r12.
+    "stream_lsh_ingest": (
+        "streaming composition of lsh_serve/append: four sequential "
+        "serve+append rounds inside foreachBatch, each rebuilding scratch "
+        "state — ~4x the swept dedup_lsh_incremental_append wall plus "
+        "trigger orchestration, so the replica sweep would spend tens of "
+        "minutes re-measuring stages that ARE swept (both batch lifecycle "
+        "queries re-entered the sweep in r11 after the exact-hash "
+        "pre-collapse removed the replica's in-band M^2 degeneracy — "
+        "identical replica copies now fold by digest before MinHash).  "
+        "Composed stages MEASURED non-replica in "
+        "SCALEPROBE_LSHLIFE_r11.json and adversarially in "
+        "SCALEPROBE_HOTBUCKET_r11.json (boilerplate flood FLAT at 100x "
+        "batch size)"
+    ),
+    "stream_sim_ingest": (
+        "streaming composition of the IVF-PQ serve/append lifecycle, "
+        "search-before-insert: every streamed vector is ALSO a query, so "
+        "on the replica both the query batch and the per-cell code count "
+        "grow ~M and the ADC join grows ~M^2 by construction (at fixed "
+        "n_centroids).  The production claim is a FIXED query batch "
+        "against a growing index with cells ∝ corpus — MEASURED non-"
+        "replica in SCALEPROBE_SIMLIFE_r12.json (serve 0.98x FLAT at "
+        "100x index); the composed stages ARE swept "
+        "(sim_ivfpq_persist_serve, sim_ivfpq_incremental_append) and the "
+        "round causality is pinned by the sf0.001 stream-run unit test"
+    ),
+    "dedup_simhash": (
+        "near-dup pair emitter (simhash band buckets): every doc is an "
+        "M-way dup on the replica, so the OUTPUT is ~M^2 pairs.  MEASURED "
+        "on the token-renamed corpus (SCALEPROBE_TEXTMUT_r9.json) with "
+        "bucket pair mass DECOMPOSED: same-copy 6.8x at 100x (the base "
+        "mega-bucket is hash-specific, not structural) + a measured "
+        "n^2/2^16 birthday term from the 16-bit teaching key width; "
+        "wall 5.2x at 100x"
+    ),
+    "dedup_clusters": (
+        "iterative connected components over the near-dup pair graph: "
+        "replica inflates edges ~M^2 and component diameter with M.  "
+        "MEASURED on the token-renamed corpus (SCALEPROBE_TEXTMUT_r9.json): "
+        "clusters exactly 100x at 100x, max component size CONSTANT (4), "
+        "zero cross-copy clusters, wall 18x"
+    ),
+    "ml_leakage_safe_split": (
+        "composes dedup_clusters (see above): the exact pair graph is "
+        "~M^2 on the replica; the production edge source at scale is the "
+        "swept dedup_minhash_lsh banding stage.  MEASURED on the "
+        "token-renamed corpus (SCALEPROBE_TEXTMUT_r9.json): multi-doc "
+        "clusters and the naive-leak counterfactual both ~100x at 100x, "
+        "wall 2.9x on top of its edge source"
+    ),
+    "pipeline_semantic_dedup": (
+        "capstone composing the embedding near-dup pair stage (see "
+        "dedup_embedding_cosine) — MEASURED on the rotated non-replica "
+        "corpus in SCALEPROBE_ROTATION_r8.json; the quality-join overhead "
+        "over the pair stage is pair-sized (~linear)"
+    ),
+    "pipeline_pretrain_corpus": (
+        "capstone composing dedup_clusters: the replica's 100-way dups "
+        "inflate the near-dup cluster graph ~M^2 and the r4 sweep "
+        "measured it executor-OOMing at 100x (green at 10x, 20.4 s); "
+        "real corpora don't have 100-way exact replicas of every doc.  "
+        "MEASURED on the token-renamed corpus instead "
+        "(SCALEPROBE_TEXTMUT_r9.json): output tracks the ~M cluster graph"
+    ),
+    "join_interval_overlap": (
+        "output-quadratic in co-active-user density by replica "
+        "construction (270 s at 10x, measured r3); production callers use "
+        "interval_overlap_pairs(max_per_bucket=...) — the r4 density "
+        "guard.  MEASURED on the time-shifted corpus instead "
+        "(SCALEPROBE_TIMESHIFT_r9.json): disjoint day ranges at base "
+        "concurrency, pairs exactly 100.0x at 100x, zero cross-copy"
+    ),
+}
+
+
+def sweep(spark, base: str, ms: list[int]) -> dict:
+    """Every registered query is either swept (build + noop run, pass/fail
+    recorded) on the M× replica or excluded with its reason; the accounting
+    must sum to the registry size."""
+    (m,) = ms
+    sf_dir = build_replica(base, m)
+    specs = all_queries()
+    unknown = set(EXCLUSIONS) - set(specs)
+    if unknown:
+        raise SystemExit(f"EXCLUSIONS names unregistered queries: {sorted(unknown)}")
+    # Python-worker + codegen warmup so the first swept query isn't taxed
     spark.range(64).toDF("x").mapInPandas(lambda it: it, "x bigint").write.format(
         "noop"
     ).mode("overwrite").save()
-    results = {}
-    for name in probe:
-        t1 = time_query(spark, specs[name].fn, BASE)
-        tm = time_query(spark, specs[name].fn, out_dir)
-        results[name] = {"t_1x": t1, f"t_{m}x": tm,
-                         "ratio": round(tm / t1, 2) if t1 > 0 else None}
-    print(json.dumps({"m": m, "results": results}))
+
+    times: dict[str, float] = {}
+    fails: dict[str, str] = {}
+    for name, spec in specs.items():
+        if name in EXCLUSIONS:
+            continue
+        try:
+            times[name] = measure(spark, lambda: _noop(spec.fn(spark, sf_dir)))[1]
+        except Exception as exc:  # record the root message, not a blank
+            msg = str(exc).strip().splitlines()
+            root = msg[1] if len(msg) > 1 else msg[0] if msg else ""
+            fails[name] = f"{type(exc).__name__}: {root}"[:300]
+        done = len(times) + len(fails)
+        if done % 10 == 0:
+            # a ~200-query single-JVM run accumulates checkpoint / broadcast
+            # blocks faster than ContextCleaner's reference-triggered
+            # cleanup reclaims them (one run died of heap OOM at query
+            # ~140); an explicit GC lets the cleaner catch up.  Untimed.
+            spark.sparkContext._jvm.System.gc()
+        print(f"# [{done}/{len(specs) - len(EXCLUSIONS)}] {name}: "
+              f"{times.get(name, 'FAIL')}", file=sys.stderr, flush=True)
+
+    n_total = len(specs)
+    assert len(times) + len(fails) + len(EXCLUSIONS) == n_total, "accounting hole"
+    return {
+        "m": m,
+        "n_total_registered": n_total,
+        "n_swept_ok": len(times),
+        "n_failed": len(fails),
+        "n_excluded": len(EXCLUSIONS),
+        "driver_mem": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "fails": fails,
+        "excluded": EXCLUSIONS,
+        "slowest": dict(sorted(times.items(), key=lambda kv: -kv[1])[:15]),
+        "times": times,
+    }
+
+
+# ---------------------------------------------------------------------------
+# Non-replica probes
+# ---------------------------------------------------------------------------
+
+
+def semdedup(spark, base: str, ms: list[int]) -> dict:
+    """``dedup_semdedup`` on the QR-rotated embeddings with
+    ``n_planes = 8 + ceil(log2 M)`` (cluster count grows with n): verdict
+    wall, kept fraction, bucket-size distribution and the exact in-bucket
+    pair count the join prices."""
+    from dataframework_spark.operators.dedup import dedup_semdedup
+    from dataframework_spark.operators.similarity import _bucket_sql_spark
+
+    def run(sf_dir, m):
+        n_planes = 8 + math.ceil(math.log2(m))
+        row, wall = measure(spark, lambda: dedup_semdedup(spark, sf_dir, n_planes=n_planes).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("is_kept").cast("bigint")).alias("kept"),
+        ).collect()[0])
+        e = load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]).select(
+            F.col("embedding").cast("array<double>").alias("v")
+        )
+        sizes = e.select(F.expr(_bucket_sql_spark("v", n_planes)).alias("b")).groupBy("b").count()
+        stats = sizes.agg(
+            F.count(F.lit(1)).alias("n_buckets"),
+            F.round(F.avg("count"), 2).alias("mean_sz"),
+            F.expr("percentile(count, 0.99)").alias("p99_sz"),
+            F.max("count").alias("max_sz"),
+            F.sum(F.expr("count * (count - 1) / 2")).cast("bigint").alias("pairs"),
+        ).collect()[0]
+        return {
+            "n_vectors": row.n,
+            "kept": row.kept,
+            "kept_frac": round(row.kept / row.n, 4),
+            "n_planes": n_planes,
+            "n_buckets_occupied": stats.n_buckets,
+            "bucket_mean": float(stats.mean_sz),
+            "bucket_p99": float(stats.p99_sz),
+            "bucket_max": int(stats.max_sz),
+            "in_bucket_pairs": int(stats.pairs),
+            "wall_sec": wall,
+        }
+
+    results = scale_pass(spark, run, lambda m: qr_corpus(base, m), ms,
+                         {"wall_ratio_vs_1x": "wall_sec", "pairs_ratio_vs_1x": "in_bucket_pairs"})
+    return {"probe": "semdedup_nonreplica", "sigma_rel": SIGMA_REL, "results": results}
+
+
+def rotation(spark, base: str, ms: list[int]) -> dict:
+    """``dedup_embedding_cosine`` pairs split same-copy / cross-copy (the
+    cross mass is the τ=0.4 random-direction collision rate of d=64), and
+    ``pipeline_semantic_dedup`` on top, on the QR-rotated corpus."""
+    from dataframework_spark.operators.dedup import dedup_embedding_cosine
+    from dataframework_spark.operators.pipeline import pipeline_semantic_dedup
+
+    def run(sf_dir, m):
+        # GEMM tile ~<=5k rows/block (sims tile <= 200 MB f64), 4 below that
+        n_blocks = max(4, (2000 * m) // 5000)
+        pairs, wall_cos = measure(spark, lambda: pair_split(
+            dedup_embedding_cosine(spark, sf_dir, n_blocks=n_blocks), "vec_a", "vec_b"))
+        sem, wall_sem = measure(spark, lambda: pipeline_semantic_dedup(
+            spark, sf_dir, n_blocks=n_blocks
+        ).agg(
+            F.count(F.lit(1)).alias("n_pairs"),
+            F.countDistinct("keeper_doc_id").alias("n_keepers"),
+        ).collect()[0])
+        return {
+            "n_blocks": n_blocks,
+            "cosine_pairs": pairs.n,
+            "cosine_pairs_within_copy": int(pairs.w),
+            "cosine_pairs_cross_copy": int(pairs.n - pairs.w),
+            "cosine_wall_sec": wall_cos,
+            "semantic_pairs": sem.n_pairs,
+            "semantic_keepers": sem.n_keepers,
+            "semantic_wall_sec": wall_sem,
+        }
+
+    results = scale_pass(spark, run, lambda m: qr_corpus(base, m), ms, {
+        # at 1x every pair is within copy 0, so the base is the total
+        "within_pairs_ratio_vs_1x": "cosine_pairs_within_copy",
+        "cosine_pairs_ratio_vs_1x": "cosine_pairs",
+        "cosine_wall_ratio_vs_1x": "cosine_wall_sec",
+        "semantic_pairs_ratio_vs_1x": "semantic_pairs",
+        "semantic_wall_ratio_vs_1x": "semantic_wall_sec",
+    })
+    return {
+        "probe": "rotation_nonreplica_r8",
+        "ops": ["dedup_embedding_cosine", "pipeline_semantic_dedup"],
+        "note": (
+            "output pairs should grow ~M (rotation removes the replica's "
+            "M^2 output degeneracy); the exact tier's COMPUTE is O(n^2 d) "
+            "by design — the 100 TB path is the swept approximate tier"
+        ),
+        "results": results,
+    }
+
+
+def _pairs(row, wall: float) -> dict:
+    return {"pairs": row.n, "pairs_within_copy": int(row.w), "pairs_cross_copy": int(row.n - row.w),
+            "wall_sec": wall}
+
+
+_TEXTMUT_RATIOS = {
+    "jaccard": ["pairs", "pairs_within_copy", "wall_sec"],
+    "containment": ["pairs", "pairs_within_copy", "wall_sec"],
+    "simhash": ["bucket_pairs_same_copy", "bucket_pairs_cross_copy", "wall_sec"],
+    "lsh_eval": ["n_candidates", "n_truth", "wall_sec"],
+    "clusters": ["n_clusters", "n_clustered_docs", "wall_sec"],
+    "leakage_split": ["n_multi_doc_clusters", "n_leaky_clusters_naive", "wall_sec"],
+    "pretrain_corpus": ["n_docs_kept", "ws_tokens", "wall_sec"],
+}
+
+
+def textmut(spark, base: str, ms: list[int]) -> dict:
+    """The text-side sweep exclusions on the token-renamed corpus: exact
+    pair emitters split by copy, 16-bit simhash bucket pair mass split
+    same-copy vs cross-copy (the n²/2¹⁶ birthday term), LSH-vs-truth,
+    connected components, the leakage-safe split and the pretrain
+    capstone."""
+    from dataframework_spark.operators.dedup import (
+        dedup_clusters,
+        dedup_lsh_eval,
+        dedup_ngram_containment,
+        dedup_ngram_jaccard,
+        dedup_simhash,
+        simhash_signatures,
+    )
+    from dataframework_spark.operators.ml_prep import ml_leakage_safe_split
+    from dataframework_spark.operators.pipeline import pipeline_pretrain_corpus
+
+    def run(sf_dir, m):
+        r = {
+            "jaccard": _pairs(*measure(spark, lambda: pair_split(
+                dedup_ngram_jaccard(spark, sf_dir), "doc_a", "doc_b"))),
+            "containment": _pairs(*measure(spark, lambda: pair_split(
+                dedup_ngram_containment(spark, sf_dir), "doc_a", "doc_b"))),
+        }
+        b, wall = measure(spark, lambda: dedup_simhash(spark, sf_dir).agg(
+            F.count(F.lit(1)).alias("n_buckets"),
+            F.coalesce(F.sum("n_docs"), F.lit(0)).alias("n_bucketed_docs"),
+        ).collect()[0])
+        # bucket PAIR mass per (bucket, copy): same-copy structure (~M) vs
+        # the cross-copy 16-bit birthday term (~n²/2¹⁶)
+        per = simhash_signatures(spark, sf_dir).withColumn("cp", copy_of("doc_id")).groupBy(
+            "simhash", "cp").agg(F.count(F.lit(1)).alias("c"))
+        d = per.groupBy("simhash").agg(
+            F.sum("c").alias("n"), F.sum(F.col("c") * (F.col("c") - 1) / 2).alias("sp")
+        ).agg(
+            F.coalesce(F.sum(F.col("n") * (F.col("n") - 1) / 2), F.lit(0.0)).alias("tot"),
+            F.coalesce(F.sum("sp"), F.lit(0.0)).alias("same"),
+        ).collect()[0]
+        r["simhash"] = {
+            "buckets_multi": b.n_buckets,
+            "bucketed_docs": int(b.n_bucketed_docs),
+            "bucket_pairs_total": int(d.tot),
+            "bucket_pairs_same_copy": int(d.same),
+            "bucket_pairs_cross_copy": int(d.tot - d.same),
+            "wall_sec": wall,
+        }
+        row, wall = measure(spark, lambda: dedup_lsh_eval(spark, sf_dir).collect()[0])
+        r["lsh_eval"] = {
+            "n_candidates": row.n_candidates,
+            "n_truth": row.n_truth,
+            "n_hits": row.n_hits,
+            "precision": float(row.precision) if row.precision is not None else None,
+            "recall": float(row.recall) if row.recall is not None else None,
+            "wall_sec": wall,
+        }
+        agg, wall = measure(spark, lambda: dedup_clusters(spark, sf_dir).groupBy("cluster_id").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.countDistinct(copy_of("doc_id")).alias("n_copies"),
+        ).agg(
+            F.count(F.lit(1)).alias("n_clusters"),
+            F.coalesce(F.sum("n"), F.lit(0)).alias("n_clustered_docs"),
+            F.coalesce(F.max("n"), F.lit(0)).alias("max_cluster"),
+            F.coalesce(F.sum((F.col("n_copies") > 1).cast("bigint")), F.lit(0)).alias(
+                "n_cross_copy_clusters"
+            ),
+        ).collect()[0])
+        r["clusters"] = {
+            "n_clusters": agg.n_clusters,
+            "n_clustered_docs": int(agg.n_clustered_docs),
+            "max_cluster_size": int(agg.max_cluster),
+            "n_cross_copy_clusters": int(agg.n_cross_copy_clusters),
+            "wall_sec": wall,
+        }
+        rows, wall = measure(spark, lambda: {
+            x["split"]: x.asDict() for x in ml_leakage_safe_split(spark, sf_dir).collect()})
+        r["leakage_split"] = {
+            "n_docs_train": int(rows["train"]["n_docs"]),
+            "n_docs_test": int(rows["test"]["n_docs"]),
+            "n_multi_doc_clusters": int(
+                rows["train"]["n_multi_doc_clusters"] + rows["test"]["n_multi_doc_clusters"]
+            ),
+            "n_leaky_clusters_naive": int(
+                rows["train"]["n_leaky_clusters_naive"] + rows["test"]["n_leaky_clusters_naive"]
+            ),
+            "wall_sec": wall,
+        }
+        pre, wall = measure(spark, lambda: pipeline_pretrain_corpus(spark, sf_dir).agg(
+            F.coalesce(F.sum("n_docs"), F.lit(0)).alias("n_docs"),
+            F.coalesce(F.sum("total_ws_tokens"), F.lit(0)).alias("ws_tokens"),
+        ).collect()[0])
+        r["pretrain_corpus"] = {
+            "n_docs_kept": int(pre.n_docs),
+            "ws_tokens": int(pre.ws_tokens),
+            "wall_sec": wall,
+        }
+        return r
+
+    ratios = {op: {f"{k}_ratio_vs_1x": k for k in keys} for op, keys in _TEXTMUT_RATIOS.items()}
+    results = scale_pass(spark, run, lambda m: token_corpus(base, m), ms, ratios)
+    return {
+        "probe": "token_rename_nonreplica_r9",
+        "ops": [
+            "dedup_ngram_jaccard",
+            "dedup_ngram_containment",
+            "dedup_simhash",
+            "dedup_lsh_eval",
+            "dedup_clusters",
+            "ml_leakage_safe_split",
+            "pipeline_pretrain_corpus",
+        ],
+        "note": (
+            "per-copy token rename is a vocabulary bijection: within-copy "
+            "Jaccard/containment exact-preserved, copies shingle-disjoint — "
+            "output must grow ~M; simhash bucket pairs decomposed into "
+            "same-copy structure (~M) vs the 16-bit birthday term (~n^2/2^16, "
+            "a key-width fact, ~0 for the production 64-bit form)"
+        ),
+        "results": results,
+    }
+
+
+def simhash64(spark, base: str, ms: list[int]) -> dict:
+    """``dedup_simhash_hamming`` pairs split by copy on the token-renamed
+    corpus: any cross-copy pair is a 2⁻⁶⁴-scale accident."""
+    from dataframework_spark.operators.dedup import dedup_simhash_hamming
+
+    def run(sf_dir, m):
+        return _pairs(*measure(spark, lambda: pair_split(
+            dedup_simhash_hamming(spark, sf_dir), "doc_a", "doc_b")))
+
+    sh = {"corpus": f"token-renamed, {os.path.basename(base)} base"}
+    sh.update(scale_pass(spark, run, lambda m: token_corpus(base, m), ms,
+                         {"pairs_ratio_vs_1x": "pairs", "wall_ratio_vs_1x": "wall_sec"}))
+    return {"results": {"dedup_simhash_hamming": sh}}
+
+
+def timeshift(spark, base: str, ms: list[int]) -> dict:
+    """The unguarded ``join_interval_overlap`` on the time-shifted events:
+    pairs split by copy (cross-copy must be 0) and pair-days."""
+    from dataframework_spark.operators.temporal import join_interval_overlap
+
+    def run(sf_dir, m):
+        row, wall = measure(spark, lambda: pair_split(
+            join_interval_overlap(spark, sf_dir), "user_a", "user_b",
+            F.coalesce(F.sum("n_overlap_days"), F.lit(0)).alias("pair_days")))
+        return {**_pairs(row, wall), "pair_days": int(row.pair_days)}
+
+    def corpus(m):
+        return _corpus("time_shift", base, m, {"events": time_shift})
+
+    keys = ("pairs", "pairs_within_copy", "pair_days", "wall_sec")
+    results = scale_pass(spark, run, corpus, ms, {f"{k}_ratio_vs_1x": k for k in keys})
+    return {
+        "probe": "timeshift_nonreplica_r9",
+        "ops": ["join_interval_overlap"],
+        "note": (
+            "copies occupy disjoint day ranges at base concurrency: more "
+            "data = more buckets, not denser ones — output must grow ~M "
+            "with zero cross-copy pairs; the replica's M^2 was bucket "
+            "densification, which interval_overlap_pairs(max_per_bucket) "
+            "guards against in production"
+        ),
+        "results": results,
+    }
+
+
+def lsh_lifecycle(spark, base: str, ms: list[int]) -> dict:
+    """The persisted MinHash-LSH index on the token-renamed corpus: build
+    and serve walls, verdicts, the verified (delta, index) matches split by
+    copy (cross-copy must be 0), and copy 0's FIXED crawl batch served
+    against the M×-bigger index — the production ingest shape."""
+    from dataframework_spark.operators.dedup import (
+        _LSH_MATCH,
+        _MH_K,
+        LSH_LAYOUT,
+        _lsh_band_frame,
+        _lsh_delta1,
+        _lsh_nmatch,
+        lsh_corpus_split,
+        lsh_index_build,
+        lsh_serve,
+    )
+    from dataframework_spark.sources import index_store
+
+    def run(sf_dir, m):
+        r: dict = {}
+        base_docs, f1, _, _ = lsh_corpus_split(spark, sf_dir)
+        path = scratch("lsh_lifecycle", os.path.basename(base), f"lshidx_m{m}")
+        _, r["build_wall_sec"] = measure(spark, lambda: lsh_index_build(spark, base_docs, path))
+
+        def serve(delta):
+            verdicts, dsig, _ = lsh_serve(spark, path, delta)
+            counts = verdicts.groupBy("verdict").agg(F.count(F.lit(1)).alias("n")).collect()
+            return {row["verdict"]: row["n"] for row in counts}, dsig
+
+        (r["verdicts"], dsig), r["serve_wall_sec"] = measure(
+            spark, lambda: serve(_lsh_delta1(base_docs, f1)))
+        # recompute the verified (delta doc, index doc) matches, split by copy
+        xsig = index_store.read(spark, LSH_LAYOUT, path, "sigs")
+        xbands = index_store.read(spark, LSH_LAYOUT, path, "bands")
+        cand = (
+            _lsh_band_frame(dsig).alias("d")
+            .join(
+                xbands.hint("shuffle_hash").alias("x"),
+                (F.col("d.band") == F.col("x.band")) & (F.col("d.bk") == F.col("x.bk")),
+            )
+            .select(F.col("d.doc_id").alias("ddoc"), F.col("x.doc_id").alias("xdoc"))
+            .distinct()
+        )
+        a = dsig.select(F.col("doc_id").alias("ddoc"),
+                        *[F.col(f"h{i}").alias(f"a{i}") for i in range(_MH_K)])
+        b = xsig.select(F.col("doc_id").alias("xdoc"),
+                        *[F.col(f"h{i}").alias(f"b{i}") for i in range(_MH_K)])
+        pairs = (
+            cand.join(a, "ddoc").join(b.hint("shuffle_hash"), "xdoc")
+            .where(_lsh_nmatch("a", "b") >= _LSH_MATCH)
+        )
+        split = pair_split(pairs, "ddoc", "xdoc")
+        r["verified_index_pairs"] = split.n
+        r["cross_copy_pairs"] = int(split.n - split.w)
+
+        def fixed_batch():
+            v0, _, _ = lsh_serve(spark, path, _lsh_delta1(
+                base_docs.where(F.col("doc_id") < OFFSET), f1.where(F.col("doc_id") < OFFSET)))
+            return v0.count()
+
+        r["fixed_batch_docs"], r["fixed_batch_serve_wall_sec"] = measure(spark, fixed_batch)
+        return r
+
+    keys = ("build_wall_sec", "serve_wall_sec", "fixed_batch_serve_wall_sec")
+    results = scale_pass(spark, run, lambda m: token_corpus(base, m), ms,
+                         {f"{k.removesuffix('_sec')}_ratio_vs_1x": k for k in keys})
+    return {
+        "probe": "lsh_lifecycle_nonreplica_r11",
+        "ops": ["dedup_lsh_persist_serve", "dedup_lsh_incremental_append"],
+        "note": (
+            "token-renamed corpus (copies shingle-disjoint): build+serve "
+            "track ~M, verified index matches must have ZERO cross-copy "
+            "pairs, and a FIXED crawl batch served against the M×-bigger "
+            "persisted index is the production ingest shape — sublinear "
+            "wall is the claim the replica sweep cannot measure"
+        ),
+        "results": results,
+    }
+
+
+def sim_lifecycle(spark, base: str, ms: list[int]) -> dict:
+    """The persisted IVF-PQ index on the circularly rotated embeddings, in
+    two regimes: the registered 8 cells (``fixed8``, the anti-pattern) and
+    cells ∝ corpus (``scaledk``, ``n_centroids = 8·M``).  A FIXED 8-query
+    batch is served against each; cell sizes and the served candidate
+    counts give the serve wall its mechanism."""
+    from dataframework_spark.operators.similarity import (
+        IVFPQ_LAYOUT,
+        ivfpq_persist,
+        ivfpq_serve,
+    )
+    from dataframework_spark.sources import index_store
+
+    def run(sf_dir, m):
+        r: dict = {}
+        for regime, k in (("fixed8", 8), ("scaledk", 8 * m)):
+            path = scratch("sim_lifecycle", os.path.basename(base), f"ivfpq_m{m}_{regime}")
+            _, build_wall = measure(
+                spark, lambda: ivfpq_persist(spark, sf_dir, path, n_centroids=k))
+            # the FIXED copy-0 query batch (vec_id 100..107) against the index
+            served, serve_wall = measure(spark, lambda: ivfpq_serve(spark, sf_dir, path).collect())
+            sizes = index_store.read(spark, IVFPQ_LAYOUT, path, "codes").groupBy("cid").agg(
+                F.count(F.lit(1)).alias("n"))
+            stats = sizes.agg(
+                F.count(F.lit(1)).alias("cells"),
+                F.round(F.avg("n"), 1).alias("mean"),
+                F.max("n").alias("max"),
+            ).collect()[0]
+            # candidates actually scanned per query = its cell's size
+            qcells = sorted({row["cell"] for row in served})
+            r[regime] = {
+                "n_centroids": k,
+                "build_wall_sec": build_wall,
+                "serve_wall_sec": serve_wall,
+                "served_rows": len(served),
+                "cells": int(stats["cells"]),
+                "mean_cell_size": float(stats["mean"]),
+                "max_cell_size": int(stats["max"]),
+                "query_cell_sizes": sorted(
+                    row["n"] for row in sizes.where(F.col("cid").isin(qcells)).collect()),
+            }
+        return r
+
+    walls = {"build_wall_ratio_vs_1x": "build_wall_sec", "serve_wall_ratio_vs_1x": "serve_wall_sec"}
+    def corpus(m):
+        return _corpus("circular_rotation", base, m, {"embeddings": circular_rotate})
+
+    results = scale_pass(spark, run, corpus, ms, {"fixed8": walls, "scaledk": walls})
+    return {
+        "probe": "sim_index_lifecycle_nonreplica_r12",
+        "ops": [
+            "sim_ivfpq_persist_serve",
+            "sim_ivfpq_incremental_append",
+            "sim_index_serve_recall",
+        ],
+        "note": (
+            "orthogonal-transform corpus (no replica degeneracy): with "
+            "cells ∝ corpus (n_centroids = 8·M, the production knob) a "
+            "FIXED 8-query batch served against the M×-bigger persisted "
+            "index stays FLAT — constant expected cell size, recorded "
+            "per-query; the fixed-8-cell regime is measured alongside as "
+            "the anti-pattern that motivates the knob; the scaledk build "
+            "wall honestly carries the brute-force M·k coarse-assignment "
+            "term (production: ANN assigner over centroids)"
+        ),
+        "results": results,
+    }
+
+
+def _flood_docs(spark, kind: str, n: int, templates: list[tuple[int, str]]):
+    """``n`` flood copies of the (doc_id, text) ``templates``, spread over
+    the cores like a crawl batch."""
+    table = pa.table({"doc_id": pa.array([d for d, _ in templates], pa.int64()),
+                      "text": [t for _, t in templates]})
+    path = scratch(kind, f"n{n}", "documents.parquet")
+    write_copies(table, n, path, flood)
+    return spark.read.parquet(path)
+
+
+B0 = 2_000  # hotbucket's 1x batch size
+# ~40 tokens of distinctive boilerplate — long enough that a one-token
+# suffix leaves the MinHash signature intact with overwhelming probability
+_TEMPLATE = " ".join(f"boilerr{i} gateway{i * 3} unavailable{i * 7}" for i in range(13))
+_FRESH = "fresh alpha{0} bravo{1} charlie{2} delta echo foxtrot"
+
+
+def hotbucket(spark, base: str, ms: list[int]) -> dict:
+    """``lsh_serve`` of crawl batches that are 50% one boilerplate template
+    (exact copies, which the md5 pre-collapse folds; or near copies with a
+    per-doc suffix token, which the 64-member bucket cap handles) and 50%
+    unique fresh docs, at M × B0 docs against a fixed persisted index."""
+    from dataframework_spark.operators.dedup import lsh_index_build, lsh_serve
+
+    idx = scratch("hotbucket", os.path.basename(base), "idx")
+    lsh_index_build(spark, load_table(spark, base, "documents", columns=["doc_id", "text"]), idx)
+    results: dict = {}
+    for near, label in ((False, "exact_flood"), (True, "near_flood")):
+        boiler = _TEMPLATE + (" zztok{0}" if near else "")
+
+        def run(delta, m):
+            def serve():
+                verdicts, _, _ = lsh_serve(spark, idx, delta)
+                counts = verdicts.groupBy("verdict").agg(F.count(F.lit(1)).alias("n")).collect()
+                return {row["verdict"]: row["n"] for row in counts}
+
+            counts, wall = measure(spark, serve)
+            return {"batch_docs": B0 * m, "serve_wall_sec": wall, "verdicts": counts}
+
+        def batch(m):
+            return _flood_docs(spark, f"hotbucket/{label}", B0 * m // 2,
+                               [(50_000_000, boiler), (60_000_000, _FRESH)]).repartition(
+                spark.sparkContext.defaultParallelism)
+
+        results[label] = scale_pass(spark, run, batch, ms, {"wall_ratio_vs_1x": "serve_wall_sec"},
+                                    tag="x", size="size_ratio")
+    return {
+        "probe": "lsh_serve_hotbucket_r11",
+        "op": "lsh_serve (dedup_lsh_persist_serve / _incremental_append / "
+              "stream_lsh_ingest)",
+        "sf_dir": base,
+        "batch_1x_docs": B0,
+        "note": (
+            "50%-boilerplate crawl batches: exact flood folds to one "
+            "representative via md5 pre-collapse; near flood (per-doc "
+            "suffix token) exercises the 64-member bucket cap with "
+            "representative-only comparison. Claim: serve wall ~linear "
+            "in batch size; the unhardened k^2/2 bucket expansion would "
+            "be ~10^4x at the 100x point and would not finish"
+        ),
+        "results": results,
+    }
+
+
+FLOOD_BASE = 1_000_000_000
+FLOOD_TXT = (
+    "service temporarily unavailable please retry your request later "
+    "error code five oh three gateway timeout upstream connect failure"
+)
+
+
+def pairflood(spark, base: str, ms: list[int]) -> dict:
+    """The batch pair emitters on documents ∪ N exact copies of one page:
+    with the md5 pre-collapse (registered) pairs stay linear in N; without
+    it, measured at the smallest N only, one bucket expands C(N,2) pairs."""
+    from dataframework_spark.operators.dedup import dedup_minhash_lsh, dedup_simhash_hamming
+
+    def run(fn, n: int, precollapse: bool) -> dict:
+        docs = load_table(spark, base, "documents", columns=["doc_id", "text"]).unionByName(
+            _flood_docs(spark, "pairflood", n, [(FLOOD_BASE, FLOOD_TXT)])
+        ).repartition(spark.sparkContext.defaultParallelism)
+        touches = (F.col("doc_a") >= FLOOD_BASE) | (F.col("doc_b") >= FLOOD_BASE)
+        agg, wall = measure(spark, lambda: fn(spark, base, docs=docs, precollapse=precollapse).agg(
+            F.count(F.lit(1)).alias("pairs"),
+            F.sum(touches.cast("bigint")).alias("flood_pairs"),
+        ).collect()[0])
+        return {
+            "flood_n": n,
+            "precollapse": precollapse,
+            "wall_sec": wall,
+            "pairs_total": int(agg["pairs"]),
+            "pairs_touching_flood": int(agg["flood_pairs"] or 0),
+        }
+
+    results: dict = {}
+    for op, fn in (("minhash", dedup_minhash_lsh), ("simhash", dedup_simhash_hamming)):
+        run(fn, 100, True)  # warm-up, discarded
+        # the unhardened form at the SMALL flood only: C(N,2) pair structs
+        # materialize inside one task's bucket array (5e7 at N=10000)
+        results[op] = [run(fn, n, True) for n in ms] + [run(fn, min(ms), False)]
+    return {
+        "probe": "pair_emitter_exactdup_flood_r12",
+        "ops": ["dedup_minhash_lsh", "dedup_simhash_hamming"],
+        "note": (
+            "boilerplate flood vs the batch pair emitters: pre-collapse ON "
+            "(registered) keeps pairs linear (N-1 star rows + base pairs) "
+            "and wall ~N; OFF reproduces the C(N,2) single-bucket expansion "
+            "at N=1000 and is cited-not-run at N=10000 (~5e7 structs in one "
+            "task) — the blowup the r12 port removes"
+        ),
+        "results": results,
+    }
+
+
+# probe -> (entry, default base, default M list)
+PROBES = {
+    "replica": (replica, BASE, [10]),
+    "sweep": (sweep, BASE, [10]),
+    "semdedup": (semdedup, BASE, [10, 100, 1000]),
+    "rotation": (rotation, BASE, [10, 100]),
+    "textmut": (textmut, BASE, [10, 100]),
+    "simhash64": (simhash64, BASE, [10, 100]),
+    "timeshift": (timeshift, BASE, [10, 100]),
+    "lsh_lifecycle": (lsh_lifecycle, BASE, [10, 100]),
+    "sim_lifecycle": (sim_lifecycle, BASE, [10, 100]),
+    "hotbucket": (hotbucket, SMALL, [10, 100]),
+    "pairflood": (pairflood, SMALL, [1000, 10000]),
+}
+
+
+def main() -> None:
+    if len(sys.argv) < 2 or sys.argv[1] not in PROBES:
+        raise SystemExit(__doc__)
+    name = sys.argv[1]
+    entry, base, ms = PROBES[name]
+    ms = [int(a) for a in sys.argv[2:]] or ms
+    base = os.environ.get("SPARK_GRAFT_SF_DIR", base)
+    # Heap sized to the workload, not to luck: the 100x sweep is a
+    # 600M-row, ~260-query run in ONE JVM.  At the 8g default it ran at
+    # the GCLocker-warning edge and twice OOM'd mid-sweep at two DIFFERENT
+    # queries (read-ahead heap exhaustion, not a plan regression: every
+    # query involved passes in isolation and at 10x).  The artifact
+    # records the setting.
+    if name == "sweep" and max(ms) >= 100:
+        os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
+    spark = get_spark(app_name=f"scale-probe-{name}", cpus=os.cpu_count() or 8)
+    spark.sparkContext.setLogLevel("ERROR")
+    print(json.dumps(entry(spark, base, ms)))
     spark.stop()
 
 

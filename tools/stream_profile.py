@@ -149,12 +149,7 @@ def main() -> None:
     if m > 1:
         from tools.scale_probe import build_replica
 
-        sf_dir = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            ".scratch",
-            f"scale{m}x",
-        )
-        build_replica(spark, m, sf_dir)
+        sf_dir = build_replica(BASE, m)
     else:
         sf_dir = BASE
     path, schema = _stage_files(spark, sf_dir, nfiles, f"{m}x_{nfiles}")
